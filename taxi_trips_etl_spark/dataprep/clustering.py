@@ -78,8 +78,7 @@ def kmeans_assign(
         # expressions in ONE narrow projection — no join, no window, no
         # shuffle for assignment; argmin ties break to the lower id.
         # Built as ONE SQL string: k·d literal Columns via py4j cost
-        # ~0.5 s of driver time PER ITERATION before any task ran (the
-        # same construction trap as similarity.pq_topk — see there).
+        # ~0.5 s of driver time PER ITERATION before any task ran.
         def arr(xs: list[float]) -> str:
             return "array(" + ",".join(_sql_double(x) for x in xs) + ")"
 

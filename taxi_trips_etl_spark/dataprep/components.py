@@ -28,7 +28,11 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from taxi_trips_etl_spark.dataprep.materialize import materialize, static_rounds
+from taxi_trips_etl_spark.dataprep.materialize import (
+    materialize,
+    pin_loop_width,
+    static_rounds,
+)
 
 log = logging.getLogger(__name__)
 
@@ -227,17 +231,11 @@ def connected_components_star(
     #   them — the web-scale shape is unchanged.
     spark = pairs.sparkSession
     default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    def loop_width(n_rows: int) -> int:
-        return max(1, min(default_width, -(-n_rows // rows_per_partition)))
-
     with static_rounds(spark):
         sig = signature(edges)
         for _ in range(max_rounds):
             hint = sig[0] <= min_broadcast_cap // 2
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(loop_width(sig[0]))
-            )
+            pin_loop_width(spark, default_width, sig[0], rows_per_partition)
             # large-star: symmetrize, per-u closed-neighborhood min,
             # link strictly larger neighbors to it.
             sym = edges.select("a", "b").unionByName(

@@ -40,7 +40,11 @@ from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.sources.localrel import local_rows
 
-from taxi_trips_etl_spark.dataprep.materialize import materialize, static_rounds
+from taxi_trips_etl_spark.dataprep.materialize import (
+    materialize,
+    pin_loop_width,
+    static_rounds,
+)
 
 TOTAL = 10**12
 
@@ -110,10 +114,7 @@ def pagerank_distributed(
     spark = edges.sparkSession
     default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with static_rounds(spark):
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(1, min(default_width, -(-n_nodes // 2_000_000)))),
-        )
+        pin_loop_width(spark, default_width, n_nodes)
         while done < iters:
             step = min(5, iters - done)
             for _ in range(step):
@@ -290,10 +291,7 @@ def kcore(
         for _ in range(rounds):
             if n_prev == 0:
                 break
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(max(1, min(default_width, -(-n_prev // 2_000_000)))),
-            )
+            pin_loop_width(spark, default_width, n_prev)
             deg = live.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
             keep = deg.filter(F.col("d") >= k).select("a")
             hint = n_prev // max(k, 1) <= keep_broadcast_cap
@@ -343,16 +341,15 @@ def bfs_hops(
     the "broadcast while small" claim real: the checkpointed dist side
     is a LogicalRDD without size stats, so without the hint the
     planner shuffle-joins — re-exchanging the edge relation every
-    round. Default ``None`` = AUTO: the first relax of each 2-round
-    batch broadcasts only while its EXACT input count (collected at
-    each fixpoint check anyway) is under ``frontier_broadcast_cap``
-    rows (4M × ~16 B ≈ 64 MiB); the batch's second relax — whose input
-    grew by an unknown fanout — gets no hint and rides AQE's runtime
-    shuffle-size decision instead. So the auto default never
-    broadcasts an uncounted or over-cap frontier and cannot OOM
-    executors when the reachable graph turns out web-scale.
-    ``True``/``False`` force the choice for callers that know their
-    graph.
+    round. Default ``None`` = AUTO: each round relaxes once, with AQE
+    off (``static_rounds``), and its input is the dist table whose
+    EXACT row count the previous fixpoint check collected. That relax
+    broadcasts while the count is under ``frontier_broadcast_cap``
+    rows (4M × ~16 B ≈ 64 MiB) and is a static shuffle join over it.
+    So the auto default never broadcasts an uncounted or over-cap
+    frontier and cannot OOM executors when the reachable graph turns
+    out web-scale. ``True``/``False`` force the choice for callers
+    that know their graph.
     """
     # Materialize the edge relation ONCE: without this every round's
     # checkpoint job re-runs the whole upstream edge construction
@@ -405,10 +402,7 @@ def bfs_hops(
                 if broadcast_frontier is not None
                 else n_prev <= frontier_broadcast_cap
             )
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(max(1, min(default_width, -(-n_prev // 2_000_000)))),
-            )
+            pin_loop_width(spark, default_width, n_prev)
             relaxed = relax(dist, small).transform(materialize, eager=False)
             done += 1
             agg = relaxed.agg(
@@ -445,11 +439,11 @@ def shortest_paths(
     no reliable size stats, so the planner would otherwise pick a
     shuffle join and re-exchange the (much larger) edge relation
     EVERY round. Default ``None`` = AUTO, exactly as in
-    :func:`bfs_hops`: the batch's first relax broadcasts only while
-    its exact counted input is under ``frontier_broadcast_cap``, the
-    uncounted second relax rides AQE's runtime shuffle-size decision —
-    the safe default for graphs whose reachable set can't fit one
-    executor (relaxations degrade to shuffle joins but stay correct).
+    :func:`bfs_hops`: each round's single relax broadcasts only while
+    its exactly counted input is under ``frontier_broadcast_cap`` and
+    is a static shuffle join over it — the safe default for graphs
+    whose reachable set can't fit one executor (relaxations degrade
+    to shuffle joins but stay correct).
     """
     e = (
         edges.select(
@@ -494,10 +488,7 @@ def shortest_paths(
                 if broadcast_frontier is not None
                 else n_prev <= frontier_broadcast_cap
             )
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(max(1, min(default_width, -(-n_prev // 2_000_000)))),
-            )
+            pin_loop_width(spark, default_width, n_prev)
             relaxed = relax(dist, small).transform(materialize, eager=False)
             done += 1
             agg = relaxed.agg(

@@ -77,33 +77,6 @@ def kmv_sketch(
     )
 
 
-def kmv_distinct_estimate(
-    sketch: DataFrame, k: int = 256
-) -> DataFrame:
-    """→ (set_key, kmv_size, approx_distinct) from a kmv_sketch frame.
-
-    A sketch holding fewer than k hashes saw the whole set — the
-    estimate degrades gracefully to the exact distinct count.
-    """
-    agg = sketch.groupBy("set_key").agg(
-        F.count(F.lit(1)).cast("long").alias("kmv_size"),
-        F.max("h").alias("hk"),
-    )
-    return agg.select(
-        "set_key",
-        "kmv_size",
-        F.round(
-            F.when(
-                F.col("kmv_size") < k, F.col("kmv_size").cast("double")
-            ).otherwise(
-                F.lit(float(k - 1) * _HASH_SPACE)
-                / F.col("hk").cast("double")
-            ),
-            4,
-        ).alias("approx_distinct"),
-    )
-
-
 def kmv_pairwise_overlap(
     df: DataFrame, set_col: str, value_col: str, k: int = 256
 ) -> DataFrame:

@@ -88,8 +88,16 @@ def static_rounds(spark):
 
     Also saves/restores ``spark.sql.shuffle.partitions``: without AQE
     coalescing, a loop may pin a counted per-round width inside the
-    scope (star contraction does); the exit restores the session width
+    scope (:func:`pin_loop_width`); the exit restores the session width
     whatever the loop set.
+
+    Session-wide, not query-scoped: both confs are SparkSession state,
+    so any query another thread plans on the same session while the
+    scope is open runs without AQE and at the loop's pinned width. Do
+    not wrap a loop while other queries plan on its session. Nesting
+    is safe but flat: the inner scope sees AQE already off, and its
+    exit restores the width it found on entry (the outer loop's
+    current pin), then the outer exit restores the session's own.
     """
     conf = spark.conf
     old = conf.get("spark.sql.adaptive.enabled", "true")
@@ -100,6 +108,23 @@ def static_rounds(spark):
     finally:
         conf.set("spark.sql.adaptive.enabled", old)
         conf.set("spark.sql.shuffle.partitions", old_width)
+
+
+def pin_loop_width(
+    spark, default_width: int, n_rows: int, rows_per_partition: int = 2_000_000
+) -> None:
+    """Set the in-loop shuffle width to ceil(``n_rows`` /
+    ``rows_per_partition``), clamped to [1, ``default_width``].
+
+    Inside :func:`static_rounds` AQE no longer coalesces the small
+    per-round exchanges, so a loop pins a width counted from the state
+    it carries. ``default_width`` is the session width read BEFORE the
+    scope opened (the conf holds the last pin inside it); past
+    ``default_width × rows_per_partition`` rows the loop runs at the
+    session width, the web-scale posture.
+    """
+    width = max(1, min(default_width, -(-n_rows // rows_per_partition)))
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
 
 
 def release(df: DataFrame) -> None:

@@ -1,11 +1,10 @@
-"""Top principal component via power iteration — ORACLE-REPLAYABLE.
+"""Principal components via power iteration — ORACLE-REPLAYABLE.
 
-``similarity.pca_project`` (numpy ``eigh``) is the production PCA; its
-eigendecomposition is a black box no SQL engine replays, so its
-registry entry is rows-only. This module trades the full spectrum for
-ONE component computed by an algorithm whose every step is exact
-integer arithmetic or IEEE ops on identical operands — the same
-replay discipline that converted k-means and BPE to hash-green:
+This is the package's PCA. A numpy ``eigh`` eigendecomposition is a
+black box no SQL engine replays, so each component is instead computed
+by an algorithm whose every step is exact integer arithmetic or IEEE
+ops on identical operands — the same replay discipline that converted
+k-means and BPE to hash-green:
 
 1. Integer-quantized second moments: per row, round(x_i·x_j·1e10) —
    an int64 — summed EXACTLY (integer addition is associative, so
@@ -28,8 +27,8 @@ partials; the iteration itself is d×d, independent of row count.
 Convergence note, stated honestly: power iteration finds the top
 eigenvector at rate (λ2/λ1)^t; 12 iterations suffice for spectra with
 a clear top gap (pytest pins agreement with numpy on synthetic
-anisotropic data). Degenerate λ1≈λ2 spectra converge slowly — the
-production eigh path has no such caveat.
+anisotropic data). Degenerate λ1≈λ2 spectra converge slowly, where
+an eigendecomposition would not.
 """
 
 from __future__ import annotations
@@ -243,11 +242,10 @@ def power_iteration_pca(
     """→ (vec_id, component_idx, value): projection onto the top
     ``n_components`` principal directions, each found by the
     integer-exact power iteration and removed by Rayleigh/Hotelling
-    deflation (:func:`_rayleigh_deflate`) before the next — the
-    oracle-replayable counterpart to ``similarity.pca_project``'s
-    eigh. Convergence caveat per component as in the module
-    docstring; replay fidelity does NOT depend on convergence (both
-    engines walk the identical trajectory)."""
+    deflation (:func:`_rayleigh_deflate`) before the next.
+    Convergence caveat per component as in the module docstring;
+    replay fidelity does NOT depend on convergence (both engines walk
+    the identical trajectory)."""
     vecs, dim, c_int = _collect_cov_int(embeddings, id_col, vec_col)
     projs = []
     c = c_int

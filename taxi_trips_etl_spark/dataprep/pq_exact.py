@@ -1,12 +1,11 @@
 """Product Quantization with ORACLE-REPLAYABLE integer training.
 
-``similarity.pq_topk`` is the production PQ (float Lloyd's on a
-driver sample, ADC scoring) — numerically excellent, but float
-centroid means are accumulation-order-dependent, so no SQL engine can
-replay the training and its registry entry was rows-only. This module
-applies the replay discipline that converted k-means, BPE and PCA
-(pca_power.py) to hash-green: every training step is exact integer
-arithmetic or ONE IEEE op on identical operands.
+This is the package's PQ. Float Lloyd's centroid means are
+accumulation-order-dependent, so no SQL engine could replay a float
+training; this module applies the replay discipline that converted
+k-means, BPE and PCA (pca_power.py) to hash-green: every training
+step is exact integer arithmetic or ONE IEEE op on identical
+operands.
 
 Ledger of exactness (reference semantics: Jégou et al. 2011, ADC):
 

@@ -6,8 +6,8 @@ a shared per-dimension codebook of two doubles. At 100 TB the codebook
 is what makes this shape work — it is a per-DIMENSION (not per-vector)
 min/max, so the "training" pass is one narrow aggregation whose output
 is `dims` rows (64 here), broadcast back onto the corpus for the
-encode pass. Compare PQ (`similarity.pq_ann_topk`) which trains k-means
-codebooks per subspace; scalar quantization is the cheaper, fully
+encode pass. Compare PQ (`pq_exact.pq_topk_replayable`) which trains
+k-means codebooks per subspace; scalar quantization is the cheaper, fully
 SQL-expressible end of the same spectrum.
 
 Determinism: the affine map uses only IEEE double arithmetic
@@ -80,34 +80,4 @@ def quantize_int8(
         id_col,
         F.col("dim_idx").cast("long").alias("dim_idx"),
         code.alias("code"),
-    )
-
-
-def dequantize_error(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """→ (vec_id, max_abs_err): per-vector worst-dimension
-    reconstruction error of the int8 round-trip — the quality gauge a
-    pipeline checks before committing to quantized storage. One extra
-    groupBy on vec_id over the encode plan."""
-    stats = F.broadcast(dim_minmax(emb, vec_col))
-    exploded = emb.select(
-        F.col(id_col),
-        F.posexplode(vec_col).alias("dim_idx", "_v"),
-    ).select(id_col, "dim_idx", F.col("_v").cast("double").alias("v"))
-    scale = (F.col("mx") - F.col("mn")) / F.lit(255.0)
-    q = F.least(
-        F.lit(255.0),
-        F.greatest(F.lit(0.0), F.round((F.col("v") - F.col("mn")) / scale)),
-    )
-    recon = F.when(scale == 0, F.col("mn")).otherwise(
-        F.col("mn") + q * scale
-    )
-    return (
-        exploded.join(stats, "dim_idx")
-        .select(id_col, F.abs(F.col("v") - recon).alias("err"))
-        .groupBy(id_col)
-        .agg(F.max("err").alias("max_abs_err"))
     )

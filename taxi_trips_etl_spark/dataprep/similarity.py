@@ -10,9 +10,10 @@ nearest-neighbor primitives for a training-data pipeline.
   is really a broadcast-nested-loop producing |Q|·|C| scored rows that
   immediately collapse through a per-query top-k — no shuffle of the
   corpus itself.
-- :func:`ivf_topk` / :func:`pq_topk` — the index paths: inverted
-  lists over coarse cells; product-quantization codes scored by ADC
-  table lookups (the compressed-scan shape for huge corpora).
+- :func:`ivf_topk` — the index path: inverted lists over coarse
+  cells. Product quantization (codes scored by ADC table lookups, the
+  compressed-scan shape for huge corpora) is
+  ``pq_exact.pq_topk_replayable``.
 - :func:`random_projection` — deterministic JL dimension reduction,
   bit-exact against the oracle via a shared expression generator.
 - :func:`cosine_topk_lsh` — the scale path: sign-LSH bucketing
@@ -461,153 +462,6 @@ def cosine_topk_lsh(
     )
 
 
-def pq_topk(
-    embeddings: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    k: int = 3,
-    query_ids_below: int = 10,
-    sample_n: int = 512,
-    train_iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-Quantization ANN (Jégou et al. 2011): compress each
-    vector to ``m`` sub-codes (one byte-ish each), score queries by
-    asymmetric distance (ADC) — summed table lookups, never touching
-    the raw corpus vectors.
-
-    Why this is THE 100 TB ANN shape: a d=768 float corpus is ~3 KB/
-    vector; PQ codes at m=8 are 8 bytes — a 384× scan-size reduction,
-    so the candidate scan streams codes, not vectors. Training reads a
-    bounded deterministic sample (lowest ``sample_n`` ids — standard
-    practice: codebooks train on a sample, driver-side numpy, exact
-    Lloyd's); encoding is ONE narrow projection per corpus row against
-    literal codebooks (same inlined-centroid trick as
-    clustering.kmeans_assign — no join, no shuffle); each query's ADC
-    lookup table is m×ksub doubles, broadcast as literals.
-
-    Returns (query_id, neighbor_id, approx_sq_dist, knn_rank) — ranked
-    by the PQ-approximated squared L2 distance. Exact re-rank of the
-    shortlist (as in IVF) composes downstream if needed.
-    """
-    if m < 1 or not 2 <= ksub <= 256 or k < 1:
-        raise ValueError(f"pq_topk needs m >= 1, 2 <= ksub <= 256, k >= 1, got {m}/{ksub}/{k}")
-    import numpy as np
-
-    vecs = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    sample = np.array(
-        [r["v"] for r in vecs.orderBy(id_col).limit(sample_n).collect()],
-        dtype=np.float64,
-    )
-    d = sample.shape[1]
-    assert d % m == 0, f"dim {d} not divisible by m={m}"
-    ds = d // m
-
-    # Driver-side exact Lloyd's per subspace (bounded: sample_n × d).
-    books: list[np.ndarray] = []
-    for s in range(m):
-        X = sample[:, s * ds : (s + 1) * ds]
-        C = X[:ksub].copy()
-        for _ in range(train_iters):
-            dist = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            assign = dist.argmin(1)
-            for j in range(ksub):
-                if (assign == j).any():
-                    C[j] = X[assign == j].mean(0)
-        books.append(C)
-
-    # Expression construction note: every F.lit/F.array/zip_with is a
-    # py4j round-trip, and this operator needs m*ksub literal centroid
-    # arrays plus n_queries*m literal lookup tables — built as Column
-    # objects that was ~6 s of DRIVER time before a single task ran.
-    # Building each expression as ONE SQL string (parsed JVM-side by
-    # F.expr) collapses thousands of round-trips into m + n_queries.
-    from taxi_trips_etl_spark.dataprep.clustering import _sql_double
-
-    def _arr(xs) -> str:
-        return "array(" + ",".join(_sql_double(x) for x in xs) + ")"
-
-    def _sqd_sql(s: int, cent_row) -> str:
-        return (
-            f"aggregate(zip_with(slice(v, {s * ds + 1}, {ds}), "
-            f"{_arr(cent_row)}, (a, b) -> (a - b) * (a - b)), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
-
-    # Encode: per subspace, argmin over ksub literal centroids. Two
-    # selects so the distance array is computed once per row, not once
-    # per argmin reference.
-    dist_cols = [
-        F.expr(
-            "array(" + ",".join(_sqd_sql(s, books[s][j]) for j in range(ksub)) + ")"
-        ).alias(f"d{s}")
-        for s in range(m)
-    ]
-    codes = vecs.select(id_col, *dist_cols).select(
-        id_col,
-        *[
-            F.expr(
-                f"CAST(array_position(d{s}, array_min(d{s})) - 1 AS INT)"
-            ).alias(f"c{s}")
-            for s in range(m)
-        ],
-    )
-
-    # Queries: ADC lookup tables computed driver-side (tiny), applied
-    # as literal-array lookups over the code table.
-    queries = [
-        (r[id_col], np.array(r["v"]))
-        for r in vecs.filter(F.col(id_col) < query_ids_below).collect()
-    ]
-    def _adc_sql(qid: int, qv) -> str:
-        luts = [
-            [float(((qv[s * ds : (s + 1) * ds] - books[s][j]) ** 2).sum()) for j in range(ksub)]
-            for s in range(m)
-        ]
-        score = " + ".join(
-            f"element_at({_arr(luts[s])}, c{s} + 1)" for s in range(m)
-        )
-        return (
-            f"struct(CAST({qid} AS BIGINT) AS query_id, "
-            f"{score} AS approx_sq_dist)"
-        )
-
-    # All queries score in ONE pass over the code table: the per-query
-    # ADC structs explode from a single projection — the corpus is
-    # scanned once, not once per query.
-    scored = (
-        codes.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.explode(
-                F.expr(
-                    "array("
-                    + ",".join(_adc_sql(qid, qv) for qid, qv in queries)
-                    + ")"
-                )
-            ).alias("q"),
-        )
-        .select("q.query_id", "neighbor_id", "q.approx_sq_dist")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sq_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("approx_sq_dist", 6).alias("approx_sq_dist"),
-            F.col("knn_rank").cast("long").alias("knn_rank"),
-        )
-    )
-
-
 def random_projection_sql(
     in_dim: int,
     out_dim: int = 16,
@@ -668,97 +522,6 @@ def random_projection(
             F.round(F.expr(e), 6).alias(f"rp_{j}")
             for j, e in enumerate(exprs)
         ],
-    )
-
-
-def pca_project(
-    embeddings: DataFrame,
-    n_components: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PCA projection of an embedding column, Spark-first:
-
-    1. The Gram matrix X'X and column sums come from ONE Arrow-batched
-       ``mapInPandas`` pass emitting per-batch partials (count, sum
-       vector, d×d Gram as a flat array) — the MLlib
-       ``computeGramianMatrix`` shape (treeAggregate of BLAS syrk),
-       expressed as Pandas-on-Arrow because numpy's matmul IS the BLAS
-       call. A pure-SQL variant (one struct of d·(d+1)/2 sum() aggs)
-       is semantically identical but compiles a 2000+-expression
-       aggregate — measured 8.6s of codegen vs 2s end-to-end for this
-       shape at d=64. Partials are one row per batch (~d² doubles), so
-       the driver collect is bounded by partition count, not rows —
-       the same ledger as Lloyd's k-means.
-    2. Covariance assembles DRIVER-side (E[xy] − E[x]E[y]);
-       ``numpy.linalg.eigh`` gives the top ``n_components``
-       eigenvectors — d×d work, independent of row count.
-    3. Projection is one narrow F.expr with the eigenvectors inlined as
-       literal arrays — no join, no shuffle, whole-stage codegen; the
-       corpus-wide pass stays JVM-side.
-
-    Eigenvector sign is fixed (first nonzero coordinate positive) so
-    the projection is deterministic across platforms. Returns
-    (vec_id, pc) with pc = array of ``n_components`` doubles, variance-
-    ordered (largest first).
-    """
-    import numpy as np
-
-    vecs = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-
-    def gram_partials(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.vstack(pdf["v"].to_numpy())
-            yield pd.DataFrame(
-                {
-                    "n": [len(X)],
-                    "s": [X.sum(axis=0).tolist()],
-                    "g": [(X.T @ X).ravel().tolist()],
-                }
-            )
-
-    parts = vecs.select("v").mapInPandas(
-        gram_partials, "n long, s array<double>, g array<double>"
-    ).collect()
-    if not parts:
-        raise ValueError("pca_project: embeddings input is empty")
-    n = sum(r["n"] for r in parts)
-    colsum = np.sum([np.array(r["s"]) for r in parts], axis=0)
-    d = len(colsum)
-    gram = np.sum([np.array(r["g"]) for r in parts], axis=0).reshape(d, d)
-    mean = colsum / n
-    cov = gram / n - np.outer(mean, mean)
-    vals, vecs_np = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:n_components]
-    comps = []
-    for idx in order:
-        e = vecs_np[:, idx]
-        nz = np.nonzero(np.abs(e) > 1e-12)[0]
-        if len(nz) and e[nz[0]] < 0:
-            e = -e
-        comps.append(e)
-
-    from taxi_trips_etl_spark.dataprep.clustering import _sql_double
-
-    def arr(xs) -> str:
-        return "array(" + ",".join(_sql_double(x) for x in xs) + ")"
-
-    # pc_j(v) = <v, e_j> - <mean, e_j>  (centering folded into a
-    # precomputed scalar so the row expression is a pure dot product).
-    proj = ", ".join(
-        f"round(aggregate(zip_with(v, {arr(e)}, (a, b) -> a * b), "
-        f"0.0D, (acc, x) -> acc + x) - {float(np.dot(mean, e))!r}D, 6)"
-        for e in comps
-    )
-    return vecs.select(
-        id_col, F.expr(f"array({proj})").alias("pc")
     )
 
 

@@ -823,8 +823,7 @@ def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dataprep/pca_power.py:power_iteration_pca) — DuckDB replays the
     full trajectory (moments → covariance → per-component recursive
     iteration → Rayleigh deflation), so the hash pins all four
-    projections; the production eigh path (similarity.pca_project)
-    keeps its Spark≡numpy pytest pins.
+    projections.
 
     Output is posexploded to scalar (vec_id, component_idx, value) rows
     per the registry's BIGINT/DOUBLE/VARCHAR portability rule — array

@@ -1109,9 +1109,7 @@ def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compressed-scan ANN shape for 100 TB corpora. This entry runs
     the INTEGER-EXACT training/encoding twin (dataprep/pq_exact.py:
     quantized coords, integer Lloyd's, int64 ADC in 1e-12 units) so
-    DuckDB replays the whole trajectory and the hash pins it; the
-    float production path (similarity.pq_topk, driver numpy Lloyd's)
-    keeps its pytest recall + Spark≡numpy ADC-equality pins."""
+    DuckDB replays the whole trajectory and the hash pins it."""
     from taxi_trips_etl_spark.dataprep.pq_exact import pq_topk_replayable
 
     return pq_topk_replayable(

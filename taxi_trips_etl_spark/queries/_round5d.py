@@ -427,9 +427,8 @@ def _pca_power_oracle() -> str:
 @register("pca_power_projection", _pca_power_oracle())
 def q_pca_power_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-principal-component projection via INTEGER-exact power
-    iteration (dataprep/pca_power.py) — the oracle-replayable
-    counterpart to the rows-only eigh-based embedding_pca_project:
-    quantized int64 moments (order-free sums), integer iteration
+    iteration (dataprep/pca_power.py) — the one-component form of
+    embedding_pca_project, without deflation: quantized int64 moments (order-free sums), integer iteration
     state, engine-matched half-away rounding. DuckDB replays the whole
     trajectory through a recursive CTE and hash-matches bit-exactly."""
     from taxi_trips_etl_spark.dataprep.pca_power import power_iteration_pc1

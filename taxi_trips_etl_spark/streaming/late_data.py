@@ -80,11 +80,11 @@ def run_late_data_drain(
     checkpoint_path: str,
     state_partitions: int = 2,
 ) -> None:
-    """Append-mode drain of the staged 3-batch sequence (same
-    state-partition bracket discipline as outer_join.py)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    """Append-mode drain of the staged 3-batch sequence, with the
+    state-store width pinned by ``streaming.state.state_partitions``."""
+    from taxi_trips_etl_spark.streaming.state import state_partitions as _pin
+
+    with _pin(spark, state_partitions):
         q = (
             windowed_counts_stream(spark, staged_dir, schema)
             .writeStream.format("parquet")
@@ -95,8 +95,6 @@ def run_late_data_drain(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def stage_late_replay(

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from taxi_trips_etl_spark.streaming.state import state_partitions as _pin
+
 
 def purchases_without_clicks_stream(
     spark: SparkSession,
@@ -99,9 +101,7 @@ def run_streaming_outer_attribution(
     whole query lifecycle completes inside it. Size it to expected
     keys-in-state, not to the batch engine's shuffle width.
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with _pin(spark, state_partitions):
         q = (
             purchases_without_clicks_stream(
                 spark, staged_dir, schema, window_hours
@@ -114,8 +114,6 @@ def run_streaming_outer_attribution(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def attribution_full_outer_stream(
@@ -176,9 +174,7 @@ def run_streaming_full_outer_attribution(
 ) -> None:
     """Drain the staged dir through the FULL OUTER join (same
     state-partition bracket as the LEFT OUTER runner)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with _pin(spark, state_partitions):
         q = (
             attribution_full_outer_stream(
                 spark, staged_dir, schema, window_hours
@@ -191,8 +187,6 @@ def run_streaming_full_outer_attribution(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def attributed_purchases_semi_stream(
@@ -249,9 +243,7 @@ def run_streaming_semi_attribution(
     state_partitions: int = 2,
 ) -> None:
     """Drain the staged dir through the LEFT SEMI join."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with _pin(spark, state_partitions):
         q = (
             attributed_purchases_semi_stream(
                 spark, staged_dir, schema, window_hours
@@ -264,5 +256,3 @@ def run_streaming_semi_attribution(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -48,13 +48,12 @@ def run_resumable_drain(
     ``src`` (AvailableNow), overwriting ``out_path`` with the full
     aggregation state each batch. Call again after adding files —
     the shared checkpoint resumes offsets + state."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    from taxi_trips_etl_spark.streaming.state import state_partitions as _pin
 
     def sink(batch: DataFrame, _bid: int) -> None:
         batch.write.mode("overwrite").parquet(out_path)
 
-    try:
+    with _pin(spark, state_partitions):
         q = (
             _daily_counts(spark, src, schema)
             .writeStream.foreachBatch(sink)
@@ -64,5 +63,3 @@ def run_resumable_drain(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -19,6 +19,10 @@ def state_partitions(spark: SparkSession, n: int):
     shuffle width. The conf must be set BEFORE ``start()`` (state
     stores cannot be re-partitioned without a checkpoint rebuild), and
     the query keeps its width after the conf is restored.
+
+    The conf is session-global: a batch query planned on the same
+    session while the scope is open inherits the pinned width, so do
+    not overlap a drain with other planning on its session.
     """
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))

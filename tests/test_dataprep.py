@@ -877,8 +877,6 @@ def test_similarity_sampling_packing_params_guarded(spark):
         similarity.cosine_topk_lsh(emb, planes=0)
     with pytest.raises(ValueError, match="k/planes"):
         similarity.cosine_topk_lsh_multiprobe(emb, k=0)
-    with pytest.raises(ValueError, match="ksub"):
-        similarity.pq_topk(emb, ksub=1)
     with pytest.raises(ValueError, match="in_dim/out_dim"):
         similarity.random_projection(emb, in_dim=4, out_dim=0)
     with pytest.raises(ValueError, match="k/iterations"):

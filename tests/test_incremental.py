@@ -6,10 +6,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from taxi_trips_etl_spark.plans.incremental import merge_rollup, partial_rollup
+from taxi_trips_etl_spark.operators.incremental import (
+    aggregate_partials,
+    merge_partials,
+)
 from taxi_trips_etl_spark.queries import _events
 
 KEYS = ["event_type"]
+
+
+def _cents():
+    # built lazily: Column construction needs an active SparkSession
+    return F.round(F.col("value") * 100).cast("long")
 
 
 def test_incremental_fold_equals_full_recompute(spark, sf_dir):
@@ -18,28 +26,21 @@ def test_incremental_fold_equals_full_recompute(spark, sf_dir):
     day1 = ev.filter(F.col("ts") <= cut)
     day2 = ev.filter(F.col("ts") > cut)
 
-    state = partial_rollup(day1, KEYS)
-    folded = merge_rollup(state, partial_rollup(day2, KEYS), KEYS)
-    full = partial_rollup(ev, KEYS)
+    state = aggregate_partials(day1, KEYS, _cents())
+    folded = merge_partials(state, aggregate_partials(day2, KEYS, _cents()), KEYS)
+    full = aggregate_partials(ev, KEYS, _cents())
 
-    f = {tuple(r[k] for k in KEYS): r.asDict() for r in folded.collect()}
-    g = {tuple(r[k] for k in KEYS): r.asDict() for r in full.collect()}
-    assert set(f) == set(g)
-    for k in f:
-        assert f[k]["n_rows"] == g[k]["n_rows"]
-        assert f[k]["min_value"] == g[k]["min_value"]
-        assert f[k]["max_value"] == g[k]["max_value"]
-        # float sum: fold order differs → allow ulp-scale tolerance
-        assert abs(f[k]["sum_value"] - g[k]["sum_value"]) < 1e-6 * max(
-            1.0, abs(g[k]["sum_value"])
-        )
+    # integer partials: the fold is exact, not ulp-close
+    assert sorted(map(tuple, folded.collect())) == sorted(
+        map(tuple, full.collect())
+    )
 
 
 def test_incremental_is_idempotent_per_key(spark, sf_dir):
     ev = _events(spark, sf_dir).select("event_type", "value").limit(1000)
-    state = partial_rollup(ev, KEYS)
-    empty = partial_rollup(ev.filter(F.lit(False)), KEYS)
-    again = merge_rollup(state, empty, KEYS)
+    state = aggregate_partials(ev, KEYS, _cents())
+    empty = aggregate_partials(ev.filter(F.lit(False)), KEYS, _cents())
+    again = merge_partials(state, empty, KEYS)
     a = sorted(map(tuple, state.collect()))
     b = sorted(map(tuple, again.collect()))
     assert a == b

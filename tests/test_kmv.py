@@ -3,7 +3,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.kmv import (
-    kmv_distinct_estimate,
     kmv_pairwise_overlap,
     kmv_sketch,
 )
@@ -37,19 +36,6 @@ def test_kmv_sketch_is_k_smallest_and_partitioning_invariant(spark):
     assert set(counts.values()) == {64}
 
 
-def test_kmv_distinct_estimate_within_error_bound(spark):
-    df = _synth(spark)
-    est = {
-        r["set_key"]: r["approx_distinct"]
-        for r in kmv_distinct_estimate(
-            kmv_sketch(df, "set_key", "v", k=256), k=256
-        ).collect()
-    }
-    # relative error ~ 1/sqrt(k-1) ≈ 6.3%; allow 4 sigma
-    for v in est.values():
-        assert abs(v - 4000) / 4000 < 0.25
-
-
 def test_kmv_overlap_tracks_exact_jaccard(spark):
     df = _synth(spark)
     got = {
@@ -69,12 +55,5 @@ def test_kmv_overlap_tracks_exact_jaccard(spark):
 
 def test_kmv_small_set_estimate_is_exact(spark):
     df = _synth(spark, n_sets=2, n_per=100, overlap=30)
-    est = {
-        r["set_key"]: r
-        for r in kmv_distinct_estimate(
-            kmv_sketch(df, "set_key", "v", k=256), k=256
-        ).collect()
-    }
-    assert est["s0"]["approx_distinct"] == 100.0
     ov = kmv_pairwise_overlap(df, "set_key", "v", k=256).collect()[0]
     assert ov["union_est"] == 170.0 and ov["inter_est"] == 30.0

