@@ -36,5 +36,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted for UDF-backed ops)."""
+    """DuckDB-equivalent SQL per query (every query has one)."""
     return all_oracles()

@@ -26,6 +26,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# A chunk re-runs once when some query's warm-sample spread exceeds this
+# multiple of its best time (see run_chunked).
+RETRY_SPREAD = 1.0
+
 
 def force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
@@ -214,18 +218,7 @@ def run_chunked(
     # both runs measure it, the min converges to the true new cost, and
     # the per-query spread stays in the artifact (max over both runs'
     # spreads, so the observed burst variance is never hidden). Bounded:
-    # ≤ 2× wall time, only when the evidence triggers. Tune/disable via
-    # SPARK_GRAFT_BENCH_RETRY_SPREAD (relative spread threshold;
-    # <= 0 disables; non-numeric is a hard error, same policy as
-    # SPARK_GRAFT_BENCH_CHUNK_TIMEOUT — ADVICE r9).
-    raw_retry = os.environ.get("SPARK_GRAFT_BENCH_RETRY_SPREAD", "1.0")
-    try:
-        retry_spread = float(raw_retry)
-    except ValueError:
-        raise SystemExit(
-            f"SPARK_GRAFT_BENCH_RETRY_SPREAD must be a number (relative "
-            f"spread threshold; <= 0 disables the retry), got {raw_retry!r}"
-        ) from None
+    # ≤ 2× wall time, only when the evidence triggers (RETRY_SPREAD).
 
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
@@ -237,13 +230,13 @@ def run_chunked(
         if parallelism is None:
             parallelism = payload.get("parallelism")
         t, s = payload["queries"], payload.get("spread", {})
-        churned = retry_spread > 0 and any(
-            s[n] > retry_spread * t[n] for n in s if t.get(n, 0) > 0
+        churned = any(
+            s[n] > RETRY_SPREAD * t[n] for n in s if t.get(n, 0) > 0
         )
         if churned:
             sys.stderr.write(
                 f"bench: chunk {lo}..{lo + len(part)} saw rel spread > "
-                f"{retry_spread} (steal burst); re-running once\n"
+                f"{RETRY_SPREAD} (steal burst); re-running once\n"
             )
             chunks_retried.append(f"{lo}..{lo + len(part)}")
             p2 = run_worker(part, lo)
@@ -269,7 +262,7 @@ def run_chunked(
         # r9 #2): threshold that was active plus which chunks re-ran, so
         # a round-over-round diff can see whether a reading was guarded.
         retry_meta={
-            "retry_spread_threshold": retry_spread,
+            "retry_spread_threshold": RETRY_SPREAD,
             "chunks_retried": chunks_retried,
         },
         parallelism=parallelism,
@@ -348,16 +341,28 @@ def emit(
     # canonical summary with non-comparable low-core numbers). A run
     # with SPARK_GRAFT_CPUS set below the hardware width still prints
     # both JSON lines (the probe's own artifact); it just doesn't
-    # replace the canonical file. --no-summary opts any run out.
+    # replace the canonical file. --no-summary opts any run out. A
+    # skipped write names its reason on stderr.
+    if not full_run:
+        return
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    non_default_cores = cpus_env is not None and cpus_env != str(os.cpu_count())
-    if full_run and not no_summary and not non_default_cores:
-        summary_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "bench_summary.json"
+    skip = None
+    if no_summary:
+        skip = "--no-summary"
+    elif cpus_env is not None and cpus_env != str(os.cpu_count()):
+        skip = (
+            f"SPARK_GRAFT_CPUS={cpus_env} differs from "
+            f"os.cpu_count()={os.cpu_count()}"
         )
-        with open(summary_path, "w") as fh:
-            json.dump(payload, fh, indent=1, sort_keys=True)
-            fh.write("\n")
+    if skip:
+        sys.stderr.write(f"bench: bench_summary.json not written ({skip})\n")
+        return
+    summary_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "bench_summary.json"
+    )
+    with open(summary_path, "w") as fh:
+        json.dump(payload, fh, indent=1, sort_keys=True)
+        fh.write("\n")
 
 
 if __name__ == "__main__":

@@ -1,9 +1,5 @@
 """Query registry package (split from the former 7,300-line queries.py).
 
-Import order below IS the registration order of the old monolith — the
-driver-rotation sort key includes registration index, so the batch
-modules must load in exactly this sequence. Add new batches at the END.
-
 Public surface is unchanged: ``all_queries``/``all_oracles``/``register``
 plus the handful of helpers tests use (``_events``, ``_t``, ...) and
 every ``q_*`` builder re-exported at package level.
@@ -20,11 +16,8 @@ from taxi_trips_etl_spark.queries._registry import (  # noqa: F401
     QueryFn,
     _ORACLES,
     _QUERIES,
-    _VERIFIED_ROUNDS,
     _events,
-    _mark_verified,
     _norm_trips,
-    _rotation_order,
     _t,
     _ts_str,
     _utc,
@@ -37,7 +30,6 @@ from taxi_trips_etl_spark.sources.taxi_testdata import (  # noqa: F401
     _zone_wkt,
 )
 
-# Registration order — DO NOT REORDER (see module docstring).
 from taxi_trips_etl_spark.queries._relational import *  # noqa: F401,F403,E402
 from taxi_trips_etl_spark.queries._dedup_sim_text import *  # noqa: F401,F403,E402
 from taxi_trips_etl_spark.queries._mm_streaming import *  # noqa: F401,F403,E402

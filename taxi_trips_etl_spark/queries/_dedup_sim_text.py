@@ -1,7 +1,3 @@
-# Auto-split from the original monolithic queries.py (round 5, registry
-# hygiene): registration ORDER is load-bearing (the driver-rotation sort
-# key includes registration index), so queries/__init__.py imports the
-# batch modules in the exact order the monolith registered them.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401

@@ -1,7 +1,3 @@
-# Auto-split from the original monolithic queries.py (round 5, registry
-# hygiene): registration ORDER is load-bearing (the driver-rotation sort
-# key includes registration index), so queries/__init__.py imports the
-# batch modules in the exact order the monolith registered them.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
@@ -313,12 +309,13 @@ def q_flagship_known_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
     (WKT-centroid→cell UDF on the deduped zone dim, two broadcast
     joins) → rank/top-k/USING join — against an exact DuckDB oracle.
 
-    Unlike ``flagship_most_populars`` (rows-only: hex ids come from the
-    UDF), the synthetic zone dim's centroids are knowable at import
-    time, so the oracle carries the zone→cell mapping as a literal
-    VALUES list produced by the same pure-Python ``centroid_cell`` the
-    UDF wraps — pinning the relational 95% of the pipeline exactly
-    while tests/test_geo.py pins the UDF kernel itself.
+    The hex ids come from the UDF, but the synthetic zone dim's
+    centroids are knowable at import time, so the oracle (which
+    ``flagship_most_populars`` reuses under its own aliases) carries
+    the zone→cell mapping as a literal VALUES list produced by the
+    same pure-Python ``centroid_cell`` the UDF wraps — pinning the
+    relational 95% of the pipeline exactly while tests/test_geo.py
+    pins the UDF kernel itself.
     """
     from taxi_trips_etl_spark.operators.enrich import enrich_trips
     from taxi_trips_etl_spark.sources.taxi_testdata import zone_dim

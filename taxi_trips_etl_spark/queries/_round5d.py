@@ -1,8 +1,4 @@
-"""Round-5d batch: KMV set-overlap sketches.
-
-Registered AFTER _round5c (registration order is the rotation
-tie-breaker — see queries/__init__.py).
-"""
+"""Round-5d batch: KMV set-overlap sketches."""
 
 from __future__ import annotations
 

@@ -1,9 +1,6 @@
 """Round-5e batch: CMS frequency sketch, Kneser-Ney smoothing,
 sparse TF-IDF cosine pairs, skip-gram co-occurrence, and the
 dimension-truncation ANN audit.
-
-Registered AFTER _round5d (registration order is the rotation
-tie-breaker — see queries/__init__.py).
 """
 
 from __future__ import annotations

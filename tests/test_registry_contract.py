@@ -6,6 +6,10 @@ the whole registry, vs minutes for full value validation."""
 
 from __future__ import annotations
 
+import json
+import re
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -52,17 +56,81 @@ def test_every_oracle_schema_matches_spark(spark, sf_dir, ddb):
 
 
 def test_rotation_bookkeeping_names_exist():
-    """A typo in _REVERIFY or a _R{N}_VERIFIED tuple silently breaks
-    the rotation (the name would sort nothing / mark nothing) — every
-    bookkeeping name must be a registered query."""
-    from taxi_trips_etl_spark.queries._registry import (
-        _QUERIES,
-        _REVERIFY,
-        _VERIFIED_ROUNDS,
-    )
+    """A typo in _REVERIFY silently breaks the rotation (the name would
+    front nothing) — every name in it must be a registered query."""
+    from taxi_trips_etl_spark.queries._registry import _QUERIES, _REVERIFY
 
-    registered = set(_QUERIES)
-    ghosts = sorted(
-        (set(_REVERIFY) | set(_VERIFIED_ROUNDS)) - registered
-    )
-    assert not ghosts, f"rotation bookkeeping names not registered: {ghosts}"
+    ghosts = sorted(set(_REVERIFY) - set(_QUERIES))
+    assert not ghosts, f"_REVERIFY names not registered: {ghosts}"
+
+
+# --- verification rotation (derived from the committed CORRECTNESS files) --
+
+ROOT = Path(__file__).resolve().parents[1]
+
+
+def _rotation_key(name: str) -> int:
+    from taxi_trips_etl_spark.queries._registry import _LAST_GREEN, _REVERIFY
+
+    return 0 if name in _REVERIFY else _LAST_GREEN.get(name, 0)
+
+
+def test_last_green_is_highest_hash_green_round():
+    from taxi_trips_etl_spark.queries._registry import _LAST_GREEN, _QUERIES
+
+    rounds = {
+        int(m.group(1)): json.loads(p.read_text())
+        for p in ROOT.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    }
+    assert rounds, "no CORRECTNESS_r*.json next to the package"
+    wrong = {}
+    for name in _QUERIES:
+        expected = next(
+            (r for r in sorted(rounds, reverse=True)
+             if rounds[r].get(name, {}).get("hash_match") is True),
+            0,
+        )
+        if _LAST_GREEN.get(name, 0) != expected:
+            wrong[name] = (_LAST_GREEN.get(name, 0), expected)
+    assert not wrong, f"name: (derived, expected) {wrong}"
+
+
+def test_rotation_window_holds_the_stalest_names():
+    order = list(all_queries())
+    assert order == list(all_oracles())
+    window, rest = order[:50], order[50:]
+    assert max(map(_rotation_key, window)) <= min(map(_rotation_key, rest))
+
+
+def test_rotation_ties_break_by_name():
+    order = list(all_queries())
+    for a, b in zip(order, order[1:]):
+        assert _rotation_key(a) <= _rotation_key(b)
+        if _rotation_key(a) == _rotation_key(b):
+            assert a < b, (a, b)
+
+
+def test_rotation_without_correctness_files_is_by_name(tmp_path, monkeypatch):
+    from taxi_trips_etl_spark.queries import _registry
+
+    monkeypatch.setattr(_registry, "_ROOT", tmp_path)
+    monkeypatch.setattr(_registry, "_LAST_GREEN", _registry._last_green_rounds())
+    assert _registry._LAST_GREEN == {}
+    order = list(all_queries())
+    assert {_rotation_key(n) for n in order} == {0}
+    assert order == sorted(order)
+
+
+def test_loader_counts_only_hash_green_rows(tmp_path, monkeypatch):
+    from taxi_trips_etl_spark.queries import _registry
+
+    def row(hash_match):
+        return {"rows_match": True, "schema_match": True, "hash_match": hash_match}
+
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps(
+        {"a": row(True), "b": row(True), "c": row(True)}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps(
+        {"a": row(True), "b": row(None), "c": row(False), "d": row(None)}))
+    monkeypatch.setattr(_registry, "_ROOT", tmp_path)
+    assert _registry._last_green_rounds() == {"a": 10, "b": 2, "c": 2}

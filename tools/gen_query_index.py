@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Generate ``queries/INDEX.md``: module → registered query names.
 
-VERDICT r10 #4: the batch modules (``_round6a..p`` etc.) are frozen in
-registration order, so their names say nothing about their contents.
-This script renders the registry's provenance map (captured at
-``register()`` time from each builder's ``__module__``/docstring) into
-a one-page index so an entry can be found without grepping 26 files.
+VERDICT r10 #4: the batch modules' names (``_round6a..p`` etc.) say
+nothing about their contents. This script renders the registry's
+provenance map (captured at ``register()`` time from each builder's
+``__module__``/docstring) into a one-page index so an entry can be
+found without grepping the modules.
 
 Usage:
     python tools/gen_query_index.py            # rewrite queries/INDEX.md
@@ -27,38 +27,33 @@ OUT = os.path.join(_ROOT, "taxi_trips_etl_spark", "queries", "INDEX.md")
 
 
 def render() -> str:
-    from taxi_trips_etl_spark.queries import _ORACLES, _QUERIES
+    from taxi_trips_etl_spark.queries import _QUERIES
     from taxi_trips_etl_spark.queries._registry import _PROVENANCE
 
     by_module: dict[str, list[str]] = {}
-    reg_index: dict[str, int] = {}
-    for idx, name in enumerate(_QUERIES):  # dict order == registration order
+    for name in _QUERIES:
         mod = _PROVENANCE[name][0].rsplit(".", 1)[-1]
         by_module.setdefault(mod, []).append(name)
-        reg_index[name] = idx
     lines = [
         "# Query registry index",
         "",
         "GENERATED by `python tools/gen_query_index.py` — do not edit by",
         "hand (CI compares this file against a fresh render). One row per",
-        "`register()` entry, grouped by defining module in registration",
-        "order; `#` is the global registration index (the rotation-order",
-        "tiebreak), `oracle` marks entries with a DuckDB SQL twin (the",
-        "rest are rows-only checks).",
+        "`register()` entry, grouped by defining module (modules by name,",
+        "entries in definition order). Every entry has a DuckDB SQL oracle.",
         "",
-        f"**{len(_QUERIES)} entries / {len(_ORACLES)} with oracles / "
-        f"{len(by_module)} modules.**",
+        f"**{len(_QUERIES)} entries / {len(by_module)} modules.**",
         "",
     ]
-    for mod, names in by_module.items():  # insertion order == registration
+    for mod in sorted(by_module):
+        names = by_module[mod]
         lines.append(f"## `{mod}.py` ({len(names)} entries)")
         lines.append("")
-        lines.append("| # | query | oracle | description |")
-        lines.append("|---|---|---|---|")
+        lines.append("| query | description |")
+        lines.append("|---|---|")
         for n in names:
             desc = _PROVENANCE[n][1].replace("|", "\\|")
-            mark = "yes" if n in _ORACLES else "rows-only"
-            lines.append(f"| {reg_index[n]} | `{n}` | {mark} | {desc} |")
+            lines.append(f"| `{n}` | {desc} |")
         lines.append("")  # blank line after each section; the final one
         # doubles as the file's POSIX trailing newline after the join
     return "\n".join(lines)
