@@ -371,8 +371,6 @@ def connected_components_auto(
     schema = pairs.select(
         F.col(a_col).alias("doc_id"), F.col(a_col).alias("component_id")
     ).schema
-    if not mapping:
-        return spark.createDataFrame([], schema)
     from taxi_trips_etl_spark.sources.localrel import local_rows
 
     return local_rows(spark, mapping, schema)

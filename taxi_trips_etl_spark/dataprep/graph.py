@@ -86,10 +86,7 @@ def pagerank_distributed(
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
-        spark = edges.sparkSession
-        return spark.createDataFrame(
-            [], "node long, rank_e12 long"
-        )
+        return local_rows(edges.sparkSession, [], "node long, rank_e12 long")
     small = n_nodes <= rank_broadcast_cap
     base = (15 * TOTAL) // (100 * n_nodes)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
@@ -169,7 +166,7 @@ def pagerank_auto(
     n = len(nodes)
     spark = edges.sparkSession
     if n == 0:
-        return spark.createDataFrame([], "node long, rank_e12 long")
+        return local_rows(spark, [], "node long, rank_e12 long")
     deg: dict = {}
     for s in srcs:
         deg[s] = deg.get(s, 0) + 1

@@ -5,10 +5,8 @@ from taxi_trips_etl_spark.functions.scalar import (
     timestamp_diff_minutes,
 )
 from taxi_trips_etl_spark.functions.geo import (
-    hex_cell_udf,
     latlng_to_cell,
     wkt_centroid,
-    wkt_centroid_to_cell_udf,
 )
 
 __all__ = [
@@ -16,8 +14,6 @@ __all__ = [
     "route_struct",
     "time_of_day_str",
     "timestamp_diff_minutes",
-    "hex_cell_udf",
     "latlng_to_cell",
     "wkt_centroid",
-    "wkt_centroid_to_cell_udf",
 ]

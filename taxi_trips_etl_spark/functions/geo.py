@@ -59,18 +59,18 @@ CONTRACT: res scaling   finer res ⇒ strictly more   same (aperture-√7
                         cells over a point set      sizing curve)
 ======================  ==========================  =====================
 
-Scale placement: these run ONLY on the zone dimension (~260 rows in the
-reference's data) *before* it is broadcast — never per-trip. The 100 TB
-fact table never crosses into Python for geo work.
+Scale placement: these are plain Python functions, not UDFs.
+``operators/enrich.dedup_zones`` calls :func:`centroid_cell` on the
+driver for each row of the deduped zone dimension (~260 rows in the
+reference's data) and ships the result back as a ``LocalRelation``
+before it is broadcast — never per trip, and no Python worker. The
+100 TB fact table never crosses into Python for geo work.
 """
 
 from __future__ import annotations
 
 import math
 import re
-
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # ---------------------------------------------------------------------------
 # WKT parsing + planar centroid (F6)
@@ -346,28 +346,3 @@ def centroid_cell(
         return None
     lon, lat = c
     return latlng_to_cell(lat, lon, res, scheme=scheme)
-
-
-# ---------------------------------------------------------------------------
-# Spark UDF wrappers (applied dim-side only)
-# ---------------------------------------------------------------------------
-
-
-def hex_cell_udf(res: int = 9):
-    """UDF: (lat, lng) → cell id string."""
-    return F.udf(lambda lat, lng: None if lat is None or lng is None
-                 else latlng_to_cell(float(lat), float(lng), res), StringType())
-
-
-def wkt_centroid_to_cell_udf(res: int = 9, scheme: str = "axial"):
-    """UDF: WKT string → hex cell of its centroid.
-
-    The fused form of enrichment_query.py:10,17
-    (``H3_FROMGEOGPOINT(ST_CENTROID(zone_geom), 9)``). One Python call
-    per *zone*, not per trip: apply to the dimension before broadcast.
-    Pass ``scheme="h3"`` (or "auto") on an environment with the public
-    h3 wheel to emit the reference's genuine H3 ids.
-    """
-    return F.udf(
-        lambda wkt: centroid_cell(wkt, res, scheme=scheme), StringType()
-    )

@@ -27,9 +27,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from taxi_trips_etl_spark.functions.geo import wkt_centroid_to_cell_udf
+from taxi_trips_etl_spark.functions.geo import centroid_cell
 from taxi_trips_etl_spark.functions.scalar import daypart
+from taxi_trips_etl_spark.sources.localrel import local_rows
 
 
 def dedup_zones(zones: DataFrame, res: int = 9) -> DataFrame:
@@ -37,19 +39,33 @@ def dedup_zones(zones: DataFrame, res: int = 9) -> DataFrame:
 
     ``byte_length(ST_ASTEXT(geom))`` → ``F.octet_length`` on the WKT
     string (F4/F5: geometry is stored as WKT, so ST_ASTEXT is identity).
-    The centroid→cell UDF runs on the ~hundreds-row deduped dim only.
+    The rank-dedup runs in Spark; its rows (one per surviving
+    (zone_id, geometry), bounded by the zone table) are then collected
+    once and indexed with :func:`centroid_cell` on the driver, and the
+    result comes back as a ``LocalRelation`` — no Python worker. The
+    broadcast of the dim downstream collects the same relation to the
+    driver anyway. ``zone_id`` keeps the input's type.
     """
     w = Window.partitionBy("zone_id").orderBy(
         F.octet_length(F.col("zone_geom")).desc()
     )
+    # One partition: the dim is collected whole below, and a single
+    # partition satisfies the window's clustering, so the dedup is one
+    # task with no shuffle.
     deduped = (
-        zones.withColumn("finish_rank", F.rank().over(w))
+        zones.coalesce(1)
+        .withColumn("finish_rank", F.rank().over(w))
         .filter(F.col("finish_rank") == 1)
-        .drop("finish_rank")
+        .select("zone_id", "zone_geom")
     )
-    return deduped.withColumn(
-        "hex_cell", wkt_centroid_to_cell_udf(res)(F.col("zone_geom"))
-    ).select("zone_id", "hex_cell")
+    schema = StructType(
+        [deduped.schema["zone_id"], StructField("hex_cell", StringType())]
+    )
+    return local_rows(
+        zones.sparkSession,
+        [(z, centroid_cell(wkt, res)) for z, wkt in deduped.collect()],
+        schema,
+    )
 
 
 def enrich_trips(

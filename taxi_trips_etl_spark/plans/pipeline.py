@@ -106,6 +106,12 @@ def run_taxi_pipeline(
     §5: cache only reused intermediates). The former
     ``cache_enriched``/``auto_cache_threshold_bytes`` knobs are gone
     with the fan-out they compensated for.
+
+    Building the plan runs two bounded driver actions: ``load`` probes
+    the input for a first row (``isEmpty``), and ``enrich`` collects
+    the rank-deduped zone dim once to index its centroids on the driver
+    (``operators/enrich.dedup_zones``). Everything else runs under the
+    caller's action, and no stage starts a Python worker.
     """
     from taxi_trips_etl_spark.operators import (
         enrich_trips,

@@ -34,12 +34,13 @@ from taxi_trips_etl_spark.queries._registry import (  # noqa: F401
 )
 
 # ===========================================================================
-# Flagship (geo-UDF path). Oracle: the hex cells come from the
-# centroid_cell UDF, but on the synthetic zone dim that mapping is
-# knowable at import time — the same pure-Python function bakes a
-# zone_id→cell VALUES list into FLAGSHIP_KNOWN_ZONES_SQL (_relational),
-# so the REAL pipeline output (run_taxi_pipeline, UDF enrichment and
-# all) is pinned exactly; only the output aliases differ.
+# Flagship (geo path). Oracle: the hex cells come from centroid_cell
+# (run on the driver over the deduped zone dim), and on the synthetic
+# zone dim that mapping is knowable at import time — the same
+# pure-Python function bakes a zone_id→cell VALUES list into
+# FLAGSHIP_KNOWN_ZONES_SQL (_relational), so the REAL pipeline output
+# (run_taxi_pipeline, geo enrichment and all) is pinned exactly; only
+# the output aliases differ.
 # ===========================================================================
 
 from taxi_trips_etl_spark.queries._relational import (  # noqa: E402

@@ -1496,9 +1496,9 @@ def q_udtf_split_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     row → N output rows, the table-function analogue of the two scalar
     UDFs. UDTFs are Python-slow-path, so this belongs on *document*
     grain (the row-multiplying parse), never on the fact table — the
-    same placement rule as the geo UDFs. The pytest covers multi-
-    sentence splitting; this table is single-sentence so the oracle
-    pins the pass-through shape."""
+    same placement rule as the driver-side geo indexing. The pytest
+    covers multi-sentence splitting; this table is single-sentence so
+    the oracle pins the pass-through shape."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="sentence: string, sent_idx: bigint")

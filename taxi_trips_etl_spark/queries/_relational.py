@@ -246,7 +246,7 @@ def q_most_populars_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zone_hex_values_sql() -> str:
     """The synthetic zone dim's zone_id → hex-cell mapping as a SQL
     VALUES list, computed at import time with the same pure-Python
-    centroid→cell function the enrichment UDF wraps.
+    centroid→cell function the enrichment calls.
 
     Rank-dedup semantics baked in: zones with a duplicate geometry
     (z % 5 == 0) keep the LONGER octagon WKT (enrichment_query.py:12-14
@@ -306,16 +306,16 @@ FLAGSHIP_KNOWN_ZONES_SQL = _FLAGSHIP_KNOWN_ZONES_TEMPLATE.format(
 @register("flagship_known_zones", FLAGSHIP_KNOWN_ZONES_SQL)
 def q_flagship_known_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL 4-stage pipeline — load → normalize → geo/hex enrichment
-    (WKT-centroid→cell UDF on the deduped zone dim, two broadcast
-    joins) → rank/top-k/USING join — against an exact DuckDB oracle.
+    (WKT-centroid→cell on the deduped zone dim, two broadcast joins)
+    → rank/top-k/USING join — against an exact DuckDB oracle.
 
-    The hex ids come from the UDF, but the synthetic zone dim's
-    centroids are knowable at import time, so the oracle (which
+    The hex ids come from ``centroid_cell``, but the synthetic zone
+    dim's centroids are knowable at import time, so the oracle (which
     ``flagship_most_populars`` reuses under its own aliases) carries
     the zone→cell mapping as a literal VALUES list produced by the
-    same pure-Python ``centroid_cell`` the UDF wraps — pinning the
-    relational 95% of the pipeline exactly while tests/test_geo.py
-    pins the UDF kernel itself.
+    same pure-Python ``centroid_cell`` the enrichment calls — pinning
+    the relational 95% of the pipeline exactly while tests/test_geo.py
+    pins the geo kernel itself.
     """
     from taxi_trips_etl_spark.operators.enrich import enrich_trips
     from taxi_trips_etl_spark.sources.taxi_testdata import zone_dim

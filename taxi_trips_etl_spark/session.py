@@ -8,8 +8,8 @@ config here is chosen for the 100 TB / 1000-executor target:
 - ``spark.sql.shuffle.partitions`` is only the *initial* shuffle
   parallelism — AQE coalesces; on a real cluster set it ~2-3x total
   cores and let AQE shrink.
-- Arrow enabled so the few Pandas-UDF paths (geo centroid on a ~260-row
-  dim, multimodal decode) batch-transfer instead of pickling rows.
+- Arrow enabled so the few Pandas-UDF paths (multimodal decode,
+  grouped-map kernels) batch-transfer instead of pickling rows.
 - Runtime bloom-filter join pruning
   (``spark.sql.optimizer.runtime.bloomFilter.enabled`` +
   ``runtimeFilter.semiJoinReduction``) is deliberately NOT set here:

@@ -26,10 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.materialize import materialize, release
+from taxi_trips_etl_spark.sources.localrel import local_rows
 
 # Final state per user: the row of the (ts, event_id)-max event.
-_STATE_COLS = ("user_id", "last_event_id", "last_ts", "last_type",
-               "last_value")
+_STATE_SCHEMA = (
+    "user_id long, last_event_id long, last_ts timestamp, "
+    "last_type string, last_value double"
+)
 
 
 def _latest_per_key(events: DataFrame) -> DataFrame:
@@ -99,11 +102,7 @@ def run_streaming_cdc_upsert(
     q.awaitTermination()
     out = state["df"]
     if out is None:  # empty source
-        return spark.createDataFrame(
-            [],
-            "user_id long, last_event_id long, last_ts timestamp, "
-            "last_type string, last_value double",
-        )
+        return local_rows(spark, [], _STATE_SCHEMA)
     return out
 
 

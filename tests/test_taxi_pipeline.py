@@ -126,6 +126,28 @@ def test_literal_self_join_fans_out_on_duplicate_keys(spark):
     assert enrich_trips(df, zones, literal_self_join=True).count() == 4
 
 
+def test_enrich_plan_has_no_python_eval(spark, sf_dir):
+    """The geo indexing runs on the driver: neither the broadcast zone
+    dim nor the fact side of the enrich plan holds a Python eval node,
+    and the dim is a LocalRelation."""
+    import re
+
+    from taxi_trips_etl_spark.sources.taxi_testdata import (
+        trips_from_lineitem,
+        zone_dim,
+    )
+
+    trips = normalize_trips(
+        trips_from_lineitem(spark.read.parquet(f"{sf_dir}/lineitem.parquet"))
+    )
+    for literal in (False, True):
+        enriched = enrich_trips(trips, zone_dim(spark), literal_self_join=literal)
+        plan = enriched._jdf.queryExecution().executedPlan().toString()
+        assert not re.search("BatchEvalPython|ArrowEvalPython", plan)
+        assert "BroadcastExchange" in plan and "LocalTableScan" in plan
+        assert enriched.filter(F.col("h3_pickup").isNotNull()).limit(1).count() == 1
+
+
 def test_popularity_rank_tie_semantics(spark):
     # Two routes tied at count 2 → both get popularity 1, rank 3 dropped;
     # USING(popularity) join multiplies tied rows (reference README.md:51).

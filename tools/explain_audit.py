@@ -23,7 +23,7 @@ Round 13: the fan-out rule's documented blind spot — a checkpoint
 truncates lineage, so a checkpointed plan shows ZERO raw scans here no
 matter how bad its (hidden) spine is — is now enumerated instead of
 open-ended: every plan whose final lazy plan contains an ExistingRDD
-scan (localCheckpoint truncation OR a driver-assembled local frame)
+scan (localCheckpoint truncation OR an RDD-backed frame)
 must be named in LINEAGE_TRUNCATED below. A NEW checkpoint site can no
 longer silently opt out of the scan gate; it must be added here, which
 is the reviewer's cue to demand the exchange-ceiling + zero-scan pins
@@ -61,19 +61,13 @@ def plan_of(df) -> str:
 
 
 # The ONLY registry entries whose physical plan may contain a Python
-# eval node (BatchEvalPython/ArrowEvalPython). Verified by a full
-# 306-entry sweep (round 11): three flagship/geo queries carry the two
-# sanctioned reference UDFs (F6 ST_CENTROID ∘ F7 H3_FROMGEOGPOINT,
-# functions/geo.py — applied DIM-side only, ~N_ZONES rows), and the
-# UDTF entry exists precisely to exercise Spark's Python UDTF surface.
-# Everything else must stay JVM-side end-to-end.
+# eval node (BatchEvalPython/ArrowEvalPython). The reference's F6
+# ST_CENTROID ∘ F7 H3_FROMGEOGPOINT (functions/geo.py) is no UDF: the
+# enrichment indexes the deduped zone dim on the driver and ships it
+# back as a LocalRelation. The UDTF entry exists precisely to exercise
+# Spark's Python UDTF surface. Everything else must stay JVM-side
+# end-to-end.
 PY_EVAL_WHITELIST = frozenset({
-    # r13: the flagship entries left this list — their geo-UDF
-    # enrichment now runs inside the materialized route-count spine
-    # (operators/popularity.route_counts), so the final lazy plans are
-    # 100% JVM and the gate re-covers them. hex_neighbor_smoothing
-    # followed in the same round (cell-count materialize), leaving the
-    # UDTF surface entry as the only sanctioned row-at-a-time site.
     "udtf_split_sentences",
 })
 
@@ -135,15 +129,14 @@ SCAN_ALLOWANCE: dict[str, dict[str, int]] = {
 }
 
 # ---------------------------------------------------------------------------
-# Lineage-truncation allowlist (round 13): the 56 entries whose final
+# Lineage-truncation allowlist (round 13): the entries whose final
 # plan contains "ExistingRDD" at the default sf0.001 audit, measured by
-# a full-registry sweep this round. Two benign sources, both of which
-# hide raw lineage from the fan-out rule above:
-#   (a) materialize()/localCheckpoint spines — iterative algorithms
-#       (graph family, BPE, star contraction, streaming drains) and the
-#       three pinned fan-out fixes;
-#   (b) driver-assembled local frames (createDataFrame of bounded
-#       shortlists/probe sets/schema frames).
+# a full-registry sweep. The benign source that hides raw lineage from
+# the fan-out rule above is a materialize()/localCheckpoint spine —
+# iterative algorithms (graph family, star contraction, streaming
+# drains) and the three pinned fan-out fixes. Driver-assembled local
+# frames (sources/localrel.local_rows) are LocalRelations, not
+# ExistingRDD scans, and need no entry.
 # A name NOT in this set whose plan grows an ExistingRDD scan fails the
 # audit: new checkpoint sites must be reviewed (does the hidden spine
 # need an exchange-ceiling/zero-scan pin like _FANOUT_PINS?) and added
@@ -159,21 +152,20 @@ LINEAGE_TRUNCATED = frozenset({
     # materializes its vocab model + doc scores; hybrid_rrf_search its
     # query-token set; kmv_user_overlap its sketch.
     "acctbal_decile_profile", "bigram_lm_topk", "bm25_keyword_search",
-    "bpe_learn_merges", "bpe_learn_merges_distributed",
     "compact_small_files_audit", "corpus_prepare_pipeline",
-    "corpus_prepare_v2", "corpus_prepare_v3", "dedup_canonicalize",
-    "dedup_components", "dedup_components_star",
+    "corpus_prepare_v2", "corpus_prepare_v3",
+    "dedup_components_star",
     "dedup_minhash_incremental", "dedup_minhash_lsh",
     "dedup_ngram_jaccard", "dedup_simhash_pairs", "dedup_weighted_jaccard",
     "domain_mixture_sample", "dpo_preference_pairs",
     "duplicated_substring_spans",
-    "dynamic_partition_pruning_join", "embedding_canonicalize",
+    "dynamic_partition_pruning_join",
     "embedding_truncation_recall",
     "flagship_known_zones", "flagship_most_populars",
     "funnel_conversion", "funnel_latency_stats", "fuzzy_match_fastss",
     "fuzzy_match_fastss2", "global_ids_orders", "graph_bfs_hops",
     "graph_degree_assortativity",
-    "graph_kcore", "graph_pagerank", "graph_pagerank_distributed",
+    "graph_kcore", "graph_pagerank_distributed",
     "graph_shortest_paths", "graph_triangles", "hard_negative_mining_ivf",
     "heaps_vocab_growth",
     "heavy_hitters_tokens", "hex_neighbor_smoothing",
@@ -185,8 +177,7 @@ LINEAGE_TRUNCATED = frozenset({
     "lorenz_curve_points",
     "market_basket_brand_rules", "market_basket_triples",
     "markov_stationary_micro", "minhash_lsh_recall",
-    "mmr_diversify_rerank", "most_populars_flat", "ngram_containment_pairs",
-    "observed_scan_metrics", "pack_sequences", "packing_fragmentation_audit",
+    "most_populars_flat", "ngram_containment_pairs",
     "partition_pruned_scan", "record_linkage_blocked",
     "revenue_gini",
     "rouge_l_decontaminate", "sampled_range_partition_plan",
@@ -194,8 +185,7 @@ LINEAGE_TRUNCATED = frozenset({
     "sequence_pattern_funnel",
     "source_distinctive_terms", "split_leakage_audit",
     "streaming_cdc_upsert", "streaming_checkpoint_resume",
-    "streaming_dedup_watermark", "streaming_dq_monitor",
-    "streaming_full_outer_attribution", "streaming_ingest_dedup",
+    "streaming_full_outer_attribution",
     "streaming_late_dupes_dropped", "streaming_outer_attribution",
     "streaming_semi_attribution", "subsample_ci_revenue",
     "tfidf_cosine_pairs", "tpch_top_supplier",
@@ -223,16 +213,11 @@ PY_NODE_PAT = (
 PY_NODE_ALLOWED: dict[str, frozenset[str]] = {
     # Arrow-native token stats: the mapInArrow showcase entry.
     "arrow_token_stats": frozenset({"MapInArrow"}),
-    # The two reference UDFs (F6 centroid ∘ F7 hex), dim-side only.
-    # r13 optimization: the flagship entries' UDF enrichment now runs
-    # inside the materialized route-count spine (one fact pass instead
-    # of three — operators/popularity.route_counts), so their FINAL lazy
-    # plans are 100% JVM; the UDF placement is pinned by the enrich-plan
-    # pytest instead (tests/test_plans.py).
-    # (r13 optimization: hex_neighbor_smoothing materializes its
-    # cell-grain counts, so the geo UDF runs once inside the
-    # checkpointed spine and its FINAL plan is 100% JVM — same
-    # precedent as the flagship entries above; its entry is gone.)
+    # The reference's geo functions (F6 centroid ∘ F7 hex) run on the
+    # driver over the deduped zone dim, so neither the flagship entries
+    # nor hex_neighbor_smoothing carry a Python node; the enrich plan,
+    # materialized spines included, is pinned 100% JVM by
+    # tests/test_taxi_pipeline.py::test_enrich_plan_has_no_python_eval.
     # Python UDTF surface entry (exercises the API on purpose).
     "udtf_split_sentences": frozenset({"BatchEvalPython"}),
     # Cogrouped per-cluster mining: bounded probe × bucket cogroups.
