@@ -109,17 +109,14 @@ def kmeans_assign(
     # argmin projection → partial-agg collect; there is no in-loop join
     # (the static_rounds hint precondition is vacuous) and the
     # aggregate output is exactly ≤ k rows at ANY corpus size, so the
-    # in-loop reduce width pins to min(default, k) — counted, not a
-    # local tune. AQE otherwise books an extra stage-job per iteration
-    # for a k-row exchange. The final assignment below is lazy and
-    # executes outside the scope, under the session posture.
+    # in-loop reduce width pins to exactly k — counted from the loop,
+    # never from the session, so the centroids do not depend on the
+    # session width. AQE otherwise books an extra stage-job per
+    # iteration for a k-row exchange. The final assignment below is
+    # lazy and executes outside the scope, under the session posture.
     spark = embeddings.sparkSession
     with static_rounds(spark):
-        default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(1, min(default_width, k))),
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(k))
         for _ in range(iterations):
             assigned = assign(centroids)
             # New centroids: per-cluster mean, one partial-agg shuffle

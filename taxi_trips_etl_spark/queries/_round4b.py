@@ -1230,8 +1230,9 @@ def q_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="ingest_dedup_q_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ingest_dedup_q_", ignore_cleanup_errors=True
+    ) as work:
         # The file-stream source wants a directory; stage the single
         # parquet file into one.
         src = f"{work}/source"
@@ -1253,8 +1254,6 @@ def q_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id")
             .collect()
         ]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     from taxi_trips_etl_spark.sources.localrel import local_rows
 
     return local_rows(
@@ -1301,8 +1300,9 @@ def q_streaming_dq_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _events(spark, sf_dir)  # sets nanosAsLong for the schema read below
-    work = tempfile.mkdtemp(prefix="dq_monitor_q_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dq_monitor_q_", ignore_cleanup_errors=True
+    ) as work:
         src = f"{work}/source"
         import os as _os
 
@@ -1322,8 +1322,6 @@ def q_streaming_dq_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r["rule"], int(r["violations"]), int(r["batch_id"]))
             for r in spark.read.parquet(f"{work}/log").collect()
         ]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     from taxi_trips_etl_spark.sources.localrel import local_rows
 
     return local_rows(

@@ -198,8 +198,9 @@ def q_streaming_dedup_watermark(
 
     _events(spark, sf_dir)  # pins UTC + nanosAsLong for the schema read
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    work = tempfile.mkdtemp(prefix="dedup_wm_q_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dedup_wm_q_", ignore_cleanup_errors=True
+    ) as work:
         src = f"{work}/source"
         os.makedirs(src)
         shutil.copy(f"{sf_dir}/events.parquet", f"{src}/delivery_a.parquet")
@@ -229,8 +230,6 @@ def q_streaming_dedup_watermark(
             )
             .collect()
         ]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     from taxi_trips_etl_spark.sources.localrel import local_rows
 
     return local_rows(

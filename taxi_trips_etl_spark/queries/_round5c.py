@@ -176,13 +176,12 @@ def q_streaming_outer_attribution(
     output bit-identical). The heartbeat matches nothing and its own
     purchase row can never flush, so the sink holds exactly the
     oracle's batch LEFT JOIN."""
-    import os
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.streaming.outer_join import (
         run_streaming_outer_attribution,
     )
+    from taxi_trips_etl_spark.streaming.state import stage_file
 
     ev_all = _events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -199,19 +198,10 @@ def q_streaming_outer_attribution(
         (F.min("ts") + F.expr("INTERVAL 3 DAYS")).alias("c")
     ).collect()[0]["c"]
     ev = ev_all.filter(F.col("ts") < F.lit(cutoff))
-    work = tempfile.mkdtemp(prefix="outer_attr_q_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="outer_attr_q_", ignore_cleanup_errors=True
+    ) as work:
         src = f"{work}/src"
-        os.makedirs(src)
-
-        def stage(df, name: str) -> None:
-            tmp = f"{work}/stage_{name}"
-            df.coalesce(1).write.parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
-            shutil.move(f"{tmp}/{part}", f"{src}/{name}.parquet")
-
         # Heartbeat time derives from the ALREADY-COLLECTED cutoff
         # (every staged event is < cutoff, so cutoff + 30 days is past
         # any of them) — a literal 2-row frame, not a third scan of
@@ -233,9 +223,8 @@ def q_streaming_outer_attribution(
             """
         )
         # single staged file: feed + heartbeat co-delivered (docstring)
-        stage(ev.unionByName(heartbeat), "a_events")
-
-        schema = spark.read.parquet(f"{src}/a_events.parquet").schema
+        staged = stage_file(ev.unionByName(heartbeat), src, "a_events")
+        schema = spark.read.parquet(staged).schema
         # 2 state partitions: the 3-day slice holds ~1k users, and
         # state-store commits cost n_partitions x n_batches x sides
         # (outer_join.py docstring) — 8 partitions measured 2x the
@@ -246,7 +235,6 @@ def q_streaming_outer_attribution(
             schema,
             out_path=f"{work}/out",
             checkpoint_path=f"{work}/ckpt",
-            window_hours=2,
             state_partitions=2,
         )
         # Materialize JVM-side (localCheckpoint) so the tmpdir can be
@@ -267,8 +255,6 @@ def q_streaming_outer_attribution(
             ),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 

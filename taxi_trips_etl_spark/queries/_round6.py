@@ -382,7 +382,6 @@ def q_streaming_late_dupes_dropped(
     accepted; measured, see the module docstring). Distinct from the
     explicit keyed-state dedup entries: this is the implicit
     replay-dedup a 100 TB ingest gets from bounded lateness."""
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
@@ -405,8 +404,9 @@ def q_streaming_late_dupes_dropped(
     ev = ev_all.filter(
         F.col("ts") < F.expr(f"TIMESTAMP '{d0}' + INTERVAL 3 DAYS")
     )
-    work = tempfile.mkdtemp(prefix="late_data_q_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="late_data_q_", ignore_cleanup_errors=True
+    ) as work:
         src = stage_late_replay(spark, ev, day0, work)
         schema = spark.read.parquet(f"{src}/a_ontime.parquet").schema
         run_late_data_drain(
@@ -424,8 +424,6 @@ def q_streaming_late_dupes_dropped(
             ),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -623,8 +621,6 @@ def q_streaming_full_outer_attribution(
     carries the watermark-proof flush across a batch boundary); the
     heartbeat pair matches itself and is dropped by the
     user_id >= 0 read filter."""
-    import os
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
@@ -632,6 +628,7 @@ def q_streaming_full_outer_attribution(
     from taxi_trips_etl_spark.streaming.outer_join import (
         run_streaming_full_outer_attribution,
     )
+    from taxi_trips_etl_spark.streaming.state import stage_file
 
     ev_all = _events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -643,19 +640,9 @@ def q_streaming_full_outer_attribution(
         (F.min("ts") + F.expr("INTERVAL 3 DAYS")).alias("c")
     ).collect()[0]["c"]
     ev = ev_all.filter(F.col("ts") < F.lit(cutoff))
-    work = tempfile.mkdtemp(prefix="full_outer_q_")
-    try:
-        src = f"{work}/src"
-        os.makedirs(src)
-
-        def stage(df, name: str) -> None:
-            tmp = f"{work}/stage_{name}"
-            df.coalesce(1).write.parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
-            shutil.move(f"{tmp}/{part}", f"{src}/{name}.parquet")
-
+    with tempfile.TemporaryDirectory(
+        prefix="full_outer_q_", ignore_cleanup_errors=True
+    ) as work:
         hb_ts = cutoff.strftime("%Y-%m-%d %H:%M:%S")
         heartbeat = spark.sql(
             f"""
@@ -669,15 +656,14 @@ def q_streaming_full_outer_attribution(
             """
         )
         # single staged file: feed + heartbeat co-delivered (docstring)
-        stage(ev.unionByName(heartbeat), "a_events")
-        schema = spark.read.parquet(f"{src}/a_events.parquet").schema
+        src = f"{work}/src"
+        staged = stage_file(ev.unionByName(heartbeat), src, "a_events")
         run_streaming_full_outer_attribution(
             spark,
             src,
-            schema,
+            spark.read.parquet(staged).schema,
             out_path=f"{work}/out",
             checkpoint_path=f"{work}/ckpt",
-            window_hours=2,
         )
         out = materialize(
             spark.read.parquet(f"{work}/out")
@@ -691,8 +677,6 @@ def q_streaming_full_outer_attribution(
             ),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -901,7 +885,6 @@ def q_jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines quarantine instead of failing the ingest). The oracle
     aggregates the ORIGINAL table, so the hash proves the round-trip
     lost nothing — count, chars and text lengths per source."""
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
@@ -911,8 +894,9 @@ def q_jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="jsonl_rt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="jsonl_rt_", ignore_cleanup_errors=True
+    ) as work:
         write_jsonl(docs, f"{work}/docs")
         back = read_jsonl(
             spark,
@@ -930,8 +914,6 @@ def q_jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).orderBy("source"),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -1002,12 +984,12 @@ def q_streaming_checkpoint_resume(
     over the whole feed exactly once; a broken resume double-counts
     or loses the first half and breaks the batch-oracle hash."""
     import os
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
     from taxi_trips_etl_spark.queries._registry import _events
     from taxi_trips_etl_spark.streaming.resume import run_resumable_drain
+    from taxi_trips_etl_spark.streaming.state import stage_file
 
     ev = _events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -1018,31 +1000,25 @@ def q_streaming_checkpoint_resume(
     mid = ev.agg(
         (F.min("ts") + F.expr("INTERVAL 15 DAYS")).alias("m")
     ).collect()[0]["m"]
-    work = tempfile.mkdtemp(prefix="resume_q_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="resume_q_", ignore_cleanup_errors=True
+    ) as work:
         src = f"{work}/src"
-        os.makedirs(src)
-
-        def stage(df, name: str) -> None:
-            tmp = f"{work}/stage_{name}"
-            df.coalesce(1).write.parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
-            shutil.move(f"{tmp}/{part}", f"{src}/{name}.parquet")
-
-        schema_src = None
-        stage(ev.filter(F.col("ts") < F.lit(mid)), "a_first_half")
-        schema_src = spark.read.parquet(f"{src}/a_first_half.parquet").schema
+        first = stage_file(
+            ev.filter(F.col("ts") < F.lit(mid)), src, "a_first_half"
+        )
+        schema_src = spark.read.parquet(first).schema
         # Lifecycle 1: only the first half exists.
         run_resumable_drain(
             spark, src, schema_src,
             out_path=f"{work}/out", checkpoint_path=f"{work}/ckpt",
         )
         # Second half lands AFTER the first drain finished.
-        stage(ev.filter(F.col("ts") >= F.lit(mid)), "b_second_half")
-        t0 = os.stat(f"{src}/a_first_half.parquet").st_mtime
-        os.utime(f"{src}/b_second_half.parquet", (t0 + 60, t0 + 60))
+        second = stage_file(
+            ev.filter(F.col("ts") >= F.lit(mid)), src, "b_second_half"
+        )
+        t0 = os.stat(first).st_mtime
+        os.utime(second, (t0 + 60, t0 + 60))
         # Lifecycle 2: same checkpoint — must resume, not reprocess.
         run_resumable_drain(
             spark, src, schema_src,
@@ -1054,8 +1030,6 @@ def q_streaming_checkpoint_resume(
             ),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -1088,8 +1062,6 @@ def q_streaming_semi_attribution(
     form IS the dedup. Oracle: batch EXISTS over the same 3-day
     slice. No heartbeat: emission happens on match, so the drain
     needs no watermark flush for completeness."""
-    import os
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
@@ -1097,6 +1069,7 @@ def q_streaming_semi_attribution(
     from taxi_trips_etl_spark.streaming.outer_join import (
         run_streaming_semi_attribution,
     )
+    from taxi_trips_etl_spark.streaming.state import stage_file
 
     ev_all = _events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -1110,22 +1083,17 @@ def q_streaming_semi_attribution(
         .filter(F.col("ts") < F.col("_cutoff"))
         .drop("_cutoff")
     )
-    work = tempfile.mkdtemp(prefix="semi_attr_q_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="semi_attr_q_", ignore_cleanup_errors=True
+    ) as work:
         src = f"{work}/src"
-        os.makedirs(src)
-        tmp = f"{work}/stage"
-        ev.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        shutil.move(f"{tmp}/{part}", f"{src}/a_events.parquet")
-        schema = spark.read.parquet(f"{src}/a_events.parquet").schema
+        staged = stage_file(ev, src, "a_events")
         run_streaming_semi_attribution(
             spark,
             src,
-            schema,
+            spark.read.parquet(staged).schema,
             out_path=f"{work}/out",
             checkpoint_path=f"{work}/ckpt",
-            window_hours=2,
         )
         out = materialize(
             spark.read.parquet(f"{work}/out").select(
@@ -1135,8 +1103,6 @@ def q_streaming_semi_attribution(
             ),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 

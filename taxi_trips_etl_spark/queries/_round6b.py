@@ -370,7 +370,6 @@ def q_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     three years. The pytest twin asserts the PartitionFilters plan;
     this entry pins the pruned RESULT against an unpartitioned
     oracle."""
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
@@ -379,8 +378,9 @@ def q_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir).withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )
-    work = tempfile.mkdtemp(prefix="part_prune_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="part_prune_", ignore_cleanup_errors=True
+    ) as work:
         ev.write.mode("overwrite").partitionBy("day").parquet(
             f"{work}/events_by_day"
         )
@@ -400,8 +400,6 @@ def q_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -423,15 +421,15 @@ def q_compact_small_files_audit(
     fragment count seen, and the deterministic row-derived file
     target. The pytest twin counts the parquet files actually
     written."""
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
     from taxi_trips_etl_spark.sources.writers import compact_small_files
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="compact_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="compact_", ignore_cleanup_errors=True
+    ) as work:
         docs.repartition(32).write.mode("overwrite").parquet(
             f"{work}/frag"
         )
@@ -442,8 +440,6 @@ def q_compact_small_files_audit(
             ),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -477,14 +473,14 @@ def q_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full-corpus copy; mergeSchema is a footer union. (Production
     note: enable per-read as here, not globally — footer merging
     scales with file count.)"""
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="schema_evo_", ignore_cleanup_errors=True
+    ) as work:
         docs.filter(F.col("doc_id") % 2 == 0).select(
             "doc_id", "text", "source"
         ).write.mode("overwrite").parquet(f"{work}/t/v1")
@@ -504,8 +500,6 @@ def q_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -546,7 +540,6 @@ def q_dynamic_partition_pruning_join(
     is partition_pruned_scan; the pytest asserts the dynamicpruning
     expression. At 100 TB this is the star-join pattern: the dim
     filter decides which fact partitions the scan ever opens."""
-    import shutil
     import tempfile
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
@@ -555,8 +548,9 @@ def q_dynamic_partition_pruning_join(
     ev = _events(spark, sf_dir).withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )
-    work = tempfile.mkdtemp(prefix="dpp_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dpp_", ignore_cleanup_errors=True
+    ) as work:
         ev.write.mode("overwrite").partitionBy("day").parquet(
             f"{work}/events_by_day"
         )
@@ -586,8 +580,6 @@ def q_dynamic_partition_pruning_join(
             ),
             eager=True,
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 

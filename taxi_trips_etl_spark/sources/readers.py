@@ -223,63 +223,3 @@ def read_jsonl(spark, path: str, schema=None):
 def write_jsonl(df, path: str) -> None:
     """JSONL writer (one object per line, parallel part files)."""
     df.write.mode("overwrite").json(path)
-
-
-def read_orc(spark, path: str, schema=None):
-    """ORC load — the other columnar format a warehouse migration
-    brings along. Same pushdown/pruning properties as parquet in
-    Spark's vectorized reader."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def read_avro(spark, path: str):
-    """Avro load, gated: the spark-avro module is NOT bundled in this
-    pyspark distribution (it is an external module since Spark 2.4 —
-    add ``org.apache.spark:spark-avro_2.13:<ver>`` to
-    ``spark.jars.packages`` on a real cluster). Raises a clear error
-    here instead of Spark's generic lookup failure."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as e:  # pragma: no cover - message depends on build
-        raise NotImplementedError(
-            "spark-avro is not bundled in this environment; add "
-            "org.apache.spark:spark-avro to spark.jars.packages"
-        ) from e
-
-
-def read_parquet_evolving(spark, path: str):
-    """Read a parquet table whose files were written under EVOLVING
-    schemas (columns added over time): ``mergeSchema`` unions the file
-    footers' schemas; rows from files predating a column read it as
-    NULL. The default read instead serves whichever single footer the
-    planner sampled — silently dropping newer columns — so any
-    long-lived ingest directory should read through this.
-
-    Cost note for 100 TB: schema merging reads EVERY file footer at
-    planning time; for tables with many files prefer a declared
-    schema (read_parquet with an explicit StructType) once the layout
-    stabilizes — this helper is for the ingest edge where evolution
-    is still happening.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def read_parquet_resilient(spark, path: str):
-    """Read a parquet directory TOLERATING corrupt/truncated files
-    (``ignoreCorruptFiles``): bad objects are skipped with a warning
-    instead of failing the whole scan. At 100 TB some objects WILL be
-    torn (failed multipart uploads, mid-write listings); a nightly
-    pipeline usually prefers finishing with the readable 99.99% and
-    quarantining the bad paths over dying at 3am.
-
-    Deliberately a separate entry point: silently skipping data is a
-    POLICY, not a default — correctness-critical reads (the oracle
-    harness, financial rollups) must keep the fail-fast default and
-    alert instead.
-    """
-    return (
-        spark.read.option("ignoreCorruptFiles", "true").parquet(path)
-    )

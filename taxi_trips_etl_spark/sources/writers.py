@@ -69,119 +69,6 @@ def write_partitioned_by_run_date(df: DataFrame, path: str, ds: str) -> None:
     )
 
 
-def compact_to_target_bytes(
-    spark, path: str, target_file_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """In-place small-files compaction: rewrite a parquet table into
-    ceil(bytes/target) files. Returns the output file count.
-    (Byte-targeted sibling of :func:`compact_small_files`, which is
-    row-targeted and writes to a separate out_path.)
-
-    The 100 TB hygiene op: streaming ingests and per-day appends leave
-    thousands of KB-sized files; every downstream scan then pays one
-    task + one open per file, and the NameNode/listing cost grows
-    unbounded. Repartition to the byte-derived count (never
-    ``coalesce(1)`` — that serializes the write through one task) and
-    atomically swap via a temp-dir rename.
-    """
-    import math
-    import os
-    import shutil
-
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(size / target_file_bytes))
-    tmp = path.rstrip("/") + "__compact_tmp"
-    spark.read.parquet(path).repartition(n_files).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return n_files
-
-
-def write_sorted_for_skipping(
-    df: DataFrame, path: str, sort_cols: list[str], files: int | None = None
-) -> None:
-    """Write parquet laid out for row-group min/max skipping: range-
-    partition by ``sort_cols`` then sort within partitions, so each
-    file/row-group covers a narrow, non-overlapping value range.
-
-    A filter like ``ts BETWEEN x AND y`` then prunes at THREE levels —
-    partition files (via their stats), row groups, and pages — instead
-    of scanning everything. At 100 TB this is the difference between
-    reading 100 TB and reading the 2 GB the predicate touches.
-    ``repartitionByRange`` samples the keys, so skew (a hot day) maps
-    to more files rather than one fat file.
-    """
-    cols = [F.col(c) for c in sort_cols]
-    part = (
-        df.repartitionByRange(files, *cols)
-        if files
-        else df.repartitionByRange(*cols)
-    )
-    part.sortWithinPartitions(*cols).write.mode("overwrite").parquet(path)
-
-
-def write_orc(df: DataFrame, path: str) -> None:
-    """ORC sink (overwrite) — matching read_orc; columnar with the
-    same min/max-stat data skipping story as parquet."""
-    df.write.mode("overwrite").orc(path)
-
-
-def erase_keys_partitioned(
-    spark,
-    path: str,
-    keys_df: DataFrame,
-    key_col: str,
-    partition_col: str,
-) -> int:
-    """Targeted right-to-erasure delete on a partitioned parquet table:
-    rewrite ONLY the partitions that contain the keys, via dynamic
-    partition overwrite — every other partition's files are untouched
-    (no full-table rewrite, no tombstone format needed).
-
-    At 100 TB this is the difference between rewriting terabytes and
-    rewriting the handful of partitions a user's rows live in:
-
-      1. one partition-pruned probe finds the affected partition
-         values (an aggregate over just the key + partition columns —
-         column-pruned to the scan);
-      2. only those partitions are re-read (partition filter →
-         PartitionFilters in the scan), anti-joined against the key
-         set (broadcast — an erasure batch is small by nature);
-      3. dynamic partition overwrite replaces exactly those
-         partitions.
-
-    Returns the number of partitions rewritten. Caller owns making
-    ``keys_df`` the complete erasure batch; rerunning is idempotent.
-    """
-    table = spark.read.parquet(path)
-    keys = keys_df.select(F.col(key_col)).distinct()
-    affected = [
-        r[partition_col]
-        for r in table.join(F.broadcast(keys), key_col)
-        .select(partition_col)
-        .distinct()
-        .collect()
-    ]
-    if not affected:
-        return 0
-    scoped = table.filter(F.col(partition_col).isin(affected))
-    cleaned = scoped.join(F.broadcast(keys), key_col, "left_anti")
-    (
-        cleaned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    return len(affected)
-
-
 def compact_small_files(
     spark: SparkSession,
     in_path: str,

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from taxi_trips_etl_spark.sources.readers import normalize_event_ts
+from taxi_trips_etl_spark.streaming.state import drain
 
 
 def run_streaming_dedup_watermark(
@@ -54,10 +55,6 @@ def run_streaming_dedup_watermark(
     at sf0.1, identical output). Size to expected keys-in-state, same
     rule as streaming/state.py.
     """
-    from taxi_trips_etl_spark.streaming.state import (
-        state_partitions as _pin,
-    )
-
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -68,13 +65,11 @@ def run_streaming_dedup_watermark(
         .withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark(keys or ["event_id"])
     )
-    with _pin(spark, state_partitions):
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint_path)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        spark,
+        deduped.writeStream.format("parquet")
+        .option("path", out_path)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append"),
+        partitions=state_partitions,
+    )

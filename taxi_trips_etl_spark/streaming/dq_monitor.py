@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.profile import validate_constraints
+from taxi_trips_etl_spark.streaming.state import drain
 
 
 def monitor_batch(
@@ -50,15 +51,12 @@ def run_streaming_dq_monitor(
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(source_path)
-    q = (
+    drain(
+        spark,
         stream.writeStream.foreachBatch(
             lambda df, epoch: monitor_batch(
                 df, epoch, log_path,
                 not_null=not_null, unique=unique, ranges=ranges,
             )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+        ).option("checkpointLocation", checkpoint_path),
     )
-    q.awaitTermination()

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from taxi_trips_etl_spark.dataprep.materialize import materialize
 
 from taxi_trips_etl_spark.dataprep.dedup import lsh_bands, minhash_signature
+from taxi_trips_etl_spark.streaming.state import drain
 
 
 def _index_exists(spark: SparkSession, path: str) -> bool:
@@ -92,14 +93,11 @@ def run_streaming_ingest_dedup(
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(source_path)
-    q = (
+    drain(
+        spark,
         stream.writeStream.foreachBatch(
             lambda df, _epoch: dedup_batch_against_index(
                 df.sparkSession, df, index_path, clean_path, text
             )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+        ).option("checkpointLocation", checkpoint_path),
     )
-    q.awaitTermination()

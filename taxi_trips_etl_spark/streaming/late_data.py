@@ -44,6 +44,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from taxi_trips_etl_spark.streaming.state import drain, stage_file
+
 
 def windowed_counts_stream(
     spark: SparkSession,
@@ -82,19 +84,15 @@ def run_late_data_drain(
 ) -> None:
     """Append-mode drain of the staged 3-batch sequence, with the
     state-store width pinned by ``streaming.state.state_partitions``."""
-    from taxi_trips_etl_spark.streaming.state import state_partitions as _pin
-
-    with _pin(spark, state_partitions):
-        q = (
-            windowed_counts_stream(spark, staged_dir, schema)
-            .writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint_path)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        spark,
+        windowed_counts_stream(spark, staged_dir, schema)
+        .writeStream.format("parquet")
+        .option("path", out_path)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append"),
+        partitions=state_partitions,
+    )
 
 
 def stage_late_replay(
@@ -104,22 +102,12 @@ def stage_late_replay(
     into ``work`` and return the staged source dir. ``ev`` must be the
     normalized events slice for days 1-3 of the feed; ``day0`` the
     feed's first day boundary (a datetime)."""
-    import shutil
-
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
-    # each stage() below is its own write job; without this the slice's
-    # scan+normalize+filter re-runs once per staged file (3×)
+    # each stage_file() below is its own write job; without this the
+    # slice's scan+normalize+filter re-runs once per staged file (3×)
     ev = materialize(ev, eager=True)
     src = f"{work}/src"
-    os.makedirs(src)
-
-    def stage(df: DataFrame, name: str) -> None:
-        tmp = f"{work}/stage_{name}"
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        shutil.move(f"{tmp}/{part}", f"{src}/{name}.parquet")
-
     d0 = day0.strftime("%Y-%m-%d %H:%M:%S")
     b1 = ev.filter(F.col("ts") < F.expr(f"TIMESTAMP '{d0}' + INTERVAL 2 DAYS"))
     b2 = ev.filter(
@@ -139,10 +127,11 @@ def stage_late_replay(
                CAST(NULL AS STRING) AS props
         """
     ).select(*[f.name for f in ev.schema.fields])
-    stage(b1, "a_ontime")
-    stage(b2, "b_day3")
-    stage(late_dupes.unionByName(heartbeat), "c_late_and_heartbeat")
-    t0 = os.stat(f"{src}/a_ontime.parquet").st_mtime
-    os.utime(f"{src}/b_day3.parquet", (t0 + 60, t0 + 60))
-    os.utime(f"{src}/c_late_and_heartbeat.parquet", (t0 + 120, t0 + 120))
+    t0 = os.stat(stage_file(b1, src, "a_ontime")).st_mtime
+    b = stage_file(b2, src, "b_day3")
+    c = stage_file(
+        late_dupes.unionByName(heartbeat), src, "c_late_and_heartbeat"
+    )
+    os.utime(b, (t0 + 60, t0 + 60))
+    os.utime(c, (t0 + 120, t0 + 120))
     return src

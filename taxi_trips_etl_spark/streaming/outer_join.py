@@ -32,21 +32,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from taxi_trips_etl_spark.streaming.state import state_partitions as _pin
+from taxi_trips_etl_spark.streaming.state import drain
+from taxi_trips_etl_spark.streaming.stream_join import WINDOW_HOURS
 
 
-def purchases_without_clicks_stream(
-    spark: SparkSession,
-    staged_dir: str,
-    schema,
-    window_hours: int = 2,
-    delay: str = "1 hour",
+def _attribution_join(
+    spark: SparkSession, staged_dir: str, schema, how: str, delay: str
 ) -> DataFrame:
-    """Streaming DF: every purchase joined LEFT OUTER to the clicks
-    that preceded it within ``window_hours`` (NULL click columns when
-    none did). ``staged_dir`` holds NORMALIZED-timestamp parquet (the
-    staging step runs normalize_event_ts before writing, so the
-    file-stream schema carries a plain TIMESTAMP)."""
+    """Purchases joined (``how``) to the same user's clicks from the
+    preceding ``WINDOW_HOURS``; both sides watermarked by ``delay``
+    and read one staged file per trigger."""
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
             spark.readStream.schema(schema)
@@ -61,16 +56,52 @@ def purchases_without_clicks_stream(
             .withWatermark(f"{prefix}_ts", delay)
         )
 
-    purchases = side("purchase", "p")
-    clicks = side("click", "c")
-    return purchases.join(
-        clicks,
+    return side("purchase", "p").join(
+        side("click", "c"),
         F.expr(
             f"""p_user = c_user
                 AND c_ts <= p_ts
-                AND c_ts >= p_ts - INTERVAL {window_hours} HOURS"""
+                AND c_ts >= p_ts - INTERVAL {WINDOW_HOURS} HOURS"""
         ),
-        "left_outer",
+        how,
+    )
+
+
+def _drain_to_parquet(
+    spark: SparkSession,
+    stream: DataFrame,
+    out_path: str,
+    checkpoint_path: str,
+    state_partitions: int,
+) -> None:
+    """Append-mode drain of ``stream`` into parquet at ``out_path``.
+
+    Stateful streaming cost is dominated by state-store COMMITS:
+    n_state_partitions × n_batches × both-sides, regardless of row
+    count (measured: the same drain at 32 partitions took ~2× the
+    8-partition run), so the width is pinned for the drain. Size it to
+    expected keys-in-state, not to the batch engine's shuffle width.
+    """
+    drain(
+        spark,
+        stream.writeStream.format("parquet")
+        .option("path", out_path)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append"),
+        partitions=state_partitions,
+    )
+
+
+def purchases_without_clicks_stream(
+    spark: SparkSession, staged_dir: str, schema, delay: str = "1 hour"
+) -> DataFrame:
+    """Streaming DF: every purchase joined LEFT OUTER to the clicks
+    that preceded it within ``WINDOW_HOURS`` (NULL click columns when
+    none did). ``staged_dir`` holds NORMALIZED-timestamp parquet (the
+    staging step runs normalize_event_ts before writing, so the
+    file-stream schema carries a plain TIMESTAMP)."""
+    return _attribution_join(
+        spark, staged_dir, schema, "left_outer", delay
     ).select(
         F.col("p_user").alias("user_id"),
         F.col("p_id").alias("purchase_id"),
@@ -86,74 +117,30 @@ def run_streaming_outer_attribution(
     schema,
     out_path: str,
     checkpoint_path: str,
-    window_hours: int = 2,
     state_partitions: int = 8,
 ) -> None:
-    """Drain the staged dir through the outer join into ``out_path``.
-
-    Stateful streaming cost is dominated by state-store COMMITS:
-    n_state_partitions × n_batches × both-sides, regardless of row
-    count (measured: the same drain at 32 partitions took ~2× the
-    8-partition run). State partition count is frozen from
-    ``spark.sql.shuffle.partitions`` at query START, so it is set —
-    and restored — around the synchronous start→awaitTermination
-    bracket; nothing else can observe the temporary value because the
-    whole query lifecycle completes inside it. Size it to expected
-    keys-in-state, not to the batch engine's shuffle width.
-    """
-    with _pin(spark, state_partitions):
-        q = (
-            purchases_without_clicks_stream(
-                spark, staged_dir, schema, window_hours
-            )
-            .writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint_path)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Drain the staged dir through the outer join into ``out_path``."""
+    _drain_to_parquet(
+        spark,
+        purchases_without_clicks_stream(spark, staged_dir, schema),
+        out_path,
+        checkpoint_path,
+        state_partitions,
+    )
 
 
 def attribution_full_outer_stream(
-    spark: SparkSession,
-    staged_dir: str,
-    schema,
-    window_hours: int = 2,
-    delay: str = "1 hour",
+    spark: SparkSession, staged_dir: str, schema, delay: str = "1 hour"
 ) -> DataFrame:
     """FULL OUTER variant of :func:`purchases_without_clicks_stream`:
     additionally emits (NULL, click) for clicks no purchase followed
-    within ``window_hours`` — the abandoned-browse signal. Both
+    within ``WINDOW_HOURS`` — the abandoned-browse signal. Both
     negative emissions are watermark-proofs; state stays bounded by
     rate × (delay + window) on each side. The heartbeat pair matches
     ITSELF (both user −1, equal ts satisfy the range) — callers drop
     user −1 rows, same as the LEFT OUTER drain."""
-    def side(event_type: str, prefix: str) -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-            .withWatermark(f"{prefix}_ts", delay)
-        )
-
-    purchases = side("purchase", "p")
-    clicks = side("click", "c")
-    return purchases.join(
-        clicks,
-        F.expr(
-            f"""p_user = c_user
-                AND c_ts <= p_ts
-                AND c_ts >= p_ts - INTERVAL {window_hours} HOURS"""
-        ),
-        "full_outer",
+    return _attribution_join(
+        spark, staged_dir, schema, "full_outer", delay
     ).select(
         F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
         F.col("p_id").alias("purchase_id"),
@@ -169,32 +156,20 @@ def run_streaming_full_outer_attribution(
     schema,
     out_path: str,
     checkpoint_path: str,
-    window_hours: int = 2,
     state_partitions: int = 2,
 ) -> None:
-    """Drain the staged dir through the FULL OUTER join (same
-    state-partition bracket as the LEFT OUTER runner)."""
-    with _pin(spark, state_partitions):
-        q = (
-            attribution_full_outer_stream(
-                spark, staged_dir, schema, window_hours
-            )
-            .writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint_path)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Drain the staged dir through the FULL OUTER join."""
+    _drain_to_parquet(
+        spark,
+        attribution_full_outer_stream(spark, staged_dir, schema),
+        out_path,
+        checkpoint_path,
+        state_partitions,
+    )
 
 
 def attributed_purchases_semi_stream(
-    spark: SparkSession,
-    staged_dir: str,
-    schema,
-    window_hours: int = 2,
-    delay: str = "1 hour",
+    spark: SparkSession, staged_dir: str, schema, delay: str = "1 hour"
 ) -> DataFrame:
     """LEFT SEMI variant: each purchase emits AT MOST ONCE, as soon as
     any qualifying prior click arrives — the dedup-free "attributed
@@ -202,30 +177,8 @@ def attributed_purchases_semi_stream(
     click; semi state discards the purchase after first emission).
     No heartbeat needed for output completeness: emission happens on
     match, not on watermark proof — the watermark only bounds state."""
-    def side(event_type: str, prefix: str) -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-            .withWatermark(f"{prefix}_ts", delay)
-        )
-
-    purchases = side("purchase", "p")
-    clicks = side("click", "c")
-    return purchases.join(
-        clicks,
-        F.expr(
-            f"""p_user = c_user
-                AND c_ts <= p_ts
-                AND c_ts >= p_ts - INTERVAL {window_hours} HOURS"""
-        ),
-        "left_semi",
+    return _attribution_join(
+        spark, staged_dir, schema, "left_semi", delay
     ).select(
         F.col("p_user").alias("user_id"),
         F.col("p_id").alias("purchase_id"),
@@ -239,20 +192,13 @@ def run_streaming_semi_attribution(
     schema,
     out_path: str,
     checkpoint_path: str,
-    window_hours: int = 2,
     state_partitions: int = 2,
 ) -> None:
     """Drain the staged dir through the LEFT SEMI join."""
-    with _pin(spark, state_partitions):
-        q = (
-            attributed_purchases_semi_stream(
-                spark, staged_dir, schema, window_hours
-            )
-            .writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint_path)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain_to_parquet(
+        spark,
+        attributed_purchases_semi_stream(spark, staged_dir, schema),
+        out_path,
+        checkpoint_path,
+        state_partitions,
+    )

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from taxi_trips_etl_spark.streaming.state import drain
+
 
 def _daily_counts(spark: SparkSession, src: str, schema) -> DataFrame:
     return (
@@ -48,18 +50,14 @@ def run_resumable_drain(
     ``src`` (AvailableNow), overwriting ``out_path`` with the full
     aggregation state each batch. Call again after adding files —
     the shared checkpoint resumes offsets + state."""
-    from taxi_trips_etl_spark.streaming.state import state_partitions as _pin
-
     def sink(batch: DataFrame, _bid: int) -> None:
         batch.write.mode("overwrite").parquet(out_path)
 
-    with _pin(spark, state_partitions):
-        q = (
-            _daily_counts(spark, src, schema)
-            .writeStream.foreachBatch(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        spark,
+        _daily_counts(spark, src, schema)
+        .writeStream.foreachBatch(sink)
+        .outputMode("complete")
+        .option("checkpointLocation", checkpoint_path),
+        partitions=state_partitions,
+    )

@@ -14,12 +14,11 @@ at a live object-store prefix, runs continuously unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.functions.scalar import daypart
+from taxi_trips_etl_spark.streaming.state import drain, event_stream
 
 
 def streaming_daypart_rollup(
@@ -27,27 +26,8 @@ def streaming_daypart_rollup(
 ) -> DataFrame:
     """Streaming DF: per (1-day window, daypart, event_type) counts."""
     # events parquet ts type varies by generation (nanos / NTZ micros);
-    # normalize to TIMESTAMP (watermarks reject NTZ) via the shared helper.
-    from taxi_trips_etl_spark.sources.readers import (
-        normalize_event_ts,
-        require_nanos_as_long,
-        require_utc_session,
-    )
-
-    require_nanos_as_long(spark)
-    require_utc_session(spark)
-    static = spark.read.parquet(events_dir)  # schema from footer
-    # The streaming file source wants a directory: when handed a single
-    # file, stream its parent dir with a glob filter on the filename.
-    if os.path.isfile(events_dir):
-        parent, fname = os.path.split(events_dir)
-        reader = spark.readStream.schema(static.schema).option(
-            "pathGlobFilter", fname
-        )
-        stream = reader.parquet(parent)
-    else:
-        stream = spark.readStream.schema(static.schema).parquet(events_dir)
-    stream = normalize_event_ts(stream)
+    # event_stream normalizes it to TIMESTAMP (watermarks reject NTZ).
+    stream = event_stream(spark, events_dir)
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(
@@ -72,18 +52,14 @@ def run_streaming_daypart_rollup(
     """
     # r13: pin the state-store width (streaming/state.py sizing rule);
     # the windowed aggregation keeps one store per shuffle partition.
-    from taxi_trips_etl_spark.streaming.state import state_partitions as _pin
-
-    with _pin(spark, 8):
-        q = (
-            streaming_daypart_rollup(spark, events_dir)
-            .writeStream.format("memory")
-            .queryName(sink_table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    drain(
+        spark,
+        streaming_daypart_rollup(spark, events_dir)
+        .writeStream.format("memory")
+        .queryName(sink_table)
+        .outputMode("complete"),
+        partitions=8,
+    )
     return spark.table(sink_table).select(
         F.date_format("day_window.start", "yyyy-MM-dd").alias("day"),
         "daypart",

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from taxi_trips_etl_spark.streaming.static_enrich import _event_stream
+from taxi_trips_etl_spark.streaming.state import drain, event_stream
 
 
 def streaming_session_window(
@@ -41,7 +41,7 @@ def streaming_session_window(
     append-mode watermark-eviction test uses to make the watermark
     advance BETWEEN batches.
     """
-    stream = _event_stream(
+    stream = event_stream(
         spark, events_dir, max_files_per_trigger=max_files_per_trigger
     )
     return (
@@ -70,24 +70,16 @@ def run_streaming_session_window(
     emitted). ``state_partitions`` sizes the session state store — see
     streaming/state.py for the sizing rule.
     """
-    from taxi_trips_etl_spark.streaming.state import (
-        state_partitions as _pin,
-    )
-
-    with _pin(spark, state_partitions):
-        q = (
-            streaming_session_window(
-                spark,
-                events_dir,
-                max_files_per_trigger=max_files_per_trigger,
-            )
-            .writeStream.format("memory")
-            .queryName(sink_table)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+    drain(
+        spark,
+        streaming_session_window(
+            spark, events_dir, max_files_per_trigger=max_files_per_trigger
         )
-        q.awaitTermination()
+        .writeStream.format("memory")
+        .queryName(sink_table)
+        .outputMode(output_mode),
+        partitions=state_partitions,
+    )
     return spark.table(sink_table).select(
         "user_id",
         F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias(

@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from taxi_trips_etl_spark.streaming.state import drain, event_stream
+
 SESSION_GAP_SECONDS = 1800
 
 OUTPUT_SCHEMA = (
@@ -128,25 +130,7 @@ def streaming_sessionize(
     sentinel, see :func:`run_streaming_sessionize`) closes them, which
     lets AvailableNow runs terminate deterministically.
     """
-    from taxi_trips_etl_spark.sources.readers import (
-        normalize_event_ts,
-        require_nanos_as_long,
-        require_utc_session,
-    )
-    require_nanos_as_long(spark)
-    require_utc_session(spark)
-    static = spark.read.parquet(events_dir)
-    if os.path.isfile(events_dir):
-        parent, fname = os.path.split(events_dir)
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("pathGlobFilter", fname)
-            .parquet(parent)
-        )
-    else:
-        stream = spark.readStream.schema(static.schema).parquet(events_dir)
-
-    stream = normalize_event_ts(stream)
+    stream = event_stream(spark, events_dir)
     return (
         stream.select("user_id", "event_id", "ts")
         .groupBy("user_id")
@@ -178,9 +162,9 @@ def run_streaming_sessionize(
     or by the sentinel — exactly the gap semantics — and is emitted in
     that same run, while the sentinel-opened session stays in state and
     is never emitted. The output therefore equals the batch
-    sessionization of the same data, and completion is gated on
-    ``awaitTermination`` of a data-bounded run — never on
-    sink-stability heuristics. The 3s processing-time timeout remains
+    sessionization of the same data, and completion is gated on the
+    end of a data-bounded run (:func:`streaming.state.drain`) — never
+    on sink-stability heuristics. The 3s processing-time timeout remains
     the flush mechanism only for true unbounded deployments
     (``streaming_sessionize(use_timeout=True)``).
 
@@ -198,8 +182,9 @@ def run_streaming_sessionize(
     from taxi_trips_etl_spark.sources.readers import require_nanos_as_long
 
     require_nanos_as_long(spark, what="run_streaming_sessionize")
-    staging = tempfile.mkdtemp(prefix="sessionize_src_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sessionize_src_", ignore_cleanup_errors=True
+    ) as staging:
         if os.path.isfile(events_dir):
             shutil.copy(events_dir, os.path.join(staging, "pass1.parquet"))
         else:
@@ -257,22 +242,14 @@ def run_streaming_sessionize(
         # micro-batch; the batch-width 32 here was the one unpinned
         # stateful drive left). 8 matches the stream-join drives'
         # measured sweet spot at this key cardinality.
-        from taxi_trips_etl_spark.streaming.state import (
-            state_partitions as _pin,
+        drain(
+            spark,
+            streaming_sessionize(spark, staging, use_timeout=False)
+            .writeStream.format("memory")
+            .queryName(sink_table)
+            .outputMode("append"),
+            partitions=8,
         )
-
-        with _pin(spark, 8):
-            q = (
-                streaming_sessionize(spark, staging, use_timeout=False)
-                .writeStream.format("memory")
-                .queryName(sink_table)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("sessionize drive did not finish")
 
         # The memory sink holds rows driver-side — safe to drop the
         # scratch dir after return. Guard: drop any sentinel-born
@@ -282,5 +259,3 @@ def run_streaming_sessionize(
         return spark.table(sink_table).filter(
             F.col("session_start") <= F.lit(max_real)
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)

@@ -1,10 +1,88 @@
-"""Shared streaming-runner helpers."""
+"""Shared streaming-runner helpers.
+
+Every bounded, file-fed drive in this package is built from the same
+four pieces, all defined here:
+
+- :func:`event_stream` — the events parquet as a file stream;
+- :func:`stage_file` — land a DataFrame in a source dir as ONE file;
+- :func:`state_partitions` — pin the state-store width;
+- :func:`drain` — run a configured writer once with
+  ``Trigger.AvailableNow`` and wait, bounded, for it to finish.
+"""
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import os
+import shutil
+import tempfile
+from contextlib import contextmanager, nullcontext
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
+
+# Upper bound on one drain's wall time. The slowest drive at sf0.1
+# finishes in a few seconds; a drain still running after this is stuck
+# (e.g. a timeout-driven stateful operator that never goes idle).
+DRAIN_TIMEOUT_S = 300
+
+
+def event_stream(
+    spark: SparkSession,
+    path: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The events parquet at ``path`` (a file or a directory) as a
+    streaming DataFrame with ``ts`` normalized to TIMESTAMP.
+
+    The schema comes from the footer. The streaming file source wants a
+    directory, so a single file streams its parent dir with a glob
+    filter on the filename. ``max_files_per_trigger`` rate-limits the
+    source; AvailableNow honours it, so a many-file source becomes a
+    deterministic multi-batch run.
+    """
+    from taxi_trips_etl_spark.sources.readers import (
+        normalize_event_ts,
+        require_nanos_as_long,
+        require_utc_session,
+    )
+
+    # Do NOT silently flip session conf: entry points pin UTC +
+    # nanosAsLong, and a mis-configured session RAISES rather than
+    # having a reader mutate a global conf mid-session.
+    require_nanos_as_long(spark)
+    require_utc_session(spark)
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option(
+            "maxFilesPerTrigger", str(max_files_per_trigger)
+        )
+    if os.path.isfile(path):
+        path, fname = os.path.split(path)
+        reader = reader.option("pathGlobFilter", fname)
+    return normalize_event_ts(reader.parquet(path))
+
+
+def stage_file(df: DataFrame, src_dir: str, name: str) -> str:
+    """Write ``df`` as exactly one ``{src_dir}/{name}.parquet`` file and
+    return its path.
+
+    The write goes to a temp dir next to ``src_dir`` and the part file
+    is then renamed in, so a file stream listing ``src_dir`` never sees
+    a partial file or Spark's ``_SUCCESS``/``.crc`` side files.
+    """
+    os.makedirs(src_dir, exist_ok=True)
+    dest = f"{src_dir}/{name}.parquet"
+    with tempfile.TemporaryDirectory(
+        prefix=f"stage_{name}_",
+        dir=os.path.dirname(os.path.abspath(src_dir)),
+        ignore_cleanup_errors=True,
+    ) as tmp:
+        df.coalesce(1).write.parquet(f"{tmp}/out")
+        part = next(
+            f for f in os.listdir(f"{tmp}/out") if f.endswith(".parquet")
+        )
+        shutil.move(f"{tmp}/out/{part}", dest)
+    return dest
 
 
 @contextmanager
@@ -30,3 +108,32 @@ def state_partitions(spark: SparkSession, n: int):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    partitions: int | None = None,
+) -> None:
+    """Start ``writer`` with ``Trigger.AvailableNow`` and wait until it
+    has processed everything currently in its source.
+
+    ``partitions`` pins the state-store width (:func:`state_partitions`)
+    across both ``start()`` and the wait; leave it ``None`` for
+    stateless drives. A failing query re-raises here. A query still
+    running after :data:`DRAIN_TIMEOUT_S` is stopped and
+    ``TimeoutError`` is raised.
+    """
+    scope = (
+        nullcontext()
+        if partitions is None
+        else state_partitions(spark, partitions)
+    )
+    with scope:
+        q = writer.trigger(availableNow=True).start()
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"streaming drive {q.name or q.id} did not finish "
+                f"within {DRAIN_TIMEOUT_S} s"
+            )

@@ -15,44 +15,10 @@ continuously unchanged (same posture as streaming/rollup.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _event_stream(
-    spark: SparkSession,
-    events_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    from taxi_trips_etl_spark.sources.readers import (
-        normalize_event_ts,
-        require_nanos_as_long,
-        require_utc_session,
-    )
-
-    # Do NOT silently flip session conf: the repo invariant
-    # (readers.py:require_utc_session / require_nanos_as_long) is that
-    # entry points pin UTC + nanosAsLong and a mis-configured session
-    # RAISES rather than having a reader mutate a global conf
-    # mid-session.
-    require_nanos_as_long(spark)
-    require_utc_session(spark)
-    static = spark.read.parquet(events_dir)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        # Reader-side rate limit: AvailableNow honors it, so a
-        # many-file source becomes a deterministic multi-batch run.
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    if os.path.isfile(events_dir):
-        parent, fname = os.path.split(events_dir)
-        stream = reader.option("pathGlobFilter", fname).parquet(parent)
-    else:
-        stream = reader.parquet(events_dir)
-    return normalize_event_ts(stream)
+from taxi_trips_etl_spark.streaming.state import drain, event_stream
 
 
 def streaming_static_enrich(
@@ -63,7 +29,7 @@ def streaming_static_enrich(
 ) -> DataFrame:
     """Streaming DF: events ⋈ broadcast(dim on c_custkey) → per
     (1-day window, nation, event_type) counts and value totals."""
-    stream = _event_stream(spark, events_dir)
+    stream = event_stream(spark, events_dir)
     d = F.broadcast(dim.select("c_custkey", "c_nationkey"))
     return (
         stream.withWatermark("ts", watermark)
@@ -95,18 +61,14 @@ def run_streaming_static_enrich(
     """
     # r13: pin the state-store width (streaming/state.py sizing rule);
     # the windowed aggregation keeps one store per shuffle partition.
-    from taxi_trips_etl_spark.streaming.state import state_partitions as _pin
-
-    with _pin(spark, 8):
-        q = (
-            streaming_static_enrich(spark, events_dir, dim)
-            .writeStream.format("memory")
-            .queryName(sink_table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    drain(
+        spark,
+        streaming_static_enrich(spark, events_dir, dim)
+        .writeStream.format("memory")
+        .queryName(sink_table)
+        .outputMode("complete"),
+        partitions=8,
+    )
     return spark.table(sink_table).select(
         F.date_format("day_window.start", "yyyy-MM-dd").alias("day"),
         F.col("c_nationkey").cast("long").alias("c_nationkey"),

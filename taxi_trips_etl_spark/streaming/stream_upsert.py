@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.materialize import materialize, release
 from taxi_trips_etl_spark.sources.localrel import local_rows
+from taxi_trips_etl_spark.streaming.state import drain, event_stream
 
 # Final state per user: the row of the (ts, event_id)-max event.
 _STATE_SCHEMA = (
@@ -73,9 +74,7 @@ def run_streaming_cdc_upsert(
     MERGE INTO ... WHEN MATCHED AND source newer THEN UPDATE, but
     expressed as the commutative reduction so replays are no-ops.
     """
-    from taxi_trips_etl_spark.streaming.static_enrich import _event_stream
-
-    stream = _event_stream(
+    stream = event_stream(
         spark, events_dir, max_files_per_trigger=max_files_per_trigger
     )
     state = {"df": None}
@@ -94,12 +93,7 @@ def run_streaming_cdc_upsert(
         if cur is not None:
             release(cur)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, stream.writeStream.foreachBatch(apply_batch))
     out = state["df"]
     if out is None:  # empty source
         return local_rows(spark, [], _STATE_SCHEMA)

@@ -250,3 +250,25 @@ def test_semdedup_plan_has_no_join(spark, sf_dir):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert "FlatMapGroupsInPandas" in plan
+
+
+def test_kmeans_centroids_do_not_depend_on_session_width(spark, sf_dir):
+    """The Lloyd reduce width is pinned to k, so the full unrounded
+    distance vectors (a function of the final centroids) are
+    bit-identical under any session shuffle width, and the session
+    width is restored afterwards."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(4)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    runs = []
+    try:
+        for width in ("2", "32"):
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+            out = kmeans_assign(emb, k=8, iterations=3, with_dists=True)
+            runs.append(sorted(
+                (r.vec_id, r.cluster_id, tuple(r.sq_dists))
+                for r in out.collect()
+            ))
+            assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert runs[0] == runs[1]

@@ -61,18 +61,6 @@ ALLOWED = {
         "dataprep.multimodal.resize_image",
         "dataprep.multimodal.sample_frames",
     },
-    # Not yet deleted, for the same reason (seven tests in
-    # test_sources.py check only these).
-    "unused I/O entry points (pending deletion)": {
-        "sources.readers.read_avro",
-        "sources.readers.read_orc",
-        "sources.readers.read_parquet_evolving",
-        "sources.readers.read_parquet_resilient",
-        "sources.writers.compact_to_target_bytes",
-        "sources.writers.erase_keys_partitioned",
-        "sources.writers.write_orc",
-        "sources.writers.write_sorted_for_skipping",
-    },
 }
 
 DEF_TYPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

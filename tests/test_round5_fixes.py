@@ -85,12 +85,12 @@ def test_sessionize_production_path_has_no_driver_collects():
 
 
 def test_streaming_reader_requires_nanos_conf(spark, sf_dir):
-    from taxi_trips_etl_spark.streaming.static_enrich import _event_stream
+    from taxi_trips_etl_spark.streaming.state import event_stream
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     try:
         with pytest.raises(ValueError, match="nanosAsLong"):
-            _event_stream(spark, f"{sf_dir}/events.parquet")
+            event_stream(spark, f"{sf_dir}/events.parquet")
     finally:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 

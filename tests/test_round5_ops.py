@@ -372,13 +372,13 @@ def test_streaming_reader_raises_on_non_utc(spark, sf_dir):
     rendering in the session)."""
     import pytest as _pytest
 
-    from taxi_trips_etl_spark.streaming.static_enrich import _event_stream
+    from taxi_trips_etl_spark.streaming.state import event_stream
 
     tz_before = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
         with _pytest.raises(ValueError, match="UTC"):
-            _event_stream(spark, f"{sf_dir}/events.parquet")
+            event_stream(spark, f"{sf_dir}/events.parquet")
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz_before)
     assert spark.conf.get("spark.sql.session.timeZone") == tz_before

@@ -143,51 +143,6 @@ def test_events_nanos_reader(spark, sf_dir):
     assert ev.filter(F.col("ts").isNull()).count() == 0
 
 
-def test_compact_to_target_bytes_preserves_rows(spark, tmp_path):
-    from taxi_trips_etl_spark.sources.writers import compact_to_target_bytes
-
-    path = str(tmp_path / "frag")
-    spark.range(10000).repartition(64).write.parquet(path)
-    import glob
-
-    assert len(glob.glob(f"{path}/*.parquet")) == 64
-    n_files = compact_to_target_bytes(spark, path, target_file_bytes=10**9)
-    assert n_files == 1
-    assert len(glob.glob(f"{path}/*.parquet")) == 1
-    assert spark.read.parquet(path).count() == 10000
-
-
-def test_write_sorted_for_skipping_disjoint_ranges(spark, tmp_path):
-    from taxi_trips_etl_spark.sources.writers import write_sorted_for_skipping
-
-    path = str(tmp_path / "sorted")
-    df = spark.range(20000).selectExpr("id", "id % 7919 AS k")
-    write_sorted_for_skipping(df, path, ["k"], files=4)
-
-    # Row-group stats must cover narrow, non-overlapping k ranges —
-    # that's what makes min/max skipping effective.
-    import glob
-
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = [c for c in range(md.num_columns)
-               if md.row_group(0).column(c).path_in_schema == "k"][0]
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        spans.append((min(mins), max(maxs)))
-    spans.sort()
-    assert len(spans) == 4
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2  # disjoint (range-partitioned) files
-    assert spark.read.parquet(path).count() == 20000
-
-
 def test_jsonl_roundtrip_and_corrupt_quarantine(spark, tmp_path):
     from taxi_trips_etl_spark.sources.readers import read_jsonl, write_jsonl
 
@@ -278,107 +233,3 @@ def test_normalize_event_ts_refuses_unannotated_bigint(spark, tmp_path):
             normalize_event_ts(df)
     finally:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-
-def test_orc_roundtrip_preserves_schema_and_rows(spark, sf_dir, tmp_path):
-    """ORC write→read roundtrip keeps schema and values (S2/S3 analog
-    for the other columnar format)."""
-    from taxi_trips_etl_spark.sources.readers import read_orc
-    from taxi_trips_etl_spark.sources.writers import write_orc
-
-    src = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    path = str(tmp_path / "nation_orc")
-    write_orc(src, path)
-    back = read_orc(spark, path)
-    assert back.schema == src.schema
-    assert sorted(map(tuple, back.collect())) == sorted(
-        map(tuple, src.collect())
-    )
-
-
-def test_avro_reader_raises_actionable_error(spark, tmp_path):
-    from taxi_trips_etl_spark.sources.readers import read_avro
-
-    try:
-        read_avro(spark, str(tmp_path / "nope"))
-    except NotImplementedError as e:
-        assert "spark-avro" in str(e)
-    else:  # pragma: no cover
-        raise AssertionError("expected NotImplementedError")
-
-
-def test_read_parquet_evolving_merges_added_column(spark, tmp_path):
-    from taxi_trips_etl_spark.sources.readers import read_parquet_evolving
-
-    p = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id long, s string").write.parquet(p)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, s string, score double"
-    ).write.mode("append").parquet(p)
-    df = read_parquet_evolving(spark, p)
-    assert set(df.columns) == {"id", "s", "score"}
-    rows = {(r["id"], r["score"]) for r in df.collect()}
-    assert rows == {(1, None), (2, 9.5)}
-
-
-def test_read_parquet_resilient_skips_corrupt_file(spark, tmp_path):
-    from taxi_trips_etl_spark.sources.readers import read_parquet_resilient
-
-    p = tmp_path / "dirty"
-    spark.createDataFrame(
-        [(i,) for i in range(10)], "id long"
-    ).coalesce(1).write.parquet(str(p))
-    # a torn object: parquet magic but garbage body/footer
-    (p / "part-corrupt.parquet").write_bytes(b"PAR1" + b"\x00" * 64)
-    df = read_parquet_resilient(spark, str(p))
-    assert df.count() == 10
-
-
-def test_erase_keys_rewrites_only_affected_partitions(spark, tmp_path):
-    import os
-
-    from taxi_trips_etl_spark.sources.writers import erase_keys_partitioned
-
-    p = str(tmp_path / "users")
-    rows = [(uid, f"d{uid % 4}", uid * 10) for uid in range(40)]
-    (
-        spark.createDataFrame(rows, "user_id long, day string, v long")
-        .repartition(2)
-        .write.partitionBy("day")
-        .parquet(p)
-    )
-
-    def files_by_part():
-        out = {}
-        for d in os.listdir(p):
-            if d.startswith("day="):
-                full = os.path.join(p, d)
-                out[d] = {
-                    (f, os.path.getmtime(os.path.join(full, f)))
-                    for f in os.listdir(full)
-                    if f.endswith(".parquet")
-                }
-        return out
-
-    before = files_by_part()
-    # erase users 1 and 5 -> both live in partition day=d1 only
-    keys = spark.createDataFrame([(1,), (5,)], "user_id long")
-    n = erase_keys_partitioned(
-        spark, p, keys, key_col="user_id", partition_col="day"
-    )
-    assert n == 1
-    after = files_by_part()
-    # untouched partitions keep byte-identical file sets (same mtimes)
-    for d in ("day=d0", "day=d2", "day=d3"):
-        assert after[d] == before[d], d
-    assert after["day=d1"] != before["day=d1"]
-    remaining = spark.read.parquet(p)
-    assert remaining.filter(F.col("user_id").isin(1, 5)).count() == 0
-    assert remaining.count() == 38
-    # idempotent rerun: nothing left to erase
-    assert (
-        erase_keys_partitioned(
-            spark, p, keys, key_col="user_id", partition_col="day"
-        )
-        == 0
-    )
