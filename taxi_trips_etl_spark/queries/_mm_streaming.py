@@ -301,8 +301,9 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Covers the window families the reference lacks (lag, running sum
     with an explicit ROWS frame) and is the batch twin of the stateful
-    streaming sessionizer. Epoch seconds are truncated identically on
-    both engines (cast ≡ floor for positive epochs).
+    streaming sessionizer. Epoch seconds are floored identically on
+    both engines (Spark's cast, DuckDB's floor(epoch(ts))), before 1970
+    too.
     """
     ev = _events(spark, sf_dir).select(
         "user_id", "event_id", "ts", F.col("ts").cast("long").alias("sec")
