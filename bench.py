@@ -26,13 +26,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.harness import force, scrub, warm_up  # noqa: E402
+
 # A chunk re-runs once when some query's warm-sample spread exceeds this
 # multiple of its best time (see run_chunked).
 RETRY_SPREAD = 1.0
-
-
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
 
 
 def _chunk_timeout() -> int:
@@ -91,8 +89,7 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm-up: JVM JIT + parquet footer caches, not part of the score.
-    force(spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").limit(1000))
+    warm_up(spark, args.sf_dir)
 
     # Best-of-3 per query: this box is a shared VM with noisy
     # neighbors — identical runs vary up to 3× on the heavier queries
@@ -104,27 +101,8 @@ def main() -> None:
     # makes the noise visible in the artifact instead of smelling like
     # a regression. Sub-second queries skip the re-runs (noise there is
     # bounded by the 1s they already measured), keeping total harness
-    # time ~1.6× a single pass.
-    # Session hygiene between queries: a 170+-query single-JVM run
-    # otherwise ACCUMULATES state — localCheckpoint blocks from the
-    # self-join/iterative ops (freed only when the Python refs are
-    # gc'd and ContextCleaner notices), the streaming entries' memory
-    # sinks (which retain their whole result set as a temp view), and
-    # auto-persisted stages. Measured: most_populars_flat ran 12.1s at
-    # the END of a full pass vs 3.2s in a fresh session — the late
-    # queries were paying earlier queries' retained blocks in GC and
-    # memory pressure. Dropping sink views, clearing the cache, and
-    # forcing a gc (which drives py4j finalizers → JVM unpersists)
-    # keeps every query's measurement independent of its position.
-    import gc
-
-    def scrub() -> None:
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-        spark.catalog.clearCache()
-        gc.collect()
-
+    # time ~1.6× a single pass. scrub() between queries keeps each
+    # measurement independent of its position (tools/harness.py).
     samples: dict[str, list[float]] = {name: [] for name in qs}
     for attempt in range(3):
         for name, fn in qs.items():
@@ -133,7 +111,7 @@ def main() -> None:
             t0 = time.monotonic()
             force(fn(spark, args.sf_dir))
             samples[name].append(round(time.monotonic() - t0, 3))
-            scrub()
+            scrub(spark)
 
     sc = spark.sparkContext
     parallelism = {

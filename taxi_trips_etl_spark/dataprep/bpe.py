@@ -41,12 +41,12 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize
 _WORD_RE = "[a-z]+"
 
 
-def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freqs(docs: DataFrame) -> DataFrame:
     """→ (word, freq): lowercase alpha word counts over the corpus."""
     return (
         docs.select(
             F.explode(
-                F.expr(f"regexp_extract_all(lower({text_col}), '{_WORD_RE}', 0)")
+                F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")
             ).alias("word")
         )
         .groupBy("word")
@@ -69,12 +69,11 @@ def _merge_fold_expr(a: str, b: str) -> str:
 
 def learn_bpe_distributed(
     docs: DataFrame,
-    text_col: str = "text",
     n_merges: int = 8,
 ) -> DataFrame:
     """→ (merge_rank, tok_a, tok_b, pair_count): learned merge table."""
     spark = docs.sparkSession
-    vocab = word_freqs(docs, text_col).select(
+    vocab = word_freqs(docs).select(
         F.expr("split(word, '')").alias("toks"), "freq"
     )
     vocab = vocab.transform(materialize, eager=False)
@@ -160,17 +159,16 @@ def learn_bpe_driver(
 
 def learn_bpe_auto(
     docs: DataFrame,
-    text_col: str = "text",
     n_merges: int = 8,
     driver_vocab_cap: int = 2_000_000,
 ) -> DataFrame:
     """Driver loop below ``driver_vocab_cap`` vocabulary rows,
     :func:`learn_bpe_distributed` beyond it."""
     spark = docs.sparkSession
-    wf = word_freqs(docs, text_col).transform(materialize, eager=True)
+    wf = word_freqs(docs).transform(materialize, eager=True)
     probe = wf.limit(driver_vocab_cap + 1).toPandas()
     if len(probe) > driver_vocab_cap:
-        return learn_bpe_distributed(docs, text_col, n_merges)
+        return learn_bpe_distributed(docs, n_merges=n_merges)
     rows = list(zip(probe["word"].tolist(), probe["freq"].tolist()))
     out = learn_bpe_driver(rows, n_merges)
     from taxi_trips_etl_spark.sources.localrel import local_rows

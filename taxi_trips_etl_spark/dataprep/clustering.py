@@ -41,8 +41,6 @@ def kmeans_assign(
     embeddings: DataFrame,
     k: int = 8,
     iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     with_dists: bool = False,
     with_vec: bool = False,
 ) -> DataFrame:
@@ -52,10 +50,6 @@ def kmeans_assign(
     ``with_dists=True`` appends ``sq_dists`` (the full k-distance
     array); ``with_vec=True`` appends ``vec`` (the double-cast input
     vector, so consumers need no join back onto the embeddings table).
-    The names ``v`` and ``_d`` are reserved for the internal
-    projection — don't pass an ``id_col``/``vec_col`` literally named
-    either.
-
     Init: the k lowest-id vectors, selected by sort — so sparse or
     offset id spaces still seed exactly k clusters. Ties in argmin
     break toward the lower cluster_id, so the whole trajectory is
@@ -66,11 +60,11 @@ def kmeans_assign(
     from taxi_trips_etl_spark.dataprep.materialize import static_rounds
 
     vecs = embeddings.select(
-        F.col(id_col), F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v")
+        F.col("vec_id"), F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v")
     )
     centroids = [
         [float(x) for x in r["v"]]
-        for r in vecs.orderBy(id_col).limit(k).collect()
+        for r in vecs.orderBy("vec_id").limit(k).collect()
     ]
 
     def assign(cents: list[list[float]]) -> DataFrame:
@@ -92,11 +86,11 @@ def kmeans_assign(
             + ")"
         )
         return vecs.select(
-            id_col,
+            "vec_id",
             "v",
             dists.alias("_d"),
         ).select(
-            id_col,
+            "vec_id",
             "v",
             (F.array_position(F.col("_d"), F.array_min(F.col("_d"))) - 1)
             .cast("int")
@@ -146,7 +140,7 @@ def kmeans_assign(
     # `assigned` lags one update when the budget is exhausted.
     final = assign(centroids)
     cols = [
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
         F.round("sq_dist", 6).alias("sq_dist"),
     ]

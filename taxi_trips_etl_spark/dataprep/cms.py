@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 DEPTH = 4
 WIDTH = 512
+PROBE_TOP_N = 20  # words probed, shared by the Spark builder and its oracle
 
 
 def _bucket(value: F.Column, row_idx: F.Column) -> F.Column:
@@ -49,9 +50,7 @@ def _bucket(value: F.Column, row_idx: F.Column) -> F.Column:
     ).alias("col_idx")
 
 
-def cms_registers(
-    df: DataFrame, value_col: str, depth: int = DEPTH
-) -> DataFrame:
+def cms_registers(df: DataFrame, value_col: str) -> DataFrame:
     """(row_idx, col_idx, reg_cnt) register table — the persistable,
     cell-wise-addable sketch state."""
     counts = df.groupBy(F.col(value_col).alias("v")).agg(
@@ -60,7 +59,7 @@ def cms_registers(
     salted = counts.select(
         "v",
         "cnt",
-        F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias(
+        F.explode(F.array(*[F.lit(i) for i in range(DEPTH)])).alias(
             "row_idx"
         ),
     )
@@ -73,25 +72,22 @@ def cms_registers(
 
 def cms_token_estimates(
     docs: DataFrame,
-    probe_top_n: int = 20,
-    depth: int = DEPTH,
-    text: str = "text",
 ) -> DataFrame:
     """Build a CMS over corpus word frequencies and probe it with the
-    ``probe_top_n`` most frequent words (exact count alongside, so the
+    ``PROBE_TOP_N`` most frequent words (exact count alongside, so the
     one-sided error is visible in the output).
 
     → (word, exact_cnt, cms_cnt) with cms_cnt ≥ exact_cnt always.
     """
     words = docs.select(
         F.explode(
-            F.split(F.trim(F.lower(F.col(text))), r"\s+")
+            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
         ).alias("word")
     ).filter(F.col("word") != "")
     exact = words.groupBy("word").agg(
         F.count(F.lit(1)).cast("long").alias("exact_cnt")
     )
-    regs = cms_registers(words, "word", depth=depth)
+    regs = cms_registers(words, "word")
     # Probe set: exact top-n (deterministic word tiebreak) — bounded,
     # so the probe×registers join is broadcast on the probe side.
     probe = (
@@ -101,13 +97,13 @@ def cms_token_estimates(
                 Window.orderBy(F.col("exact_cnt").desc(), F.col("word"))
             ),
         )
-        .filter(F.col("rk") <= probe_top_n)
+        .filter(F.col("rk") <= PROBE_TOP_N)
         .drop("rk")
     )
     probed = F.broadcast(probe).select(
         "word",
         "exact_cnt",
-        F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias(
+        F.explode(F.array(*[F.lit(i) for i in range(DEPTH)])).alias(
             "row_idx"
         ),
     )
@@ -122,13 +118,11 @@ def cms_token_estimates(
     return est.orderBy(F.col("exact_cnt").desc(), "word")
 
 
-def cms_oracle_sql(
-    words_sql: str, probe_top_n: int = 20, depth: int = DEPTH
-) -> str:
+def cms_oracle_sql(words_sql: str) -> str:
     """DuckDB twin of :func:`cms_token_estimates` — identical bucket
     derivation (md5 hex → int, mod WIDTH) and integer register sums,
     parameterized over a one-column (word) relation."""
-    rows = ", ".join(f"({i})" for i in range(depth))
+    rows = ", ".join(f"({i})" for i in range(DEPTH))
     return f"""
     WITH w AS ({words_sql}),
     exact AS (
@@ -150,7 +144,7 @@ def cms_oracle_sql(
             SELECT word, exact_cnt,
                    row_number() OVER (ORDER BY exact_cnt DESC, word) AS rk
             FROM exact)
-        WHERE rk <= {probe_top_n}
+        WHERE rk <= {PROBE_TOP_N}
     ),
     probed AS (
         SELECT p.word, p.exact_cnt, r.row_idx,

@@ -19,16 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-TOKEN_PATTERN = r"\s+"
+from taxi_trips_etl_spark.dataprep.dedup import tokens_col, tokens_table
+
+TOP_P_NUM, TOP_P_DEN = 1, 2  # vocab_top_p keeps p = 1/2 of token mass
+# skipgram window and output size, shared by the Spark builder and its oracle
+MAX_OFFSET = 3
+TOP_PAIRS = 100
 
 
-def _tokens(docs: DataFrame, text: str) -> F.Column:
-    return F.split(F.trim(F.lower(F.col(text))), TOKEN_PATTERN)
-
-
-def pmi_collocations(
-    docs: DataFrame, text: str = "text", min_count: int = 5
-) -> DataFrame:
+def pmi_collocations(docs: DataFrame, min_count: int = 5) -> DataFrame:
     """Pointwise mutual information of adjacent token bigrams.
 
     pmi(x,y) = ln( c_xy · N / (c_x· · c_·y) ) with all counts taken
@@ -40,7 +39,7 @@ def pmi_collocations(
 
     Returns (w1, w2, pair_cnt, pmi) for pairs with pair_cnt >= min_count.
     """
-    toks = docs.select(_tokens(docs, text).alias("t")).filter(
+    toks = docs.select(tokens_col().alias("t")).filter(
         F.size("t") >= 2
     )
     pairs = (
@@ -82,15 +81,12 @@ def pmi_collocations(
 
 def vocab_top_p(
     docs: DataFrame,
-    text: str = "text",
-    p_num: int = 1,
-    p_den: int = 2,
 ) -> DataFrame:
     """Nucleus (top-p) vocabulary: the smallest count-descending
-    prefix of the vocabulary covering fraction p_num/p_den of all
+    prefix of the vocabulary covering fraction TOP_P_NUM/TOP_P_DEN of all
     token occurrences — i.e. keep a token iff the coverage BEFORE it
     is still short of p. The comparison is exact integer arithmetic
-    ((cum - cnt)·p_den < p_num·N), no float thresholds.
+    ((cum - cnt)·TOP_P_DEN < TOP_P_NUM·N), no float thresholds.
 
     The rank/cumsum window is global but runs on the aggregated VOCAB
     table (distinct tokens), never the corpus; at a billion-token
@@ -99,7 +95,7 @@ def vocab_top_p(
     Returns (word, cnt, rnk, cum_cnt) for the kept prefix.
     """
     words = (
-        docs.select(F.explode(_tokens(docs, text)).alias("word"))
+        docs.select(F.explode(tokens_col()).alias("word"))
         .filter(F.col("word") != "")
     )
     vc = words.groupBy("word").agg(
@@ -118,19 +114,16 @@ def vocab_top_p(
         .crossJoin(F.broadcast(total))
     )
     return cum.filter(
-        (F.col("cum_cnt") - F.col("cnt")) * p_den
-        < p_num * F.col("n_tokens")
+        (F.col("cum_cnt") - F.col("cnt")) * TOP_P_DEN
+        < TOP_P_NUM * F.col("n_tokens")
     ).select("word", "cnt", "rnk", "cum_cnt")
 
 
 def skipgram_cooccurrence(
     docs: DataFrame,
-    text: str = "text",
-    max_offset: int = 3,
-    top_pairs: int = 100,
 ) -> DataFrame:
     """Word2vec-style positional co-occurrence: for every token, the
-    tokens up to ``max_offset`` positions AHEAD of it, weighted by
+    tokens up to ``MAX_OFFSET`` positions AHEAD of it, weighted by
     harmonic distance (the word2vec window-sampling expectation 1/d).
     Weights are kept exact by scaling to the LCM: w6 = 6/d ∈ {6, 3, 2},
     so the aggregate is an integer sum and the ranking never compares
@@ -138,8 +131,8 @@ def skipgram_cooccurrence(
     skip-gram co-occurrence matrix builder consumes; symmetrize by
     adding the transpose downstream if needed.
 
-    → top ``top_pairs`` rows (w1, w2, pair_n, w6_sum) by weighted count
-    (row_number on (w6_sum desc, w1, w2) — exactly ``top_pairs`` rows).
+    → top ``TOP_PAIRS`` rows (w1, w2, pair_n, w6_sum) by weighted count
+    (row_number on (w6_sum desc, w1, w2) — exactly ``TOP_PAIRS`` rows).
 
     Scale shape: offsets are generated per document from the token
     array (3 slices of the SAME materialized array — tokens_table puts
@@ -147,8 +140,6 @@ def skipgram_cooccurrence(
     (w1, w2) with map-side combine; the final cut is a global
     TakeOrderedAndProject over the vocab²-bounded aggregate.
     """
-    from taxi_trips_etl_spark.dataprep.dedup import tokens_table
-
     weights = {1: 6, 2: 3, 3: 2}
     offset_arrays = [
         F.when(
@@ -160,10 +151,10 @@ def skipgram_cooccurrence(
                 f"CAST({weights[off]} AS BIGINT) AS w6))"
             ),
         ).otherwise(F.expr("array()"))
-        for off in range(1, max_offset + 1)
+        for off in range(1, MAX_OFFSET + 1)
     ]
     pairs = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select(F.explode(F.flatten(F.array(*offset_arrays))).alias("p"))
         .select("p.w1", "p.w2", "p.w6")
         .groupBy("w1", "w2")
@@ -177,12 +168,11 @@ def skipgram_cooccurrence(
     # vocab² aggregate through one task. The sort key (w6_sum, w1, w2)
     # is unique per row, so limit ≡ the oracle's row_number cut.
     return pairs.orderBy(F.col("w6_sum").desc(), "w1", "w2").limit(
-        top_pairs
+        TOP_PAIRS
     )
 
 
-def skipgram_oracle_sql(toks_sql: str, max_offset: int = 3,
-                        top_pairs: int = 100) -> str:
+def skipgram_oracle_sql(toks_sql: str) -> str:
     """DuckDB twin of :func:`skipgram_cooccurrence` — same offsets,
     same integer 6/d weights, same row_number cut."""
     weights = {1: 6, 2: 3, 3: 2}
@@ -195,7 +185,7 @@ def skipgram_oracle_sql(toks_sql: str, max_offset: int = 3,
               FROM (SELECT {toks_sql} AS t FROM documents
                     WHERE len({toks_sql}) > {off}))
         """
-        for off in range(1, max_offset + 1)
+        for off in range(1, MAX_OFFSET + 1)
     )
     return f"""
     WITH pairs AS ({branches}),
@@ -207,5 +197,5 @@ def skipgram_oracle_sql(toks_sql: str, max_offset: int = 3,
     SELECT w1, w2, pair_n, w6_sum FROM (
         SELECT *, row_number() OVER (ORDER BY w6_sum DESC, w1, w2) AS rk
         FROM agg)
-    WHERE rk <= {top_pairs}
+    WHERE rk <= {TOP_PAIRS}
     """

@@ -39,8 +39,6 @@ log = logging.getLogger(__name__)
 
 def connected_components(
     pairs: DataFrame,
-    a_col: str = "doc_id_a",
-    b_col: str = "doc_id_b",
     max_rounds: int = 20,
     strict: bool = False,
 ) -> DataFrame:
@@ -65,7 +63,7 @@ def connected_components(
     # upstream lineage. Measured at sf0.1: 18.2s → ~11s for the
     # minhash→components query.
     base = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+        F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
     ).transform(materialize, eager=True)
     edges = (
         base.unionByName(
@@ -126,7 +124,6 @@ def connected_components_star(
     pairs: DataFrame,
     a_col: str = "doc_id_a",
     b_col: str = "doc_id_b",
-    max_rounds: int = 30,
     assume_canonical: bool = False,
     min_broadcast_cap: int = 4_000_000,
     rows_per_partition: int = 2_000_000,
@@ -233,7 +230,7 @@ def connected_components_star(
     default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with static_rounds(spark):
         sig = signature(edges)
-        for _ in range(max_rounds):
+        for _ in range(30):
             hint = sig[0] <= min_broadcast_cap // 2
             pin_loop_width(spark, default_width, sig[0], rows_per_partition)
             # large-star: symmetrize, per-u closed-neighborhood min,

@@ -28,18 +28,15 @@ from taxi_trips_etl_spark.dataprep.dedup import (
 from taxi_trips_etl_spark.dataprep.sampling import train_test_split
 from taxi_trips_etl_spark.dataprep.text import chunk_documents, quality_scores
 
+TOKEN_BUDGET = 100_000  # prepare_corpus_v3's apportioned tokens
+
 
 def prepare_corpus(
     docs: DataFrame,
-    quality_min: float = 0.75,
-    jaccard_threshold: float = 0.8,
-    chunk_tokens: int = 50,
-    overlap: int = 10,
-    test_rate: float = 0.2,
 ) -> DataFrame:
     """→ (doc_id, chunk_id, chunk_hash, chunk_tokens, split)."""
     q_ok = quality_scores(docs).filter(
-        F.col("quality_score") >= quality_min
+        F.col("quality_score") >= 0.75
     ).select("doc_id")
     # Same survivor-checkpoint posture as v2/v3 below: `kept` feeds the
     # exact-dedup pass AND the canonical join, `kept2` feeds the
@@ -54,15 +51,15 @@ def prepare_corpus(
     )
     kept2 = kept.join(canon, "doc_id").transform(materialize, eager=False)
     near_dups = (
-        ngram_jaccard_pairs(kept2, threshold=jaccard_threshold)
+        ngram_jaccard_pairs(kept2, threshold=0.8)
         .select(F.col("doc_id_b").alias("doc_id"))
         .distinct()
     )
     kept3 = kept2.join(near_dups, "doc_id", "left_anti")
-    chunks = chunk_documents(kept3, chunk_tokens=chunk_tokens, overlap=overlap)
+    chunks = chunk_documents(kept3, chunk_tokens=50, overlap=10)
     # Split on doc_id, not chunk id: all chunks of a document land on
     # the same side — no near-dup leakage across the boundary.
-    return train_test_split(chunks, key="doc_id", test_rate=test_rate).select(
+    return train_test_split(chunks, key="doc_id", test_rate=0.2).select(
         "doc_id",
         "chunk_id",
         F.md5("chunk_text").alias("chunk_hash"),
@@ -73,10 +70,6 @@ def prepare_corpus(
 
 def prepare_corpus_v2(
     docs: DataFrame,
-    vocab_size: int = 500,
-    seq_len: int = 128,
-    test_rate: float = 0.2,
-    materialize_survivors: bool = True,
 ) -> DataFrame:
     """The modern pre-training recipe, composed end to end as ONE lazy
     plan: C4 rule gate → PII scrub → exact dedup (on scrubbed text) →
@@ -91,9 +84,8 @@ def prepare_corpus_v2(
     repo, filters prune before the expensive joins, the vocab is built
     on the SURVIVING corpus (no leakage of dropped/eval text into the
     token space), and packing runs on the final doc set so offsets are
-    dense. The survivor set is checkpointed once by default (three
-    consumers would otherwise recompute the whole upstream lineage);
-    pass ``materialize_survivors=False`` for a fully lazy single plan.
+    dense. The survivor set is checkpointed once (three consumers
+    would otherwise recompute the whole upstream lineage).
     """
     from taxi_trips_etl_spark.dataprep.packing import pack_sequences
     from taxi_trips_etl_spark.dataprep.text import (
@@ -130,23 +122,23 @@ def prepare_corpus_v2(
     ).transform(materialize, eager=False)
     eval_docs = docs.filter(F.col("doc_id") % 20 == 0)
     contaminated = (
-        ngram_decontaminate(kept2, eval_docs, n=5)
+        ngram_decontaminate(kept2, eval_docs)
         .select("doc_id")
         .distinct()
     )
-    kept3 = kept2.join(contaminated, "doc_id", "left_anti")
-    if materialize_survivors:
-        # Three downstream consumers (vocab, tokenize, pack) would each
-        # recompute the gate→scrub→dedup→decontaminate lineage — the
-        # measured plan re-scans the corpus ~100× with zero
-        # ReusedExchange. One checkpoint = one computation; at 100 TB
-        # this is the difference between reading the corpus once and
-        # three times (same ledger as the flagship auto-cache).
-        kept3 = kept3.transform(materialize, eager=False)
-    tok = tokenize_with_vocab(kept3, build_vocab(kept3, vocab_size))
-    pack = pack_sequences(kept3, seq_len=seq_len).drop("n_tokens")
+    # Three downstream consumers (vocab, tokenize, pack) would each
+    # recompute the gate→scrub→dedup→decontaminate lineage — the
+    # measured plan re-scans the corpus ~100× with zero
+    # ReusedExchange. One checkpoint = one computation; at 100 TB
+    # this is the difference between reading the corpus once and
+    # three times (same ledger as the flagship auto-cache).
+    kept3 = kept2.join(contaminated, "doc_id", "left_anti").transform(
+        materialize, eager=False
+    )
+    tok = tokenize_with_vocab(kept3, build_vocab(kept3, 500))
+    pack = pack_sequences(kept3, seq_len=128).drop("n_tokens")
     return train_test_split(
-        tok.join(pack, "doc_id"), key="doc_id", test_rate=test_rate
+        tok.join(pack, "doc_id"), key="doc_id", test_rate=0.2
     ).select(
         "doc_id",
         "token_ids",
@@ -162,8 +154,6 @@ def prepare_corpus_v2(
 
 def prepare_corpus_v3(
     docs: DataFrame,
-    budget: int = 100_000,
-    materialize_survivors: bool = True,
 ) -> DataFrame:
     """The round-4/5 curation recipe composed end to end: linear
     quality-classifier gate → exact dedup → benchmark decontamination
@@ -211,13 +201,13 @@ def prepare_corpus_v3(
     )
     eval_docs = docs.filter(F.col("doc_id") % 20 == 0)
     contaminated = (
-        ngram_decontaminate(kept2, eval_docs, n=5)
+        ngram_decontaminate(kept2, eval_docs)
         .select("doc_id")
         .distinct()
     )
-    kept3 = kept2.join(contaminated, "doc_id", "left_anti")
-    if materialize_survivors:
-        kept3 = kept3.transform(materialize, eager=False)
+    kept3 = kept2.join(contaminated, "doc_id", "left_anti").transform(
+        materialize, eager=False
+    )
 
     # r13: the apportionment epilogue below references this aggregate
     # through calc twice (leftover + ranked) and through wsum — without
@@ -247,10 +237,10 @@ def prepare_corpus_v3(
     wsum = weighted.agg(F.sum("w").alias("wsum"))
     calc = (
         weighted.crossJoin(F.broadcast(wsum))
-        .withColumn("base", F.expr(f"({budget} * w) div wsum"))
-        .withColumn("rem", F.expr(f"({budget} * w) % wsum"))
+        .withColumn("base", F.expr(f"({TOKEN_BUDGET} * w) div wsum"))
+        .withColumn("rem", F.expr(f"({TOKEN_BUDGET} * w) % wsum"))
     )
-    leftover = calc.agg((F.lit(budget) - F.sum("base")).alias("leftover"))
+    leftover = calc.agg((F.lit(TOKEN_BUDGET) - F.sum("base")).alias("leftover"))
     from pyspark.sql import Window as W
 
     ranked = calc.crossJoin(F.broadcast(leftover)).withColumn(

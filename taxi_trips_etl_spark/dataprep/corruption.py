@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+NOISE_PCT = 15  # span-corruption noise density p, in percent
+
 
 def _h60(prefix: str, *cols) -> F.Column:
     """60-bit integer from md5 of 'prefix:col1:col2...' — exact and
@@ -50,15 +52,13 @@ def _h60(prefix: str, *cols) -> F.Column:
 
 def span_corruption_masks(
     docs: DataFrame,
-    noise_pct: int = 15,
-    text: str = "text",
 ) -> DataFrame:
     """→ (doc_id, span_id, start, length): 0-based token-index spans
     to mask, one row per sentinel. See module docstring for the
     deterministic layout."""
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
-    toks = tokens_table(docs, text).select(
+    toks = tokens_table(docs).select(
         "doc_id", F.size("toks").cast("long").alias("n")
     ).filter(F.col("n") >= 4)
     spans = toks.select(
@@ -66,10 +66,10 @@ def span_corruption_masks(
         "n",
         F.expr(
             f"explode(sequence(0, greatest(1,"
-            f" (n * {noise_pct} div 100) div 3) - 1))"
+            f" (n * {NOISE_PCT} div 100) div 3) - 1))"
         ).alias("span_id"),
         F.expr(
-            f"greatest(1, (n * {noise_pct} div 100) div 3)"
+            f"greatest(1, (n * {NOISE_PCT} div 100) div 3)"
         ).alias("n_spans"),
     )
     seg_lo = F.expr("span_id * n div n_spans")
@@ -90,14 +90,13 @@ def span_corruption_masks(
 def negative_sample_table(
     docs: DataFrame,
     n_samples: int = 500,
-    text: str = "text",
 ) -> DataFrame:
     """→ (sample_idx, token): ``n_samples`` deterministic draws from
     the unigram^0.75 distribution over the corpus vocabulary."""
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
     counts = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select(F.explode("toks").alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token")

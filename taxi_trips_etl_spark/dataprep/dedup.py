@@ -36,27 +36,27 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize
 # ---------------------------------------------------------------------------
 
 
-def tokens_col(text: str = "text"):
+def tokens_col():
     """lower-cased whitespace tokens; '' → [''] quirk matches DuckDB."""
-    return F.split(F.trim(F.lower(F.col(text))), r"\s+")
+    return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
 
 
-def spread(docs: DataFrame, key: str = "doc_id") -> DataFrame:
+def spread(docs: DataFrame) -> DataFrame:
     """Repartition ahead of CPU-bound row expansion (shingle/token
     explode + hashing). A small corpus arrives as ONE parquet split and
     would otherwise explode single-threaded; at real scale the scan
     already has many splits and this hash-repartition also pre-keys the
     groupBy(doc_id) aggregations that follow (reused exchange)."""
     return docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, key
+        docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )
 
 
-def tokens_table(docs: DataFrame, text: str = "text") -> DataFrame:
+def tokens_table(docs: DataFrame) -> DataFrame:
     """(doc_id, toks) with tokenization materialized BELOW an exchange.
 
     Load-bearing subtlety: expressions built directly on
-    ``tokens_col(text)`` re-evaluate the regex split for EVERY
+    ``tokens_col()`` re-evaluate the regex split for EVERY
     reference — Spark does not common-subexpression-eliminate across
     higher-order-function lambdas, so a 3-gram builder re-tokenizes the
     whole document 3× per shingle (measured 10× slowdown). Projecting
@@ -65,7 +65,7 @@ def tokens_table(docs: DataFrame, text: str = "text") -> DataFrame:
     split runs exactly once per row. The repartition doubles as
     :func:`spread`.
     """
-    return docs.select("doc_id", tokens_col(text).alias("toks")).repartition(
+    return docs.select("doc_id", tokens_col().alias("toks")).repartition(
         docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )
 
@@ -96,14 +96,14 @@ def word_ngrams(tokens, n: int = 3):
 # ---------------------------------------------------------------------------
 
 
-def exact_duplicates(docs: DataFrame, text: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Exact dedup via md5-hash groupBy.
 
     Returns one row per distinct text: canonical (min) doc_id + number
     of copies. ``dup_count > 1`` rows are the duplicates to drop.
     """
     return (
-        docs.groupBy(F.md5(F.col(text)).alias("text_hash"))
+        docs.groupBy(F.md5(F.col("text")).alias("text_hash"))
         .agg(
             F.min("doc_id").alias("canonical_doc_id"),
             F.count(F.lit(1)).alias("dup_count"),
@@ -119,8 +119,7 @@ MINHASH_K = 16
 LSH_BANDS = 4  # 4 bands × 4 rows
 
 
-def minhash_signature(docs: DataFrame, text: str = "text", k: int = MINHASH_K,
-                      ngram: int = 3) -> DataFrame:
+def minhash_signature(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     """k-permutation MinHash over word 3-gram shingles.
 
     h_i(s) = md5('{i}:' + s); the signature element is the lexicographic
@@ -137,8 +136,8 @@ def minhash_signature(docs: DataFrame, text: str = "text", k: int = MINHASH_K,
     """
     if k < 1:
         raise ValueError(f"minhash_signature needs k >= 1, got {k}")
-    shingled = tokens_table(docs, text).select(
-        "doc_id", F.explode(word_ngrams(F.col("toks"), ngram)).alias("shingle")
+    shingled = tokens_table(docs).select(
+        "doc_id", F.explode(word_ngrams(F.col("toks"), 3)).alias("shingle")
     )
     return shingled.groupBy("doc_id").agg(
         *[
@@ -175,7 +174,7 @@ def lsh_bands(sig_df: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS) -> 
 
 
 def minhash_lsh_candidates(
-    docs: DataFrame, text: str = "text", max_bucket_size: int | None = None
+    docs: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing ≥ 1 LSH band bucket.
 
@@ -195,7 +194,7 @@ def minhash_lsh_candidates(
     band_key) partitioning the join shuffles on, so the exchange is
     reused — the cap costs no extra shuffle.
     """
-    b = lsh_bands(minhash_signature(docs, text))
+    b = lsh_bands(minhash_signature(docs))
     if max_bucket_size is not None:
         w_bucket = Window.partitionBy("band_id", "band_key")
         b = (
@@ -239,7 +238,7 @@ def _token_hash(tok):
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
 
 
-def simhash(docs: DataFrame, text: str = "text", bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """60-bit SimHash over distinct tokens (unit weights).
 
     bit_j(doc) = 1 iff sum over tokens of ±1 (sign of hash bit j) > 0.
@@ -253,7 +252,7 @@ def simhash(docs: DataFrame, text: str = "text", bits: int = SIMHASH_BITS) -> Da
         # 2**j must stay a positive signed 64-bit literal (j <= 61 in
         # the reassembly below plus the sign bit's headroom).
         raise ValueError(f"simhash needs 1 <= bits <= 62, got {bits}")
-    toks = tokens_table(docs, text).select(
+    toks = tokens_table(docs).select(
         "doc_id", F.explode(F.array_distinct(F.col("toks"))).alias("tok")
     ).select("doc_id", _token_hash(F.col("tok")).alias("h"))
     sums = toks.groupBy("doc_id").agg(
@@ -272,15 +271,13 @@ def simhash(docs: DataFrame, text: str = "text", bits: int = SIMHASH_BITS) -> Da
     return sums.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_near_duplicates(
-    docs: DataFrame, text: str = "text", max_hamming: int = 3
-) -> DataFrame:
+def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming.
 
     Candidates via 4 bands of 15 bits (pigeonhole for ≤ 3 flips), then
     exact hamming verification with bit_count(a XOR b).
     """
-    fp = simhash(docs, text)
+    fp = simhash(docs)
     bands = 4
     width = SIMHASH_BITS // bands
     mask = (1 << width) - 1
@@ -380,8 +377,6 @@ def _cap_pairs(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    text: str = "text",
-    n: int = 3,
     threshold: float = 0.8,
     max_posting_size: int | None = None,
     max_pairs: int | None = None,
@@ -452,9 +447,9 @@ def ngram_jaccard_pairs(
     measured green against the brute-force list_intersect oracle.
     """
     posting = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select(
-            "doc_id", F.explode(word_ngrams(F.col("toks"), n)).alias("gram")
+            "doc_id", F.explode(word_ngrams(F.col("toks"), 3)).alias("gram")
         )
         # hash in a projection ABOVE the Generate (a generator can't be
         # nested in an expression); the gram string lives only inside
@@ -625,8 +620,6 @@ def _verified_intersections(cand: DataFrame, arrays: DataFrame) -> DataFrame:
 
 def ngram_containment_pairs(
     docs: DataFrame,
-    text: str = "text",
-    n: int = 3,
     threshold: float = 0.6,
     max_posting_size: int | None = None,
     max_pairs: int | None = None,
@@ -659,9 +652,9 @@ def ngram_containment_pairs(
     (default ``None`` = plan unchanged).
     """
     posting = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select(
-            "doc_id", F.explode(word_ngrams(F.col("toks"), n)).alias("gram")
+            "doc_id", F.explode(word_ngrams(F.col("toks"), 3)).alias("gram")
         )
         # hash in a projection ABOVE the Generate (a generator can't be
         # nested in an expression); the gram string lives only inside
@@ -736,7 +729,6 @@ def ngram_containment_pairs(
 def minhash_lsh_incremental(
     corpus_docs: DataFrame,
     new_docs: DataFrame,
-    text: str = "text",
 ) -> DataFrame:
     """Delta dedup: candidate pairs touching the NEW batch only —
     (new × corpus) ∪ (new × new), never corpus × corpus.
@@ -756,11 +748,11 @@ def minhash_lsh_incremental(
     # expensive part of its spine; without a checkpoint the batch is
     # re-hashed per consumer (r13: docs scans 3 → 2). Batch-sized
     # (|new|·bands rows), so the checkpoint is tiny.
-    new_b = lsh_bands(minhash_signature(new_docs, text)).transform(
+    new_b = lsh_bands(minhash_signature(new_docs)).transform(
         materialize, eager=False
     )
     all_b = lsh_bands(
-        minhash_signature(corpus_docs, text)
+        minhash_signature(corpus_docs)
     ).unionByName(new_b)
     # Orient each pair (a < b) and keep those with ≥1 end in the batch;
     # the join probes the new side only, so the index side streams.
@@ -782,19 +774,13 @@ def minhash_lsh_incremental(
 
 def weighted_minhash_pairs(
     docs: DataFrame,
-    text: str = "text",
-    cap: int = 2,
-    ngram: int = 2,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
     min_wjacc_milli: int = 250,
-    max_bucket_size: int = 50,
 ) -> DataFrame:
     """WEIGHTED-Jaccard near-dup pairs — the tf-aware upgrade of the
     set-Jaccard miners: two docs built from the same vocabulary in
     different proportions score low, repeated-content clones score
     high. Weighted Jaccard of capped term frequencies
-    (Σ min(tf_a, tf_b) / Σ max(tf_a, tf_b), tf capped at ``cap``)
+    (Σ min(tf_a, tf_b) / Σ max(tf_a, tf_b), tf capped at 2)
     via the replica-expansion identity: token t with capped tf c
     becomes items t#1..t#c, and SET Jaccard of the replica sets IS
     the weighted Jaccard of the capped multisets — so the standard
@@ -805,7 +791,7 @@ def weighted_minhash_pairs(
     with wjacc_milli ≥ ``min_wjacc_milli`` (milli = integer
     round-half-up of 1000·num/den — no float in the hash).
 
-    Scale shape: replica explode is ≤ cap× the token table; signature
+    Scale shape: replica explode is ≤ 2× the token table; signature
     is one partially-aggregated shuffle; candidates come from the
     band-bucket equi-join (Σ bucket², never n²); the exact verify
     joins tf tables ONLY for candidate pairs and doc totals ride a
@@ -814,17 +800,17 @@ def weighted_minhash_pairs(
     # NON-distinct shingles (word_ngrams dedups — useless for tf):
     # every occurrence counts toward the capped frequency.
     grams = F.expr(
-        f"case when size(toks) >= {ngram} then "
-        f"transform(sequence(0, size(toks) - {ngram}), "
-        f"i -> concat_ws(' ', slice(toks, i + 1, {ngram}))) "
-        f"else array() end"
+        "case when size(toks) >= 2 then "
+        "transform(sequence(0, size(toks) - 2), "
+        "i -> concat_ws(' ', slice(toks, i + 1, 2))) "
+        "else array() end"
     )
     tf = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select("doc_id", F.explode(grams).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(
-            F.least(F.count(F.lit(1)), F.lit(cap))
+            F.least(F.count(F.lit(1)), F.lit(2))
             .cast("long")
             .alias("tf")
         )
@@ -841,18 +827,18 @@ def weighted_minhash_pairs(
             F.min(
                 F.md5(F.concat(F.lit(f"{i}:"), F.col("item")))
             ).alias(f"mh{i}")
-            for i in range(k)
+            for i in range(MINHASH_K)
         ]
     )
     # Degenerate-corpus guard (same rule as minhash_lsh_candidates):
     # buckets above max_bucket_size are dropped DETERMINISTICALLY on
     # both engines before pairing, bounding the candidate join.
-    banded = lsh_bands(sig, k=k, bands=bands)
+    banded = lsh_bands(sig, k=MINHASH_K, bands=LSH_BANDS)
     bsz = banded.groupBy("band_id", "band_key").agg(
         F.count(F.lit(1)).alias("bsz")
     )
     banded = banded.join(
-        bsz.filter(F.col("bsz") <= max_bucket_size),
+        bsz.filter(F.col("bsz") <= 50),
         ["band_id", "band_key"],
     ).select("doc_id", "band_id", "band_key")
     banded = banded.transform(materialize, eager=False)  # self-join
@@ -920,13 +906,11 @@ def boilerplate_chunk_removal(
     docs: DataFrame,
     chunk_tokens: int = 3,
     df_divisor: int = 20,
-    df_floor: int = 3,
-    text: str = "text",
 ) -> DataFrame:
     """Corpus-frequency boilerplate removal (the line-dedup pass of
     C4/CCNet adapted to aligned token chunks — this corpus has no
     newline structure): a chunk is BOILERPLATE when it appears in at
-    least max(df_floor, ceil(n_docs / df_divisor)) DISTINCT documents,
+    least max(3, ceil(n_docs / df_divisor)) DISTINCT documents,
     and every occurrence is dropped — unlike :func:`chunk_dedup`'s
     first-wins rule, which keeps one copy. Navigation headers, license
     blocks and share-bars repeat across a large fraction of a crawl;
@@ -948,12 +932,12 @@ def boilerplate_chunk_removal(
         f"i -> array_join(slice(toks, i * {n} + 1, {n}), ' '))"
     )
     exploded = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select("doc_id", F.posexplode(chunks).alias("chunk_idx", "chunk"))
     )
     thresh = docs.agg(
         F.expr(
-            f"greatest(CAST({df_floor} AS BIGINT), "
+            "greatest(CAST(3 AS BIGINT), "
             f"(count(1) + {df_divisor - 1}) div {df_divisor})"
         ).alias("df_cut")
     )
@@ -989,8 +973,6 @@ def boilerplate_chunk_removal(
 
 def fastss_pairs(
     df: DataFrame,
-    id_col: str = "c_custkey",
-    name_col: str = "c_name",
     max_dist: int = 1,
     max_pairs: int | None = None,
 ) -> DataFrame:
@@ -1042,7 +1024,7 @@ def fastss_pairs(
       aggregate to ONE partition, which would serialize the entire
       pair stage onto one core (measured 3× at sf0.1).
 
-    ``id_col`` must be unique per row — the pair key is the id alone,
+    ``c_custkey`` must be unique per row — the pair key is the id alone,
     so a duplicated id would silently change semantics (whose name is
     compared?). Enforced at execution: any duplicate id raises inside
     the aggregation projection (a ``when``-guarded ``raise_error`` on
@@ -1087,9 +1069,9 @@ def fastss_pairs(
         )
         variant_expr = f"array_distinct(concat({del1}, {del2}))"
     names = (
-        df.groupBy(F.col(id_col).alias("rid"))
+        df.groupBy(F.col("c_custkey").alias("rid"))
         .agg(
-            F.min(name_col).alias("_name"),
+            F.min("c_name").alias("_name"),
             F.count(F.lit(1)).alias("_n"),
         )
         .select(
@@ -1165,7 +1147,6 @@ def fastss_pairs(
 def chunk_dedup(
     docs: DataFrame,
     chunk_tokens: int = 10,
-    text: str = "text",
 ) -> DataFrame:
     """Corpus-wide exact chunk-level deduplication (Lee et al. 2021's
     "Deduplicating Training Data Makes Language Models Better",
@@ -1194,7 +1175,7 @@ def chunk_dedup(
         f"i -> array_join(slice(toks, i * {n} + 1, {n}), ' '))"
     )
     exploded = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select("doc_id", F.posexplode(chunks).alias("chunk_idx", "chunk"))
     )
     first_wins = Window.partitionBy("chunk").orderBy("doc_id", "chunk_idx")

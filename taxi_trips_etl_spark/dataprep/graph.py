@@ -47,14 +47,15 @@ from taxi_trips_etl_spark.dataprep.materialize import (
 )
 
 TOTAL = 10**12
+BROADCAST_CAP = 4_000_000  # node or frontier rows a loop join may broadcast
+# Loop lengths the oracles unroll: pagerank iterations, bfs/sssp rounds.
+ITERS = 10
+ROUNDS = 10
 
 
 def pagerank_distributed(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 10,
-    rank_broadcast_cap: int = 4_000_000,
+    iters: int = ITERS,
 ) -> DataFrame:
     """→ (node, rank_e12) after ``iters`` integer power iterations.
 
@@ -67,13 +68,13 @@ def pagerank_distributed(
     depth), so 5 is the pinned sweet spot.
 
     The ranks side broadcasts only while ``n_nodes`` (already counted
-    once for the base term) is under ``rank_broadcast_cap`` — same
+    once for the base term) is under ``BROADCAST_CAP`` — same
     executor-memory argument as bfs_hops' frontier gate: a web-scale
     node set must not ride a broadcast. Past the cap each round
     becomes a shuffle join keyed on node/src.
     """
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .transform(materialize, eager=False)
@@ -87,7 +88,7 @@ def pagerank_distributed(
     n_nodes = nodes.count()
     if n_nodes == 0:
         return local_rows(edges.sparkSession, [], "node long, rank_e12 long")
-    small = n_nodes <= rank_broadcast_cap
+    small = n_nodes <= BROADCAST_CAP
     base = (15 * TOTAL) // (100 * n_nodes)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     out = e.join(deg, "src")  # (src, dst, d) — static across rounds
@@ -142,16 +143,14 @@ def pagerank_distributed(
 
 def pagerank_auto(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 10,
+    iters: int = ITERS,
     driver_edge_cap: int = 1_000_000,
 ) -> DataFrame:
     """Driver integer loop below ``driver_edge_cap`` distinct edges,
     :func:`pagerank_distributed` beyond it. Identical output by
     construction (same integer recurrence), pytest-pinned."""
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .transform(materialize, eager=True)
@@ -182,9 +181,7 @@ def pagerank_auto(
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over the undirected simple graph
     ``edges`` induces — the local-clustering signal (spam/link-farm
     detection in web-graph curation; GraphX `triangleCount` parity).
@@ -205,8 +202,8 @@ def triangle_count(
     """
     canon = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
+            F.least(F.col("src"), F.col("dst")).alias("lo"),
+            F.greatest(F.col("src"), F.col("dst")).alias("hi"),
         )
         .filter(F.col("lo") < F.col("hi"))
         .distinct()
@@ -233,9 +230,6 @@ def kcore(
     edges: DataFrame,
     k: int,
     rounds: int = 10,
-    src: str = "src",
-    dst: str = "dst",
-    keep_broadcast_cap: int = 4_000_000,
 ) -> DataFrame:
     """Bounded-round k-core: iteratively peel nodes of degree < k from
     the undirected simple graph, ``rounds`` times → (node, degree)
@@ -259,8 +253,8 @@ def kcore(
     """
     canon = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -291,7 +285,7 @@ def kcore(
             pin_loop_width(spark, default_width, n_prev)
             deg = live.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
             keep = deg.filter(F.col("d") >= k).select("a")
-            hint = n_prev // max(k, 1) <= keep_broadcast_cap
+            hint = n_prev // max(k, 1) <= BROADCAST_CAP
             keep_a = F.broadcast(keep) if hint else keep
             keep_b = keep.withColumnRenamed("a", "b")
             if hint:
@@ -314,11 +308,11 @@ def kcore(
 def bfs_hops(
     edges: DataFrame,
     source_node: int,
-    rounds: int = 10,
+    rounds: int = ROUNDS,
     src: str = "src",
     dst: str = "dst",
     broadcast_frontier: bool | None = None,
-    frontier_broadcast_cap: int = 4_000_000,
+    frontier_broadcast_cap: int = BROADCAST_CAP,
 ) -> DataFrame:
     """Bounded-round BFS from ``source_node`` over the directed edge
     list → (node, hops) for every node reachable within ``rounds``
@@ -415,12 +409,12 @@ def bfs_hops(
 def shortest_paths(
     edges: DataFrame,
     source_node: int,
-    rounds: int = 10,
+    rounds: int = ROUNDS,
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
     broadcast_frontier: bool | None = None,
-    frontier_broadcast_cap: int = 4_000_000,
+    frontier_broadcast_cap: int = BROADCAST_CAP,
 ) -> DataFrame:
     """Bounded-round Bellman-Ford from ``source_node`` over a directed
     weighted edge list (integer weights ≥ 0) → (node, dist) for nodes

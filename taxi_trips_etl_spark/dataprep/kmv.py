@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 #: hash domain: first 15 hex chars of md5 → uniform integer in [0, 2^60)
 _HASH_SPACE = float(2**60)
+KMV_K = 256  # sketch size, shared by the Spark builder and its oracle
 
 
 def _hash60(col: F.Column) -> F.Column:
@@ -46,7 +47,7 @@ def _hash60(col: F.Column) -> F.Column:
 
 
 def kmv_sketch(
-    df: DataFrame, set_col: str, value_col: str, k: int = 256
+    df: DataFrame, set_col: str, value_col: str, k: int = KMV_K
 ) -> DataFrame:
     """Per-set KMV sketch: the k smallest distinct 60-bit hashes.
 
@@ -77,18 +78,16 @@ def kmv_sketch(
     )
 
 
-def kmv_pairwise_overlap(
-    df: DataFrame, set_col: str, value_col: str, k: int = 256
-) -> DataFrame:
+def kmv_pairwise_overlap(df: DataFrame, set_col: str, value_col: str) -> DataFrame:
     """Distinct-overlap estimates for every unordered pair of sets.
 
     → (set_a, set_b, kk, rho, union_est, inter_est, jaccard_est),
-    one row per pair with set_a < set_b. ``kk`` = |K| (min(k, distinct
+    one row per pair with set_a < set_b. ``kk`` = |K| (min(KMV_K, distinct
     union hashes seen)), ``rho`` = hashes of K present in both sides.
-    When the combined sketches hold the entire union (n_comb ≤ k) the
+    When the combined sketches hold the entire union (n_comb ≤ KMV_K) the
     union estimate is the exact distinct union count.
 
-    The pair fan-out joins only sketch rows (n_sets·k), broadcast
+    The pair fan-out joins only sketch rows (n_sets·KMV_K), broadcast
     against the n_sets²/2 pair table — data-volume-independent, so the
     same plan serves 100 TB of events: cost lives entirely in the one
     sketch build.
@@ -101,7 +100,7 @@ def kmv_pairwise_overlap(
     # next to one saved corpus pass.
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
-    sk = materialize(kmv_sketch(df, set_col, value_col, k), eager=False)
+    sk = materialize(kmv_sketch(df, set_col, value_col, KMV_K), eager=False)
     sets = sk.select("set_key").distinct()
     pairs = (
         sets.select(F.col("set_key").alias("sa"))
@@ -122,7 +121,7 @@ def kmv_pairwise_overlap(
     kept = (
         comb.withColumn("rk", F.row_number().over(w_rank))
         .withColumn("n_comb", F.count(F.lit(1)).over(w_all))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= KMV_K)
     )
     agg = kept.groupBy("sa", "sb").agg(
         F.count(F.lit(1)).cast("long").alias("kk"),
@@ -131,10 +130,10 @@ def kmv_pairwise_overlap(
         F.max("n_comb").cast("long").alias("n_comb"),
     )
     union_est = F.when(
-        F.col("n_comb") <= k, F.col("n_comb").cast("double")
+        F.col("n_comb") <= KMV_K, F.col("n_comb").cast("double")
     ).otherwise(
         F.round(
-            F.lit(float(k - 1) * _HASH_SPACE) / F.col("hk").cast("double"),
+            F.lit(float(KMV_K - 1) * _HASH_SPACE) / F.col("hk").cast("double"),
             4,
         )
     )
@@ -153,13 +152,11 @@ def kmv_pairwise_overlap(
     )
 
 
-def kmv_oracle_sql(
-    table_sql: str, set_col: str, value_col: str, k: int = 256
-) -> str:
+def kmv_oracle_sql(table_sql: str, set_col: str, value_col: str) -> str:
     """DuckDB twin of :func:`kmv_pairwise_overlap` (identical hash
     derivation, ranking and estimate arithmetic), parameterized over a
     source relation."""
-    lit_num = repr(float(k - 1) * _HASH_SPACE)
+    lit_num = repr(float(KMV_K - 1) * _HASH_SPACE)
     return f"""
     WITH dist AS (
         SELECT DISTINCT {set_col} AS set_key,
@@ -172,7 +169,7 @@ def kmv_oracle_sql(
             SELECT set_key, h,
                    row_number() OVER (PARTITION BY set_key ORDER BY h) AS rk
             FROM dist)
-        WHERE rk <= {k}
+        WHERE rk <= {KMV_K}
     ),
     sets AS (SELECT DISTINCT set_key FROM sk),
     pairs AS (
@@ -192,7 +189,7 @@ def kmv_oracle_sql(
                    row_number() OVER (PARTITION BY sa, sb ORDER BY h) AS rk,
                    count(*) OVER (PARTITION BY sa, sb) AS n_comb
             FROM comb)
-        WHERE rk <= {k}
+        WHERE rk <= {KMV_K}
     ),
     agg AS (
         SELECT sa, sb, CAST(count(*) AS BIGINT) AS kk, max(h) AS hk,
@@ -202,7 +199,7 @@ def kmv_oracle_sql(
     ),
     est AS (
         SELECT sa, sb, kk, rho,
-               CASE WHEN n_comb <= {k} THEN CAST(n_comb AS DOUBLE)
+               CASE WHEN n_comb <= {KMV_K} THEN CAST(n_comb AS DOUBLE)
                     ELSE round({lit_num} / CAST(hk AS DOUBLE), 4)
                END AS u
         FROM agg

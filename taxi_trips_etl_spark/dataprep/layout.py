@@ -79,11 +79,10 @@ def sampled_range_partition_plan(
     df: DataFrame,
     key: str,
     n_partitions: int = 16,
-    sample_mod: int = 10,
     tiebreak: str | None = None,
 ) -> DataFrame:
     """The PRODUCTION version of :func:`range_partition_plan`: split
-    points come from a deterministic ~1/``sample_mod`` hash sample
+    points come from a deterministic ~1/10 hash sample
     (md5 of the key+tiebreak, engine-portable — no RNG, rerun-stable),
     then EVERY row is assigned against those pinned boundaries and the
     plan reports actual per-bucket counts — the planner and its skew
@@ -106,7 +105,7 @@ def sampled_range_partition_plan(
         F.expr(
             f"CAST(conv(substring(md5(concat(CAST({key} AS STRING),"
             f" ':', CAST({tb} AS STRING))), 1, 8), 16, 10) AS BIGINT)"
-            f" % {sample_mod} = 0"
+            " % 10 = 0"
         )
     )
     # r13: the sample rank rides the two-pass range-partition scheme

@@ -33,12 +33,13 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+LIMIT_PAIRS = 12  # candidate pairs scored, shared by the Spark builder and its oracle
+
 
 def rouge_l_pairs(
     docs: DataFrame,
     jaccard_threshold: float = 0.5,
-    limit_pairs: int = 12,
-    text: str = "text",
+    limit_pairs: int = LIMIT_PAIRS,
 ) -> DataFrame:
     """→ (doc_id_a, doc_id_b, len_a, len_b, lcs_tokens,
     rouge_l_f_milli) for the first ``limit_pairs`` (by id) candidate
@@ -56,7 +57,7 @@ def rouge_l_pairs(
     # (the two id projections and the final join) would each re-run
     # the candidate-join spine.
     pairs = materialize(
-        ngram_jaccard_pairs(docs, text=text, threshold=jaccard_threshold)
+        ngram_jaccard_pairs(docs, threshold=jaccard_threshold)
         .select("doc_id_a", "doc_id_b")
         .orderBy("doc_id_a", "doc_id_b")
         .limit(limit_pairs),
@@ -74,7 +75,7 @@ def rouge_l_pairs(
         .distinct()
     )
     toks_small = materialize(
-        tokens_table(docs, text).join(F.broadcast(ids), "doc_id", "left_semi"),
+        tokens_table(docs).join(F.broadcast(ids), "doc_id", "left_semi"),
         eager=False,
     )
     joined = pairs.join(
@@ -140,7 +141,6 @@ def rouge_l_oracle_sql(
     toks_sql: str,
     grams_sql: str,
     jaccard_threshold: float = 0.5,
-    limit_pairs: int = 12,
 ) -> str:
     """DuckDB twin: identical pair selection, then the LCS DP replayed
     by anti-diagonal recursion (see module docstring for the index
@@ -171,7 +171,7 @@ def rouge_l_oracle_sql(
                   >= greatest(a.n_grams, b.n_grams) * {jaccard_threshold}
           AND CAST(i.c AS DOUBLE) / (a.n_grams + b.n_grams - i.c)
               >= {jaccard_threshold}
-        ORDER BY 1, 2 LIMIT {limit_pairs}
+        ORDER BY 1, 2 LIMIT {LIMIT_PAIRS}
     ),
     pt AS MATERIALIZED (
         SELECT p.doc_id_a, p.doc_id_b, ta.t AS ta, tb.t AS tb,

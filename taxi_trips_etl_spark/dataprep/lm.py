@@ -36,12 +36,17 @@ from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.materialize import materialize
 
+# Shared by the Spark builders and their oracles: the doc-xent keep
+# threshold (nats) and the bigram table's head and successor counts.
+KEEP_BELOW = 3.5
+HEADS = 20
+NEXT_PER_HEAD = 3
+
 
 def kneser_ney_bigram_topk(
     docs: DataFrame,
-    heads: int = 20,
-    next_per_head: int = 3,
-    text: str = "text",
+    heads: int = HEADS,
+    next_per_head: int = NEXT_PER_HEAD,
 ) -> DataFrame:
     """→ (head, next_word, pair_n, p_kn) for the ``heads`` most frequent
     head words: the ``next_per_head`` successors with the highest
@@ -49,7 +54,7 @@ def kneser_ney_bigram_topk(
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
     bg = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .filter(F.size("toks") >= 2)
         .select(
             F.explode(
@@ -116,8 +121,6 @@ def kneser_ney_bigram_topk(
 
 def kneser_ney_doc_xent(
     docs: DataFrame,
-    keep_below: float = 3.5,
-    text: str = "text",
 ) -> DataFrame:
     """Per-document bigram cross-entropy under the corpus-fit KN model
     — the LM-perplexity quality gate (CCNet, Wenzek et al. 2020) with
@@ -127,7 +130,7 @@ def kneser_ney_doc_xent(
 
     → (doc_id, n_bigrams, xent_nats, keep): xent is the mean negative
     natural-log KN probability over the doc's bigram INSTANCES;
-    keep = xent_nats < keep_below.
+    keep = xent_nats < KEEP_BELOW.
 
     Replay ledger: the LM trains on the same corpus, so every doc
     bigram is observed and scores by the exact-integer (num, den)
@@ -144,7 +147,7 @@ def kneser_ney_doc_xent(
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
     pairs = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .filter(F.size("toks") >= 2)
         .select(
             "doc_id",
@@ -212,14 +215,12 @@ def kneser_ney_doc_xent(
             ).alias("xent_nats"),
         )
         .withColumn(
-            "keep", (F.col("xent_nats") < F.lit(keep_below)).cast("int")
+            "keep", (F.col("xent_nats") < F.lit(KEEP_BELOW)).cast("int")
         )
     )
 
 
-def kneser_ney_doc_xent_oracle_sql(
-    toks_sql: str, keep_below: float = 3.5
-) -> str:
+def kneser_ney_doc_xent_oracle_sql(toks_sql: str) -> str:
     """DuckDB twin of :func:`kneser_ney_doc_xent` — identical integer
     model, micro-quantized per-bigram logs, integer sum, one final
     division."""
@@ -269,15 +270,13 @@ def kneser_ney_doc_xent_oracle_sql(
            round(-CAST(s AS DOUBLE)
                  / CAST(n_bigrams * 1000000 AS DOUBLE), 6) AS xent_nats,
            CAST(CASE WHEN round(-CAST(s AS DOUBLE)
-                 / CAST(n_bigrams * 1000000 AS DOUBLE), 6) < {keep_below}
+                 / CAST(n_bigrams * 1000000 AS DOUBLE), 6) < {KEEP_BELOW}
                 THEN 1 ELSE 0 END AS INT) AS keep
     FROM agg
     """
 
 
-def kneser_ney_oracle_sql(
-    toks_sql: str, heads: int = 20, next_per_head: int = 3
-) -> str:
+def kneser_ney_oracle_sql(toks_sql: str) -> str:
     """DuckDB twin of :func:`kneser_ney_bigram_topk`: identical counts,
     identical integer numerator/denominator, one division.
     ``toks_sql`` must evaluate to a token LIST per documents row."""
@@ -309,7 +308,7 @@ def kneser_ney_oracle_sql(
         SELECT w1 FROM (
             SELECT w1, row_number() OVER (ORDER BY c1 DESC, w1) AS rk
             FROM (SELECT DISTINCT w1, c1 FROM bh))
-        WHERE rk <= {heads}
+        WHERE rk <= {HEADS}
     ),
     scored AS (
         SELECT bh.w1, bh.w2, bh.c12,
@@ -326,5 +325,5 @@ def kneser_ney_oracle_sql(
     FROM (SELECT *, row_number() OVER (PARTITION BY w1
                         ORDER BY num DESC, w2) AS rk
           FROM scored)
-    WHERE rk <= {next_per_head}
+    WHERE rk <= {NEXT_PER_HEAD}
     """

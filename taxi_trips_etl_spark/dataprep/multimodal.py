@@ -2,7 +2,7 @@
 
 Design (BASELINE.json north-star): media travels as an opaque ``binary``
 payload column next to typed metadata; decode / feature-extraction /
-resize / frame-sampling run as Arrow-batched ``mapInPandas`` stages so
+resize run as Arrow-batched ``mapInPandas`` stages so
 each Python worker sees columnar batches, never single rows.
 
 Codec story (round 10, VERDICT r9 #3): uncompressed public formats —
@@ -55,16 +55,16 @@ def _sniff_magic(payload: bytes) -> str:
     return "unknown"
 
 
-def attach_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def attach_payload(df: DataFrame) -> DataFrame:
     """Build a media-shaped table from any source: payload = utf-8 bytes.
 
     Stands in for reading real image/audio blobs; keeps the binary
     column path (Arrow BinaryType) fully exercised.
     """
     return df.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.lit("text/plain").alias("media_type"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
 
 
@@ -309,31 +309,6 @@ def decode_image(media: DataFrame, decoder: Callable[[bytes], dict] | None = Non
             yield out
 
     return media.mapInPandas(kernel, "media_id long, width long, height long, channels long")
-
-
-def sample_frames(media: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
-    """Frame-sampling stub: emits one row per sampled "frame" offset.
-
-    Real video frame extraction is ffmpeg-bound; the Spark shape — a
-    mapInPandas that EXPANDS rows (one media row → many frame rows) — is
-    the part worth testing, and is real here.
-    """
-    if every_n_bytes < 1:
-        raise ValueError(f"sample_frames stride must be >= 1, got {every_n_bytes}")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                n = len(payload)
-                for off in range(0, n, every_n_bytes):
-                    chunk = bytes(payload[off : off + every_n_bytes])
-                    rows.append(
-                        (int(mid), int(off), hashlib.md5(chunk).hexdigest())
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_offset", "frame_hash"])
-
-    return media.mapInPandas(kernel, "media_id long, frame_offset long, frame_hash string")
 
 
 def extract_features(media: DataFrame, bins: int = 16) -> DataFrame:

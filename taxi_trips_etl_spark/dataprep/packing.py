@@ -35,13 +35,11 @@ def pack_sequences(
     docs: DataFrame,
     seq_len: int = 512,
     bucket_span: int = 4096,
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """→ (doc_id, n_tokens, start_offset, first_seq, last_seq, n_seqs).
 
     ``start_offset`` is the doc's position in the concatenated token
-    stream (docs ordered by ``id_col``); ``first_seq``/``last_seq`` are
+    stream (docs ordered by ``doc_id``); ``first_seq``/``last_seq`` are
     the fixed-length training sequences it spans at ``seq_len``.
     """
     if seq_len < 1 or bucket_span < 1:
@@ -49,9 +47,9 @@ def pack_sequences(
         # bucket/sequence columns instead of erroring.
         raise ValueError(f"pack_sequences needs seq_len/bucket_span >= 1, got {seq_len}/{bucket_span}")
     toks = docs.select(
-        F.col(id_col),
-        F.size(tokens_col(text)).cast("long").alias("n_tokens"),
-        F.expr(f"{id_col} div {bucket_span}").alias("_bucket"),
+        F.col("doc_id"),
+        F.size(tokens_col()).cast("long").alias("n_tokens"),
+        F.expr(f"doc_id div {bucket_span}").alias("_bucket"),
     )
 
     # Pass 1: per-bucket token totals (tiny), prefix-summed driver-side.
@@ -72,7 +70,7 @@ def pack_sequences(
     # Pass 2: partition-local cumsum + broadcast bucket offsets.
     w = (
         Window.partitionBy("_bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     start = F.col("_bucket_offset") + F.coalesce(
@@ -84,7 +82,7 @@ def pack_sequences(
         toks.join(F.broadcast(off_df), "_bucket")
         .withColumn("start_offset", start)
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             "start_offset",
             first_seq.cast("long").alias("first_seq"),

@@ -41,6 +41,12 @@ from pyspark.sql import functions as F
 
 Q_COV = 10**10  # covariance / moment quantization (1e-10 units)
 Q_VEC = 10**6   # unit-vector state quantization (1e-6 units)
+BLOCK_ROWS = 256  # rows per int64 moment block in the Arrow kernel
+# Shared by the Spark builders and their oracles: the embedding width the
+# oracle SQL unrolls, the power-iteration count and the PCA rank.
+DIM = 64
+ITERATIONS = 12
+N_COMPONENTS = 4
 
 
 def _round_half_away(v: float) -> int:
@@ -51,7 +57,7 @@ def _round_half_away(v: float) -> int:
     return int(math.floor(v + 0.5)) if v >= 0 else int(math.ceil(v - 0.5))
 
 
-def _moment_partials(dim: int, block_rows: int = 256):
+def _moment_partials(dim: int):
     import pandas as pd
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -83,8 +89,8 @@ def _moment_partials(dim: int, block_rows: int = 256):
             # docstring claims for partition order).
             m = q(x).sum(axis=0)
             g = np.zeros((dim, dim), dtype="int64")
-            for lo in range(0, len(x), block_rows):
-                blk = x[lo : lo + block_rows]
+            for lo in range(0, len(x), BLOCK_ROWS):
+                blk = x[lo : lo + BLOCK_ROWS]
                 g += q(blk[:, :, None] * blk[:, None, :]).sum(axis=0)
             yield pd.DataFrame(
                 {
@@ -149,14 +155,12 @@ def _moment_partials_df(vecs: DataFrame, dim: int) -> DataFrame:
     )
 
 
-def _collect_cov_int(
-    embeddings: DataFrame, id_col: str, vec_col: str
-) -> tuple[DataFrame, int, list[list[int]]]:
+def _collect_cov_int(embeddings: DataFrame) -> tuple[DataFrame, int, list[list[int]]]:
     """One distributed moment pass → (vecs frame, dim, integer
     covariance matrix). Shared by pc1 and the multi-component PCA."""
     vecs = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        F.col("vec_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     )
     dim = vecs.select(F.size("v").alias("d")).first()["d"]
     partials = _moment_partials_df(vecs, dim).collect()
@@ -210,18 +214,16 @@ def _rayleigh_deflate(
 
 def power_iteration_pc1(
     embeddings: DataFrame,
-    iterations: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    iterations: int = ITERATIONS,
 ) -> DataFrame:
     """→ (vec_id, pc1): projection onto the power-iteration top
     component. See module docstring for the exact-replay ledger."""
-    vecs, dim, c_int = _collect_cov_int(embeddings, id_col, vec_col)
+    vecs, dim, c_int = _collect_cov_int(embeddings)
     q = _power_iterate(c_int, iterations)
     comp = [x / Q_VEC for x in q]
     arr = "array(" + ",".join(f"{x!r}D" for x in comp) + ")"
     return vecs.select(
-        id_col,
+        "vec_id",
         F.round(
             F.expr(
                 f"aggregate(zip_with(v, {arr}, (a, b) -> a * b),"
@@ -234,10 +236,8 @@ def power_iteration_pc1(
 
 def power_iteration_pca(
     embeddings: DataFrame,
-    n_components: int = 4,
-    iterations: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    n_components: int = N_COMPONENTS,
+    iterations: int = ITERATIONS,
 ) -> DataFrame:
     """→ (vec_id, component_idx, value): projection onto the top
     ``n_components`` principal directions, each found by the
@@ -246,7 +246,7 @@ def power_iteration_pca(
     Convergence caveat per component as in the module docstring;
     replay fidelity does NOT depend on convergence (both engines walk
     the identical trajectory)."""
-    vecs, dim, c_int = _collect_cov_int(embeddings, id_col, vec_col)
+    vecs, dim, c_int = _collect_cov_int(embeddings)
     projs = []
     c = c_int
     for _ in range(n_components):
@@ -258,10 +258,10 @@ def power_iteration_pca(
         )
         c = _rayleigh_deflate(c, q)
     return vecs.select(
-        id_col,
+        "vec_id",
         F.posexplode(F.expr("array(" + ",".join(projs) + ")")),
     ).select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("vec_id").cast("long").alias("vec_id"),
         F.col("pos").cast("long").alias("component_idx"),
         F.col("col").alias("value"),
     )
@@ -346,29 +346,27 @@ def _deflate_ctes(cmat: str, tag: str, nxt: str, dim: int) -> str:
     )"""
 
 
-def power_iteration_pca_oracle_sql(
-    dim: int = 64, n_components: int = 4, iterations: int = 12
-) -> str:
+def power_iteration_pca_oracle_sql() -> str:
     """DuckDB twin of :func:`power_iteration_pca`: shared integer
     moments/covariance, then per component a recursive iteration +
     sign fix + (for all but the last) Rayleigh deflation — each step
     the same exact-integer / fixed-IEEE ledger as the single-
     component oracle."""
     stages = []
-    for c in range(1, n_components + 1):
-        stages.append(_iteration_ctes(f"cmat{c}", str(c), dim, iterations))
-        if c < n_components:
+    for c in range(1, N_COMPONENTS + 1):
+        stages.append(_iteration_ctes(f"cmat{c}", str(c), DIM, ITERATIONS))
+        if c < N_COMPONENTS:
             stages.append(
-                _deflate_ctes(f"cmat{c}", str(c), f"cmat{c + 1}", dim)
+                _deflate_ctes(f"cmat{c}", str(c), f"cmat{c + 1}", DIM)
             )
     comps = "\n        UNION ALL ".join(
         f"SELECT {c - 1} AS component_idx, q FROM signed{c}"
-        for c in range(1, n_components + 1)
+        for c in range(1, N_COMPONENTS + 1)
     )
     return f"""
     WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                FROM embeddings),
-    idx AS (SELECT unnest(generate_series(1, {dim})) AS i),
+    idx AS (SELECT unnest(generate_series(1, {DIM})) AS i),
     moments AS (
         SELECT i.i, j.i AS j,
                sum(CAST(round(emb[i.i] * emb[j.i] * {Q_COV}) AS BIGINT))
@@ -403,23 +401,21 @@ def power_iteration_pca_oracle_sql(
     )
     SELECT vec_id,
            CAST(component_idx AS BIGINT) AS component_idx,
-           round(list_sum(list_transform(generate_series(1, {dim}),
+           round(list_sum(list_transform(generate_series(1, {DIM}),
                  i -> emb[i] * (CAST(q[i] AS DOUBLE) / {Q_VEC}))), 6)
                AS value
     FROM e CROSS JOIN comps
     """
 
 
-def power_iteration_oracle_sql(
-    dim: int = 64, iterations: int = 12
-) -> str:
+def power_iteration_oracle_sql() -> str:
     """DuckDB twin: identical integer moments, covariance assembly,
     integer iteration, sign fix and projection (see module docstring)."""
-    q0 = _round_half_away(1.0 / math.sqrt(dim) * Q_VEC)
+    q0 = _round_half_away(1.0 / math.sqrt(DIM) * Q_VEC)
     return f"""
     WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                FROM embeddings),
-    idx AS (SELECT unnest(generate_series(1, {dim})) AS i),
+    idx AS (SELECT unnest(generate_series(1, {DIM})) AS i),
     moments AS (
         SELECT i.i, j.i AS j,
                sum(CAST(round(emb[i.i] * emb[j.i] * {Q_COV}) AS BIGINT))
@@ -450,7 +446,7 @@ def power_iteration_oracle_sql(
     ),
     it AS (
         SELECT 0 AS t,
-               list_transform(generate_series(1, {dim}),
+               list_transform(generate_series(1, {DIM}),
                               x -> CAST({q0} AS BIGINT)) AS q
         UNION ALL
         SELECT t + 1,
@@ -464,12 +460,12 @@ def power_iteration_oracle_sql(
                        AS nrm
             FROM (
                 SELECT t,
-                       list_transform(generate_series(1, {dim}), i ->
+                       list_transform(generate_series(1, {DIM}), i ->
                            list_sum(list_transform(
-                               generate_series(1, {dim}),
+                               generate_series(1, {DIM}),
                                j -> C[i][j] * q[j]))) AS w
                 FROM it, cmat
-                WHERE t < {iterations}
+                WHERE t < {ITERATIONS}
             )
         )
         WHERE nrm > 0
@@ -484,7 +480,7 @@ def power_iteration_oracle_sql(
         FROM final_q
     )
     SELECT vec_id,
-           round(list_sum(list_transform(generate_series(1, {dim}),
+           round(list_sum(list_transform(generate_series(1, {DIM}),
                  i -> emb[i] * (CAST(q[i] AS DOUBLE) / {Q_VEC}))), 6)
                AS pc1
     FROM e CROSS JOIN signed

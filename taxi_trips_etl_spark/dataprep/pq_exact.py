@@ -19,7 +19,7 @@ Ledger of exactness (reference semantics: Jégou et al. 2011, ADC):
    Σ(xq−cq)² (ds·(2e7)² ≈ 3e15 ≪ 2^63), ties to the lowest
    cluster id — integer comparisons cannot disagree across engines.
 4. Centroid update: cq' = round(sum / count) where sum is an exact
-   int64 (≤ sample_n·2e7 ≈ 1e10 ≪ 2^53, so the double division has
+   int64 (≤ SAMPLE_N·2e7 ≈ 1e10 ≪ 2^53, so the double division has
    identical operands on both engines); empty clusters keep their
    previous centroid.
 5. Encoding and ADC: the same integer argmin against the final
@@ -28,7 +28,7 @@ Ledger of exactness (reference semantics: Jégou et al. 2011, ADC):
    L2 (no float leaves the plan at all).
 
 Scale shape (100 TB): training reads a bounded deterministic sample
-(driver-side, sample_n × d ints); encoding is ONE narrow projection
+(driver-side, SAMPLE_N × d ints); encoding is ONE narrow projection
 per corpus row against literal codebooks — no join, no shuffle, and
 the code table is ~m bytes/row, the 100–400× scan-size reduction
 that makes PQ the compressed-scan ANN format. The ADC pass scans
@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 Q_VEC = 10**6  # coordinate quantization (1e-6 units)
+SAMPLE_N = 512  # codebook training rows, shared by the Spark builder and its oracle
 
 
 def _round_half_away(v: float) -> int:
@@ -92,30 +93,27 @@ def pq_topk_replayable(
     ksub: int = 16,
     k: int = 3,
     query_ids_below: int = 5,
-    sample_n: int = 512,
     train_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """→ (query_id, neighbor_id, approx_sq_dist_q12, knn_rank): PQ/ADC
     top-k with the integer-exact training above. approx_sq_dist_q12 is
     the ADC squared L2 distance in exact 1e-12 units (BIGINT)."""
     vecs = embeddings.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.expr(
-            f"transform({vec_col}, "
+            "transform(embedding, "
             f"x -> CAST(round(CAST(x AS DOUBLE) * {Q_VEC}) AS BIGINT))"
         ).alias("vq"),
     )
     sample_rows = (
         embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
+            F.col("vec_id"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
                 "v"
             ),
         )
-        .orderBy(id_col)
-        .limit(sample_n)
+        .orderBy("vec_id")
+        .limit(SAMPLE_N)
         .collect()
     )
     sample_q = [_quantize(list(r["v"])) for r in sample_rows]
@@ -142,8 +140,8 @@ def pq_topk_replayable(
         ).alias(f"d{s}")
         for s in range(m)
     ]
-    codes = vecs.select(id_col, *dist_cols).select(
-        id_col,
+    codes = vecs.select("vec_id", *dist_cols).select(
+        "vec_id",
         *[
             F.expr(
                 f"CAST(array_position(d{s}, array_min(d{s})) - 1 AS INT)"
@@ -153,14 +151,14 @@ def pq_topk_replayable(
     )
 
     queries = [
-        (r[id_col], _quantize(list(r["v"])))
+        (r["vec_id"], _quantize(list(r["v"])))
         for r in embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
+            F.col("vec_id"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
                 "v"
             ),
         )
-        .filter(F.col(id_col) < query_ids_below)
+        .filter(F.col("vec_id") < query_ids_below)
         .collect()
     ]
 
@@ -185,7 +183,7 @@ def pq_topk_replayable(
 
     scored = (
         codes.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
+            F.col("vec_id").cast("long").alias("neighbor_id"),
             F.explode(
                 F.expr(
                     "array("
@@ -218,7 +216,6 @@ def pq_oracle_sql(
     ksub: int = 16,
     k: int = 3,
     query_ids_below: int = 5,
-    sample_n: int = 512,
     train_iters: int = 3,
 ) -> str:
     """DuckDB twin of :func:`pq_topk_replayable`: identical integer
@@ -278,7 +275,7 @@ def pq_oracle_sql(
         FROM e CROSS JOIN
              (SELECT unnest(generate_series(0, {m - 1})) AS s) s
     ),
-    samp_ids AS (SELECT vec_id FROM e ORDER BY vec_id LIMIT {sample_n}),
+    samp_ids AS (SELECT vec_id FROM e ORDER BY vec_id LIMIT {SAMPLE_N}),
     subs_s AS (SELECT sb.* FROM subs sb
                JOIN samp_ids USING (vec_id)),
     c0 AS (

@@ -96,7 +96,6 @@ def hll_distinct_rollup(
     key_cols: list[str],
     value_col: str,
     partial_col: str,
-    lg_k: int = 12,
 ) -> DataFrame:
     """Mergeable distinct-count rollup via DataSketches HLL
     (hll_sketch_agg → hll_union_agg → hll_sketch_estimate).
@@ -104,16 +103,16 @@ def hll_distinct_rollup(
     THE cardinality pattern at 100 TB: exact countDistinct re-shuffles
     raw values for every regrouping, but sketches are built once per
     fine partition (here ``partial_col``, e.g. a day), persisted as
-    ~2^lg_k-byte binaries, and any coarser rollup is a cheap union of
+    ~2^12-byte binaries (lg_k = 12), and any coarser rollup is a cheap union of
     sketches — no second pass over the data. Standard error
-    ~1.04/sqrt(2^lg_k) ≈ 1.6% at lg_k=12; the error-bound pytest pins
+    ~1.04/sqrt(2^12) ≈ 1.6%; the error-bound pytest pins
     it against exact countDistinct.
 
     Returns per ``key_cols`` group: the merged estimate and how many
     partial sketches were unioned.
     """
     partials = df.groupBy(*key_cols, partial_col).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sketch")
+        F.hll_sketch_agg(value_col, F.lit(12)).alias("sketch")
     )
     return (
         partials.groupBy(*key_cols)
@@ -282,12 +281,13 @@ def hll_portable_oracle_sql(
 
 # --- mergeable histogram quantiles ---------------------------------------
 
+QUANTILES = (0.25, 0.5, 0.75, 0.9, 0.99)
+N_BINS = 128
+
 
 def histogram_quantiles(
     df: DataFrame,
     value_col: str,
-    quantiles: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9, 0.99),
-    n_bins: int = 128,
 ) -> DataFrame:
     """Approximate quantiles from a fixed equi-width histogram — the
     MERGEABLE alternative to an exact sort: bin counts are persistable
@@ -296,7 +296,7 @@ def histogram_quantiles(
     histogram without re-reading data. Exact percentiles
     (percentiles_exact) re-shuffle raw values per question; this is
     two narrow aggregates total, error bounded by bin width
-    (range/n_bins).
+    (range/N_BINS).
 
     Estimator: linear interpolation inside the first bin whose
     cumulative count reaches q·n (the textbook grouped-data quantile).
@@ -321,11 +321,11 @@ def histogram_quantiles(
         .crossJoin(F.broadcast(bounds))
         .select(
             F.least(
-                F.lit(n_bins - 1),
+                F.lit(N_BINS - 1),
                 F.floor(
                     (F.col("x") - F.col("lo"))
                     / (F.col("hi") - F.col("lo"))
-                    * n_bins
+                    * N_BINS
                 ),
             )
             .cast("long")
@@ -342,7 +342,7 @@ def histogram_quantiles(
         "cum_prev", F.col("cum") - F.col("c")
     )
     qs = F.explode(
-        F.array(*[F.lit(float(q)) for q in quantiles])
+        F.array(*[F.lit(float(q)) for q in QUANTILES])
     ).alias("quantile")
     targets = cum.crossJoin(F.broadcast(bounds.select("lo", "hi", "n"))).select(
         "bin", "c", "cum", "cum_prev", "lo", "hi", "n", qs
@@ -364,7 +364,7 @@ def histogram_quantiles(
                         / F.col("c")
                     )
                 )
-                * ((F.col("hi") - F.col("lo")) / F.lit(float(n_bins))),
+                * ((F.col("hi") - F.col("lo")) / F.lit(float(N_BINS))),
                 4,
             ).alias("estimate"),
         )

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dim_minmax(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def dim_minmax(emb: DataFrame) -> DataFrame:
     """→ (dim_idx, mn, mx): per-dimension range over the whole corpus.
 
     posexplode + groupBy(dim) — map-side partial aggregation collapses
@@ -35,7 +35,7 @@ def dim_minmax(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """
     return (
         emb.select(
-            F.posexplode(vec_col).alias("dim_idx", "_v")
+            F.posexplode("embedding").alias("dim_idx", "_v")
         )
         .select("dim_idx", F.col("_v").cast("double").alias("v"))
         .groupBy("dim_idx")
@@ -45,8 +45,6 @@ def dim_minmax(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 def quantize_int8(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """→ (vec_id, dim_idx, code) with code ∈ [-128, 127].
 
@@ -57,11 +55,11 @@ def quantize_int8(
     corpus side — the plan is scan → posexplode → broadcast-hash-join
     → project, all whole-stage codegen.
     """
-    stats = F.broadcast(dim_minmax(emb, vec_col))
+    stats = F.broadcast(dim_minmax(emb))
     exploded = emb.select(
-        F.col(id_col),
-        F.posexplode(vec_col).alias("dim_idx", "_v"),
-    ).select(id_col, "dim_idx", F.col("_v").cast("double").alias("v"))
+        F.col("vec_id"),
+        F.posexplode("embedding").alias("dim_idx", "_v"),
+    ).select("vec_id", "dim_idx", F.col("_v").cast("double").alias("v"))
     scale = (F.col("mx") - F.col("mn")) / F.lit(255.0)
     code = (
         F.when(scale == 0, F.lit(0).cast("long"))
@@ -77,7 +75,7 @@ def quantize_int8(
         )
     )
     return exploded.join(stats, "dim_idx").select(
-        id_col,
+        "vec_id",
         F.col("dim_idx").cast("long").alias("dim_idx"),
         code.alias("code"),
     )

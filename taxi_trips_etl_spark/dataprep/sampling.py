@@ -22,13 +22,11 @@ def _key_bucket(key: Column, salt: str) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
 
 
-def deterministic_sample(
-    df: DataFrame, rate: float, key: str, salt: str = "sample"
-) -> DataFrame:
+def deterministic_sample(df: DataFrame, rate: float, key: str) -> DataFrame:
     """Keep ~rate of rows, chosen by key hash — idempotent & rerun-stable."""
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"sample rate must be in [0, 1], got {rate}")
-    return df.filter(_key_bucket(F.col(key), salt) < int(rate * _HASH_SPACE))
+    return df.filter(_key_bucket(F.col(key), "sample") < int(rate * _HASH_SPACE))
 
 
 def stratified_sample(
@@ -37,7 +35,6 @@ def stratified_sample(
     key: str,
     strata_col: str,
     default_rate: float = 0.0,
-    salt: str = "strata",
 ) -> DataFrame:
     """Per-stratum hash sampling (deterministic ``sampleBy``): each
     stratum keeps its own rate — rebalancing skewed classes (languages,
@@ -53,7 +50,7 @@ def stratified_sample(
         raise ValueError(
             f"default_rate must be in [0, 1], got {default_rate}"
         )
-    bucket = _key_bucket(F.col(key), salt)
+    bucket = _key_bucket(F.col(key), "strata")
     threshold = F.lit(int(default_rate * _HASH_SPACE))
     for stratum, rate in rates.items():
         threshold = (
@@ -63,9 +60,7 @@ def stratified_sample(
     return df.filter(bucket < threshold)
 
 
-def split_expr(
-    key: Column, test_rate: float = 0.2, salt: str = "split"
-) -> Column:
+def split_expr(key: Column, test_rate: float = 0.2) -> Column:
     """The train/test label as a pure expression of ``key`` — split
     membership is content-hash only (see :func:`train_test_split`), so
     consumers that already hold the key column (pair tables, audit
@@ -74,51 +69,46 @@ def split_expr(
     two corpus-sized join passes this way)."""
     if not 0.0 <= test_rate <= 1.0:
         raise ValueError(f"test_rate must be in [0, 1], got {test_rate}")
-    bucket = _key_bucket(key, salt)
+    bucket = _key_bucket(key, "split")
     return F.when(
         bucket < int(test_rate * _HASH_SPACE), "test"
     ).otherwise("train")
 
 
-def train_test_split(
-    df: DataFrame, key: str, test_rate: float = 0.2, salt: str = "split"
-) -> DataFrame:
+def train_test_split(df: DataFrame, key: str, test_rate: float = 0.2) -> DataFrame:
     """Adds a ``split`` column ('train' | 'test') keyed by content hash.
 
     Same key → same split forever: new data appends without reshuffling
     membership, and dedup-then-split pipelines can't leak a near-dup
     pair across the boundary if they split on the canonical doc key.
     """
-    return df.withColumn("split", split_expr(F.col(key), test_rate, salt))
+    return df.withColumn("split", split_expr(F.col(key), test_rate))
 
 
 def domain_mixture_sample(
     df: DataFrame,
     key: str,
     domain_col: str,
-    alpha: float = 0.5,
-    target_frac: float = 0.5,
-    salt: str = "mix",
 ) -> DataFrame:
     """Temperature-weighted domain rebalancing (the multilingual /
     multi-source mixing rule: sample domain d with probability
-    ∝ n_d^alpha, alpha<1 upweights the tail).
+    ∝ n_d^0.5, which upweights the tail), targeting half the rows.
 
     Per-domain keep rate = min(1, target_total · w_d / n_d) where
-    w_d = n_d^alpha / Σ n_d^alpha; membership is content-hash based
+    w_d = √n_d / Σ √n_d; membership is content-hash based
     (see module docstring) so the mixture is rerun- and
     partition-stable.
 
     Shape: one partial-agg shuffle for domain counts (result: #domains
     rows), a broadcast of the rates back onto the fact table, and a
-    hash filter — no RNG, no global sort, no second scan. alpha=0.5
-    uses sqrt (IEEE correctly-rounded, so the oracle reproduces the
+    hash filter — no RNG, no global sort, no second scan. The exponent
+    0.5 is sqrt (IEEE correctly-rounded, so the oracle reproduces the
     rates bit-for-bit; libm pow is not so guaranteed).
     """
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
     n = F.col("n_domain")
-    weight = F.sqrt(n) if alpha == 0.5 else F.pow(n, F.lit(alpha))
+    weight = F.sqrt(n)
     # counts (#domains rows) feeds the totals aggregate AND the rates
     # projection — without a checkpoint the corpus scan + groupBy
     # re-ran per consumer (r13: docs scans 3 → 2, the count-then-filter
@@ -134,7 +124,7 @@ def domain_mixture_sample(
     )
     rate = F.least(
         F.lit(1.0),
-        F.lit(target_frac) * F.col("n_total") * weight / F.col("w_total") / n,
+        F.lit(0.5) * F.col("n_total") * weight / F.col("w_total") / n,
     )
     rates = counts.crossJoin(F.broadcast(totals)).select(
         domain_col,
@@ -142,14 +132,12 @@ def domain_mixture_sample(
     )
     return (
         df.join(F.broadcast(rates), domain_col)
-        .filter(_key_bucket(F.col(key), salt) < F.col("_threshold"))
+        .filter(_key_bucket(F.col(key), "mix") < F.col("_threshold"))
         .drop("_threshold")
     )
 
 
-def kfold_assign(
-    df: DataFrame, key: str, k: int = 5, salt: str = "fold"
-) -> DataFrame:
+def kfold_assign(df: DataFrame, key: str, k: int = 5) -> DataFrame:
     """Adds a ``fold`` column in [0, k): hash-keyed cross-validation
     folds. Same key → same fold forever (append-stable, like
     :func:`train_test_split`); fold i's holdout is ``fold == i`` and
@@ -158,7 +146,7 @@ def kfold_assign(
         # Spark pmod(x, 0) is NULL: k = 0 silently nulls every fold.
         raise ValueError(f"kfold_assign needs k >= 1, got {k}")
     return df.withColumn(
-        "fold", (_key_bucket(F.col(key), salt) % k).cast("long")
+        "fold", (_key_bucket(F.col(key), "fold") % k).cast("long")
     )
 
 
@@ -167,7 +155,6 @@ def weighted_priority_sample(
     key: str,
     weight_cents: Column,
     k: int,
-    salt: str = "wps",
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement (priority
     sampling, Duffield-Lund-Thorup): each row draws a content-hash
@@ -188,7 +175,7 @@ def weighted_priority_sample(
     per-partition heaps of k rows, no full sort, no shuffle of the
     input."""
     w = weight_cents.cast("long")
-    u = _key_bucket(F.col(key), salt)
+    u = _key_bucket(F.col(key), "wps")
     return (
         df.select(F.col(key), w.alias("weight_cents"))
         .filter(F.col("weight_cents") > 0)
@@ -202,8 +189,7 @@ def weighted_priority_sample(
 
 
 def temperature_mixture_weights(
-    docs, source_col: str = "source", text_col: str = "text",
-    alpha: float = 0.7, budget_docs: int = 10000,
+    docs, alpha: float = 0.7, budget_docs: int = 10000,
 ):
     """Temperature-based source mixing (the multilingual-LM standard,
     e.g. mBERT/XLM-R exponentiated sampling): sampling weight per
@@ -220,10 +206,10 @@ def temperature_mixture_weights(
     """
     from pyspark.sql import functions as F
 
-    per = docs.groupBy(F.col(source_col).alias("source")).agg(
+    per = docs.groupBy(F.col("source").alias("source")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(
-            F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+            F.size(F.split(F.trim(F.col("text")), r"\s+"))
         ).cast("long").alias("n_tokens"),
     )
     # pow() results are quantized to integer micro-units BEFORE the

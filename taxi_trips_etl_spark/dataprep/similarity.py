@@ -33,6 +33,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# truncation_recall's audit, shared by the Spark builder and its oracle:
+# prefix widths, recall@k and the probe-query id bound.
+TRUNC_DIMS = (16, 32)
+TRUNC_K = 10
+TRUNC_QUERY_IDS_BELOW = 20
+# embedding_near_dup_pairs' banded sign-LSH: bands × planes per band.
+NEAR_DUP_BANDS = 6
+PLANES_PER_BAND = 10
+
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -56,8 +65,6 @@ def cosine_topk_bruteforce(
     embeddings: DataFrame,
     query_ids_below: int = 10,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k: queries = rows with id < query_ids_below.
 
@@ -66,11 +73,11 @@ def cosine_topk_bruteforce(
     """
     if k < 1:
         raise ValueError(f"cosine_topk_bruteforce needs k >= 1, got {k}")
-    q = embeddings.filter(F.col(id_col) < query_ids_below).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    q = embeddings.filter(F.col("vec_id") < query_ids_below).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     scored = (
         F.broadcast(q)
@@ -98,20 +105,16 @@ def cosine_topk_bruteforce(
 
 def ivf_topk(
     embeddings: DataFrame,
-    n_centroids: int = 8,
     nprobe: int = 2,
-    k: int = 3,
-    query_ids_below: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: coarse-quantize the corpus into
-    ``n_centroids`` cells, search only the query's ``nprobe`` nearest
-    cells, re-rank candidates by exact cosine.
+    """IVF (inverted-file) ANN: coarse-quantize the corpus into 8
+    cells, search only the query's ``nprobe`` nearest cells, re-rank
+    candidates by exact cosine, and keep the top 3 for each query
+    below id 10.
 
-    Centroids are a deterministic sample (the ``n_centroids`` vectors
-    with the lowest ids — selected by sort, so sparse/offset id spaces
-    still yield exactly ``n_centroids`` cells) — the classic
+    Centroids are a deterministic sample (the 8 vectors with the
+    lowest ids — selected by sort, so sparse/offset id spaces still
+    yield exactly 8 cells) — the classic
     sampled-centroid IVF flavor; swap in k-means refinement without
     touching the search path. Scale shape: the
     centroid set broadcasts everywhere (tiny), assignment is one
@@ -119,45 +122,43 @@ def ivf_topk(
     cells' inverted lists (an equi-join on cent_id) — never the full
     corpus. Recall is governed by nprobe.
     """
-    if n_centroids < 1 or nprobe < 1 or k < 1:
+    if nprobe < 1:
         # nprobe = 0 probes no cells: every query silently returns empty.
-        raise ValueError(
-            f"ivf_topk needs n_centroids/nprobe/k >= 1, got {n_centroids}/{nprobe}/{k}"
-        )
+        raise ValueError(f"ivf_topk needs nprobe >= 1, got {nprobe}")
     cents = (
-        embeddings.orderBy(id_col)
-        .limit(n_centroids)
+        embeddings.orderBy("vec_id")
+        .limit(8)
         .select(
-            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
+            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
         )
     )
     scored_cells = (
         embeddings.join(F.broadcast(cents))
         .select(
-            F.col(id_col),
-            F.col(vec_col),
+            F.col("vec_id"),
+            F.col("embedding"),
             "cent_id",
-            cosine(F.col(vec_col), F.col("cent_vec")).alias("_ccos"),
+            cosine(F.col("embedding"), F.col("cent_vec")).alias("_ccos"),
         )
     )
-    w_cell = Window.partitionBy(id_col).orderBy(
+    w_cell = Window.partitionBy("vec_id").orderBy(
         F.col("_ccos").desc(), F.col("cent_id")
     )
     ranked_cells = scored_cells.withColumn("cell_rank", F.row_number().over(w_cell))
     # Inverted lists: every vector lives in exactly one cell.
     assignment = ranked_cells.filter(F.col("cell_rank") == 1).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
         "cent_id",
     )
     # Each query probes its nprobe nearest cells.
     probes = (
         ranked_cells.filter(
-            (F.col(id_col) < query_ids_below) & (F.col("cell_rank") <= nprobe)
+            (F.col("vec_id") < 10) & (F.col("cell_rank") <= nprobe)
         )
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_vec"),
             "cent_id",
         )
     )
@@ -175,7 +176,7 @@ def ivf_topk(
     )
     return (
         scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
+        .filter(F.col("knn_rank") <= 3)
         .select(
             "query_id",
             "neighbor_id",
@@ -216,18 +217,13 @@ def sign_bucket_band(vec: Column, band: int, planes: int) -> Column:
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
-    bands: int = 6,
-    planes_per_band: int = 10,
-    threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup by vector similarity).
 
     BANDED sign-LSH, exactly the shape MinHash banding gives text
     dedup: band j keys on the sign pattern of dims [j·r+1, (j+1)·r]
-    (r = ``planes_per_band``), candidates are pairs agreeing on ALL r
-    signs of ANY band, then exact cosine ≥ threshold verifies.
+    (r = ``PLANES_PER_BAND``), candidates are pairs agreeing on ALL r
+    signs of ANY band, then exact cosine ≥ 0.3 verifies.
 
     Why bands×r and not one short prefix: a single r-plane bucket is a
     recall/occupancy knife-edge — small r (the old default, r=6) means
@@ -240,11 +236,11 @@ def embedding_near_dup_pairs(
     evals vs the old 3.1M — and the gap widens as n grows), recall by 1-(1-p^r)^bands which for
     sign-agreement rates p near 1 exceeds the old p^6. Same fixed
     constants on the DuckDB oracle side. For corpora where n ≫ 2^r,
-    raise ``planes_per_band`` by log2 of the growth — bucket count,
+    raise ``PLANES_PER_BAND`` by log2 of the growth — bucket count,
     not band count, is what must track corpus size.
 
     A pair colliding in several bands is deduplicated by DISTINCT
-    after the cosine (≤ ``bands``× redundant fold work on the small
+    after the cosine (≤ ``NEAR_DUP_BANDS``× redundant fold work on the small
     collision set — cheaper than two vector-table join-backs).
 
     Two hot-path rules (both measured on the 10× scale rig, where the
@@ -262,21 +258,21 @@ def embedding_near_dup_pairs(
       amortized over the n²/2^r pair evaluations it parallelizes.
     """
     par = embeddings.sparkSession.sparkContext.defaultParallelism
-    vd = _as_double(F.col(vec_col))
+    vd = _as_double(F.col("embedding"))
     base = embeddings.repartition(par).select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.sqrt(_dot(vd, vd)).alias("_norm"),
     )
     bucketed = base.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         "_norm",
         F.posexplode(
             F.array(
                 *[
-                    sign_bucket_band(F.col(vec_col), j, planes_per_band)
-                    for j in range(bands)
+                    sign_bucket_band(F.col("embedding"), j, PLANES_PER_BAND)
+                    for j in range(NEAR_DUP_BANDS)
                 ]
             )
         ).alias("band_id", "band_key"),
@@ -290,15 +286,15 @@ def embedding_near_dup_pairs(
     # only pays when the recomputed subtree is expensive (hashing,
     # aggregation), not when it is scan-dominated.
     a = bucketed.select(
-        F.col(id_col).alias("vec_id_a"),
-        F.col(vec_col).alias("va"),
+        F.col("vec_id").alias("vec_id_a"),
+        F.col("embedding").alias("va"),
         F.col("_norm").alias("norm_a"),
         F.col("band_id").alias("band_a"),
         F.col("band_key").alias("key_a"),
     )
     b = bucketed.select(
-        F.col(id_col).alias("vec_id_b"),
-        F.col(vec_col).alias("vb"),
+        F.col("vec_id").alias("vec_id_b"),
+        F.col("embedding").alias("vb"),
         F.col("_norm").alias("norm_b"),
         F.col("band_id").alias("band_b"),
         F.col("band_key").alias("key_b"),
@@ -319,7 +315,7 @@ def embedding_near_dup_pairs(
                 6,
             ).alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.3)
         .distinct()
     )
 
@@ -341,38 +337,35 @@ def _flip_probes(bucket: Column, planes: int) -> Column:
 
 def cosine_topk_lsh_multiprobe(
     embeddings: DataFrame,
-    query_ids_below: int = 10,
     k: int = 3,
-    planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Multi-probe sign-LSH ANN: each query searches its own bucket PLUS
-    every bucket one plane-flip away (planes+1 probes).
+    """Multi-probe sign-LSH ANN over 8 planes: each query below id 10
+    searches its own bucket PLUS every bucket one plane-flip away
+    (8 + 1 probes).
 
     The standard recall lever: neighbors that landed just across one
     hyperplane become reachable without widening buckets. Corpus-side
     cost is unchanged (each vector still lives in ONE bucket — the
     probe fan-out multiplies only the tiny query side of the join).
     """
-    if k < 1 or planes < 1:
-        raise ValueError(f"needs k/planes >= 1, got {k}/{planes}")
+    if k < 1:
+        raise ValueError(f"needs k/planes >= 1, got {k}/8")
     with_bucket = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col),
-        sign_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        sign_bucket(F.col("embedding"), 8).alias("bucket"),
     )
     q = (
-        with_bucket.filter(F.col(id_col) < query_ids_below)
+        with_bucket.filter(F.col("vec_id") < 10)
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.explode(_flip_probes(F.col("bucket"), planes)).alias("probe"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_vec"),
+            F.explode(_flip_probes(F.col("bucket"), 8)).alias("probe"),
         )
     )
     c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
         F.col("bucket").alias("c_bucket"),
     )
     scored = (
@@ -408,8 +401,6 @@ def cosine_topk_lsh(
     query_ids_below: int = 10,
     k: int = 3,
     planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k: candidates share the query's sign-LSH bucket.
 
@@ -420,18 +411,18 @@ def cosine_topk_lsh(
     if k < 1 or planes < 1:
         raise ValueError(f"needs k/planes >= 1, got {k}/{planes}")
     with_bucket = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col),
-        sign_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        sign_bucket(F.col("embedding"), planes).alias("bucket"),
     )
-    q = with_bucket.filter(F.col(id_col) < query_ids_below).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+    q = with_bucket.filter(F.col("vec_id") < query_ids_below).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
         F.col("bucket").alias("q_bucket"),
     )
     c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
         F.col("bucket").alias("c_bucket"),
     )
     scored = (
@@ -465,8 +456,6 @@ def cosine_topk_lsh(
 def random_projection_sql(
     in_dim: int,
     out_dim: int = 16,
-    vec_col: str = "embedding",
-    salt: str = "rp",
     dialect: str = "spark",
 ) -> list[str]:
     """SQL expression per output dimension for a deterministic
@@ -474,7 +463,7 @@ def random_projection_sql(
     dimension reduction that preserves pairwise distances within
     (1±ε) at out_dim = O(log n / ε²).
 
-    Signs come from md5(salt:i:j) computed HERE (python), so the
+    Signs come from md5(rp:i:j) computed HERE (python), so the
     literal coefficients are identical in the Spark plan and the
     DuckDB oracle; the sum is written as one explicit left-associated
     chain, so IEEE addition order matches bit-for-bit across engines.
@@ -488,15 +477,15 @@ def random_projection_sql(
 
     scale = 1.0 / math.sqrt(out_dim)
     elem = (
-        (lambda i: f"CAST(element_at({vec_col}, {i}) AS DOUBLE)")
+        (lambda i: f"CAST(element_at(embedding, {i}) AS DOUBLE)")
         if dialect == "spark"
-        else (lambda i: f"CAST({vec_col}[{i}] AS DOUBLE)")
+        else (lambda i: f"CAST(embedding[{i}] AS DOUBLE)")
     )
     exprs = []
     for j in range(out_dim):
         terms = []
         for i in range(1, in_dim + 1):
-            h = hashlib.md5(f"{salt}:{i}:{j}".encode()).hexdigest()
+            h = hashlib.md5(f"rp:{i}:{j}".encode()).hexdigest()
             sign = "-" if int(h[:8], 16) & 1 else ""
             terms.append(f"({sign}{scale!r} * {elem(i)})")
         exprs.append(" + ".join(terms))
@@ -507,17 +496,14 @@ def random_projection(
     embeddings: DataFrame,
     in_dim: int,
     out_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "rp",
 ) -> DataFrame:
     """→ (vec_id, rp_0 … rp_{out_dim-1}): JL-projected vectors."""
     if in_dim < 1 or out_dim < 1:
         # out_dim = 0 silently emits zero-width projections.
         raise ValueError(f"random_projection needs in_dim/out_dim >= 1, got {in_dim}/{out_dim}")
-    exprs = random_projection_sql(in_dim, out_dim, vec_col, salt, "spark")
+    exprs = random_projection_sql(in_dim, out_dim)
     return embeddings.select(
-        F.col(id_col),
+        F.col("vec_id"),
         *[
             F.round(F.expr(e), 6).alias(f"rp_{j}")
             for j, e in enumerate(exprs)
@@ -529,9 +515,6 @@ def semantic_decontaminate(
     corpus: DataFrame,
     eval_set: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    eval_id_col: str = "eval_id",
 ) -> DataFrame:
     """Flag corpus vectors semantically close to ANY eval-set vector —
     the embedding-space analogue of n-gram decontamination
@@ -556,10 +539,10 @@ def semantic_decontaminate(
     decision between engines.
     """
     c = corpus.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
+        F.col("vec_id"), _as_double(F.col("embedding")).alias("_v")
     ).withColumn("_vn", F.sqrt(_dot(F.col("_v"), F.col("_v"))))
     e = eval_set.select(
-        F.col(eval_id_col), _as_double(F.col(vec_col)).alias("_w")
+        F.col("eval_id"), _as_double(F.col("embedding")).alias("_w")
     ).withColumn("_wn", F.sqrt(_dot(F.col("_w"), F.col("_w"))))
     cos_r = F.round(
         _dot(F.col("_v"), F.col("_w")) / (F.col("_vn") * F.col("_wn")), 6
@@ -567,16 +550,16 @@ def semantic_decontaminate(
     best = (
         c.crossJoin(F.broadcast(e))
         .select(
-            id_col,
+            "vec_id",
             F.struct(
-                cos_r.alias("c"), (-F.col(eval_id_col)).alias("nid")
+                cos_r.alias("c"), (-F.col("eval_id")).alias("nid")
             ).alias("_s"),
         )
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.max("_s").alias("_b"))
     )
     return best.filter(F.col("_b.c") >= threshold).select(
-        F.col(id_col),
+        F.col("vec_id"),
         (-F.col("_b.nid")).cast("long").alias("matched_eval_id"),
         F.col("_b.c").alias("max_cosine"),
     )
@@ -585,8 +568,6 @@ def semantic_decontaminate(
 def standardize_dims(
     embeddings: DataFrame,
     id_below: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-dimension z-score standardization of an embedding column —
     the feature-scaling step in front of k-means/PCA/ANN (unscaled
@@ -605,8 +586,8 @@ def standardize_dims(
     row). → (vec_id, dim_idx, z).
     """
     xs = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias(
+        F.col("vec_id").alias("vec_id"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
             "dim_idx", "x"
         ),
     )
@@ -645,9 +626,6 @@ def standardize_dims(
 def hard_negative_topk(
     embeddings: DataFrame,
     k: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Contrastive-training hard-negative mining: for EVERY vector, the
     k most-cosine-similar vectors carrying a DIFFERENT label — the
@@ -686,18 +664,18 @@ def hard_negative_topk(
     blocks = 32
     spark = embeddings.sparkSession
     q = embeddings.select(
-        F.col(id_col).cast("long").alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col(label_col).alias("q_label"),
-        (F.col(id_col) % blocks).cast("int").alias("blk"),
+        F.col("vec_id").cast("long").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.col("label").alias("q_label"),
+        (F.col("vec_id") % blocks).cast("int").alias("blk"),
     )
     blk_df = F.broadcast(
         spark.range(blocks).select(F.col("id").cast("int").alias("blk"))
     )
     c = embeddings.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(label_col).alias("c_label"),
+        F.col("vec_id").cast("long").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.col("label").alias("c_label"),
     ).crossJoin(blk_df)
 
     def _score_block(left, right):
@@ -758,10 +736,6 @@ def hard_negative_topk_ivf(
     embeddings: DataFrame,
     n_centroids: int = 8,
     nprobe: int = 2,
-    k: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Hard-negative mining behind the IVF coarse quantizer — the
     100 TB composition :func:`hard_negative_topk`'s docstring
@@ -771,7 +745,7 @@ def hard_negative_topk_ivf(
     n² — the inverted-list contraction that keeps exact-rerank ANN
     affordable when the corpus no longer fits a broadcast.
 
-    Output: (query_id, neighbor_id, cosine, hn_rank) — the top-k
+    Output: (query_id, neighbor_id, cosine, hn_rank) — the top-2
     cross-label cosine neighbors WITHIN the probed cells (recall < 1
     vs the exact miner is inherent to IVF and governed by nprobe).
 
@@ -788,21 +762,21 @@ def hard_negative_topk_ivf(
     import pandas as pd  # noqa: F401
 
     cents = (
-        embeddings.orderBy(id_col)
+        embeddings.orderBy("vec_id")
         .limit(n_centroids)
         .select(
-            F.col(id_col).alias("cent_id"),
-            F.col(vec_col).alias("cent_vec"),
+            F.col("vec_id").alias("cent_id"),
+            F.col("embedding").alias("cent_vec"),
         )
     )
     scored_cells = embeddings.join(F.broadcast(cents)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col(label_col),
+        F.col("vec_id"),
+        F.col("embedding"),
+        F.col("label"),
         "cent_id",
-        cosine(F.col(vec_col), F.col("cent_vec")).alias("_ccos"),
+        cosine(F.col("embedding"), F.col("cent_vec")).alias("_ccos"),
     )
-    w_cell = Window.partitionBy(id_col).orderBy(
+    w_cell = Window.partitionBy("vec_id").orderBy(
         F.col("_ccos").desc(), F.col("cent_id")
     )
     # assignment and probes both derive from ranked_cells (self-join
@@ -817,15 +791,15 @@ def hard_negative_topk_ivf(
         eager=False,
     )
     assignment = ranked_cells.filter(F.col("cell_rank") == 1).select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(label_col).alias("c_label"),
+        F.col("vec_id").cast("long").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.col("label").alias("c_label"),
         "cent_id",
     )
     probes = ranked_cells.filter(F.col("cell_rank") <= nprobe).select(
-        F.col(id_col).cast("long").alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col(label_col).alias("q_label"),
+        F.col("vec_id").cast("long").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.col("label").alias("q_label"),
         "cent_id",
     )
 
@@ -852,7 +826,7 @@ def hard_negative_topk_ivf(
             == right["c_label"].to_numpy()[None, :]
         )
         S[same] = -np.inf
-        k_eff = min(k, S.shape[1])
+        k_eff = min(2, S.shape[1])
         idx = np.argsort(-S, axis=1, kind="stable")[:, :k_eff]
         scores = np.take_along_axis(S, idx, axis=1)
         nid = right["neighbor_id"].to_numpy()
@@ -880,7 +854,7 @@ def hard_negative_topk_ivf(
     )
     return (
         cell_topk.withColumn("hn_rank", F.row_number().over(w))
-        .filter(F.col("hn_rank") <= k)
+        .filter(F.col("hn_rank") <= 2)
         .select(
             "query_id",
             "neighbor_id",
@@ -892,11 +866,9 @@ def hard_negative_topk_ivf(
 
 def truncation_recall(
     embeddings: DataFrame,
-    dims: tuple[int, ...] = (16, 32),
-    k: int = 10,
-    query_ids_below: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    dims: tuple[int, ...] = TRUNC_DIMS,
+    k: int = TRUNC_K,
+    query_ids_below: int = TRUNC_QUERY_IDS_BELOW,
 ) -> DataFrame:
     """Matryoshka-style dimension-truncation audit: recall@k of
     brute-force cosine top-k computed on only the FIRST ``d`` vector
@@ -925,13 +897,13 @@ def truncation_recall(
     # 10 → 2, the one-brute-force-leg-per-dim floor; the truth leg's
     # pass is behind its own checkpoint below).
     q = materialize(
-        embeddings.filter(F.col(id_col) < query_ids_below).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        embeddings.filter(F.col("vec_id") < query_ids_below).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         ),
         eager=False,
     )
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     pairs = F.broadcast(q).join(
         c, F.col("query_id") != F.col("neighbor_id")
@@ -999,11 +971,7 @@ def truncation_recall(
     ).orderBy("dim", "query_id")
 
 
-def truncation_recall_oracle_sql(
-    dims: tuple[int, ...] = (16, 32),
-    k: int = 10,
-    query_ids_below: int = 20,
-) -> str:
+def truncation_recall_oracle_sql() -> str:
     """DuckDB twin of :func:`truncation_recall` — same prefix slices,
     same list_sum cosine (proven bit-compatible with the Spark
     zip_with fold by similarity_cosine_topk), same row_number cut."""
@@ -1027,24 +995,24 @@ def truncation_recall_oracle_sql(
                        PARTITION BY a.vec_id
                        ORDER BY {cos(width)} DESC, b.vec_id) AS rk
             FROM e a JOIN e b ON a.vec_id != b.vec_id
-            WHERE a.vec_id < {query_ids_below})
-        WHERE rk <= {k}
+            WHERE a.vec_id < {TRUNC_QUERY_IDS_BELOW})
+        WHERE rk <= {TRUNC_K}
     )"""
 
-    dim_blocks = ",".join(topk(str(d), f"ap_{d}") for d in dims)
+    dim_blocks = ",".join(topk(str(d), f"ap_{d}") for d in TRUNC_DIMS)
     dim_selects = "\n    UNION ALL\n".join(
         f"""
     SELECT CAST({d} AS BIGINT) AS dim, q.query_id,
            CAST(coalesce(h.hits, 0) AS BIGINT) AS hits
     FROM (SELECT DISTINCT vec_id AS query_id FROM e
-          WHERE vec_id < {query_ids_below}) q
+          WHERE vec_id < {TRUNC_QUERY_IDS_BELOW}) q
     LEFT JOIN (SELECT a.query_id, count(*) AS hits
                FROM ap_{d} a JOIN truth t
                  ON t.query_id = a.query_id
                 AND t.neighbor_id = a.neighbor_id
                GROUP BY a.query_id) h USING (query_id)
         """
-        for d in dims
+        for d in TRUNC_DIMS
     )
     return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
@@ -1052,7 +1020,7 @@ def truncation_recall_oracle_sql(
     {topk("len(a.emb)", "truth")},
     {dim_blocks}
     SELECT dim, query_id, hits,
-           CAST(hits AS DOUBLE) / {float(k)} AS recall_at_k
+           CAST(hits AS DOUBLE) / {float(TRUNC_K)} AS recall_at_k
     FROM ({dim_selects})
     """
 
@@ -1062,8 +1030,6 @@ def semdedup_prune(
     k: int = 8,
     iterations: int = 3,
     threshold_milli: int = 950,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     dedup that finds near-duplicate *meanings* exact-hash and
@@ -1107,10 +1073,9 @@ def semdedup_prune(
     # k-means pass had in hand (r13: embeddings scans 2 → 1, join
     # gone; the only remaining shuffle is the per-cluster cogroup).
     vecs = kmeans_assign(
-        embeddings, k=k, iterations=iterations, id_col=id_col,
-        vec_col=vec_col, with_vec=True,
+        embeddings, k=k, iterations=iterations, with_vec=True,
     ).select(
-        F.col(id_col).cast("long").alias("vec_id"),
+        F.col("vec_id").cast("long").alias("vec_id"),
         F.col("vec").alias("v"),  # documented with_vec output column
         "cluster_id",
     )

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 def tfidf_milli_vectors(
     docs: DataFrame,
-    text: str = "text",
     max_df_frac: float = 0.10,
     max_df: int | None = None,
 ) -> DataFrame:
@@ -63,7 +62,7 @@ def tfidf_milli_vectors(
         docs.select(
             "doc_id",
             F.explode(
-                F.split(F.trim(F.lower(F.col(text))), r"\s+")
+                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
             ).alias("word"),
         )
         .filter(F.col("word") != "")
@@ -100,7 +99,6 @@ def tfidf_milli_vectors(
 
 def tfidf_cosine_pairs(
     docs: DataFrame,
-    text: str = "text",
     max_df_frac: float = 0.10,
     min_cosine: float = 0.30,
     max_df: int | None = None,
@@ -125,7 +123,7 @@ def tfidf_cosine_pairs(
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
     vec = materialize(
-        tfidf_milli_vectors(docs, text, max_df_frac, max_df=max_df),
+        tfidf_milli_vectors(docs, max_df_frac=max_df_frac, max_df=max_df),
         eager=False,
     )
     norms = vec.groupBy("doc_id").agg(
@@ -172,8 +170,6 @@ def tfidf_cosine_pairs(
 
 
 def tfidf_cosine_oracle_sql(
-    n_docs_sql: str = "(SELECT count(*) FROM documents)",
-    toks_sql: str | None = None,
     max_df_frac: float = 0.10,
     min_cosine: float = 0.30,
     max_df: int | None = None,
@@ -187,7 +183,7 @@ def tfidf_cosine_oracle_sql(
     empty oracle instead of failing fast."""
     if max_df is not None and max_df < 1:
         raise ValueError(f"max_df must be >= 1 when set, got {max_df}")
-    toks = toks_sql or "string_split_regex(trim(lower(text)), '\\s+')"
+    toks = "string_split_regex(trim(lower(text)), '\\s+')"
     rel_cap = (
         f"CAST(floor({max_df_frac} * (SELECT n FROM nd)) AS BIGINT)"
     )
@@ -195,7 +191,7 @@ def tfidf_cosine_oracle_sql(
         rel_cap if max_df is None else f"least({rel_cap}, {int(max_df)})"
     )
     return f"""
-    WITH nd AS (SELECT CAST({n_docs_sql} AS BIGINT) AS n),
+    WITH nd AS (SELECT CAST((SELECT count(*) FROM documents) AS BIGINT) AS n),
     tf AS (
         SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
         FROM (SELECT doc_id, unnest({toks}) AS word FROM documents)

@@ -36,27 +36,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+W = 8  # tokens per sliding window
+
 
 def window_postings(
     docs: DataFrame,
-    w: int = 8,
-    text: str = "text",
-    doc_id: str = "doc_id",
     max_postings: int = 20,
 ) -> DataFrame:
     """→ (doc_id, pos, h): one row per W-token sliding window, hot
     hashes (> max_postings occurrences corpus-wide) removed."""
-    toks = F.split(F.trim(F.lower(F.col(text))), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     posted = (
-        docs.select(F.col(doc_id).alias("doc_id"), toks.alias("toks"))
-        .filter(F.size("toks") >= w)
+        docs.select(F.col("doc_id").alias("doc_id"), toks.alias("toks"))
+        .filter(F.size("toks") >= W)
         .select(
             "doc_id",
             F.posexplode(
                 F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - F.lit(w - 1)),
+                    F.sequence(F.lit(1), F.size("toks") - F.lit(W - 1)),
                     lambda i: F.concat_ws(
-                        " ", F.slice(F.col("toks"), i, w)
+                        " ", F.slice(F.col("toks"), i, W)
                     ),
                 )
             ).alias("pos0", "gram"),
@@ -77,10 +76,7 @@ def window_postings(
 
 def duplicated_spans(
     docs: DataFrame,
-    w: int = 8,
     min_len: int = 12,
-    text: str = "text",
-    doc_id: str = "doc_id",
     max_postings: int = 20,
 ) -> DataFrame:
     """Maximal cross-doc duplicated substrings of ≥ min_len tokens.
@@ -100,7 +96,7 @@ def duplicated_spans(
     # position, far smaller than re-reading and re-hashing the text.
     post = materialize(
         window_postings(
-            docs, w=w, text=text, doc_id=doc_id, max_postings=max_postings
+            docs, max_postings=max_postings
         ),
         eager=False,
     )
@@ -144,7 +140,7 @@ def duplicated_spans(
     return (
         spans.withColumn(
             "span_tokens",
-            (F.col("a_end") - F.col("a_start") + F.lit(w)).cast("long"),
+            (F.col("a_end") - F.col("a_start") + F.lit(W)).cast("long"),
         )
         .filter(F.col("span_tokens") >= min_len)
         .select(

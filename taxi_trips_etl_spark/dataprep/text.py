@@ -15,6 +15,9 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize
 
 from taxi_trips_etl_spark.dataprep.dedup import tokens_col
 
+BM25_K1, BM25_B = 1.2, 0.75  # the usual Okapi BM25 saturation and length norm
+LOGPROB_BUCKETS = 4  # unigram_logprob_score's equi-width buckets
+
 # Tiny per-language stopword inventories for the n-gram/stopword
 # language heuristic. Deterministic tie order: en > de > fr > es.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -25,14 +28,14 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def token_stats(docs: DataFrame, text: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Token counting: n_tokens, distinct tokens, mean token length.
 
     The BPE-ish variant (subword count estimate) approximates token
     count as ceil(chars/4) — the usual budget heuristic — alongside the
     whitespace count.
     """
-    toks = tokens_col(text)
+    toks = tokens_col()
     tok_lens = F.transform(toks, F.length)
     sum_len = F.aggregate(tok_lens, F.lit(0).cast("long"), lambda a, x: a + x)
     return docs.select(
@@ -40,18 +43,18 @@ def token_stats(docs: DataFrame, text: str = "text") -> DataFrame:
         F.size(toks).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("long").alias("n_distinct_tokens"),
         F.round(sum_len / F.size(toks), 4).alias("avg_token_len"),
-        F.ceil(F.length(F.col(text)) / 4).cast("long").alias("est_bpe_tokens"),
+        F.ceil(F.length(F.col("text")) / 4).cast("long").alias("est_bpe_tokens"),
     )
 
 
-def quality_scores(docs: DataFrame, text: str = "text") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Quality scoring: length, alpha/space/punct ratios, stopword ratio,
     and a deterministic composite quality score in [0, 1]."""
-    t = F.col(text)
+    t = F.col("text")
     n_chars = F.length(t)
     n_alpha = F.length(F.regexp_replace(t, "[^a-zA-Z]", ""))
     n_space = F.length(F.regexp_replace(t, "[^ ]", ""))
-    toks = tokens_col(text)
+    toks = tokens_col()
     n_tokens = F.size(toks)
     en_stop = list(LANG_STOPWORDS["en"])
     n_stop = F.size(F.filter(toks, lambda x: x.isin(en_stop)))
@@ -75,13 +78,13 @@ def quality_scores(docs: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def language_id(docs: DataFrame, text: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Stopword-overlap language heuristic → predicted_lang.
 
     Counts token occurrences per language inventory; argmax with a
     fixed tie order (en, de, fr, es); all-zero → 'und' (undetermined).
     """
-    toks = tokens_col(text)
+    toks = tokens_col()
 
     def count_in(words: list[str]):
         # NB: the lambda must be unary — F.filter infers arity, so a
@@ -101,10 +104,10 @@ def language_id(docs: DataFrame, text: str = "text") -> DataFrame:
     return out
 
 
-def clean_text(docs: DataFrame, text: str = "text") -> DataFrame:
+def clean_text(docs: DataFrame) -> DataFrame:
     """Normalization pass: lowercase, strip non-alphanumerics, collapse
     whitespace — the canonical pre-tokenization cleaner."""
-    t = F.lower(F.col(text))
+    t = F.lower(F.col("text"))
     t = F.regexp_replace(t, "[^a-z0-9 ]", "")
     t = F.trim(F.regexp_replace(t, " +", " "))
     return docs.select(
@@ -119,7 +122,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_tokens: int = 50,
     overlap: int = 10,
-    text: str = "text",
 ) -> DataFrame:
     """Split documents into overlapping token-window chunks.
 
@@ -138,7 +140,7 @@ def chunk_documents(
             f"chunk_tokens, got {chunk_tokens}/{overlap}"
         )
     stride = chunk_tokens - overlap
-    toks = tokens_col(text)
+    toks = tokens_col()
     n = F.size(toks)
     n_chunks = F.greatest(
         F.lit(1), F.ceil((n - F.lit(overlap)) / F.lit(float(stride)))
@@ -159,9 +161,7 @@ def chunk_documents(
     )
 
 
-def tf_idf_top_terms(
-    docs: DataFrame, text: str = "text", top_k: int = 5
-) -> DataFrame:
+def tf_idf_top_terms(docs: DataFrame) -> DataFrame:
     """Top-k characteristic terms per doc by smoothed TF-IDF.
 
     tf = term count in doc; idf = ln((N+1)/(df+1)) + 1 (sklearn-style
@@ -171,7 +171,7 @@ def tf_idf_top_terms(
     """
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
-    posting = tokens_table(docs, text).select(
+    posting = tokens_table(docs).select(
         "doc_id", F.explode(F.col("toks")).alias("term")
     )
     tf = posting.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -193,25 +193,25 @@ def tf_idf_top_terms(
     )
     return (
         scored.withColumn("term_rank", F.row_number().over(w))
-        .filter(F.col("term_rank") <= top_k)
+        .filter(F.col("term_rank") <= 5)
         .select("doc_id", "term", "tf", "tfidf",
                 F.col("term_rank").cast("long").alias("term_rank"))
     )
 
 
-def fingerprints(docs: DataFrame, text: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Document fingerprinting.
 
     - ``canon_fingerprint``: md5 of the sorted distinct token set —
       invariant to word order & repetition (near-dup canonicalization).
     - ``exact_fingerprint``: md5 of the raw text.
     """
-    toks = tokens_col(text)
+    toks = tokens_col()
     canon = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks))))
     return docs.select(
         "doc_id",
         canon.alias("canon_fingerprint"),
-        F.md5(F.col(text)).alias("exact_fingerprint"),
+        F.md5(F.col("text")).alias("exact_fingerprint"),
     )
 
 # ---------------------------------------------------------------------------
@@ -230,7 +230,7 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 )
 
 
-def pii_scrub(docs: DataFrame, text: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """Redact emails / URLs / IPv4s / phone numbers with typed
     placeholders — the standard pre-training privacy pass.
 
@@ -239,17 +239,17 @@ def pii_scrub(docs: DataFrame, text: str = "text") -> DataFrame:
     subset). ``pii_found`` = 1 when anything was redacted, so the
     downstream filter is a cheap integer predicate.
     """
-    scrubbed = F.col(text)
+    scrubbed = F.col("text")
     for pat, repl in PII_PATTERNS:
         scrubbed = F.regexp_replace(scrubbed, pat, repl)
     return docs.select(
         "doc_id",
         scrubbed.alias("scrubbed_text"),
-        (F.col(text) != scrubbed).cast("long").alias("pii_found"),
+        (F.col("text") != scrubbed).cast("long").alias("pii_found"),
     )
 
 
-def lexical_diversity(docs: DataFrame, text: str = "text") -> DataFrame:
+def lexical_diversity(docs: DataFrame) -> DataFrame:
     """Per-doc lexical-diversity / repetition signals: type-token
     ratio, top-token fraction (boilerplate/repetition detector), and
     unigram entropy (low entropy ⇒ templated or repeated text).
@@ -261,7 +261,7 @@ def lexical_diversity(docs: DataFrame, text: str = "text") -> DataFrame:
     """
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
-    tok = tokens_table(docs, text).select(
+    tok = tokens_table(docs).select(
         "doc_id", F.explode("toks").alias("tok")
     )
     per = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
@@ -286,8 +286,6 @@ def lexical_diversity(docs: DataFrame, text: str = "text") -> DataFrame:
 def ngram_decontaminate(
     corpus: DataFrame,
     eval_docs: DataFrame,
-    n: int = 5,
-    text: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus docs sharing any n-token
     shingle with an eval/benchmark doc → (doc_id, eval_doc_id) pairs.
@@ -297,7 +295,7 @@ def ngram_decontaminate(
     the overlap is ONE equi-join on the gram — never doc×doc. The eval
     side is typically tiny (benchmarks), so the join broadcasts it at
     scale; fanout is bounded by shared-gram multiplicity, and the
-    distinct collapses multi-gram hits. Raise ``n`` to tighten (13 is
+    distinct collapses multi-gram hits. Shingles are 5 tokens (13 is
     the common contamination shingle for web-scale corpora; 5 suits
     the short synthetic docs here). The join key is ``xxhash64`` of
     the shingle (8 fixed bytes through the exchange instead of the
@@ -308,10 +306,10 @@ def ngram_decontaminate(
 
     def grams(df: DataFrame, id_alias: str) -> DataFrame:
         return (
-            tokens_table(df, text)
+            tokens_table(df)
             .select(
                 F.col("doc_id").alias(id_alias),
-                F.explode(word_ngrams(F.col("toks"), n)).alias("gram"),
+                F.explode(word_ngrams(F.col("toks"), 5)).alias("gram"),
             )
             .select(id_alias, F.xxhash64("gram").alias("gram"))
         )
@@ -326,7 +324,7 @@ def ngram_decontaminate(
     )
 
 
-def repetition_scores(docs: DataFrame, text: str = "text") -> DataFrame:
+def repetition_scores(docs: DataFrame) -> DataFrame:
     """Gopher-style n-gram repetition signals (Rae et al. 2021 §A1.1):
     per-doc top-bigram fraction and duplicate bigram/trigram fractions.
     High values ⇒ templated/boilerplate text a pre-training filter
@@ -340,7 +338,7 @@ def repetition_scores(docs: DataFrame, text: str = "text") -> DataFrame:
     """
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
-    toks = tokens_table(docs, text)
+    toks = tokens_table(docs)
 
     def gram_structs(n: int):
         idx = F.sequence(F.lit(0), F.size("toks") - n)
@@ -403,7 +401,7 @@ def repetition_scores(docs: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def build_vocab(docs: DataFrame, vocab_size: int = 1000, text: str = "text") -> DataFrame:
+def build_vocab(docs: DataFrame, vocab_size: int = 1000) -> DataFrame:
     """Tokenizer-prep vocabulary: global token counts → top-``vocab_size``
     terms with dense ids → (token, token_id, n_occurrences).
 
@@ -419,7 +417,7 @@ def build_vocab(docs: DataFrame, vocab_size: int = 1000, text: str = "text") -> 
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
     counts = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select(F.explode("toks").alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
@@ -435,7 +433,7 @@ def build_vocab(docs: DataFrame, vocab_size: int = 1000, text: str = "text") -> 
     )
 
 
-def c4_quality_filter(docs: DataFrame, text: str = "text") -> DataFrame:
+def c4_quality_filter(docs: DataFrame) -> DataFrame:
     """C4-style rule gate (Raffel et al. 2020 §2.2, adapted to the
     whitespace tokenizer): keep docs that pass ALL of
       - >= 5 tokens and <= 10 000 tokens,
@@ -445,14 +443,14 @@ def c4_quality_filter(docs: DataFrame, text: str = "text") -> DataFrame:
     Emits per-rule booleans so the gate is auditable, plus the verdict.
     Pure column expressions — codegen end to end, filter pushes to scan.
     """
-    toks = tokens_col(text)
+    toks = tokens_col()
     n_tokens = F.size(toks)
     sum_len = F.aggregate(
         F.transform(toks, F.length), F.lit(0).cast("long"), lambda a, x: a + x
     )
     mean_len = sum_len / n_tokens
-    n_chars = F.length(F.col(text))
-    n_weird = F.length(F.regexp_replace(F.col(text), "[a-zA-Z0-9 ]", ""))
+    n_chars = F.length(F.col("text"))
+    n_weird = F.length(F.regexp_replace(F.col("text"), "[a-zA-Z0-9 ]", ""))
     max_tok = F.array_max(F.transform(toks, F.length))
     rules = {
         "ok_n_tokens": (n_tokens >= 5) & (n_tokens <= 10000),
@@ -471,9 +469,7 @@ def c4_quality_filter(docs: DataFrame, text: str = "text") -> DataFrame:
     return out.withColumn("keep", verdict.cast("long"))
 
 
-def tokenize_with_vocab(
-    docs: DataFrame, vocab: DataFrame, text: str = "text"
-) -> DataFrame:
+def tokenize_with_vocab(docs: DataFrame, vocab: DataFrame) -> DataFrame:
     """Apply a vocabulary (from :func:`build_vocab`) to the corpus →
     per-doc id sequences. OOV tokens map to -1 (the unk id).
 
@@ -485,7 +481,7 @@ def tokenize_with_vocab(
     """
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
-    pos = tokens_table(docs, text).select(
+    pos = tokens_table(docs).select(
         "doc_id", F.posexplode("toks").alias("pos", "token")
     )
     joined = pos.join(
@@ -515,7 +511,7 @@ def tokenize_with_vocab(
     )
 
 
-def dedup_stats_by_source(docs: DataFrame, text: str = "text") -> DataFrame:
+def dedup_stats_by_source(docs: DataFrame) -> DataFrame:
     """Dedup observability: per source, doc count, distinct-text count,
     and duplicate rate — the dashboard numbers a corpus pipeline
     watches to catch a crawler re-ingesting a domain.
@@ -523,7 +519,7 @@ def dedup_stats_by_source(docs: DataFrame, text: str = "text") -> DataFrame:
     Two partial-agg passes over (source, md5) — text never shuffles.
     """
     per_text = docs.groupBy(
-        "source", F.md5(F.col(text)).alias("h")
+        "source", F.md5(F.col("text")).alias("h")
     ).agg(F.count(F.lit(1)).alias("c"))
     return (
         per_text.groupBy("source")
@@ -543,9 +539,7 @@ def dedup_stats_by_source(docs: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def winnowing_fingerprints(
-    docs: DataFrame, k: int = 8, w: int = 4, text: str = "text"
-) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 —
     the MOSS local-similarity scheme): hash every char k-gram, slide a
     w-hash window, keep each window's minimum → a guaranteed-coverage
@@ -567,7 +561,7 @@ def winnowing_fingerprints(
     """
     if k < 1 or w < 1:
         raise ValueError(f"winnowing needs k/w >= 1, got {k}/{w}")
-    t = F.lower(F.col(text))
+    t = F.lower(F.col("text"))
     n_grams = (F.length(t) - k + 1).cast("int")
     # Explode POSITIONS, not a prebuilt gram array: inside a transform
     # lambda, loop-invariant subexpressions (the lower()ed text) are
@@ -612,15 +606,10 @@ def winnowing_fingerprints(
 
 def winnowing_near_dup_pairs(
     docs: DataFrame,
-    min_shared: int = 3,
-    k: int = 8,
-    w: int = 4,
-    max_df: int = 50,
-    text: str = "text",
 ) -> DataFrame:
-    """Local-similarity near-dup pairs: docs sharing ≥ ``min_shared``
-    DISTINCT winnowing fingerprints, each appearing in at most
-    ``max_df`` documents → (doc_id_a, doc_id_b, n_shared).
+    """Local-similarity near-dup pairs: docs sharing ≥ 3 DISTINCT
+    winnowing fingerprints (k = 8, w = 4), each appearing in at most
+    50 documents → (doc_id_a, doc_id_b, n_shared).
 
     Complements MinHash (whole-document resemblance): winnowing hits
     PARTIAL overlap — a copied paragraph inside an otherwise-different
@@ -632,7 +621,7 @@ def winnowing_near_dup_pairs(
 
     - postings are DISTINCT (doc_id, fp) — overlapping windows
       re-selecting the same minimum must not multiply pair weight;
-    - fingerprints in more than ``max_df`` docs are dropped before
+    - fingerprints in more than max_df = 50 docs are dropped before
       pairing — MOSS's "ignore matches common to many documents"
       rule. A substring a constant FRACTION of the corpus contains
       (a ubiquitous idiom) has a posting list that grows WITH the
@@ -640,12 +629,12 @@ def winnowing_near_dup_pairs(
       discriminative value is zero. The cutoff caps per-fp pair work
       at max_df², making total work ≤ max_df · |postings| — linear.
     """
-    fps = winnowing_fingerprints(docs, k=k, w=w, text=text).distinct()
+    fps = winnowing_fingerprints(docs, k=8, w=4).distinct()
     rare = (
         fps.withColumn(
             "df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
         )
-        .filter(F.col("df") <= max_df)
+        .filter(F.col("df") <= 50)
         .drop("df")
     )
     # Checkpoint: self-joins get no ReusedExchange, so both sides would
@@ -663,11 +652,11 @@ def winnowing_near_dup_pairs(
             F.col("b.doc_id").alias("doc_id_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 3)
     )
 
 
-def gopher_quality_filter(docs: DataFrame, text: str = "text") -> DataFrame:
+def gopher_quality_filter(docs: DataFrame) -> DataFrame:
     """Gopher rule gate (Rae et al. 2021, App. A "quality filtering",
     adapted to the whitespace tokenizer and this corpus's short docs):
     keep docs that pass ALL of
@@ -680,7 +669,7 @@ def gopher_quality_filter(docs: DataFrame, text: str = "text") -> DataFrame:
     Per-rule booleans emitted for auditability, like c4_quality_filter.
     Pure column expressions: codegen end to end at any scale.
     """
-    toks = tokens_col(text)
+    toks = tokens_col()
     n_words = F.size(toks)
     sum_len = F.aggregate(
         F.transform(toks, F.length), F.lit(0).cast("long"), lambda a, x: a + x
@@ -713,9 +702,7 @@ def gopher_quality_filter(docs: DataFrame, text: str = "text") -> DataFrame:
     return out.withColumn("keep", verdict.cast("long"))
 
 
-def dup_ngram_coverage(
-    docs: DataFrame, n: int = 8, text: str = "text"
-) -> DataFrame:
+def dup_ngram_coverage(docs: DataFrame, n: int = 8) -> DataFrame:
     """Duplicated-span diagnostics (Lee et al. 2021, "Deduplicating
     Training Data Makes Language Models Better"): per doc, the fraction
     of its distinct n-grams that also occur in at least one OTHER doc.
@@ -747,7 +734,7 @@ def dup_ngram_coverage(
     # the exact CollapseProject trap tokens_table exists to prevent.
     # Hash above the Generate so gram strings never leave the stage.
     grams = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select(
             "doc_id",
             F.explode(word_ngrams(F.col("toks"), n)).alias("gram"),
@@ -775,8 +762,6 @@ def dup_ngram_coverage(
 
 def dsir_importance_weights(
     docs: DataFrame,
-    target_source: str = "src0",
-    text: str = "text",
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling", simplified to
@@ -794,8 +779,8 @@ def dsir_importance_weights(
     toks = (
         docs.select(
             "doc_id",
-            (F.col("source") == target_source).alias("is_target"),
-            F.explode(tokens_col(text)).alias("tok"),
+            (F.col("source") == "src0").alias("is_target"),
+            F.explode(tokens_col()).alias("tok"),
         )
     )
     # Single-pass model fit: per-token target/raw counts. The model is
@@ -839,14 +824,12 @@ def dsir_importance_weights(
     )
 
 
-def unigram_logprob_score(
-    docs: DataFrame, n_buckets: int = 4, text: str = "text"
-) -> DataFrame:
+def unigram_logprob_score(docs: DataFrame) -> DataFrame:
     """Perplexity-proxy bucketing (CCNet, Wenzek et al. 2020, with a
     corpus-fit unigram LM standing in for KenLM — no LM binaries in
     this container, and the bucketing mechanics are identical): score
     each doc by mean token log-probability under the corpus unigram
-    distribution (add-one smoothed), then cut into ``n_buckets``
+    distribution (add-one smoothed), then cut into ``LOGPROB_BUCKETS``
     equal-width buckets between the corpus min/max score. CCNet keeps
     head/middle buckets and drops the tail.
 
@@ -864,7 +847,7 @@ def unigram_logprob_score(
     """
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
-    toks = docs.select("doc_id", F.explode(tokens_col(text)).alias("tok"))
+    toks = docs.select("doc_id", F.explode(tokens_col()).alias("tok"))
     model = materialize(
         toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n")), eager=False
     )
@@ -888,10 +871,10 @@ def unigram_logprob_score(
         "doc_id",
         "mean_logprob",
         F.least(
-            F.lit(n_buckets - 1),
+            F.lit(LOGPROB_BUCKETS - 1),
             F.floor(
                 (F.col("mean_logprob") - F.col("lo"))
-                / ((F.col("hi") - F.col("lo")) / n_buckets)
+                / ((F.col("hi") - F.col("lo")) / LOGPROB_BUCKETS)
             ),
         )
         .cast("long")
@@ -902,10 +885,6 @@ def unigram_logprob_score(
 def bm25_search(
     docs: DataFrame,
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_n: int = 20,
-    text: str = "text",
 ) -> DataFrame:
     """BM25 keyword retrieval (Robertson/Spärck Jones): rank documents
     for a bag-of-terms query — the lexical complement to the
@@ -913,7 +892,8 @@ def bm25_search(
     usually the hybrid of both).
 
     score(d) = Σ_t idf(t) · tf/(tf + k1·(1 − b + b·len/avglen)),
-    idf = ln(1 + (N − df + 0.5)/(df + 0.5)).
+    idf = ln(1 + (N − df + 0.5)/(df + 0.5)), with k1 = ``BM25_K1`` and
+    b = ``BM25_B``; the top 20 documents are returned.
 
     Shape at scale: one token explode filtered to the query terms
     (tiny posting subset — the filter pushes into the explode
@@ -924,7 +904,7 @@ def bm25_search(
     """
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
-    toks = tokens_col(text)
+    toks = tokens_col()
     # lens feeds the global stats AND the per-doc score join; tf feeds
     # the df aggregate AND the score join — with no ReusedExchange the
     # lazy plan ran FOUR tokenize passes over the corpus (r13:
@@ -966,7 +946,7 @@ def bm25_search(
                 * F.col("tf")
                 / (
                     F.col("tf")
-                    + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+                    + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
                 )
             ).alias("term_score"),
         )
@@ -975,11 +955,11 @@ def bm25_search(
     )
     return (
         scored.orderBy(F.desc("bm25"), F.asc("doc_id"))
-        .limit(top_n)
+        .limit(20)
     )
 
 
-def token_entropy(docs: DataFrame, text: str = "text") -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Per-source Shannon entropy of the token distribution — the
     corpus-diversity signal (near-zero entropy flags template spam /
     boilerplate sources; LLM curation pipelines cut on it next to the
@@ -997,7 +977,7 @@ def token_entropy(docs: DataFrame, text: str = "text") -> DataFrame:
     from taxi_trips_etl_spark.dataprep.dedup import spread
 
     counts = (
-        spread(docs.select("doc_id", "source", tokens_col(text).alias("toks")))
+        spread(docs.select("doc_id", "source", tokens_col().alias("toks")))
         .select("source", F.explode("toks").alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1016,9 +996,7 @@ def token_entropy(docs: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def feature_hash_counts(
-    docs: DataFrame, n_buckets: int = 64, text: str = "text"
-) -> DataFrame:
+def feature_hash_counts(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
     """Hashing-trick featurization (Weinberger et al. 2009): each token
     maps to bucket md5(token) mod ``n_buckets``; a document becomes a
     sparse integer count vector with a FIXED dimensionality — no vocab
@@ -1036,7 +1014,7 @@ def feature_hash_counts(
         % n_buckets
     )
     return (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select("doc_id", F.explode("toks").alias("tok"))
         .groupBy("doc_id", bucket.alias("bucket"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -1047,7 +1025,6 @@ def bigram_lm_topk(
     docs: DataFrame,
     heads: int = 20,
     next_per_head: int = 3,
-    text: str = "text",
 ) -> DataFrame:
     """Corpus bigram language model, summarized: for the ``heads`` most
     frequent head words, the ``next_per_head`` most likely successors
@@ -1064,7 +1041,7 @@ def bigram_lm_topk(
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
     pairs = (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .filter(F.size("toks") >= 2)
         .select(
             F.explode(

@@ -35,12 +35,17 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Shared by the Spark builder and its oracle: multi-char pieces kept in
+# the seed vocabulary and the longest piece.
+TOP_MULTI = 40
+MAX_PIECE_LEN = 4
 
-def _word_counts(docs: DataFrame, text: str) -> DataFrame:
+
+def _word_counts(docs: DataFrame) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
     return (
-        tokens_table(docs, text)
+        tokens_table(docs)
         .select(F.explode("toks").alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("word_n"))
@@ -51,13 +56,12 @@ def unigram_vocab_scores(
     docs: DataFrame,
     top_multi: int = 40,
     max_piece_len: int = 4,
-    text: str = "text",
 ) -> DataFrame:
     """→ (piece, c, score_micro): the seed vocabulary with integer
     micro-nat log probabilities. All single chars are kept (so every
     word is segmentable); multi-char pieces keep the ``top_multi``
     most frequent."""
-    words = _word_counts(docs, text)
+    words = _word_counts(docs)
     # Every (start, len) substring of every distinct word, weighted by
     # the word's corpus frequency — one JVM-side explode over the
     # distinct-word table.
@@ -97,8 +101,6 @@ def unigram_vocab_scores(
 def unigram_viterbi_segment(
     docs: DataFrame,
     top_multi: int = 40,
-    max_piece_len: int = 4,
-    text: str = "text",
 ) -> DataFrame:
     """→ (word, word_n, n_pieces, segmentation, score_micro): the
     maximum-likelihood piece split of every distinct corpus word under
@@ -106,14 +108,14 @@ def unigram_viterbi_segment(
     a space."""
     import pandas as pd  # noqa: F401  (mapInPandas contract)
 
-    vocab_df = unigram_vocab_scores(docs, top_multi, max_piece_len, text)
+    vocab_df = unigram_vocab_scores(docs, top_multi, MAX_PIECE_LEN)
     # Vocab is bounded (alphabet + top_multi): a legitimate driver-side
     # broadcast dim, same pattern as kmeans centroids.
     scores = {
         r["piece"]: int(r["score_micro"]) for r in vocab_df.collect()
     }
-    words = _word_counts(docs, text)
-    max_len = max_piece_len
+    words = _word_counts(docs)
+    max_len = MAX_PIECE_LEN
 
     def _segment(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd

@@ -24,7 +24,7 @@ length.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -32,9 +32,6 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_payload: list[str] | None = None,
 ) -> DataFrame:
     """For every left row, attach the latest right row with
     ``right.ts <= left.ts`` sharing the key columns (left-join
@@ -43,16 +40,14 @@ def asof_join(
     ``right`` must be unique per (key, ts) — pre-aggregate if not, or
     ties make "latest" ill-defined on any engine.
     """
-    right_payload = right_payload or [
-        c for c in right.columns if c not in {*on, right_ts}
-    ]
+    right_payload = [c for c in right.columns if c not in {*on, "ts"}]
     payload_struct = F.struct(
-        F.col(right_ts).alias("__asof_ts"),
+        F.col("ts").alias("__asof_ts"),
         *[F.col(c) for c in right_payload],
     )
     l_tag = left.select(
         *on,
-        F.col(left_ts).alias("__t"),
+        F.col("ts").alias("__t"),
         F.lit(1).alias("__is_left"),
         F.struct(*[F.col(c) for c in left.columns]).alias("__left_row"),
         F.lit(None).cast(
@@ -61,7 +56,7 @@ def asof_join(
     )
     r_tag = right.select(
         *on,
-        F.col(right_ts).alias("__t"),
+        F.col("ts").alias("__t"),
         F.lit(0).alias("__is_left"),
         F.lit(None)
         .cast(left.select(F.struct(*[F.col(c) for c in left.columns])).schema[0].dataType)
@@ -89,7 +84,6 @@ def range_join_points(
     start_ts: str,
     end_ts: str,
     bucket_seconds: int = 7200,
-    extra_condition: Column | None = None,
 ) -> DataFrame:
     """INNER join of point rows to every interval containing them,
     without an equi key, via fixed-width time-bucket equi-join."""
@@ -104,6 +98,4 @@ def range_join_points(
         (F.col(point_ts) >= F.col(start_ts))
         & (F.col(point_ts) <= F.col(end_ts))
     )
-    if extra_condition is not None:
-        cond = cond & extra_condition
     return p.join(iv, "__bucket").filter(cond).drop("__bucket")

@@ -16,7 +16,7 @@ the sorted array of occupied bit positions (m-bounded), built by one
 narrow aggregate over the dim and broadcast to the fact scan, with
 md5-derived double hashing so any engine computes identical bits.
 
-Cost model: the fact side pays ``hashes`` md5 evaluations + binary
+Cost model: the fact side pays ``BLOOM_HASHES`` md5 evaluations + binary
 array probes per row inside the scan's codegen stage; the payoff is
 shuffling only rows that (probably) join — at a 1% match rate a
 m=1024, 2-hash filter passes ~matching + ~2% false positives instead
@@ -27,6 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+BLOOM_BITS = 1024  # m
+BLOOM_HASHES = 2
 
 
 def _bloom_hash(key: Column, i: int, m: int) -> Column:
@@ -50,14 +53,12 @@ def bloom_prefilter(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    m: int = 1024,
-    hashes: int = 2,
 ) -> DataFrame:
     """Return ``fact`` reduced to rows whose key passes the dim-key
     Bloom filter (superset of rows that join; never drops a match).
 
     The filter is represented as the sorted distinct array of occupied
-    positions: ≤ m elements, one aggregate over the dim, broadcast as
+    positions: ≤ BLOOM_BITS elements, one aggregate over the dim, broadcast as
     a 1-row cross join so it rides into the fact scan's filter.
     """
     positions = (
@@ -65,8 +66,8 @@ def bloom_prefilter(
             F.explode(
                 F.array(
                     *[
-                        _bloom_hash(F.col(dim_key), i, m)
-                        for i in range(hashes)
+                        _bloom_hash(F.col(dim_key), i, BLOOM_BITS)
+                        for i in range(BLOOM_HASHES)
                     ]
                 )
             ).alias("p")
@@ -75,9 +76,9 @@ def bloom_prefilter(
     )
     probe = [
         F.array_contains(
-            F.col("_bloom"), _bloom_hash(F.col(fact_key), i, m)
+            F.col("_bloom"), _bloom_hash(F.col(fact_key), i, BLOOM_BITS)
         )
-        for i in range(hashes)
+        for i in range(BLOOM_HASHES)
     ]
     cond = probe[0]
     for c in probe[1:]:

@@ -33,8 +33,10 @@ from taxi_trips_etl_spark.functions.geo import centroid_cell
 from taxi_trips_etl_spark.functions.scalar import daypart
 from taxi_trips_etl_spark.sources.localrel import local_rows
 
+H3_RES = 9  # the reference's H3_FROMGEOGPOINT resolution
 
-def dedup_zones(zones: DataFrame, res: int = 9) -> DataFrame:
+
+def dedup_zones(zones: DataFrame) -> DataFrame:
     """W1+P5: rank-dedup the zone dim, then index centroids to hex cells.
 
     ``byte_length(ST_ASTEXT(geom))`` → ``F.octet_length`` on the WKT
@@ -63,13 +65,13 @@ def dedup_zones(zones: DataFrame, res: int = 9) -> DataFrame:
     )
     return local_rows(
         zones.sparkSession,
-        [(z, centroid_cell(wkt, res)) for z, wkt in deduped.collect()],
+        [(z, centroid_cell(wkt, H3_RES)) for z, wkt in deduped.collect()],
         schema,
     )
 
 
 def enrich_trips(
-    trips: DataFrame, zones: DataFrame, res: int = 9, literal_self_join: bool = False
+    trips: DataFrame, zones: DataFrame, literal_self_join: bool = False
 ) -> DataFrame:
     """J1/J2 (+J3 optionally) + F1: produce the enriched trips table.
 
@@ -77,7 +79,7 @@ def enrich_trips(
     (enrichment_query.py:4-8): daypart, pickup/dropoff timestamps,
     pickup/dropoff location ids, h3_pickup, h3_dropoff.
     """
-    dim = dedup_zones(zones, res)
+    dim = dedup_zones(zones)
     key_cols = [
         "pickup_datetime",
         "dropoff_datetime",

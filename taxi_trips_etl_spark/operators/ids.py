@@ -79,7 +79,6 @@ def assign_prefix_sums(
     order_cols: list[str],
     value_col: str,
     sum_col: str = "running_sum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """→ ``df`` + ``sum_col`` = inclusive running sum of ``value_col``
     by ``order_cols`` — the scalable twin of
@@ -90,11 +89,7 @@ def assign_prefix_sums(
     (broadcast). ``order_cols`` must be a unique key (module
     docstring)."""
     cols = [F.col(c) for c in order_cols]
-    ranged = (
-        df.repartitionByRange(num_partitions, *cols)
-        if num_partitions
-        else df.repartitionByRange(*cols)
-    )
+    ranged = df.repartitionByRange(*cols)
     w_local = (
         Window.partitionBy("__pid")
         .orderBy(*cols)

@@ -19,12 +19,9 @@ from pyspark.sql import functions as F
 
 def merge_overlapping_intervals(
     events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    order_tiebreak: str = "event_id",
     duration_us: int = 300_000_000,
 ) -> DataFrame:
-    """Merge per-``key`` intervals [ts, ts+duration) into islands.
+    """Merge per-``user_id`` intervals [ts, ts+duration) into islands.
 
     An event starts a new island iff its start strictly exceeds the
     max end of ALL earlier intervals (running max — a later-starting
@@ -32,14 +29,14 @@ def merge_overlapping_intervals(
     still covers). Touching intervals (start == previous end) merge,
     matching half-open semantics.
 
-    Returns (key, island_id, start_us, end_us, n_events).
+    Returns (user_id, island_id, start_us, end_us, n_events).
     """
-    w = Window.partitionBy(key).orderBy("t", order_tiebreak)
+    w = Window.partitionBy("user_id").orderBy("t", "event_id")
     e = events.select(
-        key,
-        order_tiebreak,
-        F.unix_micros(F.col(ts)).alias("t"),
-        (F.unix_micros(F.col(ts)) + duration_us).alias("e_end"),
+        "user_id",
+        "event_id",
+        F.unix_micros(F.col("ts")).alias("t"),
+        (F.unix_micros(F.col("ts")) + duration_us).alias("e_end"),
     )
     flagged = e.withColumn(
         "prev_end",
@@ -60,7 +57,7 @@ def merge_overlapping_intervals(
         .over(w.rowsBetween(Window.unboundedPreceding, 0))
         .cast("long"),
     )
-    return islands.groupBy(key, "island_id").agg(
+    return islands.groupBy("user_id", "island_id").agg(
         F.min("t").cast("long").alias("start_us"),
         F.max("e_end").cast("long").alias("end_us"),
         F.count(F.lit(1)).cast("long").alias("n_events"),

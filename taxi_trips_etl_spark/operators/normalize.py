@@ -28,20 +28,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def normalization_predicate(
-    pickup: str = "pickup_datetime",
-    dropoff: str = "dropoff_datetime",
-    passengers: str = "passenger_count",
-    distance: str = "trip_distance",
-    fare: str = "fare_amount",
-) -> Column:
+def normalization_predicate() -> Column:
     return (
-        (F.col(pickup) != F.col(dropoff))
-        & (F.col(passengers) != 0)
-        & F.col(passengers).isNotNull()
-        & (F.col(distance) != 0)
-        & F.col(distance).isNotNull()
-        & (F.col(fare) != 0)
+        (F.col("pickup_datetime") != F.col("dropoff_datetime"))
+        & (F.col("passenger_count") != 0)
+        & F.col("passenger_count").isNotNull()
+        & (F.col("trip_distance") != 0)
+        & F.col("trip_distance").isNotNull()
+        & (F.col("fare_amount") != 0)
     )
 
 

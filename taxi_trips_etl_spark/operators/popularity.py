@@ -16,14 +16,14 @@ any list drop out. That is *intentional* reference behavior
 
 Determinism note: the reference's ``ORDER BY count DESC LIMIT 100``
 selects an arbitrary subset when ties straddle position 100. We instead
-keep every row with ``popularity <= limit`` — identical semantics except
+keep every row with ``popularity <= LIMIT`` — identical semantics except
 at that ambiguous boundary, and fully deterministic (required for the
 DuckDB-oracle hash check).
 
 Scale notes: each groupBy is a partial-agg hash aggregate; the global
 RANK window runs on *post-aggregation* cardinality (≤ distinct cells,
 thousands — a single-partition window there is safe at any fact-table
-scale). The three-way popularity join touches ≤ 3×limit rows.
+scale). The three-way popularity join touches ≤ 3×LIMIT rows.
 """
 
 from __future__ import annotations
@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.materialize import materialize
 from taxi_trips_etl_spark.functions.scalar import route_struct
+
+LIMIT = 100  # the reference's LIMIT 100 per list
 
 
 def ranked_counts(df: DataFrame, keys: list[str], cnt_alias: str, limit: int) -> DataFrame:
@@ -77,14 +79,14 @@ def route_counts(
     )
 
 
-def most_populars(enriched: DataFrame, limit: int = 100) -> DataFrame:
+def most_populars(enriched: DataFrame) -> DataFrame:
     """The flagship result: routes × dropoff-hexes × pickup-hexes by rank.
 
     Output mirrors taxi_trips_etl.py:165-176: ``route`` STRUCT (F8),
     per-list counts, and the shared ``popularity`` rank.
     """
     base = route_counts(enriched, "h3_pickup", "h3_dropoff", "route_count")
-    routes = rank_top(base, "route_count", limit).select(
+    routes = rank_top(base, "route_count", LIMIT).select(
         route_struct(F.col("h3_pickup"), F.col("h3_dropoff")),
         "route_count",
         "popularity",
@@ -92,14 +94,14 @@ def most_populars(enriched: DataFrame, limit: int = 100) -> DataFrame:
     dropoffs = rank_top(
         base.groupBy("h3_dropoff").agg(F.sum("route_count").alias("dropoff_count")),
         "dropoff_count",
-        limit,
+        LIMIT,
     ).select(
         F.col("h3_dropoff").alias("dropoff_hexagon"), "dropoff_count", "popularity"
     )
     pickups = rank_top(
         base.groupBy("h3_pickup").agg(F.sum("route_count").alias("pickup_count")),
         "pickup_count",
-        limit,
+        LIMIT,
     ).select(
         F.col("h3_pickup").alias("pickup_hexagon"), "pickup_count", "popularity"
     )

@@ -24,7 +24,6 @@ def interpolate_gaps(
     key_cols: list[str],
     t_col: str,
     v_col: str,
-    out_col: str = "v_filled",
 ) -> DataFrame:
     """Fill NULL ``v_col`` rows by linear interpolation between the
     nearest non-NULL anchors per key; edge gaps (before the first /
@@ -33,7 +32,7 @@ def interpolate_gaps(
 
     ``t_col`` must be numeric (e.g. an epoch-day integer) — the
     interpolation fraction is (t−t_prev)/(t_next−t_prev) in that unit.
-    Adds ``out_col`` (rounded to 4) and ``was_gap`` (0/1).
+    Adds ``v_filled`` (rounded to 4) and ``was_gap`` (0/1).
     """
     anchor_t = F.when(F.col(v_col).isNotNull(), F.col(t_col))
     w_prev = (
@@ -60,7 +59,7 @@ def interpolate_gaps(
         .when(prev_v.isNotNull(), prev_v)
         .otherwise(next_v)
     )
-    return df.withColumn(out_col, F.round(filled, 4)).withColumn(
+    return df.withColumn("v_filled", F.round(filled, 4)).withColumn(
         "was_gap", F.col(v_col).isNull().cast("long")
     )
 

@@ -28,7 +28,6 @@ def scd2_apply(
     updates: DataFrame,
     key: str,
     attrs: list[str],
-    effective_col: str = "effective_ts",
 ) -> DataFrame:
     """Apply ``updates`` (key, attrs…, effective_ts) to an SCD2 ``dim``
     (key, attrs…, valid_from, valid_to).
@@ -44,7 +43,7 @@ def scd2_apply(
     u = updates.select(
         F.col(key),
         *[F.col(a).alias(f"__u_{a}") for a in attrs],
-        F.col(effective_col).alias("__eff"),
+        F.col("effective_ts").alias("__eff"),
         _attr_hash(attrs).alias("__u_hash"),
     )
     d = dim.withColumn("__hash", _attr_hash(attrs))
@@ -86,8 +85,6 @@ def pit_join(
     fact_key: str,
     fact_ts: str,
     dim_key: str | None = None,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> DataFrame:
     """Point-in-time (temporal) join: each fact row picks the dimension
     VERSION that was valid at its timestamp — the read-side
@@ -104,10 +101,10 @@ def pit_join(
     dk = dim_key or fact_key
     cond = (
         (fact[fact_key] == history[dk])
-        & (fact[fact_ts] >= history[valid_from])
+        & (fact[fact_ts] >= history["valid_from"])
         & (
-            history[valid_to].isNull()
-            | (fact[fact_ts] < history[valid_to])
+            history["valid_to"].isNull()
+            | (fact[fact_ts] < history["valid_to"])
         )
     )
     return fact.join(history, cond)

@@ -49,17 +49,12 @@ def _drop(path: str) -> None:
 def storage_to_bq(spark: SparkSession, sf_dir: str, work_dir: str, **_: object) -> bool:
     """Stage 1 (ShortCircuit semantics, taxi_trips_etl.py:199-207):
     load the day's input into the staging table; False skips the DAG."""
-    from taxi_trips_etl_spark.sources.taxi_testdata import trips_from_lineitem
+    from taxi_trips_etl_spark.sources.taxi_testdata import load_trips
 
-    path = f"{sf_dir}/lineitem.parquet"
-    if not os.path.exists(path):
+    trips = load_trips(spark, sf_dir)
+    if trips is None:
         return False
-    li = spark.read.parquet(path)
-    if li.isEmpty():
-        return False
-    trips_from_lineitem(li).write.mode("overwrite").parquet(
-        _stage_dir(work_dir, "temp_trips")
-    )
+    trips.write.mode("overwrite").parquet(_stage_dir(work_dir, "temp_trips"))
     return True
 
 

@@ -12,9 +12,10 @@ dependency — the DAG can still schedule it by calling :func:`run` /
   taxi_trips_etl.py:84-85,199-207) — a stage returning ``None``
   stops the pipeline;
 - O3 existence-gated stages (taxi_trips_etl.py:88-93,99,128,178);
-- O4 retries (``retries=1``, taxi_trips_etl.py:17-18);
-- O5 per-run plan logging (taxi_trips_etl.py:98,126) — we log the
-  physical plan instead of rendered SQL.
+- O4 one retry per stage (``retries=1``, taxi_trips_etl.py:17-18);
+- O5 per-run plan logging (taxi_trips_etl.py:98,126) — the returned
+  lazy result's ``explain()`` shows the physical plan instead of
+  rendered SQL.
 
 Unlike the reference (4 separate BigQuery jobs with materialized temp
 tables dropped between stages, taxi_trips_etl.py:112,141), stages here
@@ -26,7 +27,6 @@ from __future__ import annotations
 
 import argparse
 import logging
-import os
 import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -35,22 +35,21 @@ from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger(__name__)
 
+RETRIES = 1  # reference default_args retries=1 (taxi_trips_etl.py:17)
+
 
 @dataclass
 class Stage:
     name: str
     fn: Callable[..., Any]  # (ctx) -> DataFrame | None; None short-circuits
-    retries: int = 1  # reference default_args retries=1 (taxi_trips_etl.py:17)
-    retry_delay_s: float = 0.0
-    explain: bool = False  # O5: log physical plan
 
 
 @dataclass
 class Pipeline:
     stages: list[Stage] = field(default_factory=list)
 
-    def add(self, name: str, fn: Callable[..., Any], **kw: Any) -> "Pipeline":
-        self.stages.append(Stage(name, fn, **kw))
+    def add(self, name: str, fn: Callable[..., Any]) -> "Pipeline":
+        self.stages.append(Stage(name, fn))
         return self
 
     def run(self, ctx: dict[str, Any]) -> dict[str, Any]:
@@ -60,24 +59,14 @@ class Pipeline:
             while True:
                 try:
                     t0 = time.monotonic()
-                    out = stage.fn(ctx)
-                    ctx[stage.name] = out
-                    if stage.explain and isinstance(out, DataFrame):
-                        import contextlib
-                        import io
-
-                        buf = io.StringIO()
-                        with contextlib.redirect_stdout(buf):
-                            out.explain("formatted")
-                        log.info("plan[%s]:\n%s", stage.name, buf.getvalue())
+                    ctx[stage.name] = stage.fn(ctx)
                     log.info("stage %s ok in %.2fs", stage.name, time.monotonic() - t0)
                     break
                 except Exception:
                     attempt += 1
-                    if attempt > stage.retries:
+                    if attempt > RETRIES:
                         raise
                     log.exception("stage %s failed; retry %d", stage.name, attempt)
-                    time.sleep(stage.retry_delay_s)
             if ctx[stage.name] is None:
                 log.info("stage %s returned None → short-circuit", stage.name)
                 break
@@ -89,7 +78,6 @@ def run_taxi_pipeline(
     sf_dir: str,
     out_path: str | None = None,
     ds: str = "2026-01-01",
-    limit: int = 100,
 ) -> DataFrame | None:
     """The full 4-stage flagship pipeline over driver testdata.
 
@@ -118,21 +106,11 @@ def run_taxi_pipeline(
         most_populars,
         normalize_trips,
     )
-    from taxi_trips_etl_spark.sources.taxi_testdata import (
-        trips_from_lineitem,
-        zone_dim,
-    )
+    from taxi_trips_etl_spark.sources.taxi_testdata import load_trips, zone_dim
     from taxi_trips_etl_spark.sources.writers import write_partitioned_by_run_date
 
     def load(ctx: dict[str, Any]):
-        # O2 gate (taxi_trips_etl.py:84-85): nothing to load → short-
-        # circuit cleanly, both for a missing path and for zero rows.
-        path = f"{sf_dir}/lineitem.parquet"
-        if not os.path.exists(path):
-            log.info("no input at %s → short-circuit", path)
-            return None
-        li = spark.read.parquet(path)
-        return trips_from_lineitem(li) if not li.isEmpty() else None
+        return load_trips(spark, sf_dir)
 
     def normalize(ctx: dict[str, Any]):
         return normalize_trips(ctx["load"])
@@ -144,7 +122,7 @@ def run_taxi_pipeline(
         return enrich_trips(ctx["normalize"], zone_dim(spark))
 
     def final(ctx: dict[str, Any]):
-        result = most_populars(ctx["enrich"], limit=limit)
+        result = most_populars(ctx["enrich"])
         if out_path:
             write_partitioned_by_run_date(result, out_path, ds)
         return result

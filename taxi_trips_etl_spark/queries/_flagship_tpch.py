@@ -617,7 +617,7 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.text import dsir_importance_weights
 
     return dsir_importance_weights(
-        _t(spark, sf_dir, "documents"), target_source="src0"
+        _t(spark, sf_dir, "documents")
     )
 
 
@@ -643,7 +643,7 @@ def q_unigram_logprob_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     see dataprep/text.py:unigram_logprob_score."""
     from taxi_trips_etl_spark.dataprep.text import unigram_logprob_score
 
-    return unigram_logprob_score(_t(spark, sf_dir, "documents"), n_buckets=4)
+    return unigram_logprob_score(_t(spark, sf_dir, "documents"))
 
 
 _SESSION_WINDOW_SQL = """
@@ -809,9 +809,7 @@ def _pca4_oracle() -> str:
         power_iteration_pca_oracle_sql,
     )
 
-    return power_iteration_pca_oracle_sql(
-        dim=64, n_components=4, iterations=12
-    )
+    return power_iteration_pca_oracle_sql()
 
 
 @register("embedding_pca_project", _pca4_oracle())
@@ -828,7 +826,7 @@ def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.pca_power import power_iteration_pca
 
     emb = _t(spark, sf_dir, "embeddings")
-    return power_iteration_pca(emb, n_components=4, iterations=12)
+    return power_iteration_pca(emb)
 
 
 @register(
@@ -1247,7 +1245,7 @@ def q_bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.text import bm25_search
 
     return bm25_search(
-        _t(spark, sf_dir, "documents"), list(_BM25_TERMS), top_n=20
+        _t(spark, sf_dir, "documents"), list(_BM25_TERMS)
     )
 
 

@@ -528,7 +528,7 @@ def q_explode_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explode (lateral view) + aggregate: corpus token frequencies."""
     docs = _t(spark, sf_dir, "documents")
     return (
-        docs.select("doc_id", F.explode(dedup.tokens_col("text")).alias("tok"))
+        docs.select("doc_id", F.explode(dedup.tokens_col()).alias("tok"))
         .groupBy("tok")
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -181,19 +181,19 @@ def _populars_flat(cells: DataFrame) -> DataFrame:
     (sum of route counts ≡ direct count — routes partition the trips),
     instead of each branch re-running the whole normalize spine
     (operators/popularity.route_counts; guide §2.4)."""
-    from taxi_trips_etl_spark.operators.popularity import rank_top, route_counts
+    from taxi_trips_etl_spark.operators.popularity import LIMIT, rank_top, route_counts
 
     base = route_counts(cells, "pickup_cell", "dropoff_cell", "route_count")
-    routes = rank_top(base, "route_count", 100)
+    routes = rank_top(base, "route_count", LIMIT)
     drops = rank_top(
         base.groupBy("dropoff_cell").agg(F.sum("route_count").alias("dropoff_count")),
         "dropoff_count",
-        100,
+        LIMIT,
     )
     picks = rank_top(
         base.groupBy("pickup_cell").agg(F.sum("route_count").alias("pickup_count")),
         "pickup_count",
-        100,
+        LIMIT,
     )
     return (
         routes.select(

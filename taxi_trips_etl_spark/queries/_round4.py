@@ -547,8 +547,9 @@ def q_embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantize_int8(_t(spark, sf_dir, "embeddings"))
 
 
-def _pagerank_oracle(iters: int = 10) -> str:
-    total = 10**12
+def _pagerank_oracle() -> str:
+    from taxi_trips_etl_spark.dataprep.graph import ITERS, TOTAL
+
     head = f"""
     WITH reps AS (
         SELECT o.o_custkey, o.o_orderkey, o.o_orderdate,
@@ -571,13 +572,13 @@ def _pagerank_oracle(iters: int = 10) -> str:
     params AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
     deg AS (SELECT src, CAST(count(*) AS BIGINT) AS d
             FROM edges GROUP BY src),
-    r0 AS (SELECT node, {total} // (SELECT n FROM params) AS r FROM nodes)"""
+    r0 AS (SELECT node, {TOTAL} // (SELECT n FROM params) AS r FROM nodes)"""
     steps = []
-    for k in range(1, iters + 1):
+    for k in range(1, ITERS + 1):
         steps.append(f"""
     r{k} AS (
         SELECT n.node,
-               (15 * {total}) // (100 * (SELECT n FROM params))
+               (15 * {TOTAL}) // (100 * (SELECT n FROM params))
                + (85 * COALESCE(s.insum, 0)) // 100 AS r
         FROM nodes n LEFT JOIN (
             SELECT e.dst AS node, SUM(r.r // d.d) AS insum
@@ -592,12 +593,12 @@ def _pagerank_oracle(iters: int = 10) -> str:
         + ","
         + ",".join(steps)
         + f"""
-    SELECT node, CAST(r AS BIGINT) AS rank_e12 FROM r{iters}
+    SELECT node, CAST(r AS BIGINT) AS rank_e12 FROM r{ITERS}
     """
     )
 
 
-@register("graph_pagerank", _pagerank_oracle(10))
+@register("graph_pagerank", _pagerank_oracle())
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (dataprep/graph.py) over the supplier-transition graph
     (per customer, consecutive orders' representative suppliers form a
@@ -612,7 +613,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     round."""
     from taxi_trips_etl_spark.dataprep.graph import pagerank_auto
 
-    return pagerank_auto(supplier_transition_edges(spark, sf_dir), iters=10)
+    return pagerank_auto(supplier_transition_edges(spark, sf_dir))
 
 
 def supplier_transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,6 +760,6 @@ def q_fuzzy_match_fastss2(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    return dedup.fastss_pairs(c, "c_custkey", "c_name", max_dist=2)
+    return dedup.fastss_pairs(c, max_dist=2)
 
 

@@ -114,7 +114,6 @@ def q_weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         F.round(F.col("c_acctbal") * 100),
         k=100,
-        salt="wps",
     )
 
 
@@ -1100,7 +1099,7 @@ def q_source_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         # at 20 tasks (the tokens_table docstring trap).
         dedup.spread(
             docs.select(
-                "doc_id", "source", dedup.tokens_col("text").alias("toks")
+                "doc_id", "source", dedup.tokens_col().alias("toks")
             )
         )
         .select("source", F.explode("toks").alias("tok"))

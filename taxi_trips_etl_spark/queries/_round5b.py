@@ -117,7 +117,7 @@ def q_vocab_top_p_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences (dataprep/collocations.py:vocab_top_p). Integer-exact
     cutoff; the global window runs on the aggregated vocab only."""
     return vocab_top_p(
-        _t(spark, sf_dir, "documents"), p_num=1, p_den=2
+        _t(spark, sf_dir, "documents")
     )
 
 

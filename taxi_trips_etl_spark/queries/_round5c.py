@@ -311,7 +311,9 @@ def q_incremental_rollup_merge(
     )
 
 
-def _bfs_oracle(rounds: int = 10) -> str:
+def _bfs_oracle() -> str:
+    from taxi_trips_etl_spark.dataprep.graph import ROUNDS
+
     head = (
         "WITH " + _KCORE_EDGES_SQL.replace(
             "e0 AS (SELECT a, b FROM canon UNION ALL SELECT b, a FROM canon)",
@@ -322,7 +324,7 @@ def _bfs_oracle(rounds: int = 10) -> str:
         )
     )
     ctes = []
-    for r in range(1, rounds + 1):
+    for r in range(1, ROUNDS + 1):
         ctes.append(f"""
     d{r} AS MATERIALIZED (
         SELECT node, CAST(min(hops) AS BIGINT) AS hops FROM (
@@ -333,11 +335,11 @@ def _bfs_oracle(rounds: int = 10) -> str:
         ) GROUP BY node
     )""")
     return head + "," + ",".join(ctes) + f"""
-    SELECT node, hops FROM d{rounds}
+    SELECT node, hops FROM d{ROUNDS}
     """
 
 
-@register("graph_bfs_hops", _bfs_oracle(10))
+@register("graph_bfs_hops", _bfs_oracle())
 def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unit-weight SSSP (BFS hop counts) from the lowest supplier node
     over the DIRECTED transition graph (dataprep/graph.py:bfs_hops) —
@@ -368,7 +370,7 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = edges.agg(
         F.min(F.least("src", "dst")).alias("s")
     ).collect()[0]["s"]
-    return bfs_hops(edges, source_node=int(source), rounds=10)
+    return bfs_hops(edges, source_node=int(source))
 
 
 @register(
@@ -508,7 +510,9 @@ def q_snapshot_diff_customers(
     )
 
 
-def _sssp_oracle(rounds: int = 10) -> str:
+def _sssp_oracle() -> str:
+    from taxi_trips_etl_spark.dataprep.graph import ROUNDS
+
     head = (
         "WITH " + _KCORE_EDGES_SQL.replace(
             "e0 AS (SELECT a, b FROM canon UNION ALL SELECT b, a FROM canon)",
@@ -522,7 +526,7 @@ def _sssp_oracle(rounds: int = 10) -> str:
         )
     )
     ctes = []
-    for r in range(1, rounds + 1):
+    for r in range(1, ROUNDS + 1):
         ctes.append(f"""
     d{r} AS MATERIALIZED (
         SELECT node, CAST(min(dist) AS BIGINT) AS dist FROM (
@@ -533,11 +537,11 @@ def _sssp_oracle(rounds: int = 10) -> str:
         ) GROUP BY node
     )""")
     return head + "," + ",".join(ctes) + f"""
-    SELECT node, dist FROM d{rounds}
+    SELECT node, dist FROM d{ROUNDS}
     """
 
 
-@register("graph_shortest_paths", _sssp_oracle(10))
+@register("graph_shortest_paths", _sssp_oracle())
 def q_graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bellman-Ford from the lowest supplier node over the directed
     transition graph with deterministic integer weights
@@ -568,7 +572,7 @@ def q_graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = edges.agg(
         F.min(F.least("src", "dst")).alias("s")
     ).collect()[0]["s"]
-    return shortest_paths(edges, source_node=int(source), rounds=10)
+    return shortest_paths(edges, source_node=int(source))
 
 
 from taxi_trips_etl_spark.queries._registry import (  # noqa: E402

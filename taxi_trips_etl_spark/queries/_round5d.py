@@ -32,7 +32,6 @@ def _kmv_oracle() -> str:
         "SELECT event_type, user_id FROM events",
         set_col="event_type",
         value_col="user_id",
-        k=256,
     )
 
 
@@ -50,7 +49,7 @@ def q_kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events(spark, sf_dir)
     return kmv_pairwise_overlap(
-        ev, set_col="event_type", value_col="user_id", k=256
+        ev, set_col="event_type", value_col="user_id"
     )
 
 
@@ -277,7 +276,7 @@ def q_duplicated_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.substring import duplicated_spans
 
     docs = _t(spark, sf_dir, "documents")
-    return duplicated_spans(docs, w=8, min_len=12, max_postings=20)
+    return duplicated_spans(docs, min_len=12, max_postings=20)
 
 
 def _hard_negative_oracle() -> str:
@@ -417,7 +416,7 @@ def _pca_power_oracle() -> str:
         power_iteration_oracle_sql,
     )
 
-    return power_iteration_oracle_sql(dim=64, iterations=12)
+    return power_iteration_oracle_sql()
 
 
 @register("pca_power_projection", _pca_power_oracle())
@@ -429,6 +428,4 @@ def q_pca_power_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory through a recursive CTE and hash-matches bit-exactly."""
     from taxi_trips_etl_spark.dataprep.pca_power import power_iteration_pc1
 
-    return power_iteration_pc1(
-        _t(spark, sf_dir, "embeddings"), iterations=12
-    )
+    return power_iteration_pc1(_t(spark, sf_dir, "embeddings"))

@@ -32,7 +32,7 @@ _WORDS_SQL = f"""
 def _cms_oracle() -> str:
     from taxi_trips_etl_spark.dataprep.cms import cms_oracle_sql
 
-    return cms_oracle_sql(_WORDS_SQL, probe_top_n=20)
+    return cms_oracle_sql(_WORDS_SQL)
 
 
 @register("cms_token_counts", _cms_oracle())
@@ -51,7 +51,7 @@ def q_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kn_oracle() -> str:
     from taxi_trips_etl_spark.dataprep.lm import kneser_ney_oracle_sql
 
-    return kneser_ney_oracle_sql(TOKS_SQL, heads=20, next_per_head=3)
+    return kneser_ney_oracle_sql(TOKS_SQL)
 
 
 @register("kneser_ney_bigram", _kn_oracle())
@@ -63,9 +63,7 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer numerators, never floats)."""
     from taxi_trips_etl_spark.dataprep.lm import kneser_ney_bigram_topk
 
-    return kneser_ney_bigram_topk(
-        _t(spark, sf_dir, "documents"), heads=20, next_per_head=3
-    )
+    return kneser_ney_bigram_topk(_t(spark, sf_dir, "documents"))
 
 
 def _tfidf_cos_oracle() -> str:
@@ -107,7 +105,7 @@ def _skipgram_oracle() -> str:
         skipgram_oracle_sql,
     )
 
-    return skipgram_oracle_sql(TOKS_SQL, max_offset=3, top_pairs=100)
+    return skipgram_oracle_sql(TOKS_SQL)
 
 
 @register("skipgram_cooccurrence", _skipgram_oracle())
@@ -122,7 +120,7 @@ def q_skipgram_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return skipgram_cooccurrence(
-        _t(spark, sf_dir, "documents"), max_offset=3, top_pairs=100
+        _t(spark, sf_dir, "documents")
     )
 
 
@@ -131,9 +129,7 @@ def _trunc_oracle() -> str:
         truncation_recall_oracle_sql,
     )
 
-    return truncation_recall_oracle_sql(
-        dims=(16, 32), k=10, query_ids_below=20
-    )
+    return truncation_recall_oracle_sql()
 
 
 @register("embedding_truncation_recall", _trunc_oracle())
@@ -147,9 +143,4 @@ def q_embedding_truncation_recall(
     to ann_recall_at_k's IVF check."""
     from taxi_trips_etl_spark.dataprep.similarity import truncation_recall
 
-    return truncation_recall(
-        _t(spark, sf_dir, "embeddings"),
-        dims=(16, 32),
-        k=10,
-        query_ids_below=20,
-    )
+    return truncation_recall(_t(spark, sf_dir, "embeddings"))

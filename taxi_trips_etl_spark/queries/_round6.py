@@ -66,7 +66,6 @@ def q_boilerplate_chunk_removal(
         _t(spark, sf_dir, "documents"),
         chunk_tokens=2,
         df_divisor=20,
-        df_floor=3,
     )
 
 
@@ -75,7 +74,7 @@ def _kn_xent_oracle() -> str:
         kneser_ney_doc_xent_oracle_sql,
     )
 
-    return kneser_ney_doc_xent_oracle_sql(TOKS_SQL, keep_below=3.5)
+    return kneser_ney_doc_xent_oracle_sql(TOKS_SQL)
 
 
 @register("kn_doc_xent_filter", _kn_xent_oracle())
@@ -89,9 +88,7 @@ def q_kn_doc_xent_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of two exact integers."""
     from taxi_trips_etl_spark.dataprep.lm import kneser_ney_doc_xent
 
-    return kneser_ney_doc_xent(
-        _t(spark, sf_dir, "documents"), keep_below=3.5
-    )
+    return kneser_ney_doc_xent(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -350,7 +347,7 @@ def q_hard_negative_mining_ivf(
     )
 
     return hard_negative_topk_ivf(
-        _t(spark, sf_dir, "embeddings"), n_centroids=8, nprobe=2, k=2
+        _t(spark, sf_dir, "embeddings"), n_centroids=8, nprobe=2
     )
 
 
@@ -499,10 +496,7 @@ def q_dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return weighted_minhash_pairs(
         _t(spark, sf_dir, "documents"),
-        cap=2,
-        ngram=2,
         min_wjacc_milli=250,
-        max_bucket_size=50,
     )
 
 
@@ -685,7 +679,7 @@ def _rouge_oracle() -> str:
     from taxi_trips_etl_spark.queries._registry import GRAMS_SQL
 
     return rouge_l_oracle_sql(
-        TOKS_SQL, GRAMS_SQL, jaccard_threshold=0.7, limit_pairs=12
+        TOKS_SQL, GRAMS_SQL, jaccard_threshold=0.7
     )
 
 
@@ -707,7 +701,6 @@ def q_rouge_l_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rouge_l_pairs(
         _t(spark, sf_dir, "documents"),
         jaccard_threshold=0.7,
-        limit_pairs=12,
     )
 
 
@@ -766,7 +759,6 @@ def q_sampled_range_partition_plan(
         _t(spark, sf_dir, "lineitem"),
         key="l_orderkey",
         n_partitions=16,
-        sample_mod=10,
         tiebreak="l_linenumber",
     )
 

@@ -9,7 +9,9 @@ from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.queries._registry import TOKS_SQL, _t, register
 from taxi_trips_etl_spark.queries._mm_streaming import _km_assign, _km_update
+from taxi_trips_etl_spark.dataprep.unigram_tok import MAX_PIECE_LEN, TOP_MULTI
 
+MAX_WORD = 8  # longest word the unrolled Viterbi oracle segments
 _EN_STOP_SQL = "('the', 'a', 'of', 'and', 'is', 'to')"
 
 # Within-cluster cosine on the kmeans-final assignment, replaying the
@@ -237,19 +239,18 @@ def q_bucketed_colocated_join(
     )
 
 
-def _viterbi_oracle(
-    top_multi: int = 40, max_piece: int = 4, max_word: int = 8
-) -> str:
+def _viterbi_oracle() -> str:
     """Unrolled Viterbi DP replay (the bpe_learn_merges technique):
     d_i holds, per word, the best integer-micro-nat score reaching
     character position i and the piece path that achieves it; each
-    stage is a row_number argmax over the <= max_piece predecessor
+    stage is a row_number argmax over the <= MAX_PIECE_LEN predecessor
     stages. MATERIALIZED throughout — DuckDB inlines CTEs, and the
-    stage fan-in is exponential without it."""
+    stage fan-in is exponential without it. Words of up to ``MAX_WORD``
+    characters are segmented."""
     stages = []
-    for i in range(1, max_word + 1):
+    for i in range(1, MAX_WORD + 1):
         prevs = " UNION ALL ".join(
-            f"SELECT * FROM d{j}" for j in range(max(0, i - max_piece), i)
+            f"SELECT * FROM d{j}" for j in range(max(0, i - MAX_PIECE_LEN), i)
         )
         stages.append(f"""
 d{i} AS MATERIALIZED (
@@ -266,7 +267,7 @@ d{i} AS MATERIALIZED (
   ) WHERE rn = 1
 )""")
     alld = " UNION ALL ".join(
-        f"SELECT * FROM d{i}" for i in range(1, max_word + 1)
+        f"SELECT * FROM d{i}" for i in range(1, MAX_WORD + 1)
     )
     return f"""
 WITH toks AS MATERIALIZED (SELECT {TOKS_SQL} AS t FROM documents),
@@ -278,7 +279,7 @@ subs AS MATERIALIZED (
   SELECT substring(word, s, l) AS piece, CAST(sum(word_n) AS BIGINT) AS c
   FROM words,
        UNNEST(generate_series(1, len(word))) AS ss(s),
-       UNNEST(generate_series(1, least({max_piece}, len(word) - s + 1)))
+       UNNEST(generate_series(1, least({MAX_PIECE_LEN}, len(word) - s + 1)))
            AS ll(l)
   GROUP BY 1
 ),
@@ -287,7 +288,7 @@ vraw AS MATERIALIZED (
   UNION ALL
   SELECT piece, c FROM (
     SELECT piece, c FROM subs WHERE len(piece) >= 2
-    ORDER BY c DESC, piece LIMIT {top_multi})
+    ORDER BY c DESC, piece LIMIT {TOP_MULTI})
 ),
 vocab AS MATERIALIZED (
   SELECT piece, c,

@@ -249,7 +249,7 @@ def q_cross_shard_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     s = docs.select(
-        F.md5(F.array_join(F.slice(tokens_col("text"), 1, 12), " ")).alias("sig"),
+        F.md5(F.array_join(F.slice(tokens_col(), 1, 12), " ")).alias("sig"),
         (
             F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
             .cast("long")

@@ -26,7 +26,7 @@ from taxi_trips_etl_spark.queries._round4 import (
 )
 
 
-@register("graph_pagerank_distributed", _pagerank_oracle(10))
+@register("graph_pagerank_distributed", _pagerank_oracle())
 def q_graph_pagerank_distributed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -40,7 +40,7 @@ def q_graph_pagerank_distributed(
     from taxi_trips_etl_spark.dataprep.graph import pagerank_auto
 
     return pagerank_auto(
-        supplier_transition_edges(spark, sf_dir), iters=10, driver_edge_cap=0
+        supplier_transition_edges(spark, sf_dir), driver_edge_cap=0
     )
 
 

@@ -26,18 +26,20 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+FILE_PREFIX = "000"  # the reference's blob-name prefix (constants.py:28-29)
 
-def day_glob(base: str, ds: str, file_prefix: str = "000") -> str:
+
+def day_glob(base: str, ds: str) -> str:
     """Path glob for one day's files: ``base/YYYY/MM/DD/000*``.
 
     Mirrors the reference's prefix filter (taxi_trips_etl.py:33-35,
     constants.py:28-29) as a glob the scan can consume directly.
     """
     y, m, d = ds.split("-")
-    return os.path.join(base, y, m, d, f"{file_prefix}*")
+    return os.path.join(base, y, m, d, f"{FILE_PREFIX}*")
 
 
-def list_day_files(base: str, ds: str, file_prefix: str = "000") -> list[str]:
+def list_day_files(base: str, ds: str) -> list[str]:
     """Driver-side listing used only for the short-circuit gate (O2).
 
     The *data* path never uses this — reads go through :func:`day_glob`
@@ -45,7 +47,7 @@ def list_day_files(base: str, ds: str, file_prefix: str = "000") -> list[str]:
     anything to process today?" like the reference's
     ShortCircuitOperator (taxi_trips_etl.py:84-85, 199-207).
     """
-    return sorted(_glob.glob(day_glob(base, ds, file_prefix)))
+    return sorted(_glob.glob(day_glob(base, ds)))
 
 
 # Zone ids whose wall-clock semantics are identical to UTC — a session
@@ -99,8 +101,8 @@ def require_nanos_as_long(spark, what: str = "event-time readers") -> None:
         )
 
 
-def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to session-local TIMESTAMP no matter
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize the ``ts`` event-time column to session-local TIMESTAMP no matter
     how the parquet footer typed it across testdata generations:
 
     - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; with
@@ -134,48 +136,40 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 
     spark = df.sparkSession
     require_utc_session(spark, what="normalize_event_ts")
-    t = dict(df.dtypes).get(ts_col)
+    t = dict(df.dtypes).get("ts")
     if t == "bigint":
         nanos_as_long = spark.conf.get(
             "spark.sql.legacy.parquet.nanosAsLong", "false"
         )
         if str(nanos_as_long).lower() != "true":
             raise ValueError(
-                f"normalize_event_ts: column {ts_col!r} is bigint but "
+                "normalize_event_ts: column 'ts' is bigint but "
                 "spark.sql.legacy.parquet.nanosAsLong is not set; cannot "
                 "tell nanos from a plain integer column. Build the session "
                 "via taxi_trips_etl_spark.session.get_spark()."
             )
-        df = df.withColumn(
-            ts_col, F.timestamp_micros(F.expr(f"`{ts_col}` div 1000"))
-        )
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("`ts` div 1000")))
     elif t == "timestamp_ntz":
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
-def read_parquet(
-    spark: SparkSession, path: str | list[str], schema: StructType | None = None
-) -> DataFrame:
-    """S2: parquet load; schema comes from the footer unless forced."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(*(path if isinstance(path, list) else [path]))
+def read_parquet(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """S2: parquet load; the schema comes from the footer."""
+    return spark.read.parquet(*(path if isinstance(path, list) else [path]))
 
 
 def read_csv(
     spark: SparkSession,
     path: str | list[str],
     schema: StructType | None = None,
-    header: bool = True,
 ) -> DataFrame:
     """S3: CSV with header-skip + autodetect-or-explicit schema.
 
     ``skip_leading_rows=1`` (taxi_trips_etl.py:45) ≡ ``header=True``;
     ``autodetect=True`` (taxi_trips_etl.py:47-51) ≡ ``inferSchema``.
     """
-    reader = spark.read.option("header", header)
+    reader = spark.read.option("header", True)
     if schema is not None:
         reader = reader.schema(schema)
     else:
@@ -187,22 +181,14 @@ def read_day_batch(
     spark: SparkSession,
     base: str,
     ds: str,
-    fmt: str = "parquet",
-    schema: StructType | None = None,
-    file_prefix: str = "000",
 ) -> DataFrame:
-    """S1+S2/S3 composed: one scan over the day's matched files.
+    """S1+S2 composed: one parquet scan over the day's matched files.
 
     The reference loads each file with its own BigQuery job, first
     TRUNCATE then APPEND (taxi_trips_etl.py:36-40, 77-80). One globbed
     scan has identical table semantics and parallelizes per-file.
     """
-    path = day_glob(base, ds, file_prefix)
-    if fmt == "parquet":
-        return read_parquet(spark, path, schema)
-    if fmt == "csv":
-        return read_csv(spark, path, schema)
-    raise ValueError(f"unsupported format: {fmt}")
+    return read_parquet(spark, day_glob(base, ds))
 
 
 def read_jsonl(spark, path: str, schema=None):

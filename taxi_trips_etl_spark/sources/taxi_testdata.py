@@ -24,10 +24,28 @@ over the scan.
 
 from __future__ import annotations
 
+import logging
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+log = logging.getLogger(__name__)
+
 N_ZONES = 48
+
+
+def load_trips(spark: SparkSession, sf_dir: str) -> DataFrame | None:
+    """Stage 1 input: the trips fact table derived from
+    ``sf_dir/lineitem.parquet``, or ``None`` when there is nothing to
+    load — a missing path or zero rows (the O2 short-circuit,
+    taxi_trips_etl.py:84-85,199-207)."""
+    path = f"{sf_dir}/lineitem.parquet"
+    if not os.path.exists(path):
+        log.info("no input at %s → short-circuit", path)
+        return None
+    li = spark.read.parquet(path)
+    return trips_from_lineitem(li) if not li.isEmpty() else None
 
 
 def trips_from_lineitem(lineitem: DataFrame) -> DataFrame:
@@ -82,7 +100,7 @@ def _zone_wkt(zone_id: int, detailed: bool) -> str:
     return f"POLYGON(({body}))"
 
 
-def zone_dim(spark: SparkSession, n_zones: int = N_ZONES) -> DataFrame:
+def zone_dim(spark: SparkSession) -> DataFrame:
     """taxi_zone_geom analogue (FIXTURES.md §A2): zone_id + WKT geometry.
 
     Every 5th zone appears twice — once as a plain square and once as a
@@ -91,7 +109,7 @@ def zone_dim(spark: SparkSession, n_zones: int = N_ZONES) -> DataFrame:
     geometries do (enrichment_query.py:12-14).
     """
     rows = []
-    for z in range(n_zones):
+    for z in range(N_ZONES):
         rows.append((z, _zone_wkt(z, detailed=False)))
         if z % 5 == 0:
             rows.append((z, _zone_wkt(z, detailed=True)))

@@ -36,7 +36,6 @@ def run_streaming_dedup_watermark(
     checkpoint_path: str,
     keys: list[str] | None = None,
     delay: str = "3650 days",
-    state_partitions: int = 8,
 ) -> None:
     """Drain ``source_path`` (AvailableNow, one file per micro-batch)
     dropping re-delivered events by ``keys`` within ``delay``, appending
@@ -47,7 +46,7 @@ def run_streaming_dedup_watermark(
     deduplicated; a real deployment sets it to the transport's maximum
     redelivery lag (minutes), which is what bounds the state store.
 
-    ``state_partitions`` pins the dedup state store width for the
+    Eight state partitions pin the dedup state store width for the
     drain (round 9): dropDuplicates state commits cost n_partitions ×
     n_batches regardless of row count, and this drain is exactly 2
     batches — unpinned, the state ran at the batch engine's 32
@@ -71,5 +70,5 @@ def run_streaming_dedup_watermark(
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append"),
-        partitions=state_partitions,
+        partitions=8,
     )

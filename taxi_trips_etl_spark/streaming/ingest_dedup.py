@@ -51,10 +51,9 @@ def dedup_batch_against_index(
     batch: DataFrame,
     index_path: str,
     clean_path: str,
-    text: str = "text",
 ) -> None:
     """The foreachBatch body (callable directly for batch backfills)."""
-    b = lsh_bands(minhash_signature(batch, text)).transform(materialize, eager=True)
+    b = lsh_bands(minhash_signature(batch)).transform(materialize, eager=True)
     if _index_exists(spark, index_path):
         idx = spark.read.parquet(index_path)
         all_b = idx.unionByName(b)
@@ -85,7 +84,6 @@ def run_streaming_ingest_dedup(
     index_path: str,
     clean_path: str,
     checkpoint_path: str,
-    text: str = "text",
 ) -> None:
     """Ingest a document directory as a stream (AvailableNow — drains
     what exists, then stops; swap the trigger for continuous runs) and
@@ -97,7 +95,7 @@ def run_streaming_ingest_dedup(
         spark,
         stream.writeStream.foreachBatch(
             lambda df, _epoch: dedup_batch_against_index(
-                df.sparkSession, df, index_path, clean_path, text
+                df.sparkSession, df, index_path, clean_path
             )
         ).option("checkpointLocation", checkpoint_path),
     )

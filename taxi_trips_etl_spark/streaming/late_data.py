@@ -51,9 +51,8 @@ def windowed_counts_stream(
     spark: SparkSession,
     staged_dir: str,
     schema,
-    delay: str = "1 hour",
 ) -> DataFrame:
-    """Per-(day window, event_type) counts with watermark ``delay``.
+    """Per-(day window, event_type) counts with a 1-hour watermark delay.
 
     NO pre-aggregation heartbeat filter: Catalyst pushes any filter
     below the EventTimeWatermark node into the parquet scan, so a
@@ -61,13 +60,13 @@ def windowed_counts_stream(
     the watermark would stall (measured: day-3 windows never flushed).
     The heartbeat instead joins the aggregation as its own far-future
     window group — which append mode can never emit, because the
-    final watermark (heartbeat ts − delay) never passes that window's
+    final watermark (heartbeat ts − 1 hour) never passes that window's
     end. State holds one extra row; output holds none."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(staged_dir)
-        .withWatermark("ts", delay)
+        .withWatermark("ts", "1 hour")
     )
     return stream.groupBy(
         F.window("ts", "1 day").alias("w"), F.col("event_type")
@@ -80,7 +79,6 @@ def run_late_data_drain(
     schema,
     out_path: str,
     checkpoint_path: str,
-    state_partitions: int = 2,
 ) -> None:
     """Append-mode drain of the staged 3-batch sequence, with the
     state-store width pinned by ``streaming.state.state_partitions``."""
@@ -91,7 +89,7 @@ def run_late_data_drain(
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append"),
-        partitions=state_partitions,
+        partitions=2,
     )
 
 

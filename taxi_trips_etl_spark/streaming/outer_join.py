@@ -35,12 +35,15 @@ from pyspark.sql import functions as F
 from taxi_trips_etl_spark.streaming.state import drain
 from taxi_trips_etl_spark.streaming.stream_join import WINDOW_HOURS
 
+WATERMARK_DELAY = "1 hour"  # both join sides
+
 
 def _attribution_join(
-    spark: SparkSession, staged_dir: str, schema, how: str, delay: str
+    spark: SparkSession, staged_dir: str, schema, how: str
 ) -> DataFrame:
     """Purchases joined (``how``) to the same user's clicks from the
-    preceding ``WINDOW_HOURS``; both sides watermarked by ``delay``
+    preceding ``WINDOW_HOURS``; both sides watermarked by
+    ``WATERMARK_DELAY``
     and read one staged file per trigger."""
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
@@ -53,7 +56,7 @@ def _attribution_join(
                 F.col("event_id").alias(f"{prefix}_id"),
                 F.col("ts").alias(f"{prefix}_ts"),
             )
-            .withWatermark(f"{prefix}_ts", delay)
+            .withWatermark(f"{prefix}_ts", WATERMARK_DELAY)
         )
 
     return side("purchase", "p").join(
@@ -93,16 +96,14 @@ def _drain_to_parquet(
 
 
 def purchases_without_clicks_stream(
-    spark: SparkSession, staged_dir: str, schema, delay: str = "1 hour"
+    spark: SparkSession, staged_dir: str, schema
 ) -> DataFrame:
     """Streaming DF: every purchase joined LEFT OUTER to the clicks
     that preceded it within ``WINDOW_HOURS`` (NULL click columns when
     none did). ``staged_dir`` holds NORMALIZED-timestamp parquet (the
     staging step runs normalize_event_ts before writing, so the
     file-stream schema carries a plain TIMESTAMP)."""
-    return _attribution_join(
-        spark, staged_dir, schema, "left_outer", delay
-    ).select(
+    return _attribution_join(spark, staged_dir, schema, "left_outer").select(
         F.col("p_user").alias("user_id"),
         F.col("p_id").alias("purchase_id"),
         F.col("p_ts").alias("purchase_ts"),
@@ -130,18 +131,16 @@ def run_streaming_outer_attribution(
 
 
 def attribution_full_outer_stream(
-    spark: SparkSession, staged_dir: str, schema, delay: str = "1 hour"
+    spark: SparkSession, staged_dir: str, schema
 ) -> DataFrame:
     """FULL OUTER variant of :func:`purchases_without_clicks_stream`:
     additionally emits (NULL, click) for clicks no purchase followed
     within ``WINDOW_HOURS`` — the abandoned-browse signal. Both
     negative emissions are watermark-proofs; state stays bounded by
-    rate × (delay + window) on each side. The heartbeat pair matches
+    rate × (WATERMARK_DELAY + window) on each side. The heartbeat pair matches
     ITSELF (both user −1, equal ts satisfy the range) — callers drop
     user −1 rows, same as the LEFT OUTER drain."""
-    return _attribution_join(
-        spark, staged_dir, schema, "full_outer", delay
-    ).select(
+    return _attribution_join(spark, staged_dir, schema, "full_outer").select(
         F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
         F.col("p_id").alias("purchase_id"),
         F.col("p_ts").alias("purchase_ts"),
@@ -156,7 +155,6 @@ def run_streaming_full_outer_attribution(
     schema,
     out_path: str,
     checkpoint_path: str,
-    state_partitions: int = 2,
 ) -> None:
     """Drain the staged dir through the FULL OUTER join."""
     _drain_to_parquet(
@@ -164,12 +162,12 @@ def run_streaming_full_outer_attribution(
         attribution_full_outer_stream(spark, staged_dir, schema),
         out_path,
         checkpoint_path,
-        state_partitions,
+        state_partitions=2,
     )
 
 
 def attributed_purchases_semi_stream(
-    spark: SparkSession, staged_dir: str, schema, delay: str = "1 hour"
+    spark: SparkSession, staged_dir: str, schema
 ) -> DataFrame:
     """LEFT SEMI variant: each purchase emits AT MOST ONCE, as soon as
     any qualifying prior click arrives — the dedup-free "attributed
@@ -177,9 +175,7 @@ def attributed_purchases_semi_stream(
     click; semi state discards the purchase after first emission).
     No heartbeat needed for output completeness: emission happens on
     match, not on watermark proof — the watermark only bounds state."""
-    return _attribution_join(
-        spark, staged_dir, schema, "left_semi", delay
-    ).select(
+    return _attribution_join(spark, staged_dir, schema, "left_semi").select(
         F.col("p_user").alias("user_id"),
         F.col("p_id").alias("purchase_id"),
         F.col("p_ts").alias("purchase_ts"),
@@ -192,7 +188,6 @@ def run_streaming_semi_attribution(
     schema,
     out_path: str,
     checkpoint_path: str,
-    state_partitions: int = 2,
 ) -> None:
     """Drain the staged dir through the LEFT SEMI join."""
     _drain_to_parquet(
@@ -200,5 +195,5 @@ def run_streaming_semi_attribution(
         attributed_purchases_semi_stream(spark, staged_dir, schema),
         out_path,
         checkpoint_path,
-        state_partitions,
+        state_partitions=2,
     )

@@ -44,7 +44,6 @@ def run_resumable_drain(
     schema,
     out_path: str,
     checkpoint_path: str,
-    state_partitions: int = 2,
 ) -> None:
     """One StreamingQuery lifecycle: drain whatever is currently in
     ``src`` (AvailableNow), overwriting ``out_path`` with the full
@@ -59,5 +58,5 @@ def run_resumable_drain(
         .writeStream.foreachBatch(sink)
         .outputMode("complete")
         .option("checkpointLocation", checkpoint_path),
-        partitions=state_partitions,
+        partitions=2,
     )

@@ -21,15 +21,13 @@ from taxi_trips_etl_spark.functions.scalar import daypart
 from taxi_trips_etl_spark.streaming.state import drain, event_stream
 
 
-def streaming_daypart_rollup(
-    spark: SparkSession, events_dir: str, watermark: str = "1 day"
-) -> DataFrame:
+def streaming_daypart_rollup(spark: SparkSession, events_dir: str) -> DataFrame:
     """Streaming DF: per (1-day window, daypart, event_type) counts."""
     # events parquet ts type varies by generation (nanos / NTZ micros);
     # event_stream normalizes it to TIMESTAMP (watermarks reject NTZ).
     stream = event_stream(spark, events_dir)
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", "1 day")
         .groupBy(
             F.window("ts", "1 day").alias("day_window"),
             daypart(F.col("ts")).alias("daypart"),

@@ -30,8 +30,6 @@ from taxi_trips_etl_spark.streaming.state import drain, event_stream
 def streaming_session_window(
     spark: SparkSession,
     events_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "1 day",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming DF: (user_id, session_window, n_events).
@@ -45,8 +43,8 @@ def streaming_session_window(
         spark, events_dir, max_files_per_trigger=max_files_per_trigger
     )
     return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap))
+        stream.withWatermark("ts", "1 day")
+        .groupBy("user_id", F.session_window("ts", "30 minutes"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
 
@@ -55,7 +53,6 @@ def run_streaming_session_window(
     spark: SparkSession,
     events_dir: str,
     sink_table: str = "session_windows",
-    state_partitions: int = 8,
     output_mode: str = "complete",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -67,7 +64,7 @@ def run_streaming_session_window(
     pass ``"append"`` so the watermark actually closes sessions and
     bounds the state store (tests/test_stateful_streaming.py drives a
     two-batch append run and asserts the watermark-finalized session is
-    emitted). ``state_partitions`` sizes the session state store — see
+    emitted). Eight state partitions size the session state store — see
     streaming/state.py for the sizing rule.
     """
     drain(
@@ -78,7 +75,7 @@ def run_streaming_session_window(
         .writeStream.format("memory")
         .queryName(sink_table)
         .outputMode(output_mode),
-        partitions=state_partitions,
+        partitions=8,
     )
     return spark.table(sink_table).select(
         "user_id",

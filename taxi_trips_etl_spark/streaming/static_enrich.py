@@ -25,14 +25,13 @@ def streaming_static_enrich(
     spark: SparkSession,
     events_dir: str,
     dim: DataFrame,
-    watermark: str = "1 day",
 ) -> DataFrame:
     """Streaming DF: events ⋈ broadcast(dim on c_custkey) → per
     (1-day window, nation, event_type) counts and value totals."""
     stream = event_stream(spark, events_dir)
     d = F.broadcast(dim.select("c_custkey", "c_nationkey"))
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", "1 day")
         .join(d, stream["user_id"] == d["c_custkey"])
         .groupBy(
             F.window("ts", "1 day").alias("day_window"),

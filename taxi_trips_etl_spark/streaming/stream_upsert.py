@@ -63,7 +63,6 @@ def _latest_per_key(events: DataFrame) -> DataFrame:
 def run_streaming_cdc_upsert(
     spark: SparkSession,
     events_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Stream ``events_dir`` in micro-batches (one file per trigger by
     default) and merge each batch into an accumulating per-user state
@@ -75,7 +74,7 @@ def run_streaming_cdc_upsert(
     expressed as the commutative reduction so replays are no-ops.
     """
     stream = event_stream(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
+        spark, events_dir, max_files_per_trigger=1
     )
     state = {"df": None}
 

@@ -118,7 +118,7 @@ def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):
     }
     multi = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk_lsh_multiprobe(emb, k=3, planes=8).collect()
+        for r in similarity.cosine_topk_lsh_multiprobe(emb, k=3).collect()
     }
     recall_single = len(single & exact) / len(exact)
     recall_multi = len(multi & exact) / len(exact)
@@ -188,17 +188,6 @@ def test_multimodal_meta_and_decode_stub(spark):
     ).collect()
     assert len(decoded) == 2
     assert all(64 <= r.width < 128 and r.channels == 3 for r in decoded)
-
-
-def test_frame_sampling_expands_rows(spark):
-    docs = spark.createDataFrame([(0, "x" * 3000)], "doc_id long, text string")
-    media = multimodal.attach_payload(docs)
-    frames = multimodal.sample_frames(media, every_n_bytes=1024).collect()
-    assert [f.frame_offset for f in sorted(frames, key=lambda f: f.frame_offset)] == [
-        0,
-        1024,
-        2048,
-    ]
 
 
 def test_bucket_cap_bounds_boilerplate_skew(spark):
@@ -406,22 +395,18 @@ def test_domain_mixture_upweights_tail(spark):
         (900 + i, "small") for i in range(100)
     ]
     df = spark.createDataFrame(rows, "doc_id long, domain string")
-    kept = domain_mixture_sample(
-        df, key="doc_id", domain_col="domain", alpha=0.5, target_frac=0.5
-    )
+    kept = domain_mixture_sample(df, key="doc_id", domain_col="domain")
     by_dom = {
         r["domain"]: r["n"]
         for r in kept.groupBy("domain").agg(F.count("*").alias("n")).collect()
     }
-    # alpha=0.5 weights: sqrt(900):sqrt(100) = 3:1 → rates 500*0.75/900
+    # sqrt weights: sqrt(900):sqrt(100) = 3:1 → rates 500*0.75/900
     # ≈ 0.42 vs 500*0.25/100 = 1.0 (capped): the tail domain keeps a
     # strictly higher fraction than the head domain.
     assert by_dom["small"] / 100 > by_dom["big"] / 900
     assert by_dom["small"] == 100  # rate capped at 1.0 → keeps everything
     # Deterministic: rerun gives the identical membership.
-    again = domain_mixture_sample(
-        df, key="doc_id", domain_col="domain", alpha=0.5, target_frac=0.5
-    )
+    again = domain_mixture_sample(df, key="doc_id", domain_col="domain")
     assert sorted(r["doc_id"] for r in kept.collect()) == sorted(
         r["doc_id"] for r in again.collect()
     )

@@ -40,7 +40,7 @@ def test_kmv_overlap_tracks_exact_jaccard(spark):
     df = _synth(spark)
     got = {
         (r["set_a"], r["set_b"]): r
-        for r in kmv_pairwise_overlap(df, "set_key", "v", k=256).collect()
+        for r in kmv_pairwise_overlap(df, "set_key", "v").collect()
     }
     # consecutive sets: |A∩B| = 1500, |A∪B| = 6500, J ≈ 0.2308
     for pair in [("s0", "s1"), ("s1", "s2")]:
@@ -55,5 +55,5 @@ def test_kmv_overlap_tracks_exact_jaccard(spark):
 
 def test_kmv_small_set_estimate_is_exact(spark):
     df = _synth(spark, n_sets=2, n_per=100, overlap=30)
-    ov = kmv_pairwise_overlap(df, "set_key", "v", k=256).collect()[0]
+    ov = kmv_pairwise_overlap(df, "set_key", "v").collect()[0]
     assert ov["union_est"] == 170.0 and ov["inter_est"] == 30.0

@@ -59,7 +59,6 @@ ALLOWED = {
         "dataprep.multimodal.encode_ppm",
         "dataprep.multimodal.fake_image_decoder",
         "dataprep.multimodal.resize_image",
-        "dataprep.multimodal.sample_frames",
     },
 }
 

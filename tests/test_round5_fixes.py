@@ -65,7 +65,7 @@ def test_stream_upsert_does_not_accumulate_state_rdds(spark, tmp_path):
     ev.repartition(5).write.parquet(src)
 
     before = _n_persisted(spark)
-    out = run_streaming_cdc_upsert(spark, src, max_files_per_trigger=1)
+    out = run_streaming_cdc_upsert(spark, src)
     assert out.count() == 7
     # Exactly the live final-state RDD may remain — not one per batch.
     assert _n_persisted(spark) <= before + 1

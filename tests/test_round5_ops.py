@@ -233,7 +233,7 @@ def test_streaming_cdc_upsert_multibatch_equals_singlebatch(
         src
     )
     multi = run_streaming_cdc_upsert(
-        spark, src, max_files_per_trigger=1
+        spark, src
     ).collect()
     single = run_streaming_cdc_upsert(
         spark, f"{sf_dir}/events.parquet"

@@ -170,7 +170,7 @@ def test_top_p_exact_boundary(spark):
     docs = spark.createDataFrame([(text,)], "text string")
     got = sorted(
         (r["word"], r["cnt"], r["rnk"], r["cum_cnt"])
-        for r in vocab_top_p(docs, p_num=1, p_den=2).collect()
+        for r in vocab_top_p(docs).collect()
     )
     assert got == [("a", 4, 1, 4), ("b", 2, 2, 6)]
 
@@ -181,7 +181,7 @@ def test_top_p_tie_break_by_word(spark):
     docs = spark.createDataFrame([("z y x w",)], "text string")
     got = [
         r["word"]
-        for r in vocab_top_p(docs, p_num=1, p_den=2)
+        for r in vocab_top_p(docs)
         .orderBy("rnk")
         .collect()
     ]

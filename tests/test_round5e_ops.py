@@ -21,7 +21,7 @@ def test_cms_estimate_never_undercounts(spark, sf_dir):
     from taxi_trips_etl_spark.dataprep.cms import cms_token_estimates
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rows = cms_token_estimates(docs, probe_top_n=20).collect()
+    rows = cms_token_estimates(docs).collect()
     assert len(rows) == 20
     assert all(r.cms_cnt >= r.exact_cnt for r in rows)
 
@@ -304,14 +304,12 @@ def test_tfidf_oracle_max_df_twin_and_sf_identity():
     )
     rel_pairs = con2.sql(
         tfidf_cosine_oracle_sql(
-            n_docs_sql="(SELECT count(*) FROM documents)",
             max_df_frac=0.5,
             min_cosine=0.01,
         )
     ).fetchall()
     cap_pairs = con2.sql(
         tfidf_cosine_oracle_sql(
-            n_docs_sql="(SELECT count(*) FROM documents)",
             max_df_frac=0.5,
             min_cosine=0.01,
             max_df=3,
@@ -335,7 +333,7 @@ def test_skipgram_weights_and_offsets(spark):
     )
 
     rows = skipgram_cooccurrence(
-        _docs(spark, [(0, "a b c d")]), max_offset=3, top_pairs=100
+        _docs(spark, [(0, "a b c d")])
     ).collect()
     got = {(r.w1, r.w2): (r.pair_n, r.w6_sum) for r in rows}
     assert got == {
@@ -355,7 +353,7 @@ def test_skipgram_short_docs_no_pairs(spark):
 
     assert (
         skipgram_cooccurrence(
-            _docs(spark, [(0, "solo")]), max_offset=3
+            _docs(spark, [(0, "solo")])
         ).count()
         == 0
     )

@@ -132,7 +132,7 @@ def test_power_iteration_pca_matches_eigh_subspace(spark):
     basis, _ = np.linalg.qr(rng.randn(16, 16))
     X = (rng.randn(400, 16) * scales) @ basis.T
     df = _emb_df(spark, X.astype(np.float32))
-    _, dim, c_int = _collect_cov_int(df, "vec_id", "embedding")
+    _, dim, c_int = _collect_cov_int(df)
     cov = np.cov(np.array(X, dtype=np.float64).T, bias=True)
     evals, evecs = np.linalg.eigh(cov)
     top = evecs[:, np.argsort(evals)[::-1][:3]]
@@ -157,7 +157,7 @@ def test_power_iteration_pca_components_orthogonal(spark):
     rng = np.random.RandomState(9)
     X = rng.randn(300, 16) * np.linspace(6, 0.5, 16)
     df = _emb_df(spark, X.astype(np.float32))
-    _, _, c_int = _collect_cov_int(df, "vec_id", "embedding")
+    _, _, c_int = _collect_cov_int(df)
     comps = []
     c = c_int
     for _ in range(4):
@@ -253,7 +253,7 @@ def test_boilerplate_removal_drops_all_occurrences(spark):
     out = {
         r.doc_id: r
         for r in boilerplate_chunk_removal(
-            _docs6(spark, rows), chunk_tokens=2, df_divisor=2, df_floor=3
+            _docs6(spark, rows), chunk_tokens=2, df_divisor=2
         ).collect()
     }
     # "share this" appears in all 10 docs -> boilerplate everywhere;
@@ -271,7 +271,7 @@ def test_boilerplate_removal_keeps_rare_chunks(spark):
 
     rows = [(0, "alpha beta gamma delta"), (1, "alpha beta gamma delta")]
     out = boilerplate_chunk_removal(
-        _docs6(spark, rows), chunk_tokens=2, df_divisor=2, df_floor=3
+        _docs6(spark, rows), chunk_tokens=2, df_divisor=2
     ).collect()
     # df = 2 < floor 3: nothing dropped even though both docs repeat.
     assert all(r.n_chunks_dropped == 0 for r in out)
@@ -338,7 +338,7 @@ def test_hard_negative_ivf_subset_of_exact_candidates(spark):
     labels = [i % 3 for i in range(60)]
     df = _emb_df(spark, vecs, labels)
     ivf = hard_negative_topk_ivf(
-        df, n_centroids=6, nprobe=3, k=2
+        df, n_centroids=6, nprobe=3
     ).collect()
     lab = dict(enumerate(labels))
     assert ivf, "no output"
@@ -419,7 +419,7 @@ def test_weighted_jaccard_separates_tf_profiles(spark):
     out = {
         (r.doc_id_a, r.doc_id_b): r.wjacc_milli
         for r in weighted_minhash_pairs(
-            _docs6(spark, rows), cap=2, ngram=2, min_wjacc_milli=0,
+            _docs6(spark, rows), min_wjacc_milli=0,
         ).collect()
     }
     assert out[(0, 1)] == 1000
@@ -467,7 +467,7 @@ def test_sampled_range_partition_plan_balance(spark):
         F.col("id").alias("key"), (F.col("id") * 7 % 20000).alias("uid")
     )
     plan = sampled_range_partition_plan(
-        df, key="key", n_partitions=8, sample_mod=10, tiebreak="uid"
+        df, key="key", n_partitions=8, tiebreak="uid"
     ).collect()
     assert [r.bucket for r in plan] == list(range(8))
     assert sum(r.n_rows for r in plan) == 20000

@@ -171,7 +171,7 @@ def test_viterbi_prefers_frequent_multichar_pieces(spark):
     )
     out = {
         r.word: r for r in unigram_viterbi_segment(
-            docs, top_multi=5, max_piece_len=4
+            docs, top_multi=5
         ).collect()
     }
     assert out["abcd"].n_pieces == 1

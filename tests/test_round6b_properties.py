@@ -84,7 +84,7 @@ def test_viterbi_matches_pure_python_dp(spark, words):
     got = {
         r.word: (r.word_n, r.n_pieces, r.segmentation, r.score_micro)
         for r in unigram_viterbi_segment(
-            docs, top_multi=5, max_piece_len=4
+            docs, top_multi=5
         ).collect()
     }
     assert got == _viterbi_ref(words, top_multi=5, max_piece=4)

@@ -15,7 +15,7 @@ def test_planted_span_found_with_exact_offsets(spark):
     df = spark.createDataFrame(
         [(1, d1), (2, d2), (3, d3)], "doc_id long, text string"
     )
-    got = duplicated_spans(df, w=8, min_len=12).collect()
+    got = duplicated_spans(df, min_len=12).collect()
     assert len(got) == 1
     r = got[0]
     # shared starts at token 6 in d1 (after 5 prefix words), 12 in d2
@@ -32,7 +32,7 @@ def test_two_disjoint_spans_stay_separate(spark):
     )
     got = sorted(
         (r["a_start"], r["b_start"], r["span_tokens"])
-        for r in duplicated_spans(df, w=8, min_len=12).collect()
+        for r in duplicated_spans(df, min_len=12).collect()
     )
     # s1: d1 pos 1, d2 pos 28; s2: d1 pos 26, d2 pos 1 — both 15 tokens
     assert got == [(1, 28, 15), (26, 1, 15)]
@@ -43,10 +43,10 @@ def test_hot_window_cap_drops_boilerplate(spark):
     rows = [(i, boiler) for i in range(30)]  # 30 identical docs
     df = spark.createDataFrame(rows, "doc_id long, text string")
     # every window hash has 30 postings > cap 20 -> no spans at all
-    assert duplicated_spans(df, w=8, min_len=8, max_postings=20).count() == 0
+    assert duplicated_spans(df, min_len=8, max_postings=20).count() == 0
     # raising the cap reinstates them deterministically
     assert (
-        duplicated_spans(df, w=8, min_len=8, max_postings=1000).count()
+        duplicated_spans(df, min_len=8, max_postings=1000).count()
         == 30 * 29 / 2
     )
 
@@ -58,6 +58,6 @@ def test_min_len_threshold(spark):
     df = spark.createDataFrame(
         [(1, d1), (2, d2)], "doc_id long, text string"
     )
-    assert duplicated_spans(df, w=8, min_len=12).count() == 0
-    got = duplicated_spans(df, w=8, min_len=10).collect()
+    assert duplicated_spans(df, min_len=12).count() == 0
+    got = duplicated_spans(df, min_len=10).collect()
     assert len(got) == 1 and got[0]["span_tokens"] == 10

@@ -10,12 +10,14 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.operators.enrich import dedup_zones, enrich_trips
 from taxi_trips_etl_spark.operators.normalize import normalize_trips
 from taxi_trips_etl_spark.operators.popularity import most_populars
-from taxi_trips_etl_spark.plans.pipeline import run_taxi_pipeline
+from taxi_trips_etl_spark.plans.airflow_dag import storage_to_bq
+from taxi_trips_etl_spark.plans.pipeline import Pipeline, run_taxi_pipeline
 
 TRIP_SCHEMA = (
     "pickup_datetime timestamp, dropoff_datetime timestamp, "
@@ -162,7 +164,7 @@ def test_popularity_rank_tie_semantics(spark):
         "zone_id long, zone_geom string",
     )
     enriched = enrich_trips(trips_df(spark, rows), zones)
-    result = most_populars(enriched, limit=100).collect()
+    result = most_populars(enriched).collect()
     pops = sorted(r.popularity for r in result)
     # routes: {r1:2, r2:2, r3:1} → popularity ranks {1,1,3}; hexes same.
     # Join on popularity: rank 1 matches 2 routes × 2 dropoffs × 2 pickups = 8 rows;
@@ -173,6 +175,48 @@ def test_popularity_rank_tie_semantics(spark):
 def test_pipeline_short_circuits_on_missing_input(spark, tmp_path):
     out = run_taxi_pipeline(spark, str(tmp_path / "nope"), None, "2026-01-01")
     assert out is None
+
+
+@pytest.mark.parametrize("caller", ["pipeline", "airflow"])
+def test_zero_row_lineitem_short_circuits(spark, sf_dir, tmp_path, caller):
+    """O2 on an input that exists but holds no rows: both orchestrations
+    stop at the load stage, like they do for a missing path."""
+    empty = tmp_path / "empty"
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(0).write.parquet(
+        str(empty / "lineitem.parquet")
+    )
+    if caller == "pipeline":
+        assert run_taxi_pipeline(spark, str(empty), None, "2026-01-01") is None
+    else:
+        work = tmp_path / "work"
+        assert storage_to_bq(spark, sf_dir=str(empty), work_dir=str(work)) is False
+        assert not work.exists()
+
+
+def _flaky(failures: int):
+    calls = []
+
+    def stage(ctx):
+        calls.append(1)
+        if len(calls) <= failures:
+            raise RuntimeError(f"attempt {len(calls)} fails")
+        return "ok"
+
+    return stage, calls
+
+
+def test_stage_retried_once_then_succeeds():
+    """O4: one retry per stage (reference retries=1)."""
+    stage, calls = _flaky(1)
+    ctx = Pipeline().add("s", stage).run({})
+    assert ctx["s"] == "ok" and len(calls) == 2
+
+
+def test_stage_failing_twice_raises():
+    stage, calls = _flaky(2)
+    with pytest.raises(RuntimeError, match="attempt 2 fails"):
+        Pipeline().add("s", stage).run({})
+    assert len(calls) == 2
 
 
 def test_pipeline_end_to_end_writes_partition(spark, sf_dir, tmp_path):

@@ -33,6 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.explain_audit import plan_of  # noqa: E402
+from tools.harness import force, scrub, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -56,31 +57,19 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    # Warm-up (JIT + parquet footer caches), not recorded.
-    spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").limit(1000).write.mode(
-        "overwrite"
-    ).format("noop").save()
-
-    import gc
-
-    def scrub() -> None:
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-        spark.catalog.clearCache()
-        gc.collect()
+    warm_up(spark, args.sf_dir)
 
     rows = []
     with open(args.out, "w") as fh:
         for name, fn in qs.items():
-            scrub()
+            scrub(spark)
             group = f"profile-{name}"
             sc.setJobGroup(group, name)
             t0 = time.monotonic()
             df = fn(spark, args.sf_dir)
             build_s = time.monotonic() - t0
             t1 = time.monotonic()
-            df.write.mode("overwrite").format("noop").save()
+            force(df)
             exec_s = time.monotonic() - t1
             sc.setJobGroup("profile-idle", "idle")
             tracker = sc.statusTracker()

@@ -38,6 +38,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.harness import force, scrub, warm_up  # noqa: E402
+
 DEFAULT_QUERIES = [
     # heaviest registry entries per bench_summary.json round 4, plus two
     # scan/agg baselines expected to be cleanly linear
@@ -58,10 +60,6 @@ DEFAULT_QUERIES = [
 ]
 
 
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--small", default="/root/testdata/sf0.1")
@@ -79,17 +77,8 @@ def main() -> None:
     names = args.queries.split(",") if args.queries else DEFAULT_QUERIES
     qs = all_queries()
 
-    import gc
-
-    def scrub() -> None:
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-        spark.catalog.clearCache()
-        gc.collect()
-
     # Warm-up + measure the fixed per-job floor.
-    force(spark.read.parquet(f"{args.small}/lineitem.parquet").limit(1000))
+    warm_up(spark, args.small)
     floor_df = spark.range(1)
     t0 = time.monotonic()
     force(floor_df)
@@ -105,7 +94,7 @@ def main() -> None:
                 t0 = time.monotonic()
                 force(fn(spark, d))
                 best = min(best, time.monotonic() - t0)
-                scrub()
+                scrub(spark)
             times[label] = round(best, 3)
         ratio = times["big"] / times["small"]
         adj_small = max(times["small"] - floor, 1e-3)
