@@ -196,20 +196,22 @@ def q_bucketed_colocated_join(
     twin (tests/test_bucketing.py) asserts the no-Exchange plan;
     this entry pins the RESULT equivalence against the plain-join
     oracle, so the bucketed read path is correctness-checked too."""
+    import os
     import shutil
-    from urllib.parse import urlparse
+    import tempfile
 
     from taxi_trips_etl_spark.sources.catalog import drop_table
     from taxi_trips_etl_spark.sources.writers import write_bucketed
 
-    # A fresh session's in-memory catalog forgets managed tables a
-    # previous session wrote, but their warehouse directories survive —
-    # saveAsTable then refuses the name (LOCATION_ALREADY_EXISTS). Drop
-    # via the catalog AND clear any orphaned location.
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    # External tables at a fixed path under the system temp dir, not
+    # managed ones in the session warehouse (which defaults to
+    # ``spark-warehouse/`` of the working directory). The returned plan
+    # reads them lazily, so they outlive this call; the next call
+    # replaces them.
+    root = os.path.join(tempfile.gettempdir(), "taxi_trips_etl_spark")
     for t in ("r6b_orders_bucketed", "r6b_lineitem_bucketed"):
         drop_table(spark, t)
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
+        shutil.rmtree(os.path.join(root, t), ignore_errors=True)
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
@@ -220,10 +222,12 @@ def q_bucketed_colocated_join(
     write_bucketed(
         orders, "r6b_orders_bucketed", ["o_orderkey"], buckets=8,
         sort_cols=["o_orderkey"],
+        path=os.path.join(root, "r6b_orders_bucketed"),
     )
     write_bucketed(
         li, "r6b_lineitem_bucketed", ["l_orderkey"], buckets=8,
         sort_cols=["l_orderkey"],
+        path=os.path.join(root, "r6b_lineitem_bucketed"),
     )
     o = spark.table("r6b_orders_bucketed")
     l = spark.table("r6b_lineitem_bucketed")

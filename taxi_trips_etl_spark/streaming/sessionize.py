@@ -2,8 +2,8 @@
 
 ``applyInPandasWithState`` is Spark's escape hatch for operators the
 built-in streaming aggregations can't express — here, user sessions
-that close after a 30-minute silence. Per-user state (current session's
-start / last-seen / count) lives in the state store; an event either
+that close after a 30-minute silence. Each user's open session
+(start / last-seen / count) lives in the state store; an event either
 extends the open session or emits it and starts a new one, and a
 processing-time timeout flushes sessions when a user goes quiet.
 
@@ -15,35 +15,70 @@ user's batch before folding — at true streaming scale, late data past
 the timeout lands in a new session (standard sessionization semantics,
 documented deviation from the batch twin).
 
-Input: only ``(user_id, sec)`` crosses to Python, with
-``sec = cast(ts as long)`` computed in the JVM — the twin's own
-flooring, so pre-1970 sub-second events land in the same sessions.
-The twin orders by ``(sec, event_id)``; the ``event_id`` tie-break only
-reorders events within one second, so the sorted seconds the fold sees
-are the same without it. Each call is one ``np.sort`` over the
-concatenated arrays (no ``pd.concat``) plus an int fold, and a frame is
-built only when a session closes. Python-worker CPU per
-landed ``stream_replay`` day-file (sessionizer alone, 8 state
-partitions, ``local[4]`` on a 4-vCPU VM, ~1,340 users a file; median
-of 26 files, two seeds): 7.8–9.4 s for the previous ``(ts, event_id)``
-kernel, 4.1–4.3 s for this one, 2.7 s for a kernel that only drains
-its input — about 3.1 ms per user against ``applyInPandasWithState``'s
-own 2.0 ms per-group floor. ``transformWithStateInPandas`` is not
-A/B'd yet: its Python runner imports ``google.protobuf``, which is not
-among this package's dependencies.
+Input: ``(bucket, user_id, sec)`` crosses to Python, with
+``bucket = pmod(user_id, BUCKETS)`` and ``sec = cast(ts as long)``
+computed in the JVM — the twin's own flooring, so pre-1970 sub-second
+events land in the same sessions. The twin orders by
+``(sec, event_id)``; the ``event_id`` tie-break only reorders events
+within one second, so the sorted seconds the fold sees are the same
+without it.
 
-Scale notes: state is keyed by user_id → shuffle partitions bound
-parallelism; state size is O(active users), not O(events); the state
-store checkpoints per micro-batch. RocksDB state store is the knob to
-flip (`spark.sql.streaming.stateStore.providerClass`) when active-user
-cardinality outgrows executor heap — and ONLY then: the r14
-interleaved A/B pinned RocksDB onto the four heaviest drives (this
-one, late_data, rollup, static_enrich) and it LOST or washed on all
-four at bench state sizes (round 1: 7.92 vs 7.74 s total; round 2:
-3.59/3.08/1.37/1.30 vs 3.26/2.77/1.21/1.20 s) — per-store native
-instance setup + per-batch snapshot upload exceeds the HDFS-backed
-provider's small-delta fsync when state is KB-sized. Rejected,
-numbers in OPTIMIZATION_r14.md.
+Grouping: by bucket, not by user. ``applyInPandasWithState`` charges
+Python-worker time for every group (its JSON state, the ``GroupState``
+build, the Arrow slice → pandas) and the kernel's own per-call cost
+comes on top; a ``stream_replay`` day-file carries ~1,340 users, so
+per-user grouping paid both ~1,340 times a file. Each bucket holds its
+users' open sessions as parallel arrays sorted by user
+(``STATE_SCHEMA``), and one call folds the whole bucket in numpy: one
+``lexsort`` on ``(user_id, sec)``, gap breaks from diffing consecutive
+seconds, segment numbering by ``cumsum``, and a merge with the
+bucket's state that continues or closes each user's open session — no
+Python loop over users or events.
+Measured per landed ``stream_replay`` day-file (sessionizer alone, 8
+state partitions, ``local[4]`` on a 4-vCPU VM, median of 26 files,
+seeds 61/62; SCALE.md, "Grouped-map pandas paths"): Python-worker CPU
+4.8/3.9 s for the per-user kernel, 2.6/2.5 s for this one, against
+1.9–2.2 s for a no-op kernel grouped by bucket; wall 1.9/1.6 s →
+1.4/1.4 s. What is left is per task, not per group: each of the 8
+state-partition tasks pays ~0.25 s of worker CPU before its first
+group, most of it PySpark re-reading the ``pyspark.zip`` directory in
+``importlib.invalidate_caches()``. Two ten-pair interleaved
+``stream_replay`` A/Bs against the per-user kernel (seeds 91–100 and
+101–110): ``op_s_p50`` median 2.48 → 2.05 s (9/10 wins) and 2.26 →
+1.93 s (8/10), ``rows_per_s`` 1,302 → 1,581 and 1,456 → 1,671;
+traced, state rows 1,500 → 64 and ``python_worker.time_share``
+0.69 → 0.56.
+
+Timeout (``use_timeout=True``): the state also holds each user's
+deadline (processing time of their last batch + 3 s). A data call
+first flushes and drops the users absent from the batch and past
+their deadline; the bucket's own 3 s timeout flushes every user it
+holds and removes the state.
+
+Scale notes: state is keyed by bucket → at most ``BUCKETS`` state rows,
+and shuffle partitions bound parallelism. Each batch rewrites every
+touched bucket's whole state row, so the state delta per batch is
+O(active users in the touched buckets), not O(users in the batch); at
+millions of active users that is most of the state each batch. The
+way out then is per-user state in a ``MapState`` under
+``transformWithStateInPandas``, whose Python runner imports
+``google.protobuf`` — not among this package's dependencies, so it is
+not A/B'd. The state store checkpoints per micro-batch. RocksDB state
+store is the knob to flip
+(`spark.sql.streaming.stateStore.providerClass`) when state outgrows
+executor heap — and ONLY then: the r14 interleaved A/B pinned RocksDB
+onto the four heaviest drives (this one, late_data, rollup,
+static_enrich) and it LOST or washed on all four at bench state sizes
+(round 1: 7.92 vs 7.74 s total; round 2: 3.59/3.08/1.37/1.30 vs
+3.26/2.77/1.21/1.20 s) — per-store native instance setup + per-batch
+snapshot upload exceeds the HDFS-backed provider's small-delta fsync
+when state is KB-sized. Rejected, numbers in OPTIMIZATION_r14.md.
+
+Checkpoints: the state key (bucket, was user_id) and the state value
+schema (per-bucket arrays, was one session per user) both changed, so a
+checkpoint written by the per-user kernel cannot resume under this one:
+``start()`` refuses it ("does not support recovering from checkpoint
+location"). Start such a query from a fresh checkpoint.
 """
 
 from __future__ import annotations
@@ -63,21 +98,33 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from taxi_trips_etl_spark.streaming.state import drain, event_stream
 
 SESSION_GAP_SECONDS = 1800
+# 64 buckets: at ~2 ms a group, at most 64 × 2 ms ≈ 0.13 s of per-group
+# framing a micro-batch; and far more buckets than the 8 state
+# partitions the drives pin, so every partition gets several.
+BUCKETS = 64
+TIMEOUT_MS = 3 * 1000  # flush quiet users soon after
 
 OUTPUT_SCHEMA = (
     "user_id long, session_idx long, n_events long, "
     "session_start timestamp, session_end timestamp"
 )
-STATE_SCHEMA = "session_idx long, start long, last long, n long"
+# One row per bucket: each user's open session as parallel arrays,
+# sorted by user_id. ``deadline`` is the processing time (ms) past
+# which a user who sends nothing is flushed under the timeout.
+STATE_SCHEMA = (
+    "user_id array<long>, session_idx array<long>, start array<long>, "
+    "last array<long>, n array<long>, deadline array<long>"
+)
 
 
-def _sessions_frame(user_id: int, closed: list[tuple[int, ...]]) -> pd.DataFrame:
-    """``OUTPUT_SCHEMA`` frame of closed ``(session_idx, n, start, last)``
-    sessions (epoch seconds) of one user."""
-    idx, n, start, last = np.array(closed, dtype=np.int64).T
+def _sessions_frame(
+    user_id: np.ndarray, session_idx: np.ndarray, start: np.ndarray,
+    last: np.ndarray, n: np.ndarray,
+) -> pd.DataFrame:
+    """``OUTPUT_SCHEMA`` frame of closed sessions (epoch seconds)."""
     return pd.DataFrame({
-        "user_id": np.full(len(idx), user_id, dtype=np.int64),
-        "session_idx": idx,
+        "user_id": user_id,
+        "session_idx": session_idx,
         "n_events": n,
         "session_start": start.astype("datetime64[s]").astype("datetime64[ns]"),
         "session_end": last.astype("datetime64[s]").astype("datetime64[ns]"),
@@ -90,40 +137,86 @@ def _sessionize_kernel(
     state: GroupState,
     set_timeout: bool = True,
 ) -> Iterator[pd.DataFrame]:
-    """Fold one user's epoch seconds into gap sessions; yield a frame
-    only when a session closes.
+    """Fold one bucket's ``(user_id, sec)`` events into gap sessions;
+    yield one frame of every session that closed, if any did.
 
     ``set_timeout=False`` for data-driven drives (sentinel flush /
     NoTimeout): calling ``setTimeoutDuration`` under NoTimeout raises,
     and ProcessingTimeTimeout makes the engine always schedule another
     micro-batch, so AvailableNow runs never drain.
     """
-    (user_id,) = key
-    if state.hasTimedOut:
-        session_idx, start, last, n = state.get
+    if state.hasTimedOut:  # the whole bucket went quiet: flush everyone
+        users = [np.asarray(a, dtype=np.int64) for a in state.get]
         state.remove()
-        yield _sessions_frame(user_id, [(session_idx, n, start, last)])
+        yield _sessions_frame(*users[:5])
         return
 
-    secs = np.sort(
-        np.concatenate([b["sec"].to_numpy() for b in batches])
-    ).tolist()
-    if state.exists:
-        session_idx, start, last, n = state.get
-    else:  # the first event extends this empty session to n=1
-        session_idx, start, last, n = 1, secs[0], secs[0], 0
+    cols = [(b["user_id"].to_numpy(), b["sec"].to_numpy()) for b in batches]
+    uid = np.concatenate([u for u, _ in cols])
+    sec = np.concatenate([s for _, s in cols])
+    order = np.lexsort((sec, uid))
+    uid, sec = uid[order], sec[order]
 
-    closed = []
-    for s in secs:
-        if s - last > SESSION_GAP_SECONDS:
-            closed.append((session_idx, n, start, last))
-            session_idx, start, n = session_idx + 1, s, 0
-        last, n = s, n + 1
-    state.update((session_idx, start, last, n))
+    # Segments: runs of one user's events with no gap above the session
+    # gap. Each is a session; each user's last one stays open.
+    new_user = np.ones(len(uid), dtype=bool)
+    new_user[1:] = uid[1:] != uid[:-1]
+    head = new_user.copy()
+    head[1:] |= np.diff(sec) > SESSION_GAP_SECONDS
+    heads = np.flatnonzero(head)
+    tails = np.append(heads[1:], len(sec)) - 1
+    s_uid, s_start, s_last = uid[heads], sec[heads], sec[tails]
+    s_n = tails - heads + 1
+    opens_user = new_user[heads]
+    firsts = np.flatnonzero(opens_user)  # each user's first segment
+    s_user = np.cumsum(opens_user) - 1  # segment → its user
+    is_last = np.append(opens_user[1:], True)
+
+    # Merge with the users the bucket already holds: a first segment
+    # within the gap of the open session continues it; past the gap the
+    # open session closes and the user's numbering goes on from it.
+    old = (
+        [np.asarray(a, dtype=np.int64) for a in state.get]
+        if state.exists else [np.empty(0, dtype=np.int64)] * 6
+    )
+    o_uid, o_idx, o_start, o_last, o_n, o_deadline = old
+    _, i_old, i_new = np.intersect1d(
+        o_uid, s_uid[firsts], assume_unique=True, return_indices=True
+    )
+    cont = s_start[firsts[i_new]] - o_last[i_old] <= SESSION_GAP_SECONDS
+    s_start[firsts[i_new[cont]]] = o_start[i_old[cont]]
+    s_n[firsts[i_new[cont]]] += o_n[i_old[cont]]
+    first_idx = np.ones(len(firsts), dtype=np.int64)
+    first_idx[i_new] = o_idx[i_old] + ~cont
+    s_idx = (first_idx - firsts)[s_user] + np.arange(len(heads))
+
+    # Users absent from the batch keep their open session, unless the
+    # timeout is on and they are past their deadline.
+    now = state.getCurrentProcessingTimeMs()
+    absent = np.ones(len(o_uid), dtype=bool)
+    absent[i_old] = False
+    expired = (
+        absent & (o_deadline < now) if set_timeout else np.zeros_like(absent)
+    )
+    closed_old = expired.copy()
+    closed_old[i_old[~cont]] = True
+
+    segs = (s_uid, s_idx, s_start, s_last, s_n,
+            np.full(len(heads), now + TIMEOUT_MS))
+    closed = [
+        np.concatenate([o[closed_old], s[~is_last]])
+        for o, s in zip(old[:5], segs)
+    ]
+    new = [
+        np.concatenate([o[absent & ~expired], s[is_last]])
+        for o, s in zip(old, segs)
+    ]
+    by_user = np.argsort(new[0], kind="stable")
+    state.update(tuple(a[by_user].tolist() for a in new))
     if set_timeout:
-        state.setTimeoutDuration(3 * 1000)  # flush quiet users soon after
-    if closed:
-        yield _sessions_frame(user_id, closed)
+        state.setTimeoutDuration(TIMEOUT_MS)
+    if len(closed[0]):
+        yield _sessions_frame(*closed)
 
 
 def streaming_sessionize(
@@ -139,8 +232,12 @@ def streaming_sessionize(
     """
     stream = event_stream(spark, events_dir)
     return (
-        stream.select("user_id", F.col("ts").cast("long").alias("sec"))
-        .groupBy("user_id")
+        stream.select(
+            F.pmod("user_id", F.lit(BUCKETS)).alias("bucket"),
+            "user_id",
+            F.col("ts").cast("long").alias("sec"),
+        )
+        .groupBy("bucket")
         .applyInPandasWithState(
             partial(_sessionize_kernel, set_timeout=use_timeout),
             outputStructType=OUTPUT_SCHEMA,

@@ -153,6 +153,34 @@ def test_bucketed_registry_join_has_no_exchange(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+def test_bucketed_registry_join_writes_outside_the_working_dir(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The entry's bucketed tables are external tables at a fixed path,
+    not managed tables in the working directory's ``spark-warehouse/``;
+    the result is the plain join's."""
+    from taxi_trips_etl_spark.queries._round6b import (
+        q_bucketed_colocated_join,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    got = sorted(map(tuple, q_bucketed_colocated_join(spark, sf_dir).collect()))
+    assert not (tmp_path / "spark-warehouse").exists()
+    for t in ("r6b_orders_bucketed", "r6b_lineitem_bucketed"):
+        assert spark.catalog.getTable(t).tableType == "EXTERNAL"
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    want = (
+        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).cast("long"),
+            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")),
+        )
+    )
+    assert got == sorted(map(tuple, want.collect())) and got
+
+
 # --- batch 6: Viterbi segmentation, pruning, compaction ---------------------
 
 
