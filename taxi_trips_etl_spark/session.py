@@ -8,8 +8,18 @@ config here is chosen for the 100 TB / 1000-executor target:
 - ``spark.sql.shuffle.partitions`` is only the *initial* shuffle
   parallelism — AQE coalesces; on a real cluster set it ~2-3x total
   cores and let AQE shrink.
-- Arrow enabled so the few Pandas-UDF paths (multimodal decode,
-  grouped-map kernels) batch-transfer instead of pickling rows.
+- Arrow enabled so the Python-worker paths batch-transfer instead of
+  pickling rows: the ``mapInPandas`` kernels (``unigram_tok``,
+  ``pca_power``, ``heavy_hitters``, ``lcs``, ``multimodal``), the
+  ``similarity`` grouped and cogrouped maps, one ``applyInPandas`` and
+  one ``mapInArrow`` entry, and the ``applyInPandasWithState``
+  sessionizer.
+- ``spark.python.daemon.module`` is ``worker_daemon``: Python workers
+  import pyspark from its installed package directory, not from
+  ``pyspark.zip`` and the spark-core jar, whose directories every task
+  would otherwise re-read in ``importlib.invalidate_caches()``. Where
+  no plain pyspark of the archive's version is importable (an executor
+  with only ``SPARK_HOME``) it leaves the path as Spark built it.
 - Runtime bloom-filter join pruning
   (``spark.sql.optimizer.runtime.bloomFilter.enabled`` +
   ``runtimeFilter.semiJoinReduction``) is deliberately NOT set here:
@@ -58,6 +68,7 @@ def get_spark(
         # mid-flight (readers.require_nanos_as_long).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "taxi_trips_etl_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

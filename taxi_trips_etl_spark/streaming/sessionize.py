@@ -39,15 +39,20 @@ state partitions, ``local[4]`` on a 4-vCPU VM, median of 26 files,
 seeds 61/62; SCALE.md, "Grouped-map pandas paths"): Python-worker CPU
 4.8/3.9 s for the per-user kernel, 2.6/2.5 s for this one, against
 1.9–2.2 s for a no-op kernel grouped by bucket; wall 1.9/1.6 s →
-1.4/1.4 s. What is left is per task, not per group: each of the 8
-state-partition tasks pays ~0.25 s of worker CPU before its first
-group, most of it PySpark re-reading the ``pyspark.zip`` directory in
-``importlib.invalidate_caches()``. Two ten-pair interleaved
-``stream_replay`` A/Bs against the per-user kernel (seeds 91–100 and
-101–110): ``op_s_p50`` median 2.48 → 2.05 s (9/10 wins) and 2.26 →
-1.93 s (8/10), ``rows_per_s`` 1,302 → 1,581 and 1,456 → 1,671;
-traced, state rows 1,500 → 64 and ``python_worker.time_share``
-0.69 → 0.56.
+1.4/1.4 s. Two ten-pair interleaved ``stream_replay`` A/Bs against
+the per-user kernel (seeds 91–100 and 101–110): ``op_s_p50`` median
+2.48 → 2.05 s (9/10 wins) and 2.26 → 1.93 s (8/10), ``rows_per_s``
+1,302 → 1,581 and 1,456 → 1,671; traced, state rows 1,500 → 64 and
+``python_worker.time_share`` 0.69 → 0.56.
+What was left then was per task, not per group: each of the 8
+state-partition tasks paid ~0.25 s of worker CPU before its first
+group, PySpark re-reading the ``pyspark.zip`` and spark-core jar
+directories in ``importlib.invalidate_caches()``. Workers started by
+``worker_daemon`` import pyspark from its package directory and skip
+that: Python-worker CPU per file is 0.58/0.62 s for this kernel (was
+2.81/2.85 s) and 0.44/0.48 s for a no-op (was 2.17/2.07 s), seeds
+62/61. A task's worker now spends most of its wall blocked on the
+JVM's socket (state-store load, Arrow feed), not computing.
 
 Timeout (``use_timeout=True``): the state also holds each user's
 deadline (processing time of their last batch + 3 s). A data call
