@@ -20,6 +20,20 @@ config here is chosen for the 100 TB / 1000-executor target:
   would otherwise re-read in ``importlib.invalidate_caches()``. Where
   no plain pyspark of the archive's version is importable (an executor
   with only ``SPARK_HOME``) it leaves the path as Spark built it.
+- ``spark.sql.streaming.checkpointFileManagerClass`` is
+  ``FileSystemBasedCheckpointFileManager``: streaming checkpoints
+  (state-store deltas, offsets, commits, source logs) commit through
+  Hadoop's ``FileSystem`` API instead of ``FileContext``. Without a
+  native libhadoop, ``FileContext``'s local rename forks ``readlink``
+  (``RawLocalFileSystem.getFileLinkStatus``) every time, and each
+  state-store task waits on those forks; ``FileSystem`` renames with a
+  plain Java rename. The checks stay: every file keeps Spark's
+  checkpoint checksum (``fileChecksum.enabled`` is left at its
+  default) and Hadoop's ``.crc``. Creates still fork ``chmod``
+  (``setPermission``). On a cluster: Spark itself falls back to this
+  manager for schemes that have no ``FileContext``; HDFS renames
+  atomically through either API; object stores are non-atomic under
+  both.
 - Runtime bloom-filter join pruning
   (``spark.sql.optimizer.runtime.bloomFilter.enabled`` +
   ``runtimeFilter.semiJoinReduction``) is deliberately NOT set here:
@@ -69,6 +83,11 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "taxi_trips_etl_spark.worker_daemon")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

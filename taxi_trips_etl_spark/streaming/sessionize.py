@@ -51,8 +51,15 @@ directories in ``importlib.invalidate_caches()``. Workers started by
 ``worker_daemon`` import pyspark from its package directory and skip
 that: Python-worker CPU per file is 0.58/0.62 s for this kernel (was
 2.81/2.85 s) and 0.44/0.48 s for a no-op (was 2.17/2.07 s), seeds
-62/61. A task's worker now spends most of its wall blocked on the
-JVM's socket (state-store load, Arrow feed), not computing.
+62/61. A task's worker then spent most of its wall blocked on the
+JVM's socket, not computing. The cause was the state-store commit on
+the JVM side: under Spark's default ``FileContext`` checkpoint manager
+each delta rename forked ``readlink`` (no native libhadoop), and each
+task parked in ``ChecksumCheckpointFileManager.awaitResult`` until the
+forks returned. With ``get_spark``'s ``FileSystem`` manager the batch's
+8 store commits take 39/44 ms together, was 574/663 ms (median per
+batch, seeds 61/62), and ``stream_replay`` ``op_s_p50`` fell 1.38 →
+0.87 s (ten interleaved pairs, 10/10 won).
 
 Timeout (``use_timeout=True``): the state also holds each user's
 deadline (processing time of their last batch + 3 s). A data call

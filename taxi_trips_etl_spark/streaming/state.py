@@ -93,10 +93,16 @@ def state_partitions(spark: SparkSession, n: int):
     Stateful operators keep one state store PER shuffle partition, each
     committing a checkpoint delta every micro-batch — so partition
     count multiplies commit overhead whether or not the partitions hold
-    data. Size it to key cardinality × event rate, not to the batch
-    shuffle width. The conf must be set BEFORE ``start()`` (state
-    stores cannot be re-partitioned without a checkpoint rebuild), and
-    the query keeps its width after the conf is restored.
+    data. On the local file system one store's commit costs ~5 ms
+    through the ``FileSystem`` checkpoint manager ``get_spark`` sets,
+    against ~60–85 ms through Spark's default ``FileContext`` manager,
+    which forks ``readlink`` per rename (``stream_replay`` drives, 8
+    partitions, 4-vCPU VM; SCALE.md, "Streaming checkpoint commits on
+    the local file system"). Size it to key cardinality × event rate,
+    not to the batch shuffle width. The conf must be set BEFORE
+    ``start()`` (state stores cannot be re-partitioned without a
+    checkpoint rebuild), and the query keeps its width after the conf
+    is restored.
 
     The conf is session-global: a batch query planned on the same
     session while the scope is open inherits the pinned width, so do
