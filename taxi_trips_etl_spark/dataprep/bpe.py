@@ -36,9 +36,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from taxi_trips_etl_spark.dataprep.materialize import materialize
+from taxi_trips_etl_spark.dataprep.materialize import (
+    driver_rows,
+    materialize,
+    static_rounds,
+)
+from taxi_trips_etl_spark.sources.localrel import local_rows
 
 _WORD_RE = "[a-z]+"
+N_MERGES = 8  # merges learned; the registry oracle unrolls the same count
+_MERGES_SCHEMA = "merge_rank long, tok_a string, tok_b string, pair_count long"
 
 
 def word_freqs(docs: DataFrame) -> DataFrame:
@@ -67,16 +74,13 @@ def _merge_fold_expr(a: str, b: str) -> str:
     )
 
 
-def learn_bpe_distributed(
-    docs: DataFrame,
-    n_merges: int = 8,
-) -> DataFrame:
-    """→ (merge_rank, tok_a, tok_b, pair_count): learned merge table."""
-    spark = docs.sparkSession
-    vocab = word_freqs(docs).select(
+def learn_bpe_distributed(wf: DataFrame) -> DataFrame:
+    """→ (merge_rank, tok_a, tok_b, pair_count): learned merge table
+    over ``wf``, the materialized :func:`word_freqs` table
+    :func:`learn_bpe_auto` builds (the corpus is counted once)."""
+    vocab = wf.select(
         F.expr("split(word, '')").alias("toks"), "freq"
-    )
-    vocab = vocab.transform(materialize, eager=False)
+    ).transform(materialize, eager=False)
     out = []
     # static_rounds (r14): each merge iteration is one explode →
     # partial-agg → TakeOrdered collect over the (corpus-independent)
@@ -85,10 +89,8 @@ def learn_bpe_distributed(
     # stage-job cadence (profiler: 22 → 14 jobs for 8 merges). No
     # width pin: the pair aggregate is vocabulary-bounded but not
     # counted in-loop, so the exchanges stay at the session default.
-    from taxi_trips_etl_spark.dataprep.materialize import static_rounds
-
-    with static_rounds(spark):
-        for rank in range(1, n_merges + 1):
+    with static_rounds(wf.sparkSession):
+        for rank in range(1, N_MERGES + 1):
             pairs = (
                 vocab.filter(F.size("toks") >= 2)
                 .select(
@@ -114,23 +116,18 @@ def learn_bpe_distributed(
             vocab = vocab.select(
                 F.expr(_merge_fold_expr(a, b)).alias("toks"), "freq"
             ).transform(materialize, eager=False)
-    from taxi_trips_etl_spark.sources.localrel import local_rows
-
-    return local_rows(
-        spark, out,
-        "merge_rank long, tok_a string, tok_b string, pair_count long",
-    )
+    return local_rows(wf.sparkSession, out, _MERGES_SCHEMA)
 
 
 def learn_bpe_driver(
-    word_freq_rows: list[tuple[str, int]], n_merges: int = 8
+    word_freq_rows: list[tuple[str, int]],
 ) -> list[tuple[int, str, str, int]]:
     """Pure-python reference of the identical recurrence (also the
     driver fast path): greedy left-to-right merges, tiebreak
     (count DESC, pair ASC)."""
     vocab = [([*w], f) for w, f in word_freq_rows]
     out: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, N_MERGES + 1):
         counts: dict = {}
         for toks, f in vocab:
             for i in range(len(toks) - 1):
@@ -159,21 +156,13 @@ def learn_bpe_driver(
 
 def learn_bpe_auto(
     docs: DataFrame,
-    n_merges: int = 8,
     driver_vocab_cap: int = 2_000_000,
 ) -> DataFrame:
     """Driver loop below ``driver_vocab_cap`` vocabulary rows,
     :func:`learn_bpe_distributed` beyond it."""
-    spark = docs.sparkSession
     wf = word_freqs(docs).transform(materialize, eager=True)
-    probe = wf.limit(driver_vocab_cap + 1).toPandas()
-    if len(probe) > driver_vocab_cap:
-        return learn_bpe_distributed(docs, n_merges=n_merges)
+    probe = driver_rows(wf, driver_vocab_cap)
+    if probe is None:
+        return learn_bpe_distributed(wf)
     rows = list(zip(probe["word"].tolist(), probe["freq"].tolist()))
-    out = learn_bpe_driver(rows, n_merges)
-    from taxi_trips_etl_spark.sources.localrel import local_rows
-
-    return local_rows(
-        spark, out,
-        "merge_rank long, tok_a string, tok_b string, pair_count long",
-    )
+    return local_rows(docs.sparkSession, learn_bpe_driver(rows), _MERGES_SCHEMA)

@@ -19,6 +19,14 @@ table is materialized each round (``materialize`` — reliable checkpoint
 when a checkpoint dir is set, executor-local otherwise): lineage otherwise
 grows exponentially and re-executes every prior round (classic Spark
 iterative-algorithm trap). Driver sees only the changed-row count.
+
+The production route is :func:`connected_components_auto`: it builds
+the canonical edge list once, probes it (``materialize.driver_rows``)
+and union-finds it on the driver below ``driver_edge_cap`` or hands the
+same frame to :func:`connected_components_star`. The star loop follows
+the one ``static_rounds`` gate/pin rule: a counted side broadcasts while
+it is at most ``BROADCAST_CAP`` rows, only such a round pins a counted
+width, and an over-cap round runs at the session width.
 """
 
 from __future__ import annotations
@@ -29,8 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.materialize import (
+    driver_rows,
     materialize,
-    pin_loop_width,
     static_rounds,
 )
 
@@ -120,16 +128,14 @@ def connected_components(
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "doc_id_a",
-    b_col: str = "doc_id_b",
-    assume_canonical: bool = False,
-    min_broadcast_cap: int = 4_000_000,
-    rows_per_partition: int = 2_000_000,
-) -> DataFrame:
+def connected_components_star(edges: DataFrame) -> DataFrame:
     """→ (doc_id, component_id) via alternating large-star/small-star
     contraction — O(log n) rounds regardless of component diameter.
+
+    ``edges`` is the canonical edge list :func:`connected_components_auto`
+    builds: columns (a, b), a < b, deduped and materialized. The loop
+    needs only that postcondition, so it has no prologue of its own
+    (re-deriving it was a second full-|E| distinct shuffle).
 
     The two-phase algorithm of Kiveris et al., "Connected Components in
     MapReduce and Beyond" (SoCC'14), in pure DataFrame ops:
@@ -167,32 +173,7 @@ def connected_components_star(
     Prefer this over min-label when components can be deep (transitive
     link graphs, reply chains); near-dup cliques converge in ~2 rounds
     either way.
-
-    ``assume_canonical=True`` (round 10) skips the canonicalization
-    prologue when the caller has ALREADY produced a deduped,
-    ``a < b``-oriented, materialized edge list in columns named by
-    ``a_col``/``b_col`` — :func:`connected_components_auto`'s over-cap
-    branch re-entered here with exactly that frame and was paying a
-    redundant full-|E| shuffle (distinct) plus a second eager persist
-    of the identical edge set (~1.2 s of the forced-distributed bench
-    entry at sf0.1; one whole extra |E| shuffle at the 100 TB
-    posture). The loop's per-round invariant only needs the prologue's
-    POSTCONDITION, not the prologue.
     """
-    if assume_canonical:
-        edges = pairs.select(
-            F.col(a_col).alias("a"), F.col(b_col).alias("b")
-        )
-    else:
-        edges = (
-            pairs.select(
-                F.least(F.col(a_col), F.col(b_col)).alias("a"),
-                F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .transform(materialize, eager=True)
-        )
     # Derived from the already-checkpointed edge list and consumed
     # exactly once (the final mapping join), so it needs neither its
     # own checkpoint nor an upfront materialization job.
@@ -219,20 +200,15 @@ def connected_components_star(
     #   |V(sym)| ≤ 2·|E|, |smallest| ≤ |E|, with |E| = sig[0] the EXACT
     #   count the previous signature collected) — without them the
     #   phase joins fall back to static sort-merge and LOSE;
-    # - a counted in-loop shuffle width (ceil(|E|/rows_per_partition),
-    #   clamped to the session default) — AQE was coalescing the tiny
-    #   per-round exchanges to 1-2 partitions; a static session-default
-    #   width re-runs every round stage at full fan-out for rows that
-    #   fit one task. Both gates degrade to the session posture (no
-    #   hint, default width) the moment the counted state outgrows
-    #   them — the web-scale shape is unchanged.
-    spark = pairs.sparkSession
-    default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with static_rounds(spark):
+    # - a counted in-loop shuffle width (from |E|, pinned by the same
+    #   gate) — AQE was coalescing the tiny per-round exchanges to 1-2
+    #   partitions; a static session-default width re-runs every round
+    #   stage at full fan-out for rows that fit one task. Over the cap
+    #   a round runs at the session posture (no hint, session width).
+    with static_rounds(edges.sparkSession) as gate:
         sig = signature(edges)
         for _ in range(30):
-            hint = sig[0] <= min_broadcast_cap // 2
-            pin_loop_width(spark, default_width, sig[0], rows_per_partition)
+            hint = gate(2 * sig[0], sig[0])
             # large-star: symmetrize, per-u closed-neighborhood min,
             # link strictly larger neighbors to it.
             sym = edges.select("a", "b").unionByName(
@@ -334,16 +310,9 @@ def connected_components_auto(
         .distinct()
         .transform(materialize, eager=True)
     )
-    # limit(cap+1) bounds the probe: never a full collect of an
-    # over-cap list, and the Arrow path moves columns, not Row objects.
-    probe = edges_df.limit(driver_edge_cap + 1).toPandas()
-    if len(probe) > driver_edge_cap:
-        # edges_df IS star's canonical prologue output (deduped, a<b,
-        # materialized above) — skip re-deriving it (see
-        # connected_components_star's assume_canonical note).
-        return connected_components_star(
-            edges_df, a_col="a", b_col="b", assume_canonical=True
-        )
+    probe = driver_rows(edges_df, driver_edge_cap)
+    if probe is None:
+        return connected_components_star(edges_df)
 
     parent: dict = {}
 

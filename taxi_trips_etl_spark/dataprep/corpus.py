@@ -59,7 +59,7 @@ def prepare_corpus(
     chunks = chunk_documents(kept3, chunk_tokens=50, overlap=10)
     # Split on doc_id, not chunk id: all chunks of a document land on
     # the same side — no near-dup leakage across the boundary.
-    return train_test_split(chunks, key="doc_id", test_rate=0.2).select(
+    return train_test_split(chunks, test_rate=0.2).select(
         "doc_id",
         "chunk_id",
         F.md5("chunk_text").alias("chunk_hash"),
@@ -138,7 +138,7 @@ def prepare_corpus_v2(
     tok = tokenize_with_vocab(kept3, build_vocab(kept3, 500))
     pack = pack_sequences(kept3, seq_len=128).drop("n_tokens")
     return train_test_split(
-        tok.join(pack, "doc_id"), key="doc_id", test_rate=0.2
+        tok.join(pack, "doc_id"), test_rate=0.2
     ).select(
         "doc_id",
         "token_ids",

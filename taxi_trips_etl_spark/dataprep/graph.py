@@ -31,33 +31,38 @@ recurrence (same routing rationale as
 ``components.connected_components_auto``: LSH/transition graphs are
 tiny next to the corpus, and per-round Spark scheduling overhead
 dwarfs the actual arithmetic); both paths are pytest-pinned equal.
+
+One gate/pin rule for every loop here (pagerank, kcore, bfs, sssp):
+the ``static_rounds`` gate. A join side whose row count the loop
+already collected broadcasts while it is at most ``BROADCAST_CAP``
+rows, and only such a round pins a shuffle width counted from its
+state; an over-cap round is a static shuffle join at the session
+width.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.sources.localrel import local_rows
 
 from taxi_trips_etl_spark.dataprep.materialize import (
+    driver_rows,
     materialize,
-    pin_loop_width,
     static_rounds,
 )
 
 TOTAL = 10**12
-BROADCAST_CAP = 4_000_000  # node or frontier rows a loop join may broadcast
 # Loop lengths the oracles unroll: pagerank iterations, bfs/sssp rounds.
 ITERS = 10
 ROUNDS = 10
 
 
-def pagerank_distributed(
-    edges: DataFrame,
-    iters: int = ITERS,
-) -> DataFrame:
-    """→ (node, rank_e12) after ``iters`` integer power iterations.
+def pagerank_distributed(e: DataFrame) -> DataFrame:
+    """→ (node, rank_e12) after ``ITERS`` integer power iterations over
+    ``e``, the deduped, self-loop-free, materialized (src, dst) edge
+    list :func:`pagerank_auto` builds.
 
     Round batching (round 8): the recurrence consumes the previous
     ranks exactly ONCE per round (the contrib join; the nodes left
@@ -68,17 +73,12 @@ def pagerank_distributed(
     depth), so 5 is the pinned sweet spot.
 
     The ranks side broadcasts only while ``n_nodes`` (already counted
-    once for the base term) is under ``BROADCAST_CAP`` — same
+    once for the base term) passes the ``static_rounds`` gate — same
     executor-memory argument as bfs_hops' frontier gate: a web-scale
     node set must not ride a broadcast. Past the cap each round
-    becomes a shuffle join keyed on node/src.
+    becomes a shuffle join keyed on node/src at the session width.
     """
-    e = (
-        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .transform(materialize, eager=False)
-    )
+    spark = e.sparkSession
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst")))
@@ -87,34 +87,29 @@ def pagerank_distributed(
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
-        return local_rows(edges.sparkSession, [], "node long, rank_e12 long")
-    small = n_nodes <= BROADCAST_CAP
+        return local_rows(spark, [], "node long, rank_e12 long")
     base = (15 * TOTAL) // (100 * n_nodes)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    out = e.join(deg, "src")  # (src, dst, d) — static across rounds
-    out = out.transform(materialize, eager=False)
+    # (src, dst, d), static across rounds: filled here, under AQE and
+    # the session width, not by the first round inside the loop scope.
+    out = e.join(deg, "src").transform(materialize, eager=True)
     ranks = nodes.select("node", F.lit(TOTAL // n_nodes).alias("rank_e12"))
     done = 0
-    # static_rounds (r14): the contrib join is already explicitly
-    # hinted (broadcast under the cap) and the nodes left join keys two
+    # static_rounds (r14): the contrib join is explicitly gated
+    # (broadcast under the cap) and the nodes left join keys two
     # checkpointed relations — no in-loop join relies on AQE's runtime
     # downgrade, so AQE only adds its job-per-exchange cadence here.
     # The batch fills turn EAGER inside the context: pagerank has no
     # convergence action, so without an eager fill the whole loop would
     # execute lazily under the caller's action OUTSIDE this scope.
-    # In-loop shuffle width: counted from n_nodes (the per-round
+    # Under the cap the width is counted from n_nodes (the per-round
     # exchanges carry map-side-partial-aggregated contrib sums and the
-    # rank table, both ~n_nodes rows), clamped to the session default —
-    # AQE's coalescing did this at runtime; without it the static
-    # default width fans tiny rounds out for nothing. Interleaved A/B
-    # at sf0.1 in OPTIMIZATION_r14.md. Final plan still roots at the
-    # checkpoint.
-    spark = edges.sparkSession
-    default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with static_rounds(spark):
-        pin_loop_width(spark, default_width, n_nodes)
-        while done < iters:
-            step = min(5, iters - done)
+    # rank table, both ~n_nodes rows). Interleaved A/B at sf0.1 in
+    # OPTIMIZATION_r14.md. Final plan still roots at the checkpoint.
+    with static_rounds(spark) as gate:
+        small = gate(n_nodes)
+        while done < ITERS:
+            step = min(5, ITERS - done)
             for _ in range(step):
                 side = F.broadcast(ranks) if small else ranks
                 insum = (
@@ -143,21 +138,20 @@ def pagerank_distributed(
 
 def pagerank_auto(
     edges: DataFrame,
-    iters: int = ITERS,
     driver_edge_cap: int = 1_000_000,
 ) -> DataFrame:
     """Driver integer loop below ``driver_edge_cap`` distinct edges,
     :func:`pagerank_distributed` beyond it. Identical output by
     construction (same integer recurrence), pytest-pinned."""
     e = (
-        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
+        edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .transform(materialize, eager=True)
     )
-    probe = e.limit(driver_edge_cap + 1).toPandas()
-    if len(probe) > driver_edge_cap:
-        return pagerank_distributed(e, iters=iters)
+    probe = driver_rows(e, driver_edge_cap)
+    if probe is None:
+        return pagerank_distributed(e)
 
     srcs = probe["src"].tolist()
     dsts = probe["dst"].tolist()
@@ -171,7 +165,7 @@ def pagerank_auto(
         deg[s] = deg.get(s, 0) + 1
     base = (15 * TOTAL) // (100 * n)
     rank = {v: TOTAL // n for v in nodes}
-    for _ in range(iters):
+    for _ in range(ITERS):
         insum = {v: 0 for v in nodes}
         for s, d in zip(srcs, dsts):
             insum[d] += rank[s] // deg[s]
@@ -268,24 +262,20 @@ def kcore(
     n_prev = live.count()
     # static_rounds (r14): the peeling rounds plan once and run as one
     # job each, under the two measured preconditions (see
-    # materialize.static_rounds and the star loop): an explicit counted
-    # gate on the keep side — the blanket AQE-off A/B without it LOST
+    # materialize.static_rounds and the star loop): the counted gate on
+    # the keep side — the blanket AQE-off A/B without it LOST
     # (2.5→5.5 s: the semi joins fell back to static sort-merge) — and
-    # a counted in-loop shuffle width replacing AQE's coalescing. Both
-    # are sound at any scale: |keep| ≤ |live|/k ≤ n_prev/k rows of one
-    # long, with n_prev the EXACT count the fixpoint check already
-    # collected; over the caps the hint is withheld and the width stays
-    # at the session default (the web-scale posture).
-    spark = edges.sparkSession
-    default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with static_rounds(spark):
+    # the counted in-loop width it pins, replacing AQE's coalescing.
+    # |keep| ≤ |live|/k ≤ n_prev/k rows of one long, with n_prev the
+    # EXACT count the fixpoint check already collected; the width is
+    # counted from n_prev, the live edge set.
+    with static_rounds(edges.sparkSession) as gate:
         for _ in range(rounds):
             if n_prev == 0:
                 break
-            pin_loop_width(spark, default_width, n_prev)
             deg = live.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
             keep = deg.filter(F.col("d") >= k).select("a")
-            hint = n_prev // max(k, 1) <= BROADCAST_CAP
+            hint = gate(n_prev // max(k, 1), n_prev)
             keep_a = F.broadcast(keep) if hint else keep
             keep_b = keep.withColumnRenamed("a", "b")
             if hint:
@@ -305,18 +295,10 @@ def kcore(
     )
 
 
-def bfs_hops(
-    edges: DataFrame,
-    source_node: int,
-    rounds: int = ROUNDS,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast_frontier: bool | None = None,
-    frontier_broadcast_cap: int = BROADCAST_CAP,
-) -> DataFrame:
-    """Bounded-round BFS from ``source_node`` over the directed edge
-    list → (node, hops) for every node reachable within ``rounds``
-    hops (min-hop label propagation — unit-weight SSSP).
+def bfs_hops(edges: DataFrame, source_node: int) -> DataFrame:
+    """Bounded-round BFS from ``source_node`` over the directed (src,
+    dst) edge list → (node, hops) for every node reachable within
+    ``ROUNDS`` hops (min-hop label propagation — unit-weight SSSP).
 
     Determinism contract (what the unrolled-CTE oracle replays):
     dist_{r} = min(dist_{r-1}, 1 + dist_{r-1} of any in-neighbor) —
@@ -325,168 +307,87 @@ def bfs_hops(
     only grows), so an early fixpoint exit equals the full unroll.
 
     Scale shape: per round one edges⋈dist equi-join on src (the dist
-    side is reached-nodes-sized — broadcast while the frontier is
-    small) + one min-groupBy; lineage truncates per round. This is
-    the relaxation skeleton: swap hops+1 for a weight sum and min for
-    the same min and it is Bellman-Ford. ``broadcast_frontier`` makes
-    the "broadcast while small" claim real: the checkpointed dist side
-    is a LogicalRDD without size stats, so without the hint the
-    planner shuffle-joins — re-exchanging the edge relation every
-    round. Default ``None`` = AUTO: each round relaxes once, with AQE
+    side is reached-nodes-sized) + one min-groupBy; lineage truncates
+    per round. The checkpointed dist side is a LogicalRDD without size
+    stats, so the planner alone would shuffle-join it and re-exchange
+    the edge relation every round. Each round relaxes once, with AQE
     off (``static_rounds``), and its input is the dist table whose
-    EXACT row count the previous fixpoint check collected. That relax
-    broadcasts while the count is under ``frontier_broadcast_cap``
-    rows (4M × ~16 B ≈ 64 MiB) and is a static shuffle join over it.
-    So the auto default never broadcasts an uncounted or over-cap
-    frontier and cannot OOM executors when the reachable graph turns
-    out web-scale. ``True``/``False`` force the choice for callers
-    that know their graph.
+    EXACT row count the previous fixpoint check collected: the round
+    broadcasts it while that count passes the ``static_rounds`` gate
+    (4M rows × ~16 B ≈ 64 MiB) and is a static shuffle join at the
+    session width over it, so no uncounted or over-cap frontier is
+    ever broadcast. :func:`shortest_paths` runs the same loop with the
+    edge weight for the unit step (Bellman-Ford).
     """
     # Materialize the edge relation ONCE: without this every round's
     # checkpoint job re-runs the whole upstream edge construction
     # (orders x lineitem join + window in the registry entry) — the
     # actual wall-clock driver, not the per-round relaxation.
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         .distinct()
         .transform(materialize, eager=True)
     )
-    dist = (
-        local_rows(
-            e.sparkSession, [(int(source_node), 0)], "node long, hops long"
-        )
-        .transform(materialize, eager=True)
-    )
-    def relax(d: DataFrame, small: bool) -> DataFrame:
-        side = F.broadcast(d) if small else d
-        return (
-            e.join(side, e["src"] == side["node"])
-            .select(
-                F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops")
-            )
-            .unionByName(d)
-            .groupBy("node")
-            .agg(F.min("hops").cast("long").alias("hops"))
-        )
-
-    # ONE relaxation per materialization under static_rounds (r14).
-    # History: batch-2 (two relaxes per lazy checkpoint) was the r8
-    # sweet spot UNDER AQE, because halving the driver syncs halved
-    # AQE's job-per-exchange cadence — at the price that the batch's
-    # second relax had an uncounted input and needed AQE's runtime
-    # downgrade for its join. With static_rounds the cadence cost per
-    # round is one job regardless, and batch-1 makes EVERY relax's
-    # input the exactly counted fixpoint aggregate — so every join is
-    # soundly hinted (broadcast under the cap, shuffle join over it)
-    # and nothing relies on runtime replanning. The fixpoint agg's own
-    # action still fills the lazy checkpoint: one job per round. The
-    # in-loop width is counted from the reached-set size, clamped to
-    # the session default (the web-scale posture past the cap).
-    n_prev, sum_prev = 1, 0
-    done = 0
-    spark = edges.sparkSession
-    default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with static_rounds(spark):
-        while done < rounds:
-            small = (
-                broadcast_frontier
-                if broadcast_frontier is not None
-                else n_prev <= frontier_broadcast_cap
-            )
-            pin_loop_width(spark, default_width, n_prev)
-            relaxed = relax(dist, small).transform(materialize, eager=False)
-            done += 1
-            agg = relaxed.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("hops").alias("s")
-            ).collect()[0]
-            dist = relaxed
-            if (agg["n"], agg["s"]) == (n_prev, sum_prev):
-                break  # fixpoint: labels are monotone, no further change
-            n_prev, sum_prev = agg["n"], agg["s"]
-    return dist
+    return _relax_rounds(e, source_node, "hops", F.lit(1))
 
 
-def shortest_paths(
-    edges: DataFrame,
-    source_node: int,
-    rounds: int = ROUNDS,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    broadcast_frontier: bool | None = None,
-    frontier_broadcast_cap: int = BROADCAST_CAP,
-) -> DataFrame:
+def shortest_paths(edges: DataFrame, source_node: int) -> DataFrame:
     """Bounded-round Bellman-Ford from ``source_node`` over a directed
-    weighted edge list (integer weights ≥ 0) → (node, dist) for nodes
-    reachable within ``rounds`` relaxations — :func:`bfs_hops` with
-    the unit increment swapped for the edge weight, same determinism
-    contract (integer min, order-independent, monotone ⇒ fixpoint
-    exit ≡ full unroll). After r rounds labels equal the true
-    shortest distance over paths of ≤ r edges — the standard
-    Bellman-Ford partial guarantee the oracle replays exactly.
-
-    ``broadcast_frontier`` hints the dist side of each relaxation
-    join as broadcast: the checkpointed frontier is a LogicalRDD with
-    no reliable size stats, so the planner would otherwise pick a
-    shuffle join and re-exchange the (much larger) edge relation
-    EVERY round. Default ``None`` = AUTO, exactly as in
-    :func:`bfs_hops`: each round's single relax broadcasts only while
-    its exactly counted input is under ``frontier_broadcast_cap`` and
-    is a static shuffle join over it — the safe default for graphs
-    whose reachable set can't fit one executor (relaxations degrade
-    to shuffle joins but stay correct).
+    (src, dst, w) edge list (integer weights ≥ 0) → (node, dist) for
+    nodes reachable within ``ROUNDS`` relaxations — :func:`bfs_hops`
+    with the unit increment swapped for the edge weight, same
+    determinism contract (integer min, order-independent, monotone ⇒
+    fixpoint exit ≡ full unroll) and the same gated loop. After r
+    rounds labels equal the true shortest distance over paths of ≤ r
+    edges — the standard Bellman-Ford partial guarantee the oracle
+    replays exactly. Parallel edges keep their cheapest weight.
     """
     e = (
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("long").alias("w"),
-        )
+        edges.select("src", "dst", F.col("w").cast("long").alias("w"))
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
         .transform(materialize, eager=True)  # once, not per round
     )
-    dist = (
-        local_rows(
-            e.sparkSession, [(int(source_node), 0)], "node long, dist long"
-        )
-        .transform(materialize, eager=True)
-    )
-    def relax(d: DataFrame, small: bool) -> DataFrame:
-        side = F.broadcast(d) if small else d
-        return (
-            e.join(side, e["src"] == side["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-            .unionByName(d)
-            .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-        )
+    return _relax_rounds(e, source_node, "dist", F.col("w"))
 
-    # ONE relaxation per materialization under static_rounds — same
-    # counted-hint + counted-width argument as bfs_hops (see there);
-    # min composes, the fixpoint exit stays valid.
+
+def _relax_rounds(
+    e: DataFrame, source_node: int, label: str, step: Column
+) -> DataFrame:
+    """Up to ``ROUNDS`` min-relaxations of the (node, ``label``) table
+    from ``source_node`` along the materialized edge list ``e``, each
+    edge adding ``step`` (a column of ``e``) to its src's label.
+
+    ONE relaxation per materialization under static_rounds (r14):
+    every relax's input is then the exactly counted fixpoint aggregate,
+    so every join is soundly gated and nothing relies on AQE's runtime
+    replanning (two relaxes per checkpoint, the r8 choice under AQE,
+    left the second one's input uncounted). The fixpoint agg's own
+    action fills the lazy checkpoint: one job per round.
+    """
+    dist = local_rows(
+        e.sparkSession, [(int(source_node), 0)], f"node long, {label} long"
+    ).transform(materialize, eager=True)
     n_prev, sum_prev = 1, 0
-    done = 0
-    spark = edges.sparkSession
-    default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with static_rounds(spark):
-        while done < rounds:
-            small = (
-                broadcast_frontier
-                if broadcast_frontier is not None
-                else n_prev <= frontier_broadcast_cap
+    with static_rounds(e.sparkSession) as gate:
+        for _ in range(ROUNDS):
+            side = F.broadcast(dist) if gate(n_prev) else dist
+            relaxed = (
+                e.join(side, e["src"] == side["node"])
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col(label) + step).alias(label),
+                )
+                .unionByName(dist)
+                .groupBy("node")
+                .agg(F.min(label).cast("long").alias(label))
+                .transform(materialize, eager=False)
             )
-            pin_loop_width(spark, default_width, n_prev)
-            relaxed = relax(dist, small).transform(materialize, eager=False)
-            done += 1
             agg = relaxed.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
+                F.count(F.lit(1)).alias("n"), F.sum(label).alias("s")
             ).collect()[0]
             dist = relaxed
             if (agg["n"], agg["s"]) == (n_prev, sum_prev):
-                break
+                break  # fixpoint: labels are monotone, no further change
             n_prev, sum_prev = agg["n"], agg["s"]
     return dist

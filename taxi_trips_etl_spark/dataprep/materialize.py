@@ -62,9 +62,24 @@ def materialize(df: DataFrame, *, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+BROADCAST_CAP = 4_000_000  # rows an in-loop join side may broadcast
+ROWS_PER_PARTITION = 2_000_000  # rows per task of a counted in-loop width
+
+
+def driver_rows(df: DataFrame, cap: int):
+    """→ ``df``'s rows as a pandas frame when it holds at most ``cap``
+    rows, else ``None``: the driver-or-distributed route of the
+    iterative operators. ``limit(cap + 1)`` bounds the probe, so an
+    over-cap input is never collected whole, and the Arrow path moves
+    columns, not Row objects."""
+    rows = df.limit(cap + 1).toPandas()
+    return None if len(rows) > cap else rows
+
+
 @contextmanager
 def static_rounds(spark):
-    """Plan iterative-loop round actions WITHOUT adaptive execution.
+    """Plan iterative-loop round actions WITHOUT adaptive execution;
+    yields the loop's counted broadcast gate.
 
     AQE materializes every exchange as its own job (replan → submit →
     await, per stage): an iterative operator whose round is one lazy-
@@ -86,10 +101,16 @@ def static_rounds(spark):
     upstream derivation and the returned final plan execute outside,
     keeping AQE's coalescing/skew handling where data is corpus-sized.
 
-    Also saves/restores ``spark.sql.shuffle.partitions``: without AQE
-    coalescing, a loop may pin a counted per-round width inside the
-    scope (:func:`pin_loop_width`); the exit restores the session width
-    whatever the loop set.
+    The gate, ``gate(side_rows, loop_rows=side_rows) → bool``, is the
+    one rule every round follows. A side of ``side_rows`` rows (an
+    exact count the loop already collected) broadcasts iff it is at
+    most ``BROADCAST_CAP`` rows; such a round also pins the shuffle
+    width to ceil(``loop_rows`` / ``ROWS_PER_PARTITION``), clamped to
+    the session width, because without AQE nothing coalesces its tiny
+    exchanges. A round over the cap runs a static shuffle join at the
+    session width: the larger in-loop relations (edge lists) are
+    re-exchanged there, never at a width counted from a smaller one.
+    The exit restores both confs whatever the loop set.
 
     Session-wide, not query-scoped: both confs are SparkSession state,
     so any query another thread plans on the same session while the
@@ -103,28 +124,21 @@ def static_rounds(spark):
     old = conf.get("spark.sql.adaptive.enabled", "true")
     old_width = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.adaptive.enabled", "false")
+
+    def gate(side_rows: int, loop_rows: int | None = None) -> bool:
+        small = side_rows <= BROADCAST_CAP
+        width = int(old_width)
+        if small:
+            rows = side_rows if loop_rows is None else loop_rows
+            width = max(1, min(width, -(-rows // ROWS_PER_PARTITION)))
+        conf.set("spark.sql.shuffle.partitions", str(width))
+        return small
+
     try:
-        yield
+        yield gate
     finally:
         conf.set("spark.sql.adaptive.enabled", old)
         conf.set("spark.sql.shuffle.partitions", old_width)
-
-
-def pin_loop_width(
-    spark, default_width: int, n_rows: int, rows_per_partition: int = 2_000_000
-) -> None:
-    """Set the in-loop shuffle width to ceil(``n_rows`` /
-    ``rows_per_partition``), clamped to [1, ``default_width``].
-
-    Inside :func:`static_rounds` AQE no longer coalesces the small
-    per-round exchanges, so a loop pins a width counted from the state
-    it carries. ``default_width`` is the session width read BEFORE the
-    scope opened (the conf holds the last pin inside it); past
-    ``default_width × rows_per_partition`` rows the loop runs at the
-    session width, the web-scale posture.
-    """
-    width = max(1, min(default_width, -(-n_rows // rows_per_partition)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
 
 
 def release(df: DataFrame) -> None:

@@ -37,17 +37,13 @@ codes once for ALL queries (per-query LUTs ride a single explode).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from taxi_trips_etl_spark.dataprep.pca_power import _round_half_away
+
 Q_VEC = 10**6  # coordinate quantization (1e-6 units)
 SAMPLE_N = 512  # codebook training rows, shared by the Spark builder and its oracle
-
-
-def _round_half_away(v: float) -> int:
-    return int(math.floor(v + 0.5)) if v >= 0 else int(math.ceil(v - 0.5))
 
 
 def _quantize(vec: list[float]) -> list[int]:

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _HASH_SPACE = 1 << 32
+_KEY = "doc_id"  # the row key the samplers below hash
 
 
 def _key_bucket(key: Column, salt: str) -> Column:
@@ -22,17 +23,16 @@ def _key_bucket(key: Column, salt: str) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
 
 
-def deterministic_sample(df: DataFrame, rate: float, key: str) -> DataFrame:
+def deterministic_sample(df: DataFrame, rate: float) -> DataFrame:
     """Keep ~rate of rows, chosen by key hash — idempotent & rerun-stable."""
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"sample rate must be in [0, 1], got {rate}")
-    return df.filter(_key_bucket(F.col(key), "sample") < int(rate * _HASH_SPACE))
+    return df.filter(_key_bucket(F.col(_KEY), "sample") < int(rate * _HASH_SPACE))
 
 
 def stratified_sample(
     df: DataFrame,
     rates: dict[str, float],
-    key: str,
     strata_col: str,
     default_rate: float = 0.0,
 ) -> DataFrame:
@@ -50,7 +50,7 @@ def stratified_sample(
         raise ValueError(
             f"default_rate must be in [0, 1], got {default_rate}"
         )
-    bucket = _key_bucket(F.col(key), "strata")
+    bucket = _key_bucket(F.col(_KEY), "strata")
     threshold = F.lit(int(default_rate * _HASH_SPACE))
     for stratum, rate in rates.items():
         threshold = (
@@ -75,21 +75,17 @@ def split_expr(key: Column, test_rate: float = 0.2) -> Column:
     ).otherwise("train")
 
 
-def train_test_split(df: DataFrame, key: str, test_rate: float = 0.2) -> DataFrame:
+def train_test_split(df: DataFrame, test_rate: float = 0.2) -> DataFrame:
     """Adds a ``split`` column ('train' | 'test') keyed by content hash.
 
     Same key → same split forever: new data appends without reshuffling
     membership, and dedup-then-split pipelines can't leak a near-dup
     pair across the boundary if they split on the canonical doc key.
     """
-    return df.withColumn("split", split_expr(F.col(key), test_rate))
+    return df.withColumn("split", split_expr(F.col(_KEY), test_rate))
 
 
-def domain_mixture_sample(
-    df: DataFrame,
-    key: str,
-    domain_col: str,
-) -> DataFrame:
+def domain_mixture_sample(df: DataFrame, domain_col: str) -> DataFrame:
     """Temperature-weighted domain rebalancing (the multilingual /
     multi-source mixing rule: sample domain d with probability
     ∝ n_d^0.5, which upweights the tail), targeting half the rows.
@@ -132,12 +128,12 @@ def domain_mixture_sample(
     )
     return (
         df.join(F.broadcast(rates), domain_col)
-        .filter(_key_bucket(F.col(key), "mix") < F.col("_threshold"))
+        .filter(_key_bucket(F.col(_KEY), "mix") < F.col("_threshold"))
         .drop("_threshold")
     )
 
 
-def kfold_assign(df: DataFrame, key: str, k: int = 5) -> DataFrame:
+def kfold_assign(df: DataFrame, k: int = 5) -> DataFrame:
     """Adds a ``fold`` column in [0, k): hash-keyed cross-validation
     folds. Same key → same fold forever (append-stable, like
     :func:`train_test_split`); fold i's holdout is ``fold == i`` and
@@ -146,7 +142,7 @@ def kfold_assign(df: DataFrame, key: str, k: int = 5) -> DataFrame:
         # Spark pmod(x, 0) is NULL: k = 0 silently nulls every fold.
         raise ValueError(f"kfold_assign needs k >= 1, got {k}")
     return df.withColumn(
-        "fold", (_key_bucket(F.col(key), "fold") % k).cast("long")
+        "fold", (_key_bucket(F.col(_KEY), "fold") % k).cast("long")
     )
 
 

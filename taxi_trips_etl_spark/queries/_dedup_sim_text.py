@@ -579,7 +579,7 @@ def q_domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.sampling import domain_mixture_sample
 
     return domain_mixture_sample(
-        _t(spark, sf_dir, "documents"), key="doc_id", domain_col="source"
+        _t(spark, sf_dir, "documents"), domain_col="source"
     ).select("doc_id", "source")
 
 
@@ -1116,7 +1116,7 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.sampling import deterministic_sample
 
     return deterministic_sample(
-        _t(spark, sf_dir, "documents"), 0.25, key="doc_id"
+        _t(spark, sf_dir, "documents"), 0.25
     ).select("doc_id", "lang", "n_chars")
 
 
@@ -1139,7 +1139,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.sampling import train_test_split
 
     return (
-        train_test_split(_t(spark, sf_dir, "documents"), key="doc_id")
+        train_test_split(_t(spark, sf_dir, "documents"))
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1331,7 +1331,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stratified_sample(
         _t(spark, sf_dir, "documents"),
         rates={"en": 0.1, "de": 0.5},
-        key="doc_id",
         strata_col="lang",
         default_rate=0.25,
     )

@@ -1103,7 +1103,7 @@ def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.sampling import kfold_assign
 
     return (
-        kfold_assign(_t(spark, sf_dir, "documents"), key="doc_id", k=5)
+        kfold_assign(_t(spark, sf_dir, "documents"), k=5)
         .groupBy("fold")
         .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("min_doc"))
     )

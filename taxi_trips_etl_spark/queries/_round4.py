@@ -636,7 +636,7 @@ def supplier_transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_learn_oracle(n_merges: int = 8) -> str:
+def _bpe_learn_oracle() -> str:
     """Unrolled-CTE replay of BPE merge learning (the kmeans/PageRank
     pattern applied to a per-round ARGMAX + greedy rewrite): each
     round counts adjacent pairs over the current segmentation
@@ -652,6 +652,8 @@ def _bpe_learn_oracle(n_merges: int = 8) -> str:
     of each maximal run (gaps-and-islands on the flag column). CTEs
     are MATERIALIZED — inlining would re-expand the round chain into
     an exponential scan tree."""
+    from taxi_trips_etl_spark.dataprep.bpe import N_MERGES
+
     head = """
     WITH wf0 AS MATERIALIZED (
         SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
@@ -669,7 +671,7 @@ def _bpe_learn_oracle(n_merges: int = 8) -> str:
         FROM wf, unnest(generate_series(1, len(word))) AS t(i)
     )"""
     ctes = []
-    for r in range(1, n_merges + 1):
+    for r in range(1, N_MERGES + 1):
         p = r - 1
         ctes.append(f"""
     pr{r} AS MATERIALIZED (
@@ -717,12 +719,12 @@ def _bpe_learn_oracle(n_merges: int = 8) -> str:
     finals = " UNION ALL ".join(
         f"SELECT CAST({r} AS BIGINT) AS merge_rank, a AS tok_a,"
         f" b AS tok_b, CAST(cnt AS BIGINT) AS pair_count FROM best{r}"
-        for r in range(1, n_merges + 1)
+        for r in range(1, N_MERGES + 1)
     )
     return head + "," + ",".join(ctes) + "\n    " + finals
 
 
-@register("bpe_learn_merges", _bpe_learn_oracle(8))
+@register("bpe_learn_merges", _bpe_learn_oracle())
 def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE merge-rule learning (dataprep/bpe.py): 8 merges over the
     documents word-frequency table — the tokenizer-training half of
@@ -735,7 +737,7 @@ def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver ≡ hand-computed example."""
     from taxi_trips_etl_spark.dataprep.bpe import learn_bpe_auto
 
-    return learn_bpe_auto(_t(spark, sf_dir, "documents"), n_merges=8)
+    return learn_bpe_auto(_t(spark, sf_dir, "documents"))
 
 
 @register(

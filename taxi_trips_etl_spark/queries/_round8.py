@@ -33,8 +33,9 @@ def q_graph_pagerank_distributed(
     """graph_pagerank's distributed route, forced (driver_edge_cap=0):
     10 integer power-iteration rounds, each one ranks⋈edges broadcast
     join + one groupBy(dst) partial-sum, lineage truncated per round
-    (dataprep/graph.py:48). Must hash-match the identical unrolled-CTE
-    oracle the driver-loop entry matches — integer fixed-point makes
+    (dataprep/graph.py:pagerank_distributed). Must hash-match the
+    identical unrolled-CTE oracle the driver-loop entry matches —
+    integer fixed-point makes
     the result independent of summation order, so the two routes are
     bit-equal by construction."""
     from taxi_trips_etl_spark.dataprep.graph import pagerank_auto
@@ -47,7 +48,8 @@ def q_graph_pagerank_distributed(
 @register("dedup_components_star", _COMPONENTS_SQL)
 def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_components' distributed route, forced (driver_edge_cap=0):
-    O(log n) star contraction (dataprep/components.py:121) over the
+    O(log n) star contraction
+    (dataprep/components.py:connected_components_star) over the
     SimHash near-dup pair graph, vs the recursive-CTE transitive
     closure oracle. Component ids are component minima on every route,
     so driver union-find ≡ star contraction ≡ oracle."""
@@ -59,17 +61,15 @@ def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components_auto(pairs, driver_edge_cap=0)
 
 
-@register("bpe_learn_merges_distributed", _bpe_learn_oracle(8))
+@register("bpe_learn_merges_distributed", _bpe_learn_oracle())
 def q_bpe_learn_merges_distributed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """bpe_learn_merges' distributed route, forced (driver_vocab_cap=0):
     8 merge rounds where each round is a vocabulary-sized pair-count
-    agg + argmax + rewrite (dataprep/bpe.py:70) — the path a real 50k
-    vocabulary over a web corpus would take. Hash-matches the same
+    agg + argmax + rewrite (dataprep/bpe.py:learn_bpe_distributed) —
+    the path a real 50k vocabulary over a web corpus would take. Hash-matches the same
     unrolled-CTE merge replay as the driver-loop entry."""
     from taxi_trips_etl_spark.dataprep.bpe import learn_bpe_auto
 
-    return learn_bpe_auto(
-        _t(spark, sf_dir, "documents"), n_merges=8, driver_vocab_cap=0
-    )
+    return learn_bpe_auto(_t(spark, sf_dir, "documents"), driver_vocab_cap=0)

@@ -44,7 +44,7 @@ def test_star_contraction_long_chain(spark):
     # 50-node path: diameter 49 sinks min-label at max_rounds=20, but
     # large-star/small-star contracts it in O(log n) rounds.
     from taxi_trips_etl_spark.dataprep.components import (
-        connected_components_star,
+        connected_components_auto,
     )
 
     pairs = spark.createDataFrame(
@@ -52,7 +52,7 @@ def test_star_contraction_long_chain(spark):
     )
     comp = {
         r.doc_id: r.component_id
-        for r in connected_components_star(pairs).collect()
+        for r in connected_components_auto(pairs, driver_edge_cap=0).collect()
     }
     assert len(comp) == 50
     assert set(comp.values()) == {0}
@@ -60,7 +60,7 @@ def test_star_contraction_long_chain(spark):
 
 def test_star_matches_min_label_on_mixed_graph(spark):
     from taxi_trips_etl_spark.dataprep.components import (
-        connected_components_star,
+        connected_components_auto,
     )
 
     # chain + clique + pair + a bridge between two cliques
@@ -77,7 +77,7 @@ def test_star_matches_min_label_on_mixed_graph(spark):
     }
     got = {
         r.doc_id: r.component_id
-        for r in connected_components_star(pairs).collect()
+        for r in connected_components_auto(pairs, driver_edge_cap=0).collect()
     }
     assert got == want
 
@@ -122,7 +122,6 @@ def test_auto_components_equals_star_on_random_graphs(spark):
 
     from taxi_trips_etl_spark.dataprep.components import (
         connected_components_auto,
-        connected_components_star,
     )
 
     rnd = random.Random(7)
@@ -132,7 +131,7 @@ def test_auto_components_equals_star_on_random_graphs(spark):
     df = spark.createDataFrame(edges, "doc_id_a long, doc_id_b long")
     star = {
         (r["doc_id"], r["component_id"])
-        for r in connected_components_star(df).collect()
+        for r in connected_components_auto(df, driver_edge_cap=0).collect()
     }
     auto = {
         (r["doc_id"], r["component_id"])
@@ -162,18 +161,18 @@ def test_auto_components_distributed_path_above_cap(spark):
 
 def test_auto_overcap_passes_canonical_frame_to_star(spark, monkeypatch):
     """CI pin (VERDICT r10 #3b, part 1): the over-cap branch must hand
-    star its ALREADY canonical+materialized prologue output with
-    assume_canonical=True — re-deriving it would re-add the redundant
-    full-|E| distinct shuffle the r10 fix removed."""
+    star its ALREADY canonical+materialized prologue output — the
+    (a, b) frame star's loop starts from, so nothing re-derives it
+    with a redundant full-|E| distinct shuffle."""
     import taxi_trips_etl_spark.dataprep.components as C
 
     seen = {}
     real = C.connected_components_star
 
-    def spy(pairs, **kw):
-        seen["kwargs"] = kw
-        seen["plan"] = pairs._jdf.queryExecution().executedPlan().toString()
-        return real(pairs, **kw)
+    def spy(edges):
+        seen["columns"] = edges.columns
+        seen["plan"] = edges._jdf.queryExecution().executedPlan().toString()
+        return real(edges)
 
     monkeypatch.setattr(C, "connected_components_star", spy)
     df = spark.createDataFrame(
@@ -181,58 +180,107 @@ def test_auto_overcap_passes_canonical_frame_to_star(spark, monkeypatch):
         "doc_id_a long, doc_id_b long",
     )
     C.connected_components_auto(df, driver_edge_cap=3).collect()
-    assert seen["kwargs"].get("assume_canonical") is True
+    assert seen["columns"] == ["a", "b"]
     # the frame star receives reads the materialized prologue (a
     # checkpoint scan), not a fresh distinct over raw pairs
     assert "Scan ExistingRDD" in seen["plan"] or "Checkpoint" in seen["plan"], seen["plan"]
     assert "HashAggregate" not in seen["plan"], seen["plan"]
 
 
-def test_assume_canonical_skips_exactly_one_full_edge_distinct(spark, monkeypatch):
-    """CI pin (VERDICT r10 #3b, part 2): on the SAME canonical input,
-    star with assume_canonical=False must construct exactly ONE more
-    DataFrame.distinct than with True — the prologue's full-|E| dedup.
-    If the prologue is ever silently re-added to the fast path, the
-    counts equalize and this fails."""
-    from pyspark.sql import functions as F
+def test_overcap_routers_build_their_prologue_once(spark, sf_dir, monkeypatch):
+    """Over the driver cap each router derives its input once and hands
+    that frame to the distributed loop, which re-derives nothing: the
+    pagerank edge list (one materialized (src, dst) distinct), the BPE
+    word counts (one corpus-sized word_freqs) and the canonical
+    component edges (one eager (a, b) materialization)."""
+    from taxi_trips_etl_spark.dataprep import bpe, components, graph
 
-    from taxi_trips_etl_spark.dataprep.components import connected_components_star
-    from taxi_trips_etl_spark.dataprep.materialize import materialize
+    built = []
 
-    canonical = materialize(
-        spark.createDataFrame(
-            [(i, i + 1) for i in range(0, 30, 2)] + [(0, 9), (3, 12)],
-            "a long, b long",
-        )
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct(),
-        eager=True,
+    def spy(module):
+        real = module.materialize
+
+        def counting(df, *, eager=False):
+            built.append((tuple(df.columns), eager))
+            return real(df, eager=eager)
+
+        monkeypatch.setattr(module, "materialize", counting)
+
+    for module in (graph, components, bpe):
+        spy(module)
+    real_wf = bpe.word_freqs
+
+    def counting_wf(docs):
+        built.append("word_freqs")
+        return real_wf(docs)
+
+    monkeypatch.setattr(bpe, "word_freqs", counting_wf)
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 4), (1, 2), (4, 4)], "src long, dst long"
     )
+    assert graph.pagerank_auto(edges, driver_edge_cap=0).count() == 4
+    assert [b for b in built if b[0] == ("src", "dst")] == [(("src", "dst"), True)]
 
-    # patch the CONCRETE class (pyspark 4's pyspark.sql.DataFrame is an
-    # abstract base; instances are classic.DataFrame, whose own method
-    # shadows a base-class patch)
-    cls = type(canonical)
-    counts = []
-    orig = cls.distinct
+    built.clear()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(20)
+    assert bpe.learn_bpe_auto(docs, driver_vocab_cap=0).count() > 0
+    assert built.count("word_freqs") == 1
 
-    def counting(self):
-        counts.append(1)
-        return orig(self)
+    built.clear()
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 30, 2)] + [(9, 0), (3, 12), (0, 1)],
+        "doc_id_a long, doc_id_b long",
+    )
+    components.connected_components_auto(pairs, driver_edge_cap=0).collect()
+    assert built.count((("a", "b"), True)) == 1
 
-    monkeypatch.setattr(cls, "distinct", counting)
 
-    out_fast = connected_components_star(
-        canonical, a_col="a", b_col="b", assume_canonical=True
-    ).collect()
-    n_fast = len(counts)
-    counts.clear()
-    out_slow = connected_components_star(
-        canonical, a_col="a", b_col="b", assume_canonical=False
-    ).collect()
-    n_slow = len(counts)
-    assert n_slow == n_fast + 1, (n_fast, n_slow)
-    assert sorted(map(tuple, out_fast)) == sorted(map(tuple, out_slow))
+def test_overcap_rounds_run_at_session_width(spark, monkeypatch):
+    """Every gated loop pins a counted width only on rounds whose gate
+    broadcasts. Under the cap these tiny graphs run their rounds at a
+    width of 1; with BROADCAST_CAP at 0 every round runs at the session
+    width, so an edge relation is never re-exchanged at a width counted
+    from a smaller one. Seen at each in-loop materialize call, where
+    the round's plan is built."""
+    from taxi_trips_etl_spark.dataprep import components, graph
+    from taxi_trips_etl_spark.dataprep import materialize as M
+
+    conf = spark.conf
+    session_width = conf.get("spark.sql.shuffle.partitions")
+    assert session_width != "1"
+    widths = []
+
+    def spy(module):
+        real = module.materialize
+
+        def recording(df, *, eager=False):
+            if conf.get("spark.sql.adaptive.enabled") == "false":
+                widths.append(conf.get("spark.sql.shuffle.partitions"))
+            return real(df, eager=eager)
+
+        monkeypatch.setattr(module, "materialize", recording)
+
+    spy(graph)
+    spy(components)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 4), (4, 2)], "src long, dst long"
+    )
+    w_edges = edges.withColumn("w", edges["src"] + 1)
+    pairs = edges.toDF("doc_id_a", "doc_id_b")
+
+    def run_loops():
+        widths.clear()
+        graph.pagerank_auto(edges, driver_edge_cap=0).collect()
+        graph.bfs_hops(edges, source_node=1).collect()
+        graph.shortest_paths(w_edges, source_node=1).collect()
+        graph.kcore(edges, k=2).collect()
+        components.connected_components_auto(pairs, driver_edge_cap=0).collect()
+        return set(widths)
+
+    assert run_loops() == {"1"}
+    monkeypatch.setattr(M, "BROADCAST_CAP", 0)
+    assert run_loops() == {session_width}
 
 
 def test_static_rounds_restores_session_confs(spark):
@@ -262,18 +310,18 @@ def test_static_rounds_restores_session_confs(spark):
     assert conf.get("spark.sql.shuffle.partitions") == w0
 
 
-def test_star_counted_gates_match_unhinted_result(spark):
+def test_star_counted_gates_match_unhinted_result(spark, monkeypatch):
     """The r14 counted broadcast gates + in-loop width never change the
     star mapping: force the over-cap posture (hints withheld, width at
     session default) and compare against the hinted run."""
+    from taxi_trips_etl_spark.dataprep import materialize as M
     from taxi_trips_etl_spark.dataprep.components import (
-        connected_components_star,
+        connected_components_auto,
     )
 
     rows = [(i, i + 1) for i in range(1, 40)] + [(100, 200), (200, 300)]
     pairs = spark.createDataFrame(rows, "doc_id_a long, doc_id_b long")
-    hinted = connected_components_star(pairs).collect()
-    unhinted = connected_components_star(
-        pairs, min_broadcast_cap=0, rows_per_partition=1
-    ).collect()
+    hinted = connected_components_auto(pairs, driver_edge_cap=0).collect()
+    monkeypatch.setattr(M, "BROADCAST_CAP", 0)
+    unhinted = connected_components_auto(pairs, driver_edge_cap=0).collect()
     assert sorted(map(tuple, hinted)) == sorted(map(tuple, unhinted))

@@ -395,7 +395,7 @@ def test_domain_mixture_upweights_tail(spark):
         (900 + i, "small") for i in range(100)
     ]
     df = spark.createDataFrame(rows, "doc_id long, domain string")
-    kept = domain_mixture_sample(df, key="doc_id", domain_col="domain")
+    kept = domain_mixture_sample(df, domain_col="domain")
     by_dom = {
         r["domain"]: r["n"]
         for r in kept.groupBy("domain").agg(F.count("*").alias("n")).collect()
@@ -406,7 +406,7 @@ def test_domain_mixture_upweights_tail(spark):
     assert by_dom["small"] / 100 > by_dom["big"] / 900
     assert by_dom["small"] == 100  # rate capped at 1.0 → keeps everything
     # Deterministic: rerun gives the identical membership.
-    again = domain_mixture_sample(df, key="doc_id", domain_col="domain")
+    again = domain_mixture_sample(df, domain_col="domain")
     assert sorted(r["doc_id"] for r in kept.collect()) == sorted(
         r["doc_id"] for r in again.collect()
     )
@@ -867,12 +867,12 @@ def test_similarity_sampling_packing_params_guarded(spark):
     with pytest.raises(ValueError, match="k/iterations"):
         similarity.semdedup_prune(emb, iterations=0)
     with pytest.raises(ValueError, match=r"rate must be in \[0, 1\]"):
-        sampling.deterministic_sample(docs, rate=1.5, key="doc_id")
+        sampling.deterministic_sample(docs, rate=1.5)
     with pytest.raises(ValueError, match=r"test_rate must be in \[0, 1\]"):
-        sampling.train_test_split(docs, key="doc_id", test_rate=-0.1)
+        sampling.train_test_split(docs, test_rate=-0.1)
     with pytest.raises(ValueError, match="stratum rate"):
         sampling.stratified_sample(
-            docs, rates={"x": 2.0}, key="doc_id", strata_col="text"
+            docs, rates={"x": 2.0}, strata_col="text"
         )
     # r12 ADVICE closure: a stratum literally named '__default__' used to
     # be clobbered by default_rate in a merged validation dict, letting
@@ -880,20 +880,20 @@ def test_similarity_sampling_packing_params_guarded(spark):
     # in the threshold CASE). Both must now raise independently.
     with pytest.raises(ValueError, match="stratum rate"):
         sampling.stratified_sample(
-            docs, rates={"__default__": 7.0}, key="doc_id", strata_col="text"
+            docs, rates={"__default__": 7.0}, strata_col="text"
         )
     with pytest.raises(ValueError, match=r"default_rate must be in \[0, 1\]"):
         sampling.stratified_sample(
-            docs, rates={"x": 0.5}, key="doc_id", strata_col="text",
+            docs, rates={"x": 0.5}, strata_col="text",
             default_rate=-0.2,
         )
     with pytest.raises(ValueError, match="k >= 1"):
-        sampling.kfold_assign(docs, key="doc_id", k=0)
+        sampling.kfold_assign(docs, k=0)
     with pytest.raises(ValueError, match="seq_len/bucket_span"):
         packing.pack_sequences(docs, seq_len=0)
     # valid calls still work end-to-end
     assert similarity.cosine_topk_bruteforce(emb, query_ids_below=2, k=2).count() > 0
-    assert sampling.kfold_assign(docs, key="doc_id", k=3).count() == 2
+    assert sampling.kfold_assign(docs, k=3).count() == 2
 
 
 def test_text_window_params_guarded(spark):

@@ -12,14 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.bpe import (
+    N_MERGES,
     learn_bpe_auto,
-    learn_bpe_distributed,
     learn_bpe_driver,
 )
-from taxi_trips_etl_spark.dataprep.graph import (
-    pagerank_auto,
-    pagerank_distributed,
-)
+from taxi_trips_etl_spark.dataprep.graph import ITERS, pagerank_auto
 from taxi_trips_etl_spark.dataprep.quantize import quantize_int8
 from taxi_trips_etl_spark.dataprep.dedup import fastss_pairs
 
@@ -35,32 +32,39 @@ def test_bpe_hand_example():
     # Round 2 tokens: [aa,a,b] x5, [aa,b] x2 ->
     # (aa,a)=5, (aa,b)=2, (a,b)=5 -> tie 5: (a,b) vs (aa,a); ASC
     # tiebreak picks ('a','b') before ('aa','a').
-    merges = learn_bpe_driver([("aaab", 5), ("aab", 2)], n_merges=2)
-    assert merges == [(1, "a", "a", 12), (2, "a", "b", 5)]
+    # Round 3: [aa,ab] x5, [aa,b] x2 -> (aa,ab)=5 beats (aa,b)=2.
+    # Round 4: [aaab] x5, [aa,b] x2 -> (aa,b)=2; then no pair is left,
+    # so the N_MERGES budget stops early.
+    merges = learn_bpe_driver([("aaab", 5), ("aab", 2)])
+    assert merges == [
+        (1, "a", "a", 12),
+        (2, "a", "b", 5),
+        (3, "aa", "ab", 5),
+        (4, "aa", "b", 2),
+    ]
 
 
 def test_bpe_greedy_left_to_right():
     # 'aaaa': greedy LTR merge of (a,a) yields [aa, aa] not [a,aa,a].
-    merges = learn_bpe_driver([("aaaa", 1)], n_merges=2)
+    merges = learn_bpe_driver([("aaaa", 1)])
     assert merges[0] == (1, "a", "a", 3)
-    # round 2: tokens [aa, aa] -> (aa,aa)=1
-    assert merges[1] == (2, "aa", "aa", 1)
+    # round 2: tokens [aa, aa] -> (aa,aa)=1; then one token is left
+    assert merges[1:] == [(2, "aa", "aa", 1)]
 
 
 def test_bpe_distributed_equals_driver(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
-    dist = learn_bpe_distributed(docs, n_merges=5).collect()
-    auto = learn_bpe_auto(docs, n_merges=5).collect()
-    key = lambda r: r["merge_rank"]  # noqa: E731
+    dist = learn_bpe_auto(docs, driver_vocab_cap=0).collect()
+    auto = learn_bpe_auto(docs).collect()
     assert sorted([tuple(r) for r in dist], key=lambda t: t[0]) == sorted(
         [tuple(r) for r in auto], key=lambda t: t[0]
     )
-    assert len(auto) == 5
+    assert len(auto) == N_MERGES
 
 
 def test_bpe_empty_corpus(spark):
     docs = spark.createDataFrame([], "doc_id long, text string")
-    assert learn_bpe_auto(docs, n_merges=3).count() == 0
+    assert learn_bpe_auto(docs).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -79,9 +83,9 @@ def test_pagerank_paths_agree(spark):
     e = _chain_edges(spark)
     d = {
         r["node"]: r["rank_e12"]
-        for r in pagerank_distributed(e, iters=6).collect()
+        for r in pagerank_auto(e, driver_edge_cap=0).collect()
     }
-    a = {r["node"]: r["rank_e12"] for r in pagerank_auto(e, iters=6).collect()}
+    a = {r["node"]: r["rank_e12"] for r in pagerank_auto(e).collect()}
     assert d == a and set(d) == {1, 2, 3, 4}
 
 
@@ -93,22 +97,22 @@ def test_pagerank_hand_recurrence(spark):
     deg = {1: 2, 2: 1, 3: 1}
     edges = [(1, 2), (2, 3), (3, 1), (1, 4)]
     rank = {v: TOTAL // n for v in (1, 2, 3, 4)}
-    for _ in range(3):
+    for _ in range(10):
         insum = {v: 0 for v in rank}
         for s, d in edges:
             insum[d] += rank[s] // deg[s]
         rank = {v: base + (85 * insum[v]) // 100 for v in rank}
     got = {
         r["node"]: r["rank_e12"]
-        for r in pagerank_auto(_chain_edges(spark), iters=3).collect()
+        for r in pagerank_auto(_chain_edges(spark)).collect()
     }
-    assert got == rank
+    assert ITERS == 10 and got == rank
 
 
 def test_pagerank_cycle_symmetry(spark):
     # Pure 3-cycle: symmetric, every node keeps the initial mass.
     e = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
-    ranks = {r["node"]: r["rank_e12"] for r in pagerank_auto(e, iters=8).collect()}
+    ranks = {r["node"]: r["rank_e12"] for r in pagerank_auto(e).collect()}
     assert len(set(ranks.values())) == 1
 
 

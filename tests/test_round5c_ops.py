@@ -97,11 +97,11 @@ def test_bpe_learn_oracle_replays_run_merges():
             freqs[w] = freqs.get(w, 0) + 1
     expect = {
         (r, a, b, c)
-        for r, a, b, c in learn_bpe_driver(sorted(freqs.items()), 4)
+        for r, a, b, c in learn_bpe_driver(sorted(freqs.items()))
     }
     con = duckdb.connect()
     con.register("documents", pd.DataFrame({"text": texts}))
-    got = {tuple(r) for r in con.execute(_bpe_learn_oracle(4)).fetchall()}
+    got = {tuple(r) for r in con.execute(_bpe_learn_oracle()).fetchall()}
     assert got == expect
     # and the run rule actually fired: round 1 must be (a, a)
     assert any(r == 1 and a == "a" and b == "a" for r, a, b, _ in got)
@@ -207,22 +207,24 @@ def test_bfs_hops_chain_diamond_unreachable(spark):
     )
     got = {
         (r["node"], r["hops"])
-        for r in bfs_hops(edges, source_node=1, rounds=10).collect()
+        for r in bfs_hops(edges, source_node=1).collect()
     }
     assert got == {(1, 0), (2, 1), (5, 1), (3, 2), (4, 3)}
 
 
 def test_bfs_hops_respects_round_bound(spark):
-    from taxi_trips_etl_spark.dataprep.graph import bfs_hops
+    from taxi_trips_etl_spark.dataprep.graph import ROUNDS, bfs_hops
 
+    # a chain ROUNDS + 4 hops long: the last four nodes lie past the bound
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)], "src long, dst long"
+        [(i, i + 1) for i in range(1, ROUNDS + 5)], "src long, dst long"
     )
     got = {
         (r["node"], r["hops"])
-        for r in bfs_hops(chain, source_node=1, rounds=3).collect()
+        for r in bfs_hops(chain, source_node=1).collect()
     }
-    assert got == {(1, 0), (2, 1), (3, 2), (4, 3)}  # cut at 3 hops
+    assert ROUNDS == 10
+    assert got == {(i + 1, i) for i in range(ROUNDS + 1)}  # cut at ROUNDS hops
 
 
 def test_pit_join_picks_version_valid_at_fact_time(spark):
@@ -293,38 +295,38 @@ def test_shortest_paths_prefers_cheap_detour(spark):
     )
     got = {
         (r["node"], r["dist"])
-        for r in shortest_paths(edges, source_node=1, rounds=10).collect()
+        for r in shortest_paths(edges, source_node=1).collect()
     }
     assert got == {(1, 0), (2, 2), (3, 5), (4, 6)}
 
 
-def test_bfs_and_sssp_shuffle_frontier_path_matches_broadcast(spark):
-    """broadcast_frontier=False (the setting for graphs whose reached
-    set outgrows one executor) must relax to the identical labels —
-    the hint changes the join strategy, never the fixpoint."""
+def test_bfs_and_sssp_shuffle_frontier_path_matches_broadcast(
+    spark, monkeypatch
+):
+    """The over-cap route (the one graphs whose reached set outgrows
+    one executor take: no broadcast, session width) must relax to the
+    identical labels — the gate changes the join strategy, never the
+    fixpoint."""
+    from taxi_trips_etl_spark.dataprep import materialize as M
     from taxi_trips_etl_spark.dataprep.graph import bfs_hops, shortest_paths
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 5), (5, 3), (4, 1), (9, 10)],
         "src long, dst long",
     )
-    for kw in ({"broadcast_frontier": True}, {"broadcast_frontier": False}):
-        got = {
-            (r["node"], r["hops"])
-            for r in bfs_hops(edges, source_node=1, rounds=10, **kw).collect()
-        }
-        assert got == {(1, 0), (2, 1), (5, 1), (3, 2), (4, 3)}, kw
-
     w_edges = spark.createDataFrame(
         [(1, 2, 5), (2, 3, 5), (1, 3, 100), (3, 4, 1)],
         "src long, dst long, w long",
     )
-    want = {(1, 0), (2, 5), (3, 10), (4, 11)}
-    for kw in ({"broadcast_frontier": True}, {"broadcast_frontier": False}):
+    for cap in (M.BROADCAST_CAP, 0):
+        monkeypatch.setattr(M, "BROADCAST_CAP", cap)
+        got = {
+            (r["node"], r["hops"])
+            for r in bfs_hops(edges, source_node=1).collect()
+        }
+        assert got == {(1, 0), (2, 1), (5, 1), (3, 2), (4, 3)}, cap
         got = {
             (r["node"], r["dist"])
-            for r in shortest_paths(
-                w_edges, source_node=1, rounds=10, **kw
-            ).collect()
+            for r in shortest_paths(w_edges, source_node=1).collect()
         }
-        assert got == want, kw
+        assert got == {(1, 0), (2, 5), (3, 10), (4, 11)}, cap

@@ -273,7 +273,7 @@ def test_star_cadence_matches_union_find_random_graphs(spark):
     lands on odd AND even round counts: seeded random graphs with
     deep paths, cliques and singleton-adjacent pairs."""
     from taxi_trips_etl_spark.dataprep.components import (
-        connected_components_star,
+        connected_components_auto,
     )
 
     for seed, n_nodes, n_edges in ((1, 60, 40), (2, 80, 100), (3, 30, 12)):
@@ -290,7 +290,7 @@ def test_star_cadence_matches_union_find_random_graphs(spark):
         )
         got = {
             r.doc_id: r.component_id
-            for r in connected_components_star(pairs).collect()
+            for r in connected_components_auto(pairs, driver_edge_cap=0).collect()
         }
         assert got == want, f"star mismatch at seed={seed}"
 
@@ -299,7 +299,7 @@ def test_star_cadence_converged_input(spark):
     """An input that is ALREADY a star forest (fixpoint in round 0)
     exercises the skipped-sync path's early exit."""
     from taxi_trips_etl_spark.dataprep.components import (
-        connected_components_star,
+        connected_components_auto,
     )
 
     pairs = spark.createDataFrame(
@@ -307,6 +307,6 @@ def test_star_cadence_converged_input(spark):
     )
     got = {
         r.doc_id: r.component_id
-        for r in connected_components_star(pairs).collect()
+        for r in connected_components_auto(pairs, driver_edge_cap=0).collect()
     }
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10}
