@@ -31,15 +31,17 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_COL = "word"  # the item column mg_heavy_hitters counts
 
-def _mg_partition_factory(k: int, col: str):
+
+def _mg_partition_factory(k: int):
     def mg_partition(batches: Iterator) -> Iterator:
         import pandas as pd
 
         counters: dict[str, int] = {}
         n_part = 0
         for pdf in batches:
-            vc = pdf[col].value_counts()
+            vc = pdf[_COL].value_counts()
             n_part += int(vc.sum())
             for w, c in vc.items():
                 counters[w] = counters.get(w, 0) + int(c)
@@ -56,7 +58,7 @@ def _mg_partition_factory(k: int, col: str):
         # caller can reconstruct N without a third corpus scan
         yield pd.DataFrame(
             {
-                col: list(counters.keys()) + [None],
+                _COL: list(counters.keys()) + [None],
                 "n_part": [0] * len(counters) + [n_part],
             }
         )
@@ -64,14 +66,14 @@ def _mg_partition_factory(k: int, col: str):
     return mg_partition
 
 
-def mg_heavy_hitters(items: DataFrame, col: str, k: int) -> DataFrame:
-    """All values of ``items[col]`` with exact count·k > N, via an MG
+def mg_heavy_hitters(items: DataFrame, k: int) -> DataFrame:
+    """All values of ``items.word`` with exact count·k > N, via an MG
     candidate pass + an exact verify pass (two corpus scans total).
 
-    Returns (col, cnt) with cnt the EXACT global count.
+    Returns (word, cnt) with cnt the EXACT global count.
     """
-    sketch = items.select(col).mapInPandas(
-        _mg_partition_factory(k, col), schema=f"{col} string, n_part long"
+    sketch = items.select(_COL).mapInPandas(
+        _mg_partition_factory(k), schema=f"{_COL} string, n_part long"
     )
     # The sketch output is tiny (≤ k+1 rows per partition) but sits on
     # top of a corpus-scale scan: cache-free double consumption below
@@ -80,17 +82,17 @@ def mg_heavy_hitters(items: DataFrame, col: str, k: int) -> DataFrame:
 
     sketch = materialize(sketch, eager=True)
     cands = (
-        sketch.filter(F.col(col).isNotNull()).select(col).distinct()
+        sketch.filter(F.col(_COL).isNotNull()).select(_COL).distinct()
     )
     total = sketch.agg(F.sum("n_part").alias("n_total"))
     verified = (
-        items.select(col)
-        .join(F.broadcast(cands), col)
-        .groupBy(col)
+        items.select(_COL)
+        .join(F.broadcast(cands), _COL)
+        .groupBy(_COL)
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
     return (
         verified.crossJoin(F.broadcast(total))
         .filter(F.col("cnt") * k > F.col("n_total"))
-        .select(col, "cnt")
+        .select(_COL, "cnt")
     )

@@ -18,49 +18,46 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_T, _V = "t", "v"  # the time and value columns interpolate_gaps reads
 
-def interpolate_gaps(
-    df: DataFrame,
-    key_cols: list[str],
-    t_col: str,
-    v_col: str,
-) -> DataFrame:
-    """Fill NULL ``v_col`` rows by linear interpolation between the
-    nearest non-NULL anchors per key; edge gaps (before the first /
-    after the last anchor) take the nearest anchor's value (flat
-    extrapolation); keys with no anchor at all stay NULL.
 
-    ``t_col`` must be numeric (e.g. an epoch-day integer) — the
+def interpolate_gaps(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Fill NULL ``v`` rows by linear interpolation between the nearest
+    non-NULL anchors per key; edge gaps (before the first / after the
+    last anchor) take the nearest anchor's value (flat extrapolation);
+    keys with no anchor at all stay NULL.
+
+    ``t`` must be numeric (e.g. an epoch-day integer) — the
     interpolation fraction is (t−t_prev)/(t_next−t_prev) in that unit.
     Adds ``v_filled`` (rounded to 4) and ``was_gap`` (0/1).
     """
-    anchor_t = F.when(F.col(v_col).isNotNull(), F.col(t_col))
+    anchor_t = F.when(F.col(_V).isNotNull(), F.col(_T))
     w_prev = (
         Window.partitionBy(*key_cols)
-        .orderBy(t_col)
+        .orderBy(_T)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_next = (
         Window.partitionBy(*key_cols)
-        .orderBy(t_col)
+        .orderBy(_T)
         .rowsBetween(1, Window.unboundedFollowing)
     )
-    prev_v = F.last(v_col, ignorenulls=True).over(w_prev)
+    prev_v = F.last(_V, ignorenulls=True).over(w_prev)
     prev_t = F.last(anchor_t, ignorenulls=True).over(w_prev)
-    next_v = F.first(v_col, ignorenulls=True).over(w_next)
+    next_v = F.first(_V, ignorenulls=True).over(w_next)
     next_t = F.first(anchor_t, ignorenulls=True).over(w_next)
-    frac = (F.col(t_col) - prev_t).cast("double") / (
+    frac = (F.col(_T) - prev_t).cast("double") / (
         (next_t - prev_t).cast("double")
     )
     interp = prev_v + frac * (next_v - prev_v)
     filled = (
-        F.when(F.col(v_col).isNotNull(), F.col(v_col))
+        F.when(F.col(_V).isNotNull(), F.col(_V))
         .when(prev_v.isNotNull() & next_v.isNotNull(), interp)
         .when(prev_v.isNotNull(), prev_v)
         .otherwise(next_v)
     )
     return df.withColumn("v_filled", F.round(filled, 4)).withColumn(
-        "was_gap", F.col(v_col).isNull().cast("long")
+        "was_gap", F.col(_V).isNull().cast("long")
     )
 
 

@@ -89,7 +89,7 @@ def q_heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split(F.trim(F.lower(F.col("text"))), r"\s+")
         ).alias("word")
     ).filter(F.col("word") != "")
-    return mg_heavy_hitters(words, "word", k=30)
+    return mg_heavy_hitters(words, k=30)
 
 
 @register(

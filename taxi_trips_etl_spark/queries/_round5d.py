@@ -208,7 +208,7 @@ def q_interpolate_user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = spine.join(daily, ["user_id", "day"], "left").withColumn(
         "t", F.datediff(F.col("day"), F.lit("1970-01-01").cast("date")).cast("long")
     )
-    out = interpolate_gaps(j, ["user_id"], "t", "v")
+    out = interpolate_gaps(j, ["user_id"])
     return out.select(
         "user_id",
         F.date_format("day", "yyyy-MM-dd").alias("day"),

@@ -29,11 +29,24 @@ config here is chosen for the 100 TB / 1000-executor target:
   state-store task waits on those forks; ``FileSystem`` renames with a
   plain Java rename. The checks stay: every file keeps Spark's
   checkpoint checksum (``fileChecksum.enabled`` is left at its
-  default) and Hadoop's ``.crc``. Creates still fork ``chmod``
-  (``setPermission``). On a cluster: Spark itself falls back to this
-  manager for schemes that have no ``FileContext``; HDFS renames
-  atomically through either API; object stores are non-atomic under
-  both.
+  default) and Hadoop's ``.crc``. On a cluster: Spark itself falls
+  back to this manager for schemes that have no ``FileContext``; HDFS
+  renames atomically through either API; object stores are non-atomic
+  under both.
+- ``spark.hadoop.fs.file.impl`` is ``NioLocalFileSystem``, compiled
+  from the package's one ``.java`` file and put first on
+  ``spark.driver.extraClassPath`` (``local_fs``). Without a native
+  libhadoop, Hadoop's local file system forks ``chmod`` to set the mode
+  of every file it creates and every directory it makes: checkpoint
+  files and their ``.crc``, partition files, committer directories,
+  the event log. The class keeps ``LocalFileSystem``'s checksum layer
+  and sets modes within ``0777`` through ``java.nio``, so files,
+  ``.crc`` side files and modes stay the same. Both settings are left
+  unset where there is no ``javac``, the compile fails, or the master
+  is not ``local``. The checkpoint manager setting above stays:
+  ``FileContext`` builds its own raw local file system
+  (``fs.AbstractFileSystem.file.impl``), which this class does not
+  replace, so its renames would still fork ``readlink``.
 - Runtime bloom-filter join pruning
   (``spark.sql.optimizer.runtime.bloomFilter.enabled`` +
   ``runtimeFilter.semiJoinReduction``) is deliberately NOT set here:
@@ -51,6 +64,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from taxi_trips_etl_spark import local_fs
+
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
@@ -65,9 +80,10 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-oriented defaults."""
+    master = master or f"local[{spark_cpus()}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{spark_cpus()}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -90,6 +106,8 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    fs_conf = local_fs.session_conf(master, extra.pop(local_fs.CLASS_PATH, None))
+    for k, v in {**fs_conf, **extra}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -22,7 +22,7 @@ def test_interpolate_linear_between_anchors(spark):
     df = spark.createDataFrame(rows, "k string, t long, v double")
     got = {
         (r["k"], r["t"]): (r["v_filled"], r["was_gap"])
-        for r in interpolate_gaps(df, ["k"], "t", "v").collect()
+        for r in interpolate_gaps(df, ["k"]).collect()
     }
     assert got[("a", 0)] == (10.0, 0)
     assert got[("a", 1)] == (20.0, 1)
@@ -38,7 +38,7 @@ def test_interpolate_uneven_time_steps(spark):
     df = spark.createDataFrame(rows, "k string, t long, v double")
     got = {
         r["t"]: r["v_filled"]
-        for r in interpolate_gaps(df, ["k"], "t", "v").collect()
+        for r in interpolate_gaps(df, ["k"]).collect()
     }
     assert got[10] == 20.0  # 10/40 of the way from 0 to 80
 

@@ -75,7 +75,7 @@ def test_mg_heavy_hitters_matches_exact_reference(spark, words, k):
     }
     got = {
         (r["word"], r["cnt"])
-        for r in mg_heavy_hitters(df.repartition(4), "word", k=k).collect()
+        for r in mg_heavy_hitters(df.repartition(4), k=k).collect()
     }
     assert got == expect
 

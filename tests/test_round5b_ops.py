@@ -36,7 +36,7 @@ def test_mg_heavy_hitters_exact_and_layout_independent(spark):
         got = {
             (r["word"], r["cnt"])
             for r in mg_heavy_hitters(
-                df.repartition(parts), "word", k=10
+                df.repartition(parts), k=10
             ).collect()
         }
         assert got == expect, f"parts={parts}"
@@ -62,7 +62,7 @@ def test_mg_heavy_hitters_agrees_with_exact_groupby(spark, sf_dir):
     }
     got = {
         (r["word"], r["cnt"])
-        for r in mg_heavy_hitters(words, "word", k=30).collect()
+        for r in mg_heavy_hitters(words, k=30).collect()
     }
     assert got == exact and got  # non-vacuous
 
@@ -72,7 +72,7 @@ def test_mg_sketch_trims_below_capacity(spark):
     # unique heavy hitter (600 of 1090 items) survives exactly.
     vals = ["hh"] * 600 + [f"x{i}" for i in range(49) for _ in range(10)]
     df = spark.createDataFrame([(v,) for v in vals], "word string")
-    got = mg_heavy_hitters(df.repartition(3), "word", k=5).collect()
+    got = mg_heavy_hitters(df.repartition(3), k=5).collect()
     assert {(r["word"], r["cnt"]) for r in got} == {("hh", 600)}
 
 
