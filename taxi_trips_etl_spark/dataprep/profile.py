@@ -229,23 +229,28 @@ def hll_portable_rollup(
     )
 
 
-def hll_portable_oracle_sql(
-    table_sql: str, key: str, value: str, partial: str
-) -> str:
+# The columns of ``table_sql`` that :func:`hll_portable_oracle_sql`
+# counts: the key, the counted value and the partial (register) grain
+# its one caller (the ``hll_distinct_rollup`` registry entry) rolls up.
+_ORACLE_KEY, _ORACLE_VALUE, _ORACLE_PARTIAL = "event_type", "user_id", "day"
+
+
+def hll_portable_oracle_sql(table_sql: str) -> str:
     """The DuckDB twin of :func:`hll_portable_rollup` — identical
     register derivation and estimate arithmetic (see exactness argument
-    there), parameterized over a source relation."""
+    there), parameterized over a source relation with the columns
+    ``_ORACLE_KEY``, ``_ORACLE_VALUE`` and ``_ORACLE_PARTIAL``."""
     m = _PORTABLE_M
     return f"""
     WITH tagged AS (
-        SELECT {key} AS k, {partial} AS p,
+        SELECT {_ORACLE_KEY} AS k, {_ORACLE_PARTIAL} AS p,
                (instr('{_HEX}', substr(h, 1, 1)) - 1) * 16
                  + instr('{_HEX}', substr(h, 2, 1)) - 1 AS bucket,
                length(regexp_extract(substr(h, 3, 10), '^(0*)', 1)) AS z,
                instr('{_HEX}', substr(substr(h, 3, 10),
                      length(regexp_extract(substr(h, 3, 10), '^(0*)', 1)) + 1,
                      1)) - 1 AS d
-        FROM (SELECT *, md5(CAST({value} AS VARCHAR)) AS h
+        FROM (SELECT *, md5(CAST({_ORACLE_VALUE} AS VARCHAR)) AS h
               FROM ({table_sql}))
     ),
     partial_regs AS (

@@ -25,7 +25,7 @@ reference's literal two-branch self-join for parity testing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -39,35 +39,43 @@ H3_RES = 9  # the reference's H3_FROMGEOGPOINT resolution
 def dedup_zones(zones: DataFrame) -> DataFrame:
     """W1+P5: rank-dedup the zone dim, then index centroids to hex cells.
 
-    ``byte_length(ST_ASTEXT(geom))`` → ``F.octet_length`` on the WKT
+    ``byte_length(ST_ASTEXT(geom))`` is the UTF-8 byte length of the WKT
     string (F4/F5: geometry is stored as WKT, so ST_ASTEXT is identity).
-    The rank-dedup runs in Spark; its rows (one per surviving
-    (zone_id, geometry), bounded by the zone table) are then collected
-    once and indexed with :func:`centroid_cell` on the driver, and the
-    result comes back as a ``LocalRelation`` — no Python worker. The
-    broadcast of the dim downstream collects the same relation to the
-    driver anyway. ``zone_id`` keeps the input's type.
+    The dim is bounded by the zone table, and its rows come to the
+    driver anyway to be indexed with :func:`centroid_cell`; so the raw
+    rows are collected once and ``RANK() … = 1`` runs there
+    (:func:`_longest_wkt`). Collecting a ``LocalRelation`` (the
+    pipeline's ``zone_dim``) books no Spark job, which a window would.
+    The result comes back as a ``LocalRelation`` — no Python worker.
+    ``zone_id`` keeps the input's type.
     """
-    w = Window.partitionBy("zone_id").orderBy(
-        F.octet_length(F.col("zone_geom")).desc()
-    )
-    # One partition: the dim is collected whole below, and a single
-    # partition satisfies the window's clustering, so the dedup is one
-    # task with no shuffle.
-    deduped = (
-        zones.coalesce(1)
-        .withColumn("finish_rank", F.rank().over(w))
-        .filter(F.col("finish_rank") == 1)
-        .select("zone_id", "zone_geom")
-    )
     schema = StructType(
-        [deduped.schema["zone_id"], StructField("hex_cell", StringType())]
+        [zones.schema["zone_id"], StructField("hex_cell", StringType())]
     )
     return local_rows(
         zones.sparkSession,
-        [(z, centroid_cell(wkt, H3_RES)) for z, wkt in deduped.collect()],
+        [
+            (z, centroid_cell(wkt, H3_RES))
+            for z, wkt in _longest_wkt(zones.select("zone_id", "zone_geom").collect())
+        ],
         schema,
     )
+
+
+def _longest_wkt(rows: list) -> list:
+    """The ``(zone_id, wkt)`` rows of rank 1 per zone by descending WKT
+    byte length, in input order: every row tied at a zone's maximum
+    survives, and a null geometry ranks last, as ``ORDER BY … DESC``
+    orders nulls in Spark (so a zone whose only geometry is null keeps
+    that row)."""
+
+    def size(wkt: str | None) -> int:
+        return -1 if wkt is None else len(wkt.encode("utf-8"))
+
+    top: dict = {}
+    for z, wkt in rows:
+        top[z] = max(top.get(z, -1), size(wkt))
+    return [(z, wkt) for z, wkt in rows if size(wkt) == top[z]]
 
 
 def enrich_trips(

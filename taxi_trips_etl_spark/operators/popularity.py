@@ -71,11 +71,22 @@ def route_counts(
     spine differently). The materialized table is route-grain —
     bounded by distinct (pickup, dropoff) cell pairs, tiny at every
     scale — so the checkpoint is scale-safe.
+
+    The checkpoint is read back as ONE partition. Its rows are bounded
+    by the zone dim squared (one per (pickup, dropoff) cell pair), not
+    by the fact table, so one task holds it at any fact-table scale.
+    One partition already satisfies the distribution every consumer
+    asks for: the three global rank windows and the two re-aggregations
+    plan no shuffle, so AQE runs no query-stage job for them, and only
+    the two rank-side broadcasts remain. The coalesce must follow the
+    checkpoint: before it, the checkpoint's ``Scan ExistingRDD``
+    reports no output partitioning and the exchanges come back.
     """
     return (
         enriched.groupBy(pickup_key, dropoff_key)
         .agg(F.count(F.lit(1)).alias(cnt_alias))
         .transform(materialize, eager=False)
+        .coalesce(1)
     )
 
 

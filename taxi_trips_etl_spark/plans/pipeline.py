@@ -95,11 +95,17 @@ def run_taxi_pipeline(
     ``cache_enriched``/``auto_cache_threshold_bytes`` knobs are gone
     with the fan-out they compensated for.
 
-    Building the plan runs two bounded driver actions: ``load`` probes
-    the input for a first row (``isEmpty``), and ``enrich`` collects
-    the rank-deduped zone dim once to index its centroids on the driver
-    (``operators/enrich.dedup_zones``). Everything else runs under the
-    caller's action, and no stage starts a Python worker.
+    Plan building runs neither an ``isEmpty`` probe nor a collect of
+    the zone dedup: ``load`` takes the input's schema and emptiness
+    from parquet footers on the driver (``sources/taxi_testdata
+    .read_lineitem``), and ``enrich`` rank-dedups the zone dim on the
+    driver from the in-plan rows it indexes there anyway
+    (``operators/enrich.dedup_zones``). The only jobs it books are the
+    two that fill the route-count checkpoint (AQE runs the aggregate's
+    query stages when the checkpoint's RDD is built). With
+    ``out_path`` a warm day runs five jobs: those two, the two
+    rank-side broadcasts and the partitioned write
+    (``tests/test_taxi_pipeline.py``). No stage starts a Python worker.
     """
     from taxi_trips_etl_spark.operators import (
         enrich_trips,

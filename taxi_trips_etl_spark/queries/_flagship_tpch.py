@@ -698,8 +698,7 @@ def _hll_oracle() -> str:
     from taxi_trips_etl_spark.dataprep.profile import hll_portable_oracle_sql
 
     inner = hll_portable_oracle_sql(
-        "SELECT event_type, user_id, CAST(ts AS DATE) AS day FROM events",
-        key="event_type", value="user_id", partial="day",
+        "SELECT event_type, user_id, CAST(ts AS DATE) AS day FROM events"
     )
     return f"""
     SELECT k AS event_type, approx_distinct, registers_set,

@@ -27,8 +27,10 @@ from __future__ import annotations
 import logging
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 log = logging.getLogger(__name__)
 
@@ -39,13 +41,49 @@ def load_trips(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """Stage 1 input: the trips fact table derived from
     ``sf_dir/lineitem.parquet``, or ``None`` when there is nothing to
     load — a missing path or zero rows (the O2 short-circuit,
-    taxi_trips_etl.py:84-85,199-207)."""
-    path = f"{sf_dir}/lineitem.parquet"
+    taxi_trips_etl.py:84-85,199-207). Books no Spark job: see
+    :func:`read_lineitem`."""
+    li = read_lineitem(spark, f"{sf_dir}/lineitem.parquet")
+    return None if li is None else trips_from_lineitem(li)
+
+
+def read_lineitem(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)`` with its schema and its emptiness
+    taken from parquet footers on the driver, or ``None`` for a missing
+    path or zero rows.
+
+    ``path`` is one file or a Spark-written directory, whose data files
+    are its ``*.parquet`` entries not starting with ``_`` or ``.``
+    (``_SUCCESS``, ``.crc`` side files and hidden temp files are not
+    data). Footers are read in name order up to the first file that
+    holds a row; that file's footer gives the schema. Spark would run
+    one job to infer the schema and another (``isEmpty``) to find a
+    row. ``prefer_timestamp_ntz`` matches Spark's own inference: an
+    arrow timestamp without a time zone is a parquet timestamp that is
+    not UTC-adjusted, which Spark reads as ``timestamp_ntz``
+    (``l_shipdate``).
+    """
     if not os.path.exists(path):
         log.info("no input at %s → short-circuit", path)
         return None
-    li = spark.read.parquet(path)
-    return trips_from_lineitem(li) if not li.isEmpty() else None
+    files = (
+        sorted(
+            os.path.join(path, name)
+            for name in os.listdir(path)
+            if name.endswith(".parquet") and not name.startswith(("_", "."))
+        )
+        if os.path.isdir(path)
+        else [path]
+    )
+    footers = (pq.read_metadata(f) for f in files)
+    first = next((m for m in footers if m.num_rows), None)
+    if first is None:
+        log.info("no rows at %s → short-circuit", path)
+        return None
+    schema = from_arrow_schema(
+        first.schema.to_arrow_schema(), prefer_timestamp_ntz=True
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def trips_from_lineitem(lineitem: DataFrame) -> DataFrame:

@@ -139,9 +139,14 @@ _FANOUT_PINS = {
     # pass (operators/popularity.route_counts) instead of re-running
     # the fact spine per branch (unfixed plans read 16/42/42 exchange
     # hits and 3 raw lineitem scans each; plans/r13/*_before.txt).
-    "most_populars_flat": 14,
-    "flagship_known_zones": 14,
-    "flagship_most_populars": 14,
+    # The route-count checkpoint is also read as one partition, so the
+    # windows and re-aggregations plan no shuffle and the only
+    # exchanges left are the two rank-side broadcasts: 4 hits (tree +
+    # detail rendering). Without the coalesce the plans read 14
+    # (plans/r15/*_before.txt).
+    "most_populars_flat": 4,
+    "flagship_known_zones": 4,
+    "flagship_most_populars": 4,
 }
 
 

@@ -70,10 +70,31 @@ def test_zone_dedup_keeps_longest_wkt(spark):
     out = dedup_zones(zones).collect()
     assert len(out) == 2  # one row per zone_id
     cells = {r.zone_id: r.hex_cell for r in out}
-    from taxi_trips_etl_spark.functions.geo import latlng_to_cell
+    from taxi_trips_etl_spark.functions.geo import centroid_cell, latlng_to_cell
 
     assert cells[1] == latlng_to_cell(0.5, 0.5, 9)  # octagon centroid == square's
     assert cells[2] == latlng_to_cell(10.5, 10.5, 9)
+
+    # RANK() = 1, not ROW_NUMBER(): two WKTs tied at a zone's maximum
+    # byte length both survive; a null geometry ranks last (DESC NULLS
+    # LAST) and loses to any WKT, but a zone whose only geometry is
+    # null keeps its row, unindexed.
+    square, shifted = ZONES[0][1], "POLYGON((2 2, 3 2, 3 3, 2 3, 2 2))"
+    assert len(square.encode()) == len(shifted.encode())
+    zones = spark.createDataFrame(
+        [(1, square), (1, None), (1, shifted), (2, ZONES[2][1]), (3, None)],
+        "zone_id long, zone_geom string",
+    )
+    out = sorted((r.zone_id, r.hex_cell or "") for r in dedup_zones(zones).collect())
+    assert out == sorted(
+        [
+            (1, centroid_cell(square, 9)),
+            (1, centroid_cell(shifted, 9)),
+            (2, cells[2]),
+            (3, ""),
+        ]
+    )
+    assert centroid_cell(square, 9) != centroid_cell(shifted, 9)
 
 
 def test_enrichment_left_join_null_path_and_daypart(spark):
@@ -180,17 +201,74 @@ def test_pipeline_short_circuits_on_missing_input(spark, tmp_path):
 @pytest.mark.parametrize("caller", ["pipeline", "airflow"])
 def test_zero_row_lineitem_short_circuits(spark, sf_dir, tmp_path, caller):
     """O2 on an input that exists but holds no rows: both orchestrations
-    stop at the load stage, like they do for a missing path."""
+    stop at the load stage, like they do for a missing path. Two shapes:
+    a Spark-written zero-row file, and a directory holding only the
+    ``_SUCCESS`` marker (no data file, so no schema to infer)."""
     empty = tmp_path / "empty"
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(0).write.parquet(
         str(empty / "lineitem.parquet")
     )
-    if caller == "pipeline":
-        assert run_taxi_pipeline(spark, str(empty), None, "2026-01-01") is None
-    else:
-        work = tmp_path / "work"
-        assert storage_to_bq(spark, sf_dir=str(empty), work_dir=str(work)) is False
-        assert not work.exists()
+    marker_only = tmp_path / "marker_only"
+    (marker_only / "lineitem.parquet").mkdir(parents=True)
+    (marker_only / "lineitem.parquet" / "_SUCCESS").touch()
+    for sf in (empty, marker_only):
+        if caller == "pipeline":
+            assert run_taxi_pipeline(spark, str(sf), None, "2026-01-01") is None
+        else:
+            work = tmp_path / f"work_{sf.name}"
+            assert storage_to_bq(spark, sf_dir=str(sf), work_dir=str(work)) is False
+            assert not work.exists()
+
+
+def _jobs_booked(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted under a job group of its own."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_pipeline_day_books_at_most_five_jobs(spark, sf_dir, tmp_path):
+    """A warm day with an output path runs at most five jobs: two fill
+    the route-count checkpoint, two broadcast the rank sides and one
+    writes the partition. Loading books none (footers, not a schema
+    job or an ``isEmpty`` probe), and neither does enriching (the zone
+    dedup runs on the driver)."""
+    from taxi_trips_etl_spark.sources.taxi_testdata import load_trips, zone_dim
+
+    out = str(tmp_path / "mp")
+    run_taxi_pipeline(spark, sf_dir, out, "2026-04-01")  # warm-up day
+    assert _jobs_booked(spark, lambda: load_trips(spark, sf_dir)) == 0
+    assert _jobs_booked(
+        spark,
+        lambda: enrich_trips(
+            normalize_trips(load_trips(spark, sf_dir)), zone_dim(spark)
+        ),
+    ) == 0
+    day = _jobs_booked(spark, lambda: run_taxi_pipeline(spark, sf_dir, out, "2026-04-02"))
+    assert 0 < day <= 5
+
+
+@pytest.mark.parametrize("written_by", ["pyarrow", "spark"])
+def test_read_lineitem_schema_matches_spark_inference(spark, sf_dir, tmp_path, written_by):
+    """The footer-built read schema is the schema Spark infers, for the
+    pyarrow-written fixture file (``l_shipdate`` is ``timestamp_ntz``)
+    and for a Spark-written directory with ``_SUCCESS`` and ``.crc``
+    side files."""
+    from taxi_trips_etl_spark.sources.taxi_testdata import read_lineitem
+
+    path = f"{sf_dir}/lineitem.parquet"
+    if written_by == "spark":
+        spark.read.parquet(path).write.parquet(str(tmp_path / "li"))
+        path = str(tmp_path / "li")
+    li = read_lineitem(spark, path)
+    assert li is not None and li.schema == spark.read.parquet(path).schema
+    assert dict(li.dtypes)["l_shipdate"] == "timestamp_ntz"
 
 
 def _flaky(failures: int):
