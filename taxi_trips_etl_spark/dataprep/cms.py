@@ -50,10 +50,10 @@ def _bucket(value: F.Column, row_idx: F.Column) -> F.Column:
     ).alias("col_idx")
 
 
-def cms_registers(df: DataFrame, value_col: str) -> DataFrame:
-    """(row_idx, col_idx, reg_cnt) register table — the persistable,
-    cell-wise-addable sketch state."""
-    counts = df.groupBy(F.col(value_col).alias("v")).agg(
+def cms_registers(df: DataFrame) -> DataFrame:
+    """(row_idx, col_idx, reg_cnt) register table of ``df.word`` — the
+    persistable, cell-wise-addable sketch state."""
+    counts = df.groupBy(F.col("word").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
     salted = counts.select(
@@ -87,7 +87,7 @@ def cms_token_estimates(
     exact = words.groupBy("word").agg(
         F.count(F.lit(1)).cast("long").alias("exact_cnt")
     )
-    regs = cms_registers(words, "word")
+    regs = cms_registers(words)
     # Probe set: exact top-n (deterministic word tiebreak) — bounded,
     # so the probe×registers join is broadcast on the probe side.
     probe = (

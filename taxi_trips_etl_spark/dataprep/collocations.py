@@ -25,9 +25,10 @@ TOP_P_NUM, TOP_P_DEN = 1, 2  # vocab_top_p keeps p = 1/2 of token mass
 # skipgram window and output size, shared by the Spark builder and its oracle
 MAX_OFFSET = 3
 TOP_PAIRS = 100
+MIN_COUNT = 5  # pmi_collocations' minimum bigram count
 
 
-def pmi_collocations(docs: DataFrame, min_count: int = 5) -> DataFrame:
+def pmi_collocations(docs: DataFrame) -> DataFrame:
     """Pointwise mutual information of adjacent token bigrams.
 
     pmi(x,y) = ln( c_xy · N / (c_x· · c_·y) ) with all counts taken
@@ -37,7 +38,7 @@ def pmi_collocations(docs: DataFrame, min_count: int = 5) -> DataFrame:
     division of two exactly-representable integer products; round(6)
     absorbs last-ulp log differences across engines.
 
-    Returns (w1, w2, pair_cnt, pmi) for pairs with pair_cnt >= min_count.
+    Returns (w1, w2, pair_cnt, pmi) for pairs with pair_cnt >= MIN_COUNT.
     """
     toks = docs.select(tokens_col().alias("t")).filter(
         F.size("t") >= 2
@@ -65,7 +66,7 @@ def pmi_collocations(docs: DataFrame, min_count: int = 5) -> DataFrame:
         .withColumn("cr", F.sum("pair_cnt").over(Window.partitionBy("w2")))
         .crossJoin(F.broadcast(total))
     )
-    return enriched.filter(F.col("pair_cnt") >= min_count).select(
+    return enriched.filter(F.col("pair_cnt") >= MIN_COUNT).select(
         "w1",
         "w2",
         "pair_cnt",

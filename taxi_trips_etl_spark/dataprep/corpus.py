@@ -56,10 +56,10 @@ def prepare_corpus(
         .distinct()
     )
     kept3 = kept2.join(near_dups, "doc_id", "left_anti")
-    chunks = chunk_documents(kept3, chunk_tokens=50, overlap=10)
+    chunks = chunk_documents(kept3)
     # Split on doc_id, not chunk id: all chunks of a document land on
     # the same side — no near-dup leakage across the boundary.
-    return train_test_split(chunks, test_rate=0.2).select(
+    return train_test_split(chunks).select(
         "doc_id",
         "chunk_id",
         F.md5("chunk_text").alias("chunk_hash"),
@@ -137,9 +137,7 @@ def prepare_corpus_v2(
     )
     tok = tokenize_with_vocab(kept3, build_vocab(kept3, 500))
     pack = pack_sequences(kept3, seq_len=128).drop("n_tokens")
-    return train_test_split(
-        tok.join(pack, "doc_id"), test_rate=0.2
-    ).select(
+    return train_test_split(tok.join(pack, "doc_id")).select(
         "doc_id",
         "token_ids",
         "n_tokens",
@@ -176,7 +174,7 @@ def prepare_corpus_v3(
         ngram_decontaminate,
     )
 
-    feats = feature_hash_counts(docs, n_buckets=64)
+    feats = feature_hash_counts(docs)
     w_int = (F.col("bucket") * 37 + 11) % 21 - 10
     gate = (
         feats.groupBy("doc_id")

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 NOISE_PCT = 15  # span-corruption noise density p, in percent
+N_SAMPLES = 500  # negative_sample_table's draws
 
 
 def _h60(prefix: str, *cols) -> F.Column:
@@ -87,11 +88,8 @@ def span_corruption_masks(
     )
 
 
-def negative_sample_table(
-    docs: DataFrame,
-    n_samples: int = 500,
-) -> DataFrame:
-    """→ (sample_idx, token): ``n_samples`` deterministic draws from
+def negative_sample_table(docs: DataFrame) -> DataFrame:
+    """→ (sample_idx, token): ``N_SAMPLES`` deterministic draws from
     the unigram^0.75 distribution over the corpus vocabulary."""
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
@@ -117,7 +115,7 @@ def negative_sample_table(
     cum = cum.withColumn("cum_lo", (F.col("cum_hi") - F.col("wq")))
     total = cum.agg(F.max("cum_hi").cast("long").alias("tw"))
     draws = (
-        docs.sparkSession.range(n_samples)
+        docs.sparkSession.range(N_SAMPLES)
         .select(F.col("id").cast("long").alias("sample_idx"))
         .crossJoin(F.broadcast(total))
         .select(

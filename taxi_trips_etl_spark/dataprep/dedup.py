@@ -116,48 +116,41 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 MINHASH_K = 16
-LSH_BANDS = 4  # 4 bands × 4 rows
+LSH_BANDS = 4  # 4 bands × 4 rows; LSH_BANDS must divide MINHASH_K
+# Degenerate-corpus guard of minhash_lsh_candidates: None keeps every
+# bucket (see its docstring).
+MAX_BUCKET_SIZE: int | None = None
 
 
-def minhash_signature(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """k-permutation MinHash over word 3-gram shingles.
+def minhash_signature(docs: DataFrame) -> DataFrame:
+    """MINHASH_K-permutation MinHash over word 3-gram shingles.
 
     h_i(s) = md5('{i}:' + s); the signature element is the lexicographic
     MIN of the hex digests — a valid uniform min-hash family, chosen
     because string-min over md5-hex is engine-portable.
 
     Shape: EXPLODE shingles → hash each once per seed → groupBy(doc_id)
-    with k min() aggregates. Naively inlining the tokenize→shingle
-    expression into k array_min(transform(...)) columns recomputes the
-    shingling k times per row; the explode form tokenizes once, and the
-    k mins ride one partially-aggregated (map-side combine) shuffle —
+    with MINHASH_K min() aggregates. Naively inlining the tokenize→shingle
+    expression into MINHASH_K array_min(transform(...)) columns recomputes
+    the shingling per column per row; the explode form tokenizes once, and
+    the mins ride one partially-aggregated (map-side combine) shuffle —
     the shape that holds at corpus scale. Docs too short to shingle
     vanish via explode (they would otherwise collide on md5('') bands).
     """
-    if k < 1:
-        raise ValueError(f"minhash_signature needs k >= 1, got {k}")
     shingled = tokens_table(docs).select(
         "doc_id", F.explode(word_ngrams(F.col("toks"), 3)).alias("shingle")
     )
     return shingled.groupBy("doc_id").agg(
         *[
             F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"mh{i}")
-            for i in range(k)
+            for i in range(MINHASH_K)
         ]
     )
 
 
-def lsh_bands(sig_df: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS) -> DataFrame:
+def lsh_bands(sig_df: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_key): band_key = md5 of its rows' minhashes."""
-    if bands < 1 or k % bands != 0:
-        # bands > k (rows_per_band = 0) would give EVERY doc the same
-        # empty-concat band key — all-pairs candidates, silently; a
-        # non-dividing bands would silently drop trailing signature
-        # rows and weaken the collision guarantee.
-        raise ValueError(
-            f"lsh_bands needs 1 <= bands and bands | k, got k={k} bands={bands}"
-        )
-    rows_per_band = k // bands
+    rows_per_band = MINHASH_K // LSH_BANDS
     band_structs = F.array(*[
         F.struct(
             F.lit(b).alias("band_id"),
@@ -165,7 +158,7 @@ def lsh_bands(sig_df: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS) -> 
                 F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)
             ])).alias("band_key"),
         )
-        for b in range(bands)
+        for b in range(LSH_BANDS)
     ])
     return (
         sig_df.select("doc_id", F.explode(band_structs).alias("band"))
@@ -173,19 +166,17 @@ def lsh_bands(sig_df: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS) -> 
     )
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame, max_bucket_size: int | None = None
-) -> DataFrame:
+def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs: docs sharing ≥ 1 LSH band bucket.
 
     The self-join key is (band_id, band_key) — bucket-local, not
     all-pairs; distinct() collapses pairs that collide in >1 band.
 
-    ``max_bucket_size`` is the degenerate-corpus guard: a boilerplate
+    ``MAX_BUCKET_SIZE`` is the degenerate-corpus guard: a boilerplate
     string repeated m times puts m docs in the same bucket in EVERY
     band → O(m²) candidate pairs from one key, the skew that AQE can
     mitigate but not remove. With a cap, buckets larger than
-    ``max_bucket_size`` are dropped from candidate generation entirely
+    ``MAX_BUCKET_SIZE`` are dropped from candidate generation entirely
     (their members are exact or near-exact duplicates — the cheap
     md5 groupBy of :func:`exact_duplicates` is the right tool for
     them, not a quadratic pair join). On corpora where no bucket
@@ -195,11 +186,11 @@ def minhash_lsh_candidates(
     reused — the cap costs no extra shuffle.
     """
     b = lsh_bands(minhash_signature(docs))
-    if max_bucket_size is not None:
+    if MAX_BUCKET_SIZE is not None:
         w_bucket = Window.partitionBy("band_id", "band_key")
         b = (
             b.withColumn("_bsz", F.count(F.lit(1)).over(w_bucket))
-            .filter(F.col("_bsz") <= max_bucket_size)
+            .filter(F.col("_bsz") <= MAX_BUCKET_SIZE)
             .drop("_bsz")
         )
     # Self-joins get NO ReusedExchange from Catalyst (the broadcast side
@@ -231,6 +222,7 @@ def minhash_lsh_candidates(
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 60  # 15 hex chars → fits a signed 64-bit int portably
+SIMHASH_MAX_HAMMING = 3  # 4 bands of 15 bits: pigeonhole for ≤ 3 flips
 
 
 def _token_hash(tok):
@@ -238,7 +230,7 @@ def _token_hash(tok):
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
 
 
-def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """60-bit SimHash over distinct tokens (unit weights).
 
     bit_j(doc) = 1 iff sum over tokens of ±1 (sign of hash bit j) > 0.
@@ -248,10 +240,6 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     fingerprint from the signs. The naive form (60 array folds, each
     re-inlining tokenize+hash) does 60× the hashing work per row.
     """
-    if not 1 <= bits <= 62:
-        # 2**j must stay a positive signed 64-bit literal (j <= 61 in
-        # the reassembly below plus the sign bit's headroom).
-        raise ValueError(f"simhash needs 1 <= bits <= 62, got {bits}")
     toks = tokens_table(docs).select(
         "doc_id", F.explode(F.array_distinct(F.col("toks"))).alias("tok")
     ).select("doc_id", _token_hash(F.col("tok")).alias("h"))
@@ -260,19 +248,19 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
             F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1).alias(
                 f"b{j}"
             )
-            for j in range(bits)
+            for j in range(SIMHASH_BITS)
         ]
     )
     fp = F.lit(0).cast("long")
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         fp = fp + F.when(F.col(f"b{j}") > 0, F.lit(2**j).cast("long")).otherwise(
             F.lit(0)
         )
     return sums.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) ≤ max_hamming.
+def simhash_near_duplicates(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs with hamming(simhash) ≤ SIMHASH_MAX_HAMMING.
 
     Candidates via 4 bands of 15 bits (pigeonhole for ≤ 3 flips), then
     exact hamming verification with bit_count(a XOR b).
@@ -320,7 +308,7 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
             F.col("b.doc_id").alias("doc_id_b"),
             hamming.alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
 
@@ -329,10 +317,15 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 # D4 n-gram Jaccard
 # ---------------------------------------------------------------------------
 
+# Hot-gram cap of the n-gram miners' candidate generation (None: no
+# cap) and loud-fail output cap of the exact pair miners (None: no
+# guard); see ngram_jaccard_pairs.
+MAX_POSTING_SIZE: int | None = None
+MAX_PAIRS: int | None = None
+CONTAINMENT_THRESHOLD = 0.6
 
-def _cap_pairs(
-    result: DataFrame, cand: DataFrame, max_pairs: int, op: str
-) -> DataFrame:
+
+def _cap_pairs(result: DataFrame, cand: DataFrame, op: str) -> DataFrame:
     """Loud-fail output guard for the exact pair miners.
 
     Exact similarity joins are lower-bounded by their OUTPUT size, and
@@ -340,7 +333,7 @@ def _cap_pairs(
     key-shift rig: 157k pairs at sf0.1 → 15.9M at 10×, exponent ~1.6).
     At 100 TB a pathological corpus would fill the shuffle/output disks
     silently before any stage fails. This guard converts that into a
-    clean, early error: gate ``result`` on ``count(cand) ≤ max_pairs``
+    clean, early error: gate ``result`` on ``count(cand) ≤ MAX_PAIRS``
     — the candidate count upper-bounds the verified output and is
     checked BEFORE the verify/write work runs.
 
@@ -353,15 +346,15 @@ def _cap_pairs(
     ``trend_slope_by_event_type``.
     """
     guard = cand.agg(F.count(F.lit(1)).alias("_n_cand")).select(
-        F.when(F.col("_n_cand") <= F.lit(max_pairs), F.col("_n_cand"))
+        F.when(F.col("_n_cand") <= F.lit(MAX_PAIRS), F.col("_n_cand"))
         .otherwise(
             F.raise_error(
                 F.concat(
                     F.lit(f"{op}: candidate pair count "),
                     F.col("_n_cand").cast("string"),
                     F.lit(
-                        f" exceeds max_pairs={max_pairs} — output is "
-                        "quadratic on this corpus; raise max_pairs, "
+                        f" exceeds MAX_PAIRS={MAX_PAIRS} — output is "
+                        "quadratic on this corpus; raise MAX_PAIRS, "
                         "tighten the threshold, or pre-collapse exact "
                         "duplicates first"
                     ),
@@ -375,12 +368,7 @@ def _cap_pairs(
     ).drop("_cap_n")
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    max_posting_size: int | None = None,
-    max_pairs: int | None = None,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs (the verifier operator).
 
     PPJoin-shaped. The GRAM-STRING array is never materialized —
@@ -408,12 +396,12 @@ def ngram_jaccard_pairs(
        rewrite: the previous exploded counting-join verify shuffled
        |cand| × n_grams narrow rows and was the bench's top entry.)
        Hot grams are the skew hazard: AQE skew-join first, then
-       ``max_posting_size``.
+       ``MAX_POSTING_SIZE``.
 
-    ``max_posting_size`` is the hot-gram guard: a boilerplate shingle
+    ``MAX_POSTING_SIZE`` is the hot-gram guard: a boilerplate shingle
     shared by m docs' PREFIXES creates an O(m²) join fanout on that one
     gram. With a cap, prefix grams indexed by more than
-    ``max_posting_size`` docs are dropped from CANDIDATE GENERATION
+    ``MAX_POSTING_SIZE`` docs are dropped from CANDIDATE GENERATION
     only — verification (the counting joins on the full posting list)
     stays exact, so every surviving pair's jaccard value is unchanged.
     Pairs whose only shared prefix gram is a dropped hot gram are
@@ -427,12 +415,12 @@ def ngram_jaccard_pairs(
     r8), so capped mode trades the positional pruning away to keep the
     cap's recall contract exact.
 
-    ``max_pairs`` is the loud-fail output guard (:func:`_cap_pairs`):
+    ``MAX_PAIRS`` is the loud-fail output guard (:func:`_cap_pairs`):
     when set, the run errors cleanly if the candidate pair count
     crosses the cap instead of silently writing a quadratic result;
     the guarded output is bit-identical to the unguarded run whenever
-    it survives. Default ``None`` keeps the plan byte-identical to
-    pre-guard builds.
+    it survives. ``None`` keeps the plan byte-identical to pre-guard
+    builds.
 
     Short docs (< n tokens) produce no postings and drop out naturally.
 
@@ -466,8 +454,8 @@ def ngram_jaccard_pairs(
     # shuffled |cand| × n_grams narrow rows (round-8 rewrite: the old
     # shape was the top bench entry at 5.2s; this one measures ~3s).
     arrays = _gram_arrays(posting).transform(materialize, eager=False)
-    prefix = _prefix_posting(arrays, threshold, max_posting_size)
-    if max_posting_size is not None:
+    prefix = _prefix_posting(arrays, threshold)
+    if MAX_POSTING_SIZE is not None:
         # the hot-gram cap adds a gh-count window — checkpoint so the
         # self-join's two sides share ONE capped-prefix computation
         # (uncapped, the prefix is a cheap slice over the arrays
@@ -489,7 +477,7 @@ def ngram_jaccard_pairs(
             >= F.greatest(F.col("a.n_grams"), F.col("b.n_grams")) * threshold
         )
     )
-    if max_posting_size is None:
+    if MAX_POSTING_SIZE is None:
         # positional conjunct only when UNcapped — under the cap the
         # first-common-gram row this bound's soundness relies on may be
         # the dropped hot-gram row (see docstring / ADVICE r8).
@@ -516,7 +504,7 @@ def ngram_jaccard_pairs(
         )
         .distinct()
     )
-    if max_pairs is not None:
+    if MAX_PAIRS is not None:
         # checkpoint so the guard's count and the verify joins read ONE
         # materialized candidate set instead of re-running the prefix
         # self-join twice.
@@ -532,8 +520,8 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    if max_pairs is not None:
-        out = _cap_pairs(out, cand, max_pairs, "ngram_jaccard_pairs")
+    if MAX_PAIRS is not None:
+        out = _cap_pairs(out, cand, "ngram_jaccard_pairs")
     return out
 
 
@@ -548,9 +536,7 @@ def _gram_arrays(posting: DataFrame) -> DataFrame:
     )
 
 
-def _prefix_posting(
-    arrays: DataFrame, threshold: float, max_posting_size: int | None
-) -> DataFrame:
+def _prefix_posting(arrays: DataFrame, threshold: float) -> DataFrame:
     """PPJoin prefix posting (doc_id, n_grams, pos, gh): the first
     n − ⌈t·n⌉ + 1 grams of each doc under the canonical (hash) order,
     with 0-based ``pos`` (the gram's rank in the doc's full sorted
@@ -565,11 +551,11 @@ def _prefix_posting(
         "n_grams",
         F.posexplode(F.slice("ghs", F.lit(1), plen)).alias("pos", "gh"),
     )
-    if max_posting_size is not None:
+    if MAX_POSTING_SIZE is not None:
         w_gram = Window.partitionBy("gh")
         prefix = (
             prefix.withColumn("_psz", F.count(F.lit(1)).over(w_gram))
-            .filter(F.col("_psz") <= max_posting_size)
+            .filter(F.col("_psz") <= MAX_POSTING_SIZE)
             .drop("_psz")
         )
     return prefix
@@ -618,13 +604,9 @@ def _verified_intersections(cand: DataFrame, arrays: DataFrame) -> DataFrame:
     )
 
 
-def ngram_containment_pairs(
-    docs: DataFrame,
-    threshold: float = 0.6,
-    max_posting_size: int | None = None,
-    max_pairs: int | None = None,
-) -> DataFrame:
-    """Exact n-gram CONTAINMENT pairs: |A∩B| / min(|A|, |B|) ≥ t.
+def ngram_containment_pairs(docs: DataFrame) -> DataFrame:
+    """Exact n-gram CONTAINMENT pairs: |A∩B| / min(|A|, |B|) ≥ t, with
+    t = ``CONTAINMENT_THRESHOLD``.
 
     The doc-inside-doc detector Jaccard misses: a short document quoted
     verbatim inside a long one has containment ≈ 1 but Jaccard ≈
@@ -646,10 +628,10 @@ def ngram_containment_pairs(
     as ``xxhash64`` longs with the hash as canonical prefix order —
     same construction and collision argument as
     :func:`ngram_jaccard_pairs`. As there, the positional filter is
-    disabled when ``max_posting_size`` is set (the cap can drop the
+    disabled when ``MAX_POSTING_SIZE`` is set (the cap can drop the
     first-common-gram row its soundness needs — ADVICE r8), and
-    ``max_pairs`` adds the :func:`_cap_pairs` loud-fail output guard
-    (default ``None`` = plan unchanged).
+    ``MAX_PAIRS`` adds the :func:`_cap_pairs` loud-fail output guard
+    (``None`` = plan unchanged).
     """
     posting = (
         tokens_table(docs)
@@ -668,7 +650,8 @@ def ngram_containment_pairs(
     # posting side of the asymmetric candidate join is re-exploded
     # from the checkpointed arrays — no second lineage to truncate.
     arrays = _gram_arrays(posting).transform(materialize, eager=False)
-    prefix = _prefix_posting(arrays, threshold, max_posting_size)
+    threshold = CONTAINMENT_THRESHOLD
+    prefix = _prefix_posting(arrays, threshold)
     full = arrays.select(
         "doc_id",
         "n_grams",
@@ -685,7 +668,7 @@ def ngram_containment_pairs(
         # ties fire both ways and collapse in the distinct
         & (F.col("a.n_grams") <= F.col("b.n_grams"))
     )
-    if max_posting_size is None:
+    if MAX_POSTING_SIZE is None:
         # positional conjunct only when UNcapped (see docstring).
         alpha = F.ceil(F.col("a.n_grams") * F.lit(threshold) - 1e-9)
         cond = cond & (
@@ -708,7 +691,7 @@ def ngram_containment_pairs(
         )
         .distinct()
     )
-    if max_pairs is not None:
+    if MAX_PAIRS is not None:
         cand = cand.transform(materialize, eager=False)
     out = (
         _verified_intersections(cand, arrays)
@@ -721,8 +704,8 @@ def ngram_containment_pairs(
         )
         .filter(F.col("containment") >= threshold)
     )
-    if max_pairs is not None:
-        out = _cap_pairs(out, cand, max_pairs, "ngram_containment_pairs")
+    if MAX_PAIRS is not None:
+        out = _cap_pairs(out, cand, "ngram_containment_pairs")
     return out
 
 
@@ -772,10 +755,10 @@ def minhash_lsh_incremental(
     )
 
 
-def weighted_minhash_pairs(
-    docs: DataFrame,
-    min_wjacc_milli: int = 250,
-) -> DataFrame:
+MIN_WJACC_MILLI = 250
+
+
+def weighted_minhash_pairs(docs: DataFrame) -> DataFrame:
     """WEIGHTED-Jaccard near-dup pairs — the tf-aware upgrade of the
     set-Jaccard miners: two docs built from the same vocabulary in
     different proportions score low, repeated-content clones score
@@ -788,7 +771,7 @@ def weighted_minhash_pairs(
     applies unchanged, and the exact verify is integer min/max sums.
 
     → (doc_id_a, doc_id_b, wjacc_milli) for band-bucket candidates
-    with wjacc_milli ≥ ``min_wjacc_milli`` (milli = integer
+    with wjacc_milli ≥ ``MIN_WJACC_MILLI`` (milli = integer
     round-half-up of 1000·num/den — no float in the hash).
 
     Scale shape: replica explode is ≤ 2× the token table; signature
@@ -831,9 +814,9 @@ def weighted_minhash_pairs(
         ]
     )
     # Degenerate-corpus guard (same rule as minhash_lsh_candidates):
-    # buckets above max_bucket_size are dropped DETERMINISTICALLY on
-    # both engines before pairing, bounding the candidate join.
-    banded = lsh_bands(sig, k=MINHASH_K, bands=LSH_BANDS)
+    # buckets above 50 docs are dropped DETERMINISTICALLY on both
+    # engines before pairing, bounding the candidate join.
+    banded = lsh_bands(sig)
     bsz = banded.groupBy("band_id", "band_key").agg(
         F.count(F.lit(1)).alias("bsz")
     )
@@ -898,19 +881,20 @@ def weighted_minhash_pairs(
                 " div (2 * (tot_a + tot_b - num))"
             ).cast("long").alias("wjacc_milli"),
         )
-        .filter(F.col("wjacc_milli") >= min_wjacc_milli)
+        .filter(F.col("wjacc_milli") >= MIN_WJACC_MILLI)
     )
 
 
-def boilerplate_chunk_removal(
-    docs: DataFrame,
-    chunk_tokens: int = 3,
-    df_divisor: int = 20,
-) -> DataFrame:
+BOILERPLATE_CHUNK_TOKENS = 2
+BOILERPLATE_DF_DIVISOR = 20
+
+
+def boilerplate_chunk_removal(docs: DataFrame) -> DataFrame:
     """Corpus-frequency boilerplate removal (the line-dedup pass of
-    C4/CCNet adapted to aligned token chunks — this corpus has no
-    newline structure): a chunk is BOILERPLATE when it appears in at
-    least max(3, ceil(n_docs / df_divisor)) DISTINCT documents,
+    C4/CCNet adapted to aligned ``BOILERPLATE_CHUNK_TOKENS``-token
+    chunks — this corpus has no newline structure): a chunk is
+    BOILERPLATE when it appears in at least max(3, ceil(n_docs /
+    BOILERPLATE_DF_DIVISOR)) DISTINCT documents,
     and every occurrence is dropped — unlike :func:`chunk_dedup`'s
     first-wins rule, which keeps one copy. Navigation headers, license
     blocks and share-bars repeat across a large fraction of a crawl;
@@ -919,14 +903,14 @@ def boilerplate_chunk_removal(
 
     → (doc_id, text_clean, n_chunks_kept, n_chunks_dropped)
 
-    Scale shape: one explode to n_tokens/chunk_tokens rows, one
-    distinct-doc count per chunk (partial-agg shuffle on the chunk
+    Scale shape: one explode to n_tokens/BOILERPLATE_CHUNK_TOKENS rows,
+    one distinct-doc count per chunk (partial-agg shuffle on the chunk
     string), threshold broadcast as a 1-row crossJoin, one shuffle
     back on doc_id for the ordered reassembly — same two-shuffle
     floor as chunk_dedup. All threshold arithmetic is integer
     (ceil(a/b) = (a+b-1) div b), so any engine lands on the same cut.
     """
-    n = int(chunk_tokens)
+    n, div = BOILERPLATE_CHUNK_TOKENS, BOILERPLATE_DF_DIVISOR
     chunks = F.expr(
         f"transform(sequence(0, (size(toks) - 1) div {n}), "
         f"i -> array_join(slice(toks, i * {n} + 1, {n}), ' '))"
@@ -937,8 +921,7 @@ def boilerplate_chunk_removal(
     )
     thresh = docs.agg(
         F.expr(
-            "greatest(CAST(3 AS BIGINT), "
-            f"(count(1) + {df_divisor - 1}) div {df_divisor})"
+            f"greatest(CAST(3 AS BIGINT), (count(1) + {div - 1}) div {div})"
         ).alias("df_cut")
     )
     df_per_chunk = exploded.groupBy("chunk").agg(
@@ -971,11 +954,7 @@ def boilerplate_chunk_removal(
     )
 
 
-def fastss_pairs(
-    df: DataFrame,
-    max_dist: int = 1,
-    max_pairs: int | None = None,
-) -> DataFrame:
+def fastss_pairs(df: DataFrame, max_dist: int = 1) -> DataFrame:
     """Exact edit-distance-1 pair join via symmetric-deletion blocking
     (FastSS / SymSpell family): each string emits its 1-deletion
     variants plus itself; two strings within Levenshtein distance 1
@@ -1034,14 +1013,14 @@ def fastss_pairs(
     being consumed), and it is free because the count rides the
     groupBy the plan already runs).
 
-    ``max_pairs`` is the loud-fail output guard (:func:`_cap_pairs`):
+    ``MAX_PAIRS`` is the loud-fail output guard (:func:`_cap_pairs`):
     the 10× sweep's key-shifted corpus proves this miner's output is
     quadratic on adversarial data (exponents 1.59/1.40 — an OUTPUT
     lower bound, not a plan defect), so at 100 TB an uncapped run can
     fill disk silently. When set, the run errors cleanly once the
     deduped candidate count crosses the cap; surviving output is
-    bit-identical to the unguarded run. Default ``None`` keeps the
-    plan byte-identical to pre-guard builds.
+    bit-identical to the unguarded run. ``None`` keeps the plan
+    byte-identical to pre-guard builds.
     """
     if max_dist not in (1, 2):
         raise NotImplementedError("fastss_pairs implements max_dist in {1, 2}")
@@ -1118,7 +1097,7 @@ def fastss_pairs(
         )
         .distinct()
     )
-    if max_pairs is not None:
+    if MAX_PAIRS is not None:
         # checkpoint so the guard's count and the levenshtein verify
         # read ONE materialized candidate set (the blocking self-join
         # is the expensive stage; don't run it twice).
@@ -1139,20 +1118,20 @@ def fastss_pairs(
         .filter(F.col("edit_dist") >= 0)
         .select("id_a", "id_b", "edit_dist")
     )
-    if max_pairs is not None:
-        out = _cap_pairs(out, cand, max_pairs, "fastss_pairs")
+    if MAX_PAIRS is not None:
+        out = _cap_pairs(out, cand, "fastss_pairs")
     return out
 
 
-def chunk_dedup(
-    docs: DataFrame,
-    chunk_tokens: int = 10,
-) -> DataFrame:
+CHUNK_TOKENS = 10
+
+
+def chunk_dedup(docs: DataFrame) -> DataFrame:
     """Corpus-wide exact chunk-level deduplication (Lee et al. 2021's
     "Deduplicating Training Data Makes Language Models Better",
     restricted to aligned non-overlapping windows).
 
-    Every document is cut into consecutive ``chunk_tokens``-token
+    Every document is cut into consecutive ``CHUNK_TOKENS``-token
     chunks (the tail chunk may be shorter); a chunk survives only in
     its FIRST occurrence corpus-wide (lowest ``(doc_id, chunk_idx)``),
     every later byte-identical chunk is dropped, and each document's
@@ -1160,7 +1139,7 @@ def chunk_dedup(
 
     → (doc_id, text_dedup, n_chunks_kept, n_chunks_dropped)
 
-    Scale shape: one explode to ≈ n_tokens/chunk_tokens rows, one
+    Scale shape: one explode to ≈ n_tokens/CHUNK_TOKENS rows, one
     shuffle keyed on the chunk string for the first-occurrence window
     (Spark hashes the partition key internally, so the wire cost is the
     same as a precomputed digest while avoiding any md5-collision
@@ -1169,7 +1148,7 @@ def chunk_dedup(
     state — both shuffles are the minimum any engine needs for a
     corpus-wide first-wins rule.
     """
-    n = int(chunk_tokens)
+    n = CHUNK_TOKENS
     chunks = F.expr(
         f"transform(sequence(0, (size(toks) - 1) div {n}), "
         f"i -> array_join(slice(toks, i * {n} + 1, {n}), ' '))"

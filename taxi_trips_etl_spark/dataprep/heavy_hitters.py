@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _COL = "word"  # the item column mg_heavy_hitters counts
+MG_K = 30  # heavy hitter: count · MG_K > N (MG sketch capacity)
 
 
 def _mg_partition_factory(k: int):
@@ -66,12 +67,13 @@ def _mg_partition_factory(k: int):
     return mg_partition
 
 
-def mg_heavy_hitters(items: DataFrame, k: int) -> DataFrame:
-    """All values of ``items.word`` with exact count·k > N, via an MG
+def mg_heavy_hitters(items: DataFrame) -> DataFrame:
+    """All values of ``items.word`` with exact count·MG_K > N, via an MG
     candidate pass + an exact verify pass (two corpus scans total).
 
     Returns (word, cnt) with cnt the EXACT global count.
     """
+    k = MG_K
     sketch = items.select(_COL).mapInPandas(
         _mg_partition_factory(k), schema=f"{_COL} string, n_part long"
     )

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 #: hash domain: first 15 hex chars of md5 → uniform integer in [0, 2^60)
 _HASH_SPACE = float(2**60)
 KMV_K = 256  # sketch size, shared by the Spark builder and its oracle
+_SET, _VALUE = "event_type", "user_id"  # sets, and the values they hold
 
 
 def _hash60(col: F.Column) -> F.Column:
@@ -46,10 +47,8 @@ def _hash60(col: F.Column) -> F.Column:
     ).cast("long")
 
 
-def kmv_sketch(
-    df: DataFrame, set_col: str, value_col: str, k: int = KMV_K
-) -> DataFrame:
-    """Per-set KMV sketch: the k smallest distinct 60-bit hashes.
+def kmv_sketch(df: DataFrame) -> DataFrame:
+    """Per-set KMV sketch: the KMV_K smallest distinct 60-bit hashes.
 
     → (set_key, h), ≤ k rows per set. Exact k-minimum regardless of
     physical partitioning (see module docstring for the two-stage
@@ -57,9 +56,10 @@ def kmv_sketch(
     days' sketches and re-rank to merge, same dataflow as the HLL
     register rollup.
     """
+    k = KMV_K
     dist = df.select(
-        F.col(set_col).alias("set_key"),
-        _hash60(F.col(value_col)).alias("h"),
+        F.col(_SET).alias("set_key"),
+        _hash60(F.col(_VALUE)).alias("h"),
     ).distinct()
     # Local candidate pass: bounded by physical partition size, so no
     # single-reducer sort of a billion-distinct set.
@@ -78,8 +78,9 @@ def kmv_sketch(
     )
 
 
-def kmv_pairwise_overlap(df: DataFrame, set_col: str, value_col: str) -> DataFrame:
-    """Distinct-overlap estimates for every unordered pair of sets.
+def kmv_pairwise_overlap(df: DataFrame) -> DataFrame:
+    """Distinct-``user_id`` overlap estimates for every unordered pair
+    of ``event_type`` sets.
 
     → (set_a, set_b, kk, rho, union_est, inter_est, jaccard_est),
     one row per pair with set_a < set_b. ``kk`` = |K| (min(KMV_K, distinct
@@ -100,7 +101,7 @@ def kmv_pairwise_overlap(df: DataFrame, set_col: str, value_col: str) -> DataFra
     # next to one saved corpus pass.
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
-    sk = materialize(kmv_sketch(df, set_col, value_col, KMV_K), eager=False)
+    sk = materialize(kmv_sketch(df), eager=False)
     sets = sk.select("set_key").distinct()
     pairs = (
         sets.select(F.col("set_key").alias("sa"))
@@ -152,17 +153,16 @@ def kmv_pairwise_overlap(df: DataFrame, set_col: str, value_col: str) -> DataFra
     )
 
 
-def kmv_oracle_sql(table_sql: str, set_col: str, value_col: str) -> str:
-    """DuckDB twin of :func:`kmv_pairwise_overlap` (identical hash
-    derivation, ranking and estimate arithmetic), parameterized over a
-    source relation."""
+def kmv_oracle_sql() -> str:
+    """DuckDB twin of :func:`kmv_pairwise_overlap` over ``events``
+    (identical hash derivation, ranking and estimate arithmetic)."""
     lit_num = repr(float(KMV_K - 1) * _HASH_SPACE)
     return f"""
     WITH dist AS (
-        SELECT DISTINCT {set_col} AS set_key,
-               CAST(concat('0x', substr(md5(CAST({value_col} AS VARCHAR)),
+        SELECT DISTINCT {_SET} AS set_key,
+               CAST(concat('0x', substr(md5(CAST({_VALUE} AS VARCHAR)),
                                         1, 15)) AS BIGINT) AS h
-        FROM ({table_sql})
+        FROM (SELECT {_SET}, {_VALUE} FROM events)
     ),
     sk AS (
         SELECT set_key, h FROM (

@@ -17,15 +17,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# The range planners cut lineitem on (l_orderkey, l_linenumber) into
+# RANGE_PARTITIONS buckets; the salt planner salts l_suppkey.
+RANGE_KEY = "l_orderkey"
+RANGE_TIEBREAK = "l_linenumber"
+RANGE_PARTITIONS = 16
+SALT_KEY = "l_suppkey"
+SALT_TARGET_ROWS = 400
+MAX_SALT = 32
 
-def range_partition_plan(
-    df: DataFrame,
-    key: str,
-    n_partitions: int = 16,
-    tiebreak: str | None = None,
-) -> DataFrame:
+
+def range_partition_plan(df: DataFrame) -> DataFrame:
     """Exact equi-depth split points for ``repartitionByRange(key)``:
-    rank every row by (key, tiebreak), assign bucket
+    rank every row by (RANGE_KEY, RANGE_TIEBREAK), assign bucket
     (rn−1)·k div n, and emit per-bucket (lo, hi, n_rows) — the
     boundary table a writer pins so reruns/backfills produce stable
     file ranges (Spark's own RangePartitioner re-SAMPLES per run:
@@ -36,7 +40,7 @@ def range_partition_plan(
     arithmetic over a deterministic sample (this exact version IS the
     audit for that sampler); the plan table itself is k rows.
 
-    → (bucket, lo, hi, n_rows), bucket ∈ [0, k).
+    → (bucket, lo, hi, n_rows), bucket ∈ [0, k), k = RANGE_PARTITIONS.
 
     This exact version deliberately keeps its SinglePartition rank —
     it IS the audit for the sampled planner (same posture as
@@ -46,12 +50,9 @@ def range_partition_plan(
     and its crossJoin broadcast are gone, at zero added cost.
     """
     sel = df.select(
-        F.col(key).alias("k"),
-        *([F.col(tiebreak).alias("tb")] if tiebreak else []),
+        F.col(RANGE_KEY).alias("k"), F.col(RANGE_TIEBREAK).alias("tb")
     )
-    w = Window.orderBy(
-        F.col("k"), *([F.col("tb")] if tiebreak else [])
-    )
+    w = Window.orderBy(F.col("k"), F.col("tb"))
     ranked = (
         sel
         .withColumn("rn", F.row_number().over(w).cast("long"))
@@ -61,7 +62,7 @@ def range_partition_plan(
         )
         .withColumn(
             "bucket",
-            F.expr(f"(rn - 1) * {n_partitions} div n").cast("long"),
+            F.expr(f"(rn - 1) * {RANGE_PARTITIONS} div n").cast("long"),
         )
     )
     return (
@@ -75,12 +76,7 @@ def range_partition_plan(
     )
 
 
-def sampled_range_partition_plan(
-    df: DataFrame,
-    key: str,
-    n_partitions: int = 16,
-    tiebreak: str | None = None,
-) -> DataFrame:
+def sampled_range_partition_plan(df: DataFrame) -> DataFrame:
     """The PRODUCTION version of :func:`range_partition_plan`: split
     points come from a deterministic ~1/10 hash sample
     (md5 of the key+tiebreak, engine-portable — no RNG, rerun-stable),
@@ -100,7 +96,7 @@ def sampled_range_partition_plan(
     a partial-agg count. This is exactly what repartitionByRange's
     sampler does internally — exposed, deterministic, and auditable.
     """
-    tb = tiebreak if tiebreak else key
+    key, tb, n_partitions = RANGE_KEY, RANGE_TIEBREAK, RANGE_PARTITIONS
     sample = df.filter(
         F.expr(
             f"CAST(conv(substring(md5(concat(CAST({key} AS STRING),"
@@ -115,13 +111,8 @@ def sampled_range_partition_plan(
     # sample filter scan.
     from taxi_trips_etl_spark.operators.ids import assign_global_ids
 
-    sel = sample.select(
-        F.col(key).alias("k_"),
-        *([F.col(tiebreak).alias("tb_")] if tiebreak else []),
-    )
-    ranked0 = assign_global_ids(
-        sel, ["k_"] + (["tb_"] if tiebreak else []), id_col="rn"
-    )
+    sel = sample.select(F.col(key).alias("k_"), F.col(tb).alias("tb_"))
+    ranked0 = assign_global_ids(sel, ["k_", "tb_"], id_col="rn")
     n_s = ranked0.select(F.count(F.lit(1)).cast("long").alias("ns"))
     ranked = ranked0.crossJoin(F.broadcast(n_s))
     # Upper split point of bucket b = the sample value at rank
@@ -181,15 +172,10 @@ def sampled_range_partition_plan(
     )
 
 
-def adaptive_salt_plan(
-    df: DataFrame,
-    key: str,
-    target_rows_per_task: int = 2000,
-    max_salt: int = 32,
-) -> DataFrame:
-    """Per-key salt factors for a skewed shuffle join: keys whose row
-    count exceeds ``target_rows_per_task`` get
-    salt = min(max_salt, ceil(count / target)) — the replication
+def adaptive_salt_plan(df: DataFrame) -> DataFrame:
+    """Per-key salt factors for a skewed shuffle join: SALT_KEY values
+    whose row count exceeds ``SALT_TARGET_ROWS`` get
+    salt = min(MAX_SALT, ceil(count / target)) — the replication
     factor the salted-join builder (operators/skew.py pattern) uses to
     split that key's rows across salt sub-partitions while the build
     side replicates salt ways. Keys at salt = 1 ride the normal path,
@@ -198,14 +184,14 @@ def adaptive_salt_plan(
 
     → (key, n_rows, salt_factor), salted keys only, heaviest first.
     """
-    t = int(target_rows_per_task)
+    key, t = SALT_KEY, SALT_TARGET_ROWS
     return (
         df.groupBy(F.col(key))
         .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
         .withColumn(
             "salt_factor",
             F.least(
-                F.lit(max_salt).cast("long"),
+                F.lit(MAX_SALT).cast("long"),
                 F.expr(f"(n_rows + {t - 1}) div {t}"),
             ).cast("long"),
         )
@@ -214,10 +200,9 @@ def adaptive_salt_plan(
     )
 
 
-def hilbert_index(
-    df: DataFrame, xcol: str, ycol: str, bits: int = 8, out_col: str = "hd"
-):
-    """Hilbert-curve distance column for 2D data layout.
+def hilbert_index(df: DataFrame, bits: int = 8):
+    """Hilbert-curve distance column ``hd`` over the integer grid
+    columns ``x0``/``y0``, for 2D data layout.
 
     Z-order (``zorder_key_customers``) interleaves bits; the Hilbert
     curve improves on it for range-scan locality: consecutive curve
@@ -246,24 +231,23 @@ def hilbert_index(
     per segment and the plan stays linear in ``bits``. The exchanges
     move only the dimension-sized pair relation.
 
-    Returns ``df`` with an added long column ``out_col`` (default
-    ``hd``). The walk uses working columns ``_hx``/``_hy``/``_hd``;
-    inputs that already carry any of those names (or ``out_col``)
-    would be silently clobbered, so they raise instead.
+    Returns ``df`` with an added long column ``hd``. The walk uses
+    working columns ``_hx``/``_hy``/``_hd``; inputs that already carry
+    any of those names (or ``hd``) would be silently clobbered, so they
+    raise instead.
     """
     keep = [c for c in df.columns]
-    reserved = {"_hx", "_hy", "_hd", out_col}
+    reserved = {"_hx", "_hy", "_hd", "hd"}
     clash = sorted(reserved & set(keep))
     if clash:
         raise ValueError(
             f"hilbert_index: input columns {clash} collide with the "
-            f"working/output columns; rename them or pass a different "
-            f"out_col"
+            f"working/output columns; rename them"
         )
     out = df.select(
         *keep,
-        F.col(xcol).cast("int").alias("_hx"),
-        F.col(ycol).cast("int").alias("_hy"),
+        F.col("x0").cast("int").alias("_hx"),
+        F.col("y0").cast("int").alias("_hy"),
         F.lit(0).cast("long").alias("_hd"),
     )
     for i, b in enumerate(range(bits - 1, -1, -1)):
@@ -290,4 +274,4 @@ def hilbert_index(
             out = out.repartition(
                 df.sparkSession.sparkContext.defaultParallelism, *keep
             )
-    return out.select(*keep, F.col("_hd").alias(out_col))
+    return out.select(*keep, F.col("_hd").alias("hd"))

@@ -39,10 +39,9 @@ LIMIT_PAIRS = 12  # candidate pairs scored, shared by the Spark builder and its 
 def rouge_l_pairs(
     docs: DataFrame,
     jaccard_threshold: float = 0.5,
-    limit_pairs: int = LIMIT_PAIRS,
 ) -> DataFrame:
     """→ (doc_id_a, doc_id_b, len_a, len_b, lcs_tokens,
-    rouge_l_f_milli) for the first ``limit_pairs`` (by id) candidate
+    rouge_l_f_milli) for the first ``LIMIT_PAIRS`` (by id) candidate
     pairs at 3-gram Jaccard ≥ ``jaccard_threshold``."""
     import pandas as pd  # noqa: F401
 
@@ -53,19 +52,19 @@ def rouge_l_pairs(
 
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
-    # ≤ limit_pairs rows; materialized because three consumers below
+    # ≤ LIMIT_PAIRS rows; materialized because three consumers below
     # (the two id projections and the final join) would each re-run
     # the candidate-join spine.
     pairs = materialize(
         ngram_jaccard_pairs(docs, threshold=jaccard_threshold)
         .select("doc_id_a", "doc_id_b")
         .orderBy("doc_id_a", "doc_id_b")
-        .limit(limit_pairs),
+        .limit(LIMIT_PAIRS),
         eager=False,
     )
     # Broadcast the SMALL side (guide §3.1): the old shape broadcast
     # the whole corpus-sized tokens table TWICE to join against a
-    # ≤ limit_pairs-row pair list — a driver/executor OOM at any real
+    # ≤ LIMIT_PAIRS-row pair list — a driver/executor OOM at any real
     # scale (broadcast relations cap at 8 GB) and two tokenize passes.
     # Instead, one tokenize pass semi-joined down to the ≤ 2·limit
     # pair ids, and THAT (bounded) table broadcasts to both sides.

@@ -43,13 +43,9 @@ HEADS = 20
 NEXT_PER_HEAD = 3
 
 
-def kneser_ney_bigram_topk(
-    docs: DataFrame,
-    heads: int = HEADS,
-    next_per_head: int = NEXT_PER_HEAD,
-) -> DataFrame:
-    """→ (head, next_word, pair_n, p_kn) for the ``heads`` most frequent
-    head words: the ``next_per_head`` successors with the highest
+def kneser_ney_bigram_topk(docs: DataFrame) -> DataFrame:
+    """→ (head, next_word, pair_n, p_kn) for the ``HEADS`` most frequent
+    head words: the ``NEXT_PER_HEAD`` successors with the highest
     smoothed probability (integer-numerator ordering, w2 tiebreak)."""
     from taxi_trips_etl_spark.dataprep.dedup import tokens_table
 
@@ -89,7 +85,7 @@ def kneser_ney_bigram_topk(
         bg.select("w1", "c1")
         .distinct()
         .orderBy(F.col("c1").desc(), "w1")
-        .limit(heads)
+        .limit(HEADS)
         .select("w1")
     )
     scored = (
@@ -106,7 +102,7 @@ def kneser_ney_bigram_topk(
     rk_w = Window.partitionBy("w1").orderBy(F.col("num").desc(), "w2")
     return (
         scored.withColumn("rk", F.row_number().over(rk_w))
-        .filter(F.col("rk") <= next_per_head)
+        .filter(F.col("rk") <= NEXT_PER_HEAD)
         .select(
             F.col("w1").alias("head"),
             F.col("w2").alias("next_word"),

@@ -34,9 +34,15 @@ from pyspark.sql import DataFrame
 def materialize(df: DataFrame, *, eager: bool = False) -> DataFrame:
     """Truncate ``df``'s lineage, reliably when the session allows it.
 
-    Reliable ``checkpoint`` iff ``sc.setCheckpointDir`` was called
-    (always eager in Spark's API when materialized — the ``eager``
-    flag is honored as given for both paths).
+    Reliable ``checkpoint`` iff ``sc.setCheckpointDir`` was called,
+    else ``localCheckpoint``; both get ``eager`` as given.
+
+    ``eager=False`` is not lazy under AQE: building the checkpoint's
+    RDD plans ``df`` adaptively, and that runs every query stage of
+    ``df`` but the last while the caller is still building its plan.
+    Only a single-stage ``df`` (no exchange) defers all of its work to
+    the first action; for one with an exchange, ``eager=False`` defers
+    only the last stage.
 
     Reliable-path cost note (ADVICE r13): every shared-spine call site
     was A/B-measured on the ``localCheckpoint`` path (no checkpoint dir
@@ -50,14 +56,7 @@ def materialize(df: DataFrame, *, eager: bool = False) -> DataFrame:
     checkpoint dir should budget that extra fill pass or persist the
     spine before checkpointing it.
     """
-    sc = df.sparkSession.sparkContext
-    try:
-        has_dir = sc.getCheckpointDir() is not None
-    except Exception:  # defensive: API shape varies across builds
-        has_dir = getattr(sc, "_jsc", None) is not None and (
-            sc._jsc.sc().getCheckpointDir().isDefined()
-        )
-    if has_dir:
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 

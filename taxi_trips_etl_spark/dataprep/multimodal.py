@@ -311,7 +311,7 @@ def decode_image(media: DataFrame, decoder: Callable[[bytes], dict] | None = Non
     return media.mapInPandas(kernel, "media_id long, width long, height long, channels long")
 
 
-def extract_features(media: DataFrame, bins: int = 16) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """REAL feature-extraction kernel (no codec required): per-payload
     byte-value histogram (``byte >> 4`` → 16 buckets) via numpy over
     Arrow batches — the shape every embedding/feature extractor follows.
@@ -320,9 +320,9 @@ def extract_features(media: DataFrame, bins: int = 16) -> DataFrame:
     reproduce them bit-for-bit. At 100 TB only the (media_id, 16 ints)
     rows ever shuffle; payloads stay in executor-local Arrow buffers.
     """
-    if bins < 1:
-        raise ValueError(f"extract_features needs bins >= 1, got {bins}")
     import numpy as np
+
+    bins = 16  # byte >> 4
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

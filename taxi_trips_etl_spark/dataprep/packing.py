@@ -13,7 +13,7 @@ implements the scalable two-pass prefix sum instead:
   1. bucket docs by id range; one partial-agg shuffle sums tokens per
      bucket (output: #buckets rows, tiny relative to the corpus);
   2. prefix-sum the bucket totals on the driver (bounded: one long per
-     bucket — pick ``bucket_span`` so #buckets stays ~1e6 at target
+     bucket — pick ``BUCKET_SPAN`` so #buckets stays ~1e6 at target
      scale, or recurse the same trick one level for more);
   3. broadcast the bucket offsets back; the within-bucket cumsum is a
      window partitioned BY BUCKET — partition-local, embarrassingly
@@ -30,26 +30,24 @@ from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.dedup import tokens_col
 
+BUCKET_SPAN = 4096  # doc ids per prefix-sum bucket
 
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int = 512,
-    bucket_span: int = 4096,
-) -> DataFrame:
+
+def pack_sequences(docs: DataFrame, seq_len: int = 512) -> DataFrame:
     """→ (doc_id, n_tokens, start_offset, first_seq, last_seq, n_seqs).
 
     ``start_offset`` is the doc's position in the concatenated token
     stream (docs ordered by ``doc_id``); ``first_seq``/``last_seq`` are
     the fixed-length training sequences it spans at ``seq_len``.
     """
-    if seq_len < 1 or bucket_span < 1:
-        # `x div 0` is NULL in Spark: zero values silently null the
-        # bucket/sequence columns instead of erroring.
-        raise ValueError(f"pack_sequences needs seq_len/bucket_span >= 1, got {seq_len}/{bucket_span}")
+    if seq_len < 1:
+        # `x div 0` is NULL in Spark: zero silently nulls the sequence
+        # columns instead of erroring.
+        raise ValueError(f"pack_sequences needs seq_len >= 1, got {seq_len}")
     toks = docs.select(
         F.col("doc_id"),
         F.size(tokens_col()).cast("long").alias("n_tokens"),
-        F.expr(f"doc_id div {bucket_span}").alias("_bucket"),
+        F.expr(f"doc_id div {BUCKET_SPAN}").alias("_bucket"),
     )
 
     # Pass 1: per-bucket token totals (tiny), prefix-summed driver-side.

@@ -212,14 +212,11 @@ def _rayleigh_deflate(
     return out
 
 
-def power_iteration_pc1(
-    embeddings: DataFrame,
-    iterations: int = ITERATIONS,
-) -> DataFrame:
+def power_iteration_pc1(embeddings: DataFrame) -> DataFrame:
     """→ (vec_id, pc1): projection onto the power-iteration top
     component. See module docstring for the exact-replay ledger."""
     vecs, dim, c_int = _collect_cov_int(embeddings)
-    q = _power_iterate(c_int, iterations)
+    q = _power_iterate(c_int, ITERATIONS)
     comp = [x / Q_VEC for x in q]
     arr = "array(" + ",".join(f"{x!r}D" for x in comp) + ")"
     return vecs.select(
@@ -234,13 +231,9 @@ def power_iteration_pc1(
     )
 
 
-def power_iteration_pca(
-    embeddings: DataFrame,
-    n_components: int = N_COMPONENTS,
-    iterations: int = ITERATIONS,
-) -> DataFrame:
+def power_iteration_pca(embeddings: DataFrame) -> DataFrame:
     """→ (vec_id, component_idx, value): projection onto the top
-    ``n_components`` principal directions, each found by the
+    ``N_COMPONENTS`` principal directions, each found by the
     integer-exact power iteration and removed by Rayleigh/Hotelling
     deflation (:func:`_rayleigh_deflate`) before the next.
     Convergence caveat per component as in the module docstring;
@@ -249,8 +242,8 @@ def power_iteration_pca(
     vecs, dim, c_int = _collect_cov_int(embeddings)
     projs = []
     c = c_int
-    for _ in range(n_components):
-        q = _power_iterate(c, iterations)
+    for _ in range(N_COMPONENTS):
+        q = _power_iterate(c, ITERATIONS)
         arr = "array(" + ",".join(f"{x / Q_VEC!r}D" for x in q) + ")"
         projs.append(
             f"round(aggregate(zip_with(v, {arr}, (a, b) -> a * b),"

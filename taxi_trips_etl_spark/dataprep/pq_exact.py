@@ -43,7 +43,16 @@ from pyspark.sql import functions as F
 from taxi_trips_etl_spark.dataprep.pca_power import _round_half_away
 
 Q_VEC = 10**6  # coordinate quantization (1e-6 units)
-SAMPLE_N = 512  # codebook training rows, shared by the Spark builder and its oracle
+# The PQ shape, shared by the Spark builder and its oracle: codebook
+# training rows, vector dimension, subspaces, centroids per subspace,
+# neighbors per query, the probe-query id bound and Lloyd's rounds.
+SAMPLE_N = 512
+PQ_DIM = 64
+PQ_M = 8
+PQ_KSUB = 16
+PQ_K = 3
+PQ_QUERY_IDS_BELOW = 5
+PQ_TRAIN_ITERS = 3
 
 
 def _quantize(vec: list[float]) -> list[int]:
@@ -83,17 +92,11 @@ def _train_int_lloyds(
     return books
 
 
-def pq_topk_replayable(
-    embeddings: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    k: int = 3,
-    query_ids_below: int = 5,
-    train_iters: int = 3,
-) -> DataFrame:
+def pq_topk_replayable(embeddings: DataFrame) -> DataFrame:
     """→ (query_id, neighbor_id, approx_sq_dist_q12, knn_rank): PQ/ADC
-    top-k with the integer-exact training above. approx_sq_dist_q12 is
-    the ADC squared L2 distance in exact 1e-12 units (BIGINT)."""
+    top-PQ_K with the integer-exact training above. approx_sq_dist_q12
+    is the ADC squared L2 distance in exact 1e-12 units (BIGINT)."""
+    m, ksub = PQ_M, PQ_KSUB
     vecs = embeddings.select(
         F.col("vec_id"),
         F.expr(
@@ -116,7 +119,7 @@ def pq_topk_replayable(
     d = len(sample_q[0])
     assert d % m == 0, f"dim {d} not divisible by m={m}"
     ds = d // m
-    books = _train_int_lloyds(sample_q, m, ksub, train_iters)
+    books = _train_int_lloyds(sample_q, m, ksub, PQ_TRAIN_ITERS)
 
     def _arr(ints) -> str:
         return "array(" + ",".join(f"{int(x)}L" for x in ints) + ")"
@@ -154,7 +157,7 @@ def pq_topk_replayable(
                 "v"
             ),
         )
-        .filter(F.col("vec_id") < query_ids_below)
+        .filter(F.col("vec_id") < PQ_QUERY_IDS_BELOW)
         .collect()
     ]
 
@@ -196,7 +199,7 @@ def pq_topk_replayable(
     )
     return (
         scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
+        .filter(F.col("knn_rank") <= PQ_K)
         .select(
             "query_id",
             "neighbor_id",
@@ -206,19 +209,13 @@ def pq_topk_replayable(
     )
 
 
-def pq_oracle_sql(
-    dim: int = 64,
-    m: int = 8,
-    ksub: int = 16,
-    k: int = 3,
-    query_ids_below: int = 5,
-    train_iters: int = 3,
-) -> str:
+def pq_oracle_sql() -> str:
     """DuckDB twin of :func:`pq_topk_replayable`: identical integer
     quantization, init, Lloyd's rounds (unrolled), encoding and ADC.
     Subspaces ride a generic (s, vec_id, x) table so only the
     ITERATIONS unroll, not the subspaces."""
-    ds = dim // m
+    m, ksub = PQ_M, PQ_KSUB
+    ds = PQ_DIM // m
     dist = (
         f"list_sum(list_transform(generate_series(1, {ds}),"
         " i -> (sb.x[i] - c.c[i]) * (sb.x[i] - c.c[i])))"
@@ -252,7 +249,7 @@ def pq_oracle_sql(
 
     rounds = []
     prev = "c0"
-    for t in range(1, train_iters + 1):
+    for t in range(1, PQ_TRAIN_ITERS + 1):
         rounds.append(f"a{t} AS ({assign(prev)})")
         rounds.append(f"c{t} AS ({update(f'a{t}', prev)})")
         prev = f"c{t}"
@@ -283,7 +280,7 @@ def pq_oracle_sql(
     ),
     {rounds_sql},
     codes AS ({assign(prev, src="subs")}),
-    qsubs AS (SELECT sb.* FROM subs sb WHERE sb.vec_id < {query_ids_below}),
+    qsubs AS (SELECT sb.* FROM subs sb WHERE sb.vec_id < {PQ_QUERY_IDS_BELOW}),
     lut AS (
         SELECT sb.vec_id AS query_id, c.s, c.j, {dist} AS d
         FROM qsubs sb JOIN {prev} c ON c.s = sb.s
@@ -305,5 +302,5 @@ def pq_oracle_sql(
            CAST(neighbor_id AS BIGINT) AS neighbor_id,
            approx_sq_dist_q12,
            CAST(r AS BIGINT) AS knn_rank
-    FROM ranked WHERE r <= {k}
+    FROM ranked WHERE r <= {PQ_K}
     """

@@ -145,16 +145,17 @@ _RHO_SQL = (
 )
 
 
-def hll_portable_rollup(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    partial_col: str,
-) -> DataFrame:
+# The key, the counted value and the partial (register) grain the
+# ``hll_distinct_rollup`` registry entry rolls up, shared by
+# hll_portable_rollup and its oracle.
+_KEY, _VALUE, _PARTIAL = "event_type", "user_id", "day"
+
+
+def hll_portable_rollup(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Mergeable distinct-count rollup whose registers any SQL engine
     can replay: bucket = first 8 bits of md5(value), rho = leading-zero
     count of the next 40 bits + 1, register = max(rho) — built per
-    ``partial_col`` partition first, then merged upward with max() per
+    ``day`` partition first, then merged upward with max() per
     bucket, exactly the sketch-union dataflow of
     :func:`hll_distinct_rollup` (which stays the production path via
     Spark's DataSketches built-ins; this variant exists so the estimate
@@ -172,7 +173,7 @@ def hll_portable_rollup(
     """
     m = _PORTABLE_M
     tagged = (
-        df.withColumn("h", F.md5(F.col(value_col).cast("string")))
+        df.withColumn("h", F.md5(F.col(_VALUE).cast("string")))
         .withColumn(
             "bucket",
             (
@@ -192,7 +193,7 @@ def hll_portable_rollup(
     # Partial registers per (keys, partial, bucket) — the persistable
     # sketch state — then the rollup merge: max per bucket across
     # partials. Both are map-side-combinable hash aggregates.
-    partial_regs = tagged.groupBy(*key_cols, partial_col, "bucket").agg(
+    partial_regs = tagged.groupBy(*key_cols, _PARTIAL, "bucket").agg(
         F.max("rho").alias("r")
     )
     merged = partial_regs.groupBy(*key_cols, "bucket").agg(
@@ -203,7 +204,7 @@ def hll_portable_rollup(
         F.sum(F.expr("power(2.0, -r)")).alias("s"),
     )
     n_partials = df.groupBy(*key_cols).agg(
-        F.countDistinct(partial_col).cast("long").alias("n_partials_merged")
+        F.countDistinct(_PARTIAL).cast("long").alias("n_partials_merged")
     )
     est = (
         per_key.withColumn(
@@ -229,28 +230,24 @@ def hll_portable_rollup(
     )
 
 
-# The columns of ``table_sql`` that :func:`hll_portable_oracle_sql`
-# counts: the key, the counted value and the partial (register) grain
-# its one caller (the ``hll_distinct_rollup`` registry entry) rolls up.
-_ORACLE_KEY, _ORACLE_VALUE, _ORACLE_PARTIAL = "event_type", "user_id", "day"
-
-
-def hll_portable_oracle_sql(table_sql: str) -> str:
-    """The DuckDB twin of :func:`hll_portable_rollup` — identical
-    register derivation and estimate arithmetic (see exactness argument
-    there), parameterized over a source relation with the columns
-    ``_ORACLE_KEY``, ``_ORACLE_VALUE`` and ``_ORACLE_PARTIAL``."""
+def hll_portable_oracle_sql() -> str:
+    """The DuckDB twin of :func:`hll_portable_rollup` over ``events``
+    grouped by ``_KEY`` — identical register derivation and estimate
+    arithmetic (see exactness argument there)."""
     m = _PORTABLE_M
+    table_sql = (
+        f"SELECT {_KEY}, {_VALUE}, CAST(ts AS DATE) AS {_PARTIAL} FROM events"
+    )
     return f"""
     WITH tagged AS (
-        SELECT {_ORACLE_KEY} AS k, {_ORACLE_PARTIAL} AS p,
+        SELECT {_KEY} AS k, {_PARTIAL} AS p,
                (instr('{_HEX}', substr(h, 1, 1)) - 1) * 16
                  + instr('{_HEX}', substr(h, 2, 1)) - 1 AS bucket,
                length(regexp_extract(substr(h, 3, 10), '^(0*)', 1)) AS z,
                instr('{_HEX}', substr(substr(h, 3, 10),
                      length(regexp_extract(substr(h, 3, 10), '^(0*)', 1)) + 1,
                      1)) - 1 AS d
-        FROM (SELECT *, md5(CAST({_ORACLE_VALUE} AS VARCHAR)) AS h
+        FROM (SELECT *, md5(CAST({_VALUE} AS VARCHAR)) AS h
               FROM ({table_sql}))
     ),
     partial_regs AS (
@@ -290,12 +287,10 @@ QUANTILES = (0.25, 0.5, 0.75, 0.9, 0.99)
 N_BINS = 128
 
 
-def histogram_quantiles(
-    df: DataFrame,
-    value_col: str,
-) -> DataFrame:
-    """Approximate quantiles from a fixed equi-width histogram — the
-    MERGEABLE alternative to an exact sort: bin counts are persistable
+def histogram_quantiles(df: DataFrame) -> DataFrame:
+    """Approximate quantiles of ``l_extendedprice`` from a fixed
+    equi-width histogram — the MERGEABLE alternative to an exact sort:
+    bin counts are persistable
     partials that add across partitions/days (same rollup dataflow as
     the HLL registers), and any quantile is answered from the B-row
     histogram without re-reading data. Exact percentiles
@@ -309,6 +304,7 @@ def histogram_quantiles(
     """
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
+    value_col = "l_extendedprice"
     # The 1-row bounds aggregate broadcasts into BOTH the binning pass
     # and the final quantile arithmetic — without a checkpoint each
     # consumer re-ran the full scan+aggregate (r13: fact scans 3 → 2,

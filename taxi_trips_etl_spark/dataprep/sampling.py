@@ -15,6 +15,15 @@ from pyspark.sql import functions as F
 
 _HASH_SPACE = 1 << 32
 _KEY = "doc_id"  # the row key the samplers below hash
+SAMPLE_RATE = 0.25  # deterministic_sample's keep rate
+STRATA_COL = "lang"  # stratified_sample's strata
+TEST_RATE = 0.2  # train_test_split's test share
+DOMAIN_COL = "source"  # domain_mixture_sample's domains
+N_FOLDS = 5  # kfold_assign's folds
+PRIORITY_KEY = "c_custkey"  # weighted_priority_sample's row key …
+PRIORITY_K = 100  # … and sample size
+MIXTURE_ALPHA = 0.7  # temperature_mixture_weights' exponent …
+MIXTURE_BUDGET_DOCS = 10000  # … and document budget
 
 
 def _key_bucket(key: Column, salt: str) -> Column:
@@ -23,22 +32,23 @@ def _key_bucket(key: Column, salt: str) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
 
 
-def deterministic_sample(df: DataFrame, rate: float) -> DataFrame:
-    """Keep ~rate of rows, chosen by key hash — idempotent & rerun-stable."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"sample rate must be in [0, 1], got {rate}")
-    return df.filter(_key_bucket(F.col(_KEY), "sample") < int(rate * _HASH_SPACE))
+def deterministic_sample(df: DataFrame) -> DataFrame:
+    """Keep ~SAMPLE_RATE of rows, chosen by key hash — idempotent &
+    rerun-stable."""
+    return df.filter(
+        _key_bucket(F.col(_KEY), "sample") < int(SAMPLE_RATE * _HASH_SPACE)
+    )
 
 
 def stratified_sample(
     df: DataFrame,
     rates: dict[str, float],
-    strata_col: str,
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Per-stratum hash sampling (deterministic ``sampleBy``): each
-    stratum keeps its own rate — rebalancing skewed classes (languages,
-    sources, quality tiers) without RNG or partitioning dependence."""
+    STRATA_COL stratum keeps its own rate — rebalancing skewed classes
+    (languages, sources, quality tiers) without RNG or partitioning
+    dependence."""
     # Validate rates and default_rate SEPARATELY: merging them into one
     # dict keyed by stratum name would let a stratum literally named
     # '__default__' be overwritten by default_rate, silently skipping
@@ -54,39 +64,38 @@ def stratified_sample(
     threshold = F.lit(int(default_rate * _HASH_SPACE))
     for stratum, rate in rates.items():
         threshold = (
-            F.when(F.col(strata_col) == stratum, F.lit(int(rate * _HASH_SPACE)))
+            F.when(F.col(STRATA_COL) == stratum, F.lit(int(rate * _HASH_SPACE)))
             .otherwise(threshold)
         )
     return df.filter(bucket < threshold)
 
 
-def split_expr(key: Column, test_rate: float = 0.2) -> Column:
+def split_expr(key: Column) -> Column:
     """The train/test label as a pure expression of ``key`` — split
     membership is content-hash only (see :func:`train_test_split`), so
     consumers that already hold the key column (pair tables, audit
     joins) can derive the label inline instead of joining the
     corpus-side assignment back in (r13: split_leakage_audit dropped
     two corpus-sized join passes this way)."""
-    if not 0.0 <= test_rate <= 1.0:
-        raise ValueError(f"test_rate must be in [0, 1], got {test_rate}")
     bucket = _key_bucket(key, "split")
     return F.when(
-        bucket < int(test_rate * _HASH_SPACE), "test"
+        bucket < int(TEST_RATE * _HASH_SPACE), "test"
     ).otherwise("train")
 
 
-def train_test_split(df: DataFrame, test_rate: float = 0.2) -> DataFrame:
-    """Adds a ``split`` column ('train' | 'test') keyed by content hash.
+def train_test_split(df: DataFrame) -> DataFrame:
+    """Adds a ``split`` column ('train' | 'test', TEST_RATE of rows
+    'test') keyed by content hash.
 
     Same key → same split forever: new data appends without reshuffling
     membership, and dedup-then-split pipelines can't leak a near-dup
     pair across the boundary if they split on the canonical doc key.
     """
-    return df.withColumn("split", split_expr(F.col(_KEY), test_rate))
+    return df.withColumn("split", split_expr(F.col(_KEY)))
 
 
-def domain_mixture_sample(df: DataFrame, domain_col: str) -> DataFrame:
-    """Temperature-weighted domain rebalancing (the multilingual /
+def domain_mixture_sample(df: DataFrame) -> DataFrame:
+    """Temperature-weighted DOMAIN_COL rebalancing (the multilingual /
     multi-source mixing rule: sample domain d with probability
     ∝ n_d^0.5, which upweights the tail), targeting half the rows.
 
@@ -103,6 +112,7 @@ def domain_mixture_sample(df: DataFrame, domain_col: str) -> DataFrame:
     """
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
+    domain_col = DOMAIN_COL
     n = F.col("n_domain")
     weight = F.sqrt(n)
     # counts (#domains rows) feeds the totals aggregate AND the rates
@@ -133,29 +143,22 @@ def domain_mixture_sample(df: DataFrame, domain_col: str) -> DataFrame:
     )
 
 
-def kfold_assign(df: DataFrame, k: int = 5) -> DataFrame:
-    """Adds a ``fold`` column in [0, k): hash-keyed cross-validation
+def kfold_assign(df: DataFrame) -> DataFrame:
+    """Adds a ``fold`` column in [0, N_FOLDS): hash-keyed cross-validation
     folds. Same key → same fold forever (append-stable, like
     :func:`train_test_split`); fold i's holdout is ``fold == i`` and
     training is everything else — no RNG, no state to persist."""
-    if k < 1:
-        # Spark pmod(x, 0) is NULL: k = 0 silently nulls every fold.
-        raise ValueError(f"kfold_assign needs k >= 1, got {k}")
     return df.withColumn(
-        "fold", (_key_bucket(F.col(_KEY), "fold") % k).cast("long")
+        "fold", (_key_bucket(F.col(_KEY), "fold") % N_FOLDS).cast("long")
     )
 
 
-def weighted_priority_sample(
-    df: DataFrame,
-    key: str,
-    weight_cents: Column,
-    k: int,
-) -> DataFrame:
+def weighted_priority_sample(df: DataFrame, weight_cents: Column) -> DataFrame:
     """Deterministic weighted sampling without replacement (priority
     sampling, Duffield-Lund-Thorup): each row draws a content-hash
     uniform u ∈ [0, 2^32) and gets priority key ``u / w``; the k rows
-    with the SMALLEST keys form the sample, so inclusion odds scale
+    with the SMALLEST keys form the sample (k = PRIORITY_K, keyed by
+    PRIORITY_KEY), so inclusion odds scale
     with weight while membership stays engine- and rerun-stable.
 
     → (key, weight_cents, priority_key) — up to ``k`` rows (fewer when
@@ -170,6 +173,7 @@ def weighted_priority_sample(
     anyway. Scale shape: a global top-k is TakeOrderedAndProject —
     per-partition heaps of k rows, no full sort, no shuffle of the
     input."""
+    key = PRIORITY_KEY
     w = weight_cents.cast("long")
     u = _key_bucket(F.col(key), "wps")
     return (
@@ -180,20 +184,20 @@ def weighted_priority_sample(
             u.cast("double") / F.col("weight_cents").cast("double"),
         )
         .orderBy("priority_key", key)
-        .limit(k)
+        .limit(PRIORITY_K)
     )
 
 
-def temperature_mixture_weights(
-    docs, alpha: float = 0.7, budget_docs: int = 10000,
-):
+def temperature_mixture_weights(docs):
     """Temperature-based source mixing (the multilingual-LM standard,
     e.g. mBERT/XLM-R exponentiated sampling): sampling weight per
-    source ∝ (token share)^alpha, alpha<1 flattening the head so
+    source ∝ (token share)^alpha (alpha = MIXTURE_ALPHA), alpha<1
+    flattening the head so
     low-resource sources are up-sampled relative to their raw share.
 
     → (source, n_docs, n_tokens, raw_share, weight, expected_docs):
-    ``weight`` sums to 1, ``expected_docs`` = weight × budget_docs.
+    ``weight`` sums to 1, ``expected_docs`` = weight ×
+    MIXTURE_BUDGET_DOCS.
 
     One token-count aggregate (map-side combinable) + a broadcast
     1-row total — the n_sources-row result is driver-sized at any
@@ -214,7 +218,7 @@ def temperature_mixture_weights(
     # order-independent — the same reason the registry sums money as
     # cents. The 1e-6 quantization is part of the operator's spec.
     pw = F.round(
-        F.pow(F.col("n_tokens").cast("double"), F.lit(alpha)) * 1e6
+        F.pow(F.col("n_tokens").cast("double"), F.lit(MIXTURE_ALPHA)) * 1e6
     ).cast("long")
     per = per.withColumn("pw", pw)
     tot = per.agg(
@@ -234,7 +238,8 @@ def temperature_mixture_weights(
                 F.col("pw").cast("double") / F.col("tot_pw"), 6
             ).alias("weight"),
             F.round(
-                F.col("pw").cast("double") / F.col("tot_pw") * budget_docs,
+                F.col("pw").cast("double") / F.col("tot_pw")
+                * MIXTURE_BUDGET_DOCS,
                 4,
             ).alias("expected_docs"),
         )

@@ -41,6 +41,24 @@ TRUNC_QUERY_IDS_BELOW = 20
 # embedding_near_dup_pairs' banded sign-LSH: bands × planes per band.
 NEAR_DUP_BANDS = 6
 PLANES_PER_BAND = 10
+# The ANN operators' fixed shapes: top-k and probe-query id bound of
+# the sign-LSH search, the multi-probe plane count, the IVF probes.
+LSH_TOPK = 3
+LSH_QUERY_IDS_BELOW = 10
+MULTIPROBE_PLANES = 8
+IVF_NPROBE = 2
+# hard-negative mining: negatives per query, and the IVF variant's
+# cells and probes.
+HARD_NEGATIVE_K = 2
+HARD_NEGATIVE_CENTROIDS = 8
+HARD_NEGATIVE_NPROBE = 2
+# random_projection's JL shape, shared with its oracle.
+RP_IN_DIM = 64
+RP_OUT_DIM = 16
+DECONTAMINATE_THRESHOLD = 0.4
+# semdedup_prune's k-means: clusters and Lloyd iterations.
+SEMDEDUP_K = 8
+SEMDEDUP_ITERATIONS = 3
 
 
 def _as_double(arr: Column) -> Column:
@@ -103,12 +121,9 @@ def cosine_topk_bruteforce(
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    nprobe: int = 2,
-) -> DataFrame:
+def ivf_topk(embeddings: DataFrame) -> DataFrame:
     """IVF (inverted-file) ANN: coarse-quantize the corpus into 8
-    cells, search only the query's ``nprobe`` nearest cells, re-rank
+    cells, search only the query's ``IVF_NPROBE`` nearest cells, re-rank
     candidates by exact cosine, and keep the top 3 for each query
     below id 10.
 
@@ -120,11 +135,8 @@ def ivf_topk(
     centroid set broadcasts everywhere (tiny), assignment is one
     narrow pass over the corpus, and each query touches only its probed
     cells' inverted lists (an equi-join on cent_id) — never the full
-    corpus. Recall is governed by nprobe.
+    corpus. Recall is governed by IVF_NPROBE.
     """
-    if nprobe < 1:
-        # nprobe = 0 probes no cells: every query silently returns empty.
-        raise ValueError(f"ivf_topk needs nprobe >= 1, got {nprobe}")
     cents = (
         embeddings.orderBy("vec_id")
         .limit(8)
@@ -151,10 +163,10 @@ def ivf_topk(
         F.col("embedding").alias("c_vec"),
         "cent_id",
     )
-    # Each query probes its nprobe nearest cells.
+    # Each query probes its IVF_NPROBE nearest cells.
     probes = (
         ranked_cells.filter(
-            (F.col("vec_id") < 10) & (F.col("cell_rank") <= nprobe)
+            (F.col("vec_id") < 10) & (F.col("cell_rank") <= IVF_NPROBE)
         )
         .select(
             F.col("vec_id").alias("query_id"),
@@ -320,8 +332,10 @@ def embedding_near_dup_pairs(
     )
 
 
-def _flip_probes(bucket: Column, planes: int) -> Column:
-    """[bucket] + the `planes` buckets at hamming distance 1."""
+def _flip_probes(bucket: Column) -> Column:
+    """[bucket] + the MULTIPROBE_PLANES buckets at hamming distance 1."""
+    planes = MULTIPROBE_PLANES
+
     def flip(i: Column) -> Column:
         prefix = bucket.substr(F.lit(1), i - 1)
         ch = F.when(bucket.substr(i, F.lit(1)) == "1", F.lit("0")).otherwise(
@@ -335,32 +349,27 @@ def _flip_probes(bucket: Column, planes: int) -> Column:
     )
 
 
-def cosine_topk_lsh_multiprobe(
-    embeddings: DataFrame,
-    k: int = 3,
-) -> DataFrame:
-    """Multi-probe sign-LSH ANN over 8 planes: each query below id 10
-    searches its own bucket PLUS every bucket one plane-flip away
-    (8 + 1 probes).
+def cosine_topk_lsh_multiprobe(embeddings: DataFrame) -> DataFrame:
+    """Multi-probe sign-LSH ANN over MULTIPROBE_PLANES = 8 planes: each
+    query below id 10 keeps its top LSH_TOPK from its own bucket PLUS
+    every bucket one plane-flip away (8 + 1 probes).
 
     The standard recall lever: neighbors that landed just across one
     hyperplane become reachable without widening buckets. Corpus-side
     cost is unchanged (each vector still lives in ONE bucket — the
     probe fan-out multiplies only the tiny query side of the join).
     """
-    if k < 1:
-        raise ValueError(f"needs k/planes >= 1, got {k}/8")
     with_bucket = embeddings.select(
         F.col("vec_id"),
         F.col("embedding"),
-        sign_bucket(F.col("embedding"), 8).alias("bucket"),
+        sign_bucket(F.col("embedding"), MULTIPROBE_PLANES).alias("bucket"),
     )
     q = (
         with_bucket.filter(F.col("vec_id") < 10)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_vec"),
-            F.explode(_flip_probes(F.col("bucket"), 8)).alias("probe"),
+            F.explode(_flip_probes(F.col("bucket"))).alias("probe"),
         )
     )
     c = with_bucket.select(
@@ -386,7 +395,7 @@ def cosine_topk_lsh_multiprobe(
     )
     return (
         scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
+        .filter(F.col("knn_rank") <= LSH_TOPK)
         .select(
             "query_id",
             "neighbor_id",
@@ -396,26 +405,22 @@ def cosine_topk_lsh_multiprobe(
     )
 
 
-def cosine_topk_lsh(
-    embeddings: DataFrame,
-    query_ids_below: int = 10,
-    k: int = 3,
-    planes: int = 8,
-) -> DataFrame:
-    """ANN top-k: candidates share the query's sign-LSH bucket.
+def cosine_topk_lsh(embeddings: DataFrame, planes: int = 8) -> DataFrame:
+    """ANN top-LSH_TOPK for each query below id LSH_QUERY_IDS_BELOW:
+    candidates share the query's sign-LSH bucket.
 
     Same output shape as the brute-force baseline; recall < 1 by
     design. The candidate join key is the bucket string → at scale this
     is a hash join on bucket, not a cross join.
     """
-    if k < 1 or planes < 1:
-        raise ValueError(f"needs k/planes >= 1, got {k}/{planes}")
+    if planes < 1:
+        raise ValueError(f"cosine_topk_lsh needs planes >= 1, got {planes}")
     with_bucket = embeddings.select(
         F.col("vec_id"),
         F.col("embedding"),
         sign_bucket(F.col("embedding"), planes).alias("bucket"),
     )
-    q = with_bucket.filter(F.col("vec_id") < query_ids_below).select(
+    q = with_bucket.filter(F.col("vec_id") < LSH_QUERY_IDS_BELOW).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
         F.col("bucket").alias("q_bucket"),
@@ -443,7 +448,7 @@ def cosine_topk_lsh(
     )
     return (
         scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
+        .filter(F.col("knn_rank") <= LSH_TOPK)
         .select(
             "query_id",
             "neighbor_id",
@@ -453,15 +458,12 @@ def cosine_topk_lsh(
     )
 
 
-def random_projection_sql(
-    in_dim: int,
-    out_dim: int = 16,
-    dialect: str = "spark",
-) -> list[str]:
+def random_projection_sql(dialect: str = "spark") -> list[str]:
     """SQL expression per output dimension for a deterministic
     Achlioptas (±1) random projection — the Johnson-Lindenstrauss
     dimension reduction that preserves pairwise distances within
-    (1±ε) at out_dim = O(log n / ε²).
+    (1±ε) at out_dim = O(log n / ε²), from RP_IN_DIM to RP_OUT_DIM
+    dimensions.
 
     Signs come from md5(rp:i:j) computed HERE (python), so the
     literal coefficients are identical in the Spark plan and the
@@ -475,6 +477,7 @@ def random_projection_sql(
     import hashlib
     import math
 
+    in_dim, out_dim = RP_IN_DIM, RP_OUT_DIM
     scale = 1.0 / math.sqrt(out_dim)
     elem = (
         (lambda i: f"CAST(element_at(embedding, {i}) AS DOUBLE)")
@@ -492,16 +495,9 @@ def random_projection_sql(
     return exprs
 
 
-def random_projection(
-    embeddings: DataFrame,
-    in_dim: int,
-    out_dim: int = 16,
-) -> DataFrame:
-    """→ (vec_id, rp_0 … rp_{out_dim-1}): JL-projected vectors."""
-    if in_dim < 1 or out_dim < 1:
-        # out_dim = 0 silently emits zero-width projections.
-        raise ValueError(f"random_projection needs in_dim/out_dim >= 1, got {in_dim}/{out_dim}")
-    exprs = random_projection_sql(in_dim, out_dim)
+def random_projection(embeddings: DataFrame) -> DataFrame:
+    """→ (vec_id, rp_0 … rp_{RP_OUT_DIM-1}): JL-projected vectors."""
+    exprs = random_projection_sql()
     return embeddings.select(
         F.col("vec_id"),
         *[
@@ -511,19 +507,15 @@ def random_projection(
     )
 
 
-def semantic_decontaminate(
-    corpus: DataFrame,
-    eval_set: DataFrame,
-    threshold: float = 0.4,
-) -> DataFrame:
+def semantic_decontaminate(corpus: DataFrame, eval_set: DataFrame) -> DataFrame:
     """Flag corpus vectors semantically close to ANY eval-set vector —
     the embedding-space analogue of n-gram decontamination
     (text.decontaminate): a benchmark rephrased beyond n-gram overlap
     still collides in embedding space.
 
     → (vec_id, matched_eval_id, max_cosine) for corpus rows whose best
-    eval cosine ≥ threshold; at most one row per corpus vector (its
-    argmax eval, ties to the lower eval id).
+    eval cosine ≥ DECONTAMINATE_THRESHOLD; at most one row per corpus
+    vector (its argmax eval, ties to the lower eval id).
 
     Scale shape: eval sets are BOUNDED (a benchmark suite is thousands
     of rows, the corpus is billions), so the eval side broadcasts and
@@ -558,7 +550,7 @@ def semantic_decontaminate(
         .groupBy("vec_id")
         .agg(F.max("_s").alias("_b"))
     )
-    return best.filter(F.col("_b.c") >= threshold).select(
+    return best.filter(F.col("_b.c") >= DECONTAMINATE_THRESHOLD).select(
         F.col("vec_id"),
         (-F.col("_b.nid")).cast("long").alias("matched_eval_id"),
         F.col("_b.c").alias("max_cosine"),
@@ -623,15 +615,12 @@ def standardize_dims(
     )
 
 
-def hard_negative_topk(
-    embeddings: DataFrame,
-    k: int = 2,
-) -> DataFrame:
+def hard_negative_topk(embeddings: DataFrame) -> DataFrame:
     """Contrastive-training hard-negative mining: for EVERY vector, the
-    k most-cosine-similar vectors carrying a DIFFERENT label — the
-    near-miss negatives that make embedding training hard (easy
-    negatives are plentiful and useless; the informative ones sit just
-    across the decision boundary).
+    HARD_NEGATIVE_K most-cosine-similar vectors carrying a DIFFERENT
+    label — the near-miss negatives that make embedding training hard
+    (easy negatives are plentiful and useless; the informative ones sit
+    just across the decision boundary).
 
     Output: (query_id, neighbor_id, cosine, hn_rank), rank by score
     desc with neighbor-id tiebreak.
@@ -702,7 +691,7 @@ def hard_negative_topk(
             == right["c_label"].to_numpy()[None, :]
         )
         S[same] = -np.inf
-        k_eff = min(k, S.shape[1])
+        k_eff = min(HARD_NEGATIVE_K, S.shape[1])
         idx = np.argsort(-S, axis=1, kind="stable")[:, :k_eff]
         scores = np.take_along_axis(S, idx, axis=1)
         nid = right["neighbor_id"].to_numpy()
@@ -732,14 +721,11 @@ def hard_negative_topk(
     )
 
 
-def hard_negative_topk_ivf(
-    embeddings: DataFrame,
-    n_centroids: int = 8,
-    nprobe: int = 2,
-) -> DataFrame:
+def hard_negative_topk_ivf(embeddings: DataFrame) -> DataFrame:
     """Hard-negative mining behind the IVF coarse quantizer — the
     100 TB composition :func:`hard_negative_topk`'s docstring
-    promises: every vector probes its ``nprobe`` nearest cells and
+    promises: every vector probes its ``HARD_NEGATIVE_NPROBE`` nearest
+    of ``HARD_NEGATIVE_CENTROIDS`` cells and
     reranks ONLY those cells' foreign-label members, so the scored
     pair count is Σ_cell |probers(cell)|·|members(cell)| instead of
     n² — the inverted-list contraction that keeps exact-rerank ANN
@@ -747,7 +733,7 @@ def hard_negative_topk_ivf(
 
     Output: (query_id, neighbor_id, cosine, hn_rank) — the top-2
     cross-label cosine neighbors WITHIN the probed cells (recall < 1
-    vs the exact miner is inherent to IVF and governed by nprobe).
+    vs the exact miner is inherent to IVF and governed by the probes).
 
     Determinism split: cell ASSIGNMENT uses the JVM ``cosine`` fold —
     the same expression the hash-green IVF entry already proved
@@ -757,13 +743,13 @@ def hard_negative_topk_ivf(
     pre-sorted by id for the stable tie-break), whose ulp noise the
     6-decimal rounding absorbs. Per-cell top-k before the global
     window is lossless (global top-k ⊆ union of per-cell top-k at
-    the same k), so the final window sees ≤ nprobe·k rows per query.
+    the same k), so the final window sees ≤ probes·k rows per query.
     """
     import pandas as pd  # noqa: F401
 
     cents = (
         embeddings.orderBy("vec_id")
-        .limit(n_centroids)
+        .limit(HARD_NEGATIVE_CENTROIDS)
         .select(
             F.col("vec_id").alias("cent_id"),
             F.col("embedding").alias("cent_vec"),
@@ -796,7 +782,9 @@ def hard_negative_topk_ivf(
         F.col("label").alias("c_label"),
         "cent_id",
     )
-    probes = ranked_cells.filter(F.col("cell_rank") <= nprobe).select(
+    probes = ranked_cells.filter(
+        F.col("cell_rank") <= HARD_NEGATIVE_NPROBE
+    ).select(
         F.col("vec_id").cast("long").alias("query_id"),
         F.col("embedding").alias("q_vec"),
         F.col("label").alias("q_label"),
@@ -864,12 +852,7 @@ def hard_negative_topk_ivf(
     )
 
 
-def truncation_recall(
-    embeddings: DataFrame,
-    dims: tuple[int, ...] = TRUNC_DIMS,
-    k: int = TRUNC_K,
-    query_ids_below: int = TRUNC_QUERY_IDS_BELOW,
-) -> DataFrame:
+def truncation_recall(embeddings: DataFrame) -> DataFrame:
     """Matryoshka-style dimension-truncation audit: recall@k of
     brute-force cosine top-k computed on only the FIRST ``d`` vector
     components, against full-dimension truth — the measurement that
@@ -889,7 +872,8 @@ def truncation_recall(
     """
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
-    # The probe set is ≤ query_ids_below rows but its subtree is a
+    k = TRUNC_K
+    # The probe set is ≤ TRUNC_QUERY_IDS_BELOW rows but its subtree is a
     # corpus scan; it feeds every per-dim pair build plus the per-dim
     # zero-fill left join (2 + len(dims) consumers, no ReusedExchange
     # across them) — materialize so the corpus is scanned once per
@@ -897,7 +881,7 @@ def truncation_recall(
     # 10 → 2, the one-brute-force-leg-per-dim floor; the truth leg's
     # pass is behind its own checkpoint below).
     q = materialize(
-        embeddings.filter(F.col("vec_id") < query_ids_below).select(
+        embeddings.filter(F.col("vec_id") < TRUNC_QUERY_IDS_BELOW).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         ),
         eager=False,
@@ -933,7 +917,7 @@ def truncation_recall(
         eager=False,
     )
     per_dim = []
-    for d in dims:
+    for d in TRUNC_DIMS:
         approx = _topk(
             pairs.select(
                 "query_id",
@@ -1027,8 +1011,6 @@ def truncation_recall_oracle_sql() -> str:
 
 def semdedup_prune(
     embeddings: DataFrame,
-    k: int = 8,
-    iterations: int = 3,
     threshold_milli: int = 950,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -1046,7 +1028,8 @@ def semdedup_prune(
 
     Scale shape (100 TB): the all-pairs n² that makes naive
     embedding dedup impossible becomes Σ_c |c|² — the clustering
-    both bounds the candidate set and shards it into independent
+    (SEMDEDUP_K clusters, SEMDEDUP_ITERATIONS Lloyd rounds) both
+    bounds the candidate set and shards it into independent
     groups, so each cluster's pair block is ONE Arrow batch scored
     as a single numpy matmul inside applyInPandas (the
     hard_negative_topk pattern; no per-pair Python, no JVM fold).
@@ -1060,8 +1043,6 @@ def semdedup_prune(
     rounding unless the true value sits within ~1e-9 of a .0005
     boundary.
     """
-    if k < 1 or iterations < 1:
-        raise ValueError(f"semdedup_prune needs k/iterations >= 1, got {k}/{iterations}")
     import pandas as pd  # noqa: F401  (applyInPandas contract)
 
     from taxi_trips_etl_spark.dataprep.clustering import kmeans_assign
@@ -1073,7 +1054,8 @@ def semdedup_prune(
     # k-means pass had in hand (r13: embeddings scans 2 → 1, join
     # gone; the only remaining shuffle is the per-cluster cogroup).
     vecs = kmeans_assign(
-        embeddings, k=k, iterations=iterations, with_vec=True,
+        embeddings, k=SEMDEDUP_K, iterations=SEMDEDUP_ITERATIONS,
+        with_vec=True,
     ).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("vec").alias("v"),  # documented with_vec output column

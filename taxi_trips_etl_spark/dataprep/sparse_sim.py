@@ -6,7 +6,7 @@ similarity is computed WORD-WISE through an inverted index — two
 documents meet only on terms they share, so the join volume is
 Σ_term df(term)², never n_docs². High-df terms dominate that sum
 quadratically AND carry the least signal (lowest idf), so postings are
-pruned at ``max_df_frac`` before the join — the standard
+pruned at ``MAX_DF_FRAC`` before the join — the standard
 stop-word-cap trade: the pruned cosine is the exact cosine of the
 pruned vectors (both norms are computed AFTER pruning, so the metric
 stays a true cosine ∈ [0, 1]).
@@ -33,30 +33,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# The df prune and the pair cut, shared by the Spark builder and its
+# oracle: relative and absolute posting caps, minimum cosine.
+MAX_DF_FRAC = 0.10
+MAX_DF = 500
+MIN_COSINE = 0.30
 
-def tfidf_milli_vectors(
-    docs: DataFrame,
-    max_df_frac: float = 0.10,
-    max_df: int | None = None,
-) -> DataFrame:
+
+def tfidf_milli_vectors(docs: DataFrame) -> DataFrame:
     """(doc_id, word, w_milli) sparse vectors over the df-pruned
     vocabulary; sklearn-style idf = ln((N+1)/(df+1)) + 1 (matches
     ``text.tfidf_top_terms``), quantized to integer milli-units.
 
-    ``max_df`` is an ABSOLUTE posting-length cap applied on top of the
-    relative ``max_df_frac`` one (effective cap = min of the two; None
-    disables it, preserving the original relative-only behavior). Why
-    it exists (r12 decade sweep): the relative cap does NOT bound the
+    ``MAX_DF`` is an ABSOLUTE posting-length cap applied on top of the
+    relative ``MAX_DF_FRAC`` one (effective cap = min of the two). At
+    the test SFs floor(0.10·n_docs) ≤ 500 (50 at sf0.01, 500 at sf0.1),
+    so there the relative cap decides. Why the absolute cap exists (r12
+    decade sweep): the relative cap does NOT bound the
     Σ df² join volume as the corpus grows — at 10× docs the cap grows
     10× too, and measured on the sf1 testdata that let 310 previously
     pruned terms through at df≈3900 each, inflating candidate volume
     62.5k → 4.5e9 pair rows (~70,000×). Per-term join work is df², so
     the knob that actually survives a 100 TB corpus is the absolute
-    one: a term shared by >max_df documents is stop-word-like
+    one: a term shared by >MAX_DF documents is stop-word-like
     regardless of corpus size, and capping there bounds per-term work
-    at max_df² independent of growth."""
-    if max_df is not None and max_df < 1:
-        raise ValueError(f"max_df must be >= 1 when set, got {max_df}")
+    at MAX_DF² independent of growth."""
     n_docs = docs.count()  # single scalar job, same as tfidf_top_terms
     tf = (
         docs.select(
@@ -69,9 +70,7 @@ def tfidf_milli_vectors(
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    df_cap = int(max_df_frac * n_docs)
-    if max_df is not None:
-        df_cap = min(df_cap, max_df)
+    df_cap = min(int(MAX_DF_FRAC * n_docs), MAX_DF)
     dfreq = (
         tf.groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
@@ -97,17 +96,12 @@ def tfidf_milli_vectors(
     )
 
 
-def tfidf_cosine_pairs(
-    docs: DataFrame,
-    max_df_frac: float = 0.10,
-    min_cosine: float = 0.30,
-    max_df: int | None = None,
-) -> DataFrame:
+def tfidf_cosine_pairs(docs: DataFrame) -> DataFrame:
     """→ (doc_id_a, doc_id_b, cosine) for a < b with pruned-TF-IDF
-    cosine ≥ ``min_cosine`` — lexical near-duplicate / same-topic
-    pairs. ``max_df``: absolute posting cap, the knob that bounds the
+    cosine ≥ ``MIN_COSINE`` — lexical near-duplicate / same-topic
+    pairs. ``MAX_DF``: absolute posting cap, the knob that bounds the
     Σ df² join volume independent of corpus growth (see
-    :func:`tfidf_milli_vectors`); None keeps relative-only pruning."""
+    :func:`tfidf_milli_vectors`)."""
     # The sparse-vector table fans out to FOUR consumers below (both
     # sides of the inverted-index join + both norm legs): lazily built,
     # Catalyst re-executes the tokenize→explode→tf spine once per
@@ -122,10 +116,7 @@ def tfidf_cosine_pairs(
     # stream should unpersist the result's lineage between iterations.
     from taxi_trips_etl_spark.dataprep.materialize import materialize
 
-    vec = materialize(
-        tfidf_milli_vectors(docs, max_df_frac=max_df_frac, max_df=max_df),
-        eager=False,
-    )
+    vec = materialize(tfidf_milli_vectors(docs), eager=False)
     norms = vec.groupBy("doc_id").agg(
         F.sum(F.col("w_milli") * F.col("w_milli"))
         .cast("long")
@@ -163,32 +154,21 @@ def tfidf_cosine_pairs(
                 F.col("na2").cast("double") * F.col("nb2").cast("double")
             ),
         )
-        .filter(F.col("cosine") >= min_cosine)
+        .filter(F.col("cosine") >= MIN_COSINE)
         .select("doc_id_a", "doc_id_b", "cosine")
         .orderBy("doc_id_a", "doc_id_b")
     )
 
 
-def tfidf_cosine_oracle_sql(
-    max_df_frac: float = 0.10,
-    min_cosine: float = 0.30,
-    max_df: int | None = None,
-) -> str:
+def tfidf_cosine_oracle_sql() -> str:
     """DuckDB twin of :func:`tfidf_cosine_pairs`: identical df prune
-    (including the absolute ``max_df`` cap when set — effective cap =
-    least(floor(frac·n), max_df), mirroring the Spark side's min()),
-    identical milli quantization, integer sums, one sqrt + division.
-    Raises on ``max_df < 1`` exactly like the Spark twin — a silent
-    least(cap, 0) would prune every word and return a plausible-looking
-    empty oracle instead of failing fast."""
-    if max_df is not None and max_df < 1:
-        raise ValueError(f"max_df must be >= 1 when set, got {max_df}")
+    (effective cap = least(floor(MAX_DF_FRAC·n), MAX_DF), mirroring the
+    Spark side's min()), identical milli quantization, integer sums,
+    one sqrt + division."""
     toks = "string_split_regex(trim(lower(text)), '\\s+')"
-    rel_cap = (
-        f"CAST(floor({max_df_frac} * (SELECT n FROM nd)) AS BIGINT)"
-    )
     df_cap = (
-        rel_cap if max_df is None else f"least({rel_cap}, {int(max_df)})"
+        f"least(CAST(floor({MAX_DF_FRAC} * (SELECT n FROM nd)) AS BIGINT), "
+        f"{MAX_DF})"
     )
     return f"""
     WITH nd AS (SELECT CAST((SELECT count(*) FROM documents) AS BIGINT) AS n),
@@ -230,5 +210,5 @@ def tfidf_cosine_oracle_sql(
     JOIN norms nb ON nb.doc_id = num.doc_id_b
     WHERE CAST(num AS DOUBLE)
               / sqrt(CAST(na.norm2 AS DOUBLE) * CAST(nb.norm2 AS DOUBLE))
-          >= {min_cosine}
+          >= {MIN_COSINE}
     """

@@ -10,7 +10,7 @@ classic composition:
 
 1. slide a W-token window over each doc → (doc, pos, md5(window));
 2. drop hot windows (boilerplate shingles) with a DETERMINISTIC
-   posting cap: a hash held by more than ``max_postings`` (doc, pos)
+   posting cap: a hash held by more than ``MAX_POSTINGS`` (doc, pos)
    entries is dropped ENTIRELY, so the result is a pure function of
    the corpus, not of partitioning;
 3. equi-join postings on the hash (doc_a < doc_b) → matching window
@@ -22,7 +22,7 @@ classic composition:
 Scale shape at 100 TB: the explode is bounded by token count (one row
 per token, same as tokenization); the join is an equi-join on a
 uniform 32-hex key whose per-key fan-out the cap bounds by
-max_postings²; the island window partitions on (pair, diag) — keys
+MAX_POSTINGS²; the island window partitions on (pair, diag) — keys
 far smaller than the data. No all-pairs stage anywhere: documents
 sharing no W-window never meet.
 
@@ -37,14 +37,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 W = 8  # tokens per sliding window
+MIN_SPAN_LEN = 12  # shortest duplicated span reported, in tokens
+MAX_POSTINGS = 20  # postings above which a window hash is hot
 
 
-def window_postings(
-    docs: DataFrame,
-    max_postings: int = 20,
-) -> DataFrame:
+def window_postings(docs: DataFrame) -> DataFrame:
     """→ (doc_id, pos, h): one row per W-token sliding window, hot
-    hashes (> max_postings occurrences corpus-wide) removed."""
+    hashes (> MAX_POSTINGS occurrences corpus-wide) removed."""
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     posted = (
         docs.select(F.col("doc_id").alias("doc_id"), toks.alias("toks"))
@@ -69,17 +68,13 @@ def window_postings(
     w_hot = Window.partitionBy("h")
     return (
         posted.withColumn("n_post", F.count(F.lit(1)).over(w_hot))
-        .filter(F.col("n_post") <= max_postings)
+        .filter(F.col("n_post") <= MAX_POSTINGS)
         .drop("n_post")
     )
 
 
-def duplicated_spans(
-    docs: DataFrame,
-    min_len: int = 12,
-    max_postings: int = 20,
-) -> DataFrame:
-    """Maximal cross-doc duplicated substrings of ≥ min_len tokens.
+def duplicated_spans(docs: DataFrame) -> DataFrame:
+    """Maximal cross-doc duplicated substrings of ≥ MIN_SPAN_LEN tokens.
 
     → (doc_a, doc_b, a_start, b_start, span_tokens), doc_a < doc_b,
     1-based token offsets. A span of ``span_tokens`` means tokens
@@ -94,12 +89,7 @@ def duplicated_spans(
     # window spine runs TWICE (r13: docs scans 2 → 0 in-plan, the
     # whole spine once). The frame is three narrow columns per token
     # position, far smaller than re-reading and re-hashing the text.
-    post = materialize(
-        window_postings(
-            docs, max_postings=max_postings
-        ),
-        eager=False,
-    )
+    post = materialize(window_postings(docs), eager=False)
     a = post.select(
         F.col("doc_id").alias("doc_a"),
         F.col("pos").alias("pos_a"),
@@ -142,7 +132,7 @@ def duplicated_spans(
             "span_tokens",
             (F.col("a_end") - F.col("a_start") + F.lit(W)).cast("long"),
         )
-        .filter(F.col("span_tokens") >= min_len)
+        .filter(F.col("span_tokens") >= MIN_SPAN_LEN)
         .select(
             "doc_a",
             "doc_b",

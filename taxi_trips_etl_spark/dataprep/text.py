@@ -17,6 +17,13 @@ from taxi_trips_etl_spark.dataprep.dedup import tokens_col
 
 BM25_K1, BM25_B = 1.2, 0.75  # the usual Okapi BM25 saturation and length norm
 LOGPROB_BUCKETS = 4  # unigram_logprob_score's equi-width buckets
+CHUNK_TOKENS = 50  # chunk_documents' window …
+CHUNK_OVERLAP = 10  # … and its overlap (< CHUNK_TOKENS)
+WINNOW_K = 8  # winnowing char k-gram …
+WINNOW_W = 4  # … and window width
+FEATURE_HASH_BUCKETS = 64
+BIGRAM_HEADS = 20  # bigram_lm_topk's head words …
+BIGRAM_NEXT_PER_HEAD = 3  # … and successors per head
 
 # Tiny per-language stopword inventories for the n-gram/stopword
 # language heuristic. Deterministic tie order: en > de > fr > es.
@@ -118,27 +125,17 @@ def clean_text(docs: DataFrame) -> DataFrame:
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = 50,
-    overlap: int = 10,
-) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Split documents into overlapping token-window chunks.
 
     The LLM-ingest workhorse: chunk i covers tokens
-    [i·stride, i·stride + chunk_tokens) with stride = chunk − overlap.
+    [i·stride, i·stride + CHUNK_TOKENS) with stride = CHUNK_TOKENS −
+    CHUNK_OVERLAP.
     Pure JVM (sequence → explode → slice → concat_ws): a 100 TB corpus
     chunks in one narrow pass, no Python, output ~n_tokens/stride rows
     per doc.
     """
-    if chunk_tokens < 1 or not 0 <= overlap < chunk_tokens:
-        # overlap >= chunk_tokens makes stride <= 0: the chunk-count
-        # division goes infinite/negative and silently nulls or
-        # explodes the sequence instead of erroring.
-        raise ValueError(
-            f"chunk_documents needs chunk_tokens >= 1 and 0 <= overlap < "
-            f"chunk_tokens, got {chunk_tokens}/{overlap}"
-        )
+    chunk_tokens, overlap = CHUNK_TOKENS, CHUNK_OVERLAP
     stride = chunk_tokens - overlap
     toks = tokens_col()
     n = F.size(toks)
@@ -539,12 +536,12 @@ def dedup_stats_by_source(docs: DataFrame) -> DataFrame:
     )
 
 
-def winnowing_fingerprints(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 —
-    the MOSS local-similarity scheme): hash every char k-gram, slide a
-    w-hash window, keep each window's minimum → a guaranteed-coverage
-    fingerprint subset (any shared substring of length ≥ k+w−1 shares
-    a fingerprint).
+    the MOSS local-similarity scheme): hash every char k-gram
+    (k = WINNOW_K), slide a w-hash window (w = WINNOW_W), keep each
+    window's minimum → a guaranteed-coverage fingerprint subset (any
+    shared substring of length ≥ k+w−1 shares a fingerprint).
 
     Per-gram hashing is md5-based (engine-portable) rather than a true
     rolling polynomial — selection semantics are identical.
@@ -559,8 +556,7 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame
     corpus size). Output is the join-able (doc_id, fp) posting shape
     every other dedup operator here uses.
     """
-    if k < 1 or w < 1:
-        raise ValueError(f"winnowing needs k/w >= 1, got {k}/{w}")
+    k, w = WINNOW_K, WINNOW_W
     t = F.lower(F.col("text"))
     n_grams = (F.length(t) - k + 1).cast("int")
     # Explode POSITIONS, not a prebuilt gram array: inside a transform
@@ -629,7 +625,7 @@ def winnowing_near_dup_pairs(
       discriminative value is zero. The cutoff caps per-fp pair work
       at max_df², making total work ≤ max_df · |postings| — linear.
     """
-    fps = winnowing_fingerprints(docs, k=8, w=4).distinct()
+    fps = winnowing_fingerprints(docs).distinct()
     rare = (
         fps.withColumn(
             "df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
@@ -996,12 +992,12 @@ def token_entropy(docs: DataFrame) -> DataFrame:
     )
 
 
-def feature_hash_counts(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
+def feature_hash_counts(docs: DataFrame) -> DataFrame:
     """Hashing-trick featurization (Weinberger et al. 2009): each token
-    maps to bucket md5(token) mod ``n_buckets``; a document becomes a
-    sparse integer count vector with a FIXED dimensionality — no vocab
-    build, no OOV, memory independent of corpus size, which is why
-    it is the standard first featurizer at web scale.
+    maps to bucket md5(token) mod ``FEATURE_HASH_BUCKETS``; a document
+    becomes a sparse integer count vector with a FIXED dimensionality —
+    no vocab build, no OOV, memory independent of corpus size, which is
+    why it is the standard first featurizer at web scale.
 
     → (doc_id, bucket, n) sparse rows, all-integer (exact on any
     engine). One explode + one map-side-combined shuffle on
@@ -1011,7 +1007,7 @@ def feature_hash_counts(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
 
     bucket = (
         F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-        % n_buckets
+        % FEATURE_HASH_BUCKETS
     )
     return (
         tokens_table(docs)
@@ -1021,13 +1017,10 @@ def feature_hash_counts(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
     )
 
 
-def bigram_lm_topk(
-    docs: DataFrame,
-    heads: int = 20,
-    next_per_head: int = 3,
-) -> DataFrame:
-    """Corpus bigram language model, summarized: for the ``heads`` most
-    frequent head words, the ``next_per_head`` most likely successors
+def bigram_lm_topk(docs: DataFrame) -> DataFrame:
+    """Corpus bigram language model, summarized: for the BIGRAM_HEADS
+    most frequent head words, the BIGRAM_NEXT_PER_HEAD most likely
+    successors
     with conditional probability P(w2|w1) = c(w1,w2)/c(w1,·). The
     n-gram-LM building block behind perplexity filtering and the
     unigram_logprob_score sibling.
@@ -1076,7 +1069,7 @@ def bigram_lm_topk(
         with_head.select("w1", "head_n")
         .distinct()
         .orderBy(F.desc("head_n"), F.asc("w1"))
-        .limit(heads)
+        .limit(BIGRAM_HEADS)
         .select("w1")
     )
     per_head = Window.partitionBy("w1").orderBy(
@@ -1085,7 +1078,7 @@ def bigram_lm_topk(
     return (
         with_head.join(top_heads, "w1", "left_semi")
         .withColumn("succ_rank", F.row_number().over(per_head))
-        .filter(F.col("succ_rank") <= next_per_head)
+        .filter(F.col("succ_rank") <= BIGRAM_NEXT_PER_HEAD)
         .select(
             "w1",
             "w2",

@@ -98,17 +98,14 @@ def unigram_vocab_scores(
     )
 
 
-def unigram_viterbi_segment(
-    docs: DataFrame,
-    top_multi: int = 40,
-) -> DataFrame:
+def unigram_viterbi_segment(docs: DataFrame) -> DataFrame:
     """→ (word, word_n, n_pieces, segmentation, score_micro): the
     maximum-likelihood piece split of every distinct corpus word under
     the seed unigram vocabulary; ``segmentation`` joins pieces with
     a space."""
     import pandas as pd  # noqa: F401  (mapInPandas contract)
 
-    vocab_df = unigram_vocab_scores(docs, top_multi, MAX_PIECE_LEN)
+    vocab_df = unigram_vocab_scores(docs, TOP_MULTI, MAX_PIECE_LEN)
     # Vocab is bounded (alphabet + top_multi): a legitimate driver-side
     # broadcast dim, same pattern as kmeans centroids.
     scores = {

@@ -326,22 +326,17 @@ def latlng_to_cell(
 
 
 def centroid_cell(
-    wkt: str | None,
-    res: int = 9,
-    *,
-    spherical: bool = True,
-    scheme: str = "axial",
+    wkt: str | None, res: int = 9, *, scheme: str = "axial"
 ) -> str | None:
     """F6∘F7 composed: WKT geometry → centroid → hex cell id.
 
-    Defaults to the spherical centroid (BigQuery ST_CENTROID semantics)
-    so enrichment matches the reference's geography behavior near cell
-    boundaries; ``spherical=False`` selects the planar shoelace.
-    ``scheme`` passes through to :func:`latlng_to_cell` — this is the
+    Uses the spherical centroid (BigQuery ST_CENTROID semantics) so
+    enrichment matches the reference's geography behavior near cell
+    boundaries. ``scheme`` passes through to :func:`latlng_to_cell` — this is the
     parity swap seam: ``scheme="h3"`` (wheel installed) reproduces the
     reference's ``H3_FROMGEOGPOINT(ST_CENTROID(geom), res)`` ids
     (enrichment_query.py:10,17) end-to-end."""
-    c = wkt_centroid_spherical(wkt) if spherical else wkt_centroid(wkt)
+    c = wkt_centroid_spherical(wkt)
     if c is None:
         return None
     lon, lat = c

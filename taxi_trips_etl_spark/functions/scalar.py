@@ -96,7 +96,14 @@ def zorder_key_sql(x: str, y: str, bits: int = 16, dialect: str = "spark") -> st
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-def zorder_key(x: str, y: str, bits: int = 16) -> Column:
-    """Column form of :func:`zorder_key_sql` for
-    ``df.repartitionByRange``/``sortWithinPartitions`` layouts."""
-    return F.expr(zorder_key_sql(x, y, bits, dialect="spark"))
+# zorder_key_customers' layout key, shared by the Spark builder and its
+# oracle: the two customer columns and the low bits interleaved.
+ZORDER_X = "(c_custkey % 256)"
+ZORDER_Y = "c_nationkey"
+ZORDER_BITS = 8
+
+
+def zorder_key() -> Column:
+    """Column form of :func:`zorder_key_sql` over the ZORDER_* columns,
+    for ``df.repartitionByRange``/``sortWithinPartitions`` layouts."""
+    return F.expr(zorder_key_sql(ZORDER_X, ZORDER_Y, ZORDER_BITS))

@@ -1,6 +1,6 @@
 from taxi_trips_etl_spark.operators.normalize import normalize_trips
 from taxi_trips_etl_spark.operators.enrich import dedup_zones, enrich_trips
-from taxi_trips_etl_spark.operators.popularity import most_populars, ranked_counts
+from taxi_trips_etl_spark.operators.popularity import most_populars
 from taxi_trips_etl_spark.operators.asof import asof_join, range_join_points
 from taxi_trips_etl_spark.operators.skew import key_skew_report, salted_join
 from taxi_trips_etl_spark.operators.upsert import upsert
@@ -10,7 +10,6 @@ __all__ = [
     "dedup_zones",
     "enrich_trips",
     "most_populars",
-    "ranked_counts",
     "asof_join",
     "range_join_points",
     "key_skew_report",

@@ -77,16 +77,15 @@ def asof_join(
     return carried.select("__left_row.*", "__match.*")
 
 
-def range_join_points(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_ts: str,
-    start_ts: str,
-    end_ts: str,
-    bucket_seconds: int = 7200,
-) -> DataFrame:
-    """INNER join of point rows to every interval containing them,
-    without an equi key, via fixed-width time-bucket equi-join."""
+BUCKET_SECONDS = 7200  # range_join_points' equi-join bucket width
+
+
+def range_join_points(points: DataFrame, intervals: DataFrame) -> DataFrame:
+    """INNER join of point rows (``ts``) to every interval containing
+    them (``[w_start, w_end]``, inclusive), without an equi key, via a
+    fixed-width time-bucket equi-join."""
+    point_ts, start_ts, end_ts = "ts", "w_start", "w_end"
+    bucket_seconds = BUCKET_SECONDS
     b_pt = F.floor(F.col(point_ts).cast("timestamp").cast("long") / bucket_seconds)
     b_lo = F.floor(F.col(start_ts).cast("timestamp").cast("long") / bucket_seconds)
     b_hi = F.floor(F.col(end_ts).cast("timestamp").cast("long") / bucket_seconds)

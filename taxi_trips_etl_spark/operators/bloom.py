@@ -48,14 +48,10 @@ def _bloom_hash(key: Column, i: int, m: int) -> Column:
     )
 
 
-def bloom_prefilter(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-) -> DataFrame:
-    """Return ``fact`` reduced to rows whose key passes the dim-key
-    Bloom filter (superset of rows that join; never drops a match).
+def bloom_prefilter(fact: DataFrame, dim: DataFrame) -> DataFrame:
+    """Return ``fact`` reduced to rows whose ``l_suppkey`` passes the
+    Bloom filter of ``dim``'s ``s_suppkey`` (superset of rows that
+    join; never drops a match).
 
     The filter is represented as the sorted distinct array of occupied
     positions: ≤ BLOOM_BITS elements, one aggregate over the dim, broadcast as
@@ -66,7 +62,7 @@ def bloom_prefilter(
             F.explode(
                 F.array(
                     *[
-                        _bloom_hash(F.col(dim_key), i, BLOOM_BITS)
+                        _bloom_hash(F.col("s_suppkey"), i, BLOOM_BITS)
                         for i in range(BLOOM_HASHES)
                     ]
                 )
@@ -76,7 +72,7 @@ def bloom_prefilter(
     )
     probe = [
         F.array_contains(
-            F.col("_bloom"), _bloom_hash(F.col(fact_key), i, BLOOM_BITS)
+            F.col("_bloom"), _bloom_hash(F.col("l_suppkey"), i, BLOOM_BITS)
         )
         for i in range(BLOOM_HASHES)
     ]

@@ -20,11 +20,10 @@ def _row_hash(attrs: list[str]):
     ]))
 
 
-def snapshot_diff(
-    old: DataFrame, new: DataFrame, key: str, attrs: list[str]
-) -> DataFrame:
-    """→ (key, change_type ∈ {added, removed, changed}) for every key
-    that differs between the snapshots."""
+def snapshot_diff(old: DataFrame, new: DataFrame, attrs: list[str]) -> DataFrame:
+    """→ (c_custkey, change_type ∈ {added, removed, changed}) for every
+    key that differs between the snapshots."""
+    key = "c_custkey"
     o = old.select(
         F.col(key).alias("__ok"), _row_hash(attrs).alias("__oh")
     )

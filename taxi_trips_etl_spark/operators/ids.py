@@ -32,7 +32,6 @@ def assign_global_ids(
     df: DataFrame,
     order_cols: list[str],
     id_col: str = "global_id",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """→ ``df`` + ``id_col`` = 1-based dense rank by ``order_cols``.
 
@@ -41,11 +40,7 @@ def assign_global_ids(
     driver-trivial and the join back is a broadcast.
     """
     cols = [F.col(c) for c in order_cols]
-    ranged = (
-        df.repartitionByRange(num_partitions, *cols)
-        if num_partitions
-        else df.repartitionByRange(*cols)
-    )
+    ranged = df.repartitionByRange(*cols)
     # r13: materialize the ranked frame — it feeds both the offsets
     # aggregate and the final join, and the differently-pruned subtrees
     # get no ReusedExchange, so the lazy plan ran the scan + range
@@ -74,13 +69,8 @@ def assign_global_ids(
     )
 
 
-def assign_prefix_sums(
-    df: DataFrame,
-    order_cols: list[str],
-    value_col: str,
-    sum_col: str = "running_sum",
-) -> DataFrame:
-    """→ ``df`` + ``sum_col`` = inclusive running sum of ``value_col``
+def assign_prefix_sums(df: DataFrame, order_cols: list[str]) -> DataFrame:
+    """→ ``df`` + ``cum`` = inclusive running sum of ``rev_cents``
     by ``order_cols`` — the scalable twin of
     ``sum(x) OVER (ORDER BY …)``, which Spark plans as a
     SinglePartition window. Same two-pass scheme as
@@ -88,6 +78,7 @@ def assign_prefix_sums(
     local running sum, add each partition's exclusive value prefix
     (broadcast). ``order_cols`` must be a unique key (module
     docstring)."""
+    value_col = "rev_cents"
     cols = [F.col(c) for c in order_cols]
     ranged = df.repartitionByRange(*cols)
     w_local = (
@@ -116,7 +107,7 @@ def assign_prefix_sums(
     return (
         local.join(F.broadcast(offsets), "__pid")
         .withColumn(
-            sum_col, (F.col("__voff") + F.col("__lsum")).cast("long")
+            "cum", (F.col("__voff") + F.col("__lsum")).cast("long")
         )
         .drop("__pid", "__lsum", "__voff")
     )

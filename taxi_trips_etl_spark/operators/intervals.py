@@ -17,11 +17,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def merge_overlapping_intervals(
-    events: DataFrame,
-    duration_us: int = 300_000_000,
-) -> DataFrame:
-    """Merge per-``user_id`` intervals [ts, ts+duration) into islands.
+DURATION_US = 300_000_000  # each event's interval: 5 minutes
+
+
+def merge_overlapping_intervals(events: DataFrame) -> DataFrame:
+    """Merge per-``user_id`` intervals [ts, ts+DURATION_US) into islands.
 
     An event starts a new island iff its start strictly exceeds the
     max end of ALL earlier intervals (running max — a later-starting
@@ -36,7 +36,7 @@ def merge_overlapping_intervals(
         "user_id",
         "event_id",
         F.unix_micros(F.col("ts")).alias("t"),
-        (F.unix_micros(F.col("ts")) + duration_us).alias("e_end"),
+        (F.unix_micros(F.col("ts")) + DURATION_US).alias("e_end"),
     )
     flagged = e.withColumn(
         "prev_end",

@@ -37,15 +37,6 @@ from taxi_trips_etl_spark.functions.scalar import route_struct
 LIMIT = 100  # the reference's LIMIT 100 per list
 
 
-def ranked_counts(df: DataFrame, keys: list[str], cnt_alias: str, limit: int) -> DataFrame:
-    """GROUP BY keys → count(*) → global RANK desc → popularity ≤ limit."""
-    return rank_top(
-        df.groupBy(*keys).agg(F.count(F.lit(1)).alias(cnt_alias)),
-        cnt_alias,
-        limit,
-    )
-
-
 def rank_top(counted: DataFrame, cnt_alias: str, limit: int) -> DataFrame:
     """Global RANK desc over an already-counted table → popularity ≤ limit."""
     w = Window.orderBy(F.col(cnt_alias).desc())
@@ -54,11 +45,9 @@ def rank_top(counted: DataFrame, cnt_alias: str, limit: int) -> DataFrame:
     )
 
 
-def route_counts(
-    enriched: DataFrame, pickup_key: str, dropoff_key: str, cnt_alias: str
-) -> DataFrame:
-    """ONE pass over the fact table: count per (pickup, dropoff) route,
-    materialized.
+def route_counts(enriched: DataFrame, pickup_key: str, dropoff_key: str) -> DataFrame:
+    """ONE pass over the fact table: ``route_count`` per (pickup,
+    dropoff) route, materialized.
 
     The three most-populars branches (routes / dropoffs / pickups) each
     need a count over the same enriched fact table. Counting the finest
@@ -81,10 +70,16 @@ def route_counts(
     the two rank-side broadcasts remain. The coalesce must follow the
     checkpoint: before it, the checkpoint's ``Scan ExistingRDD``
     reports no output partitioning and the exchanges come back.
+
+    The checkpoint is not lazy: under AQE ``materialize(eager=False)``
+    runs every query stage but the last while the plan is built, so
+    this call scans and aggregates the whole enriched fact table before
+    any action (building the flagship pipeline's plan with no output
+    books 2 Spark jobs, both here).
     """
     return (
         enriched.groupBy(pickup_key, dropoff_key)
-        .agg(F.count(F.lit(1)).alias(cnt_alias))
+        .agg(F.count(F.lit(1)).alias("route_count"))
         .transform(materialize, eager=False)
         .coalesce(1)
     )
@@ -96,7 +91,7 @@ def most_populars(enriched: DataFrame) -> DataFrame:
     Output mirrors taxi_trips_etl.py:165-176: ``route`` STRUCT (F8),
     per-list counts, and the shared ``popularity`` rank.
     """
-    base = route_counts(enriched, "h3_pickup", "h3_dropoff", "route_count")
+    base = route_counts(enriched, "h3_pickup", "h3_dropoff")
     routes = rank_top(base, "route_count", LIMIT).select(
         route_struct(F.col("h3_pickup"), F.col("h3_dropoff")),
         "route_count",

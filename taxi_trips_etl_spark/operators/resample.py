@@ -61,13 +61,12 @@ def interpolate_gaps(df: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-def daily_spine(
-    df: DataFrame, key_cols: list[str], date_col: str
-) -> DataFrame:
-    """Dense (key × day) spine spanning the GLOBAL date range of
+def daily_spine(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Dense (key × ``day``) spine spanning the GLOBAL date range of
     ``df`` — one row per key per day, ready for a LEFT join of daily
     aggregates. The bounds are a 1-row aggregate broadcast into a
     sequence/explode: keys × days rows, no data-sized shuffle."""
+    date_col = "day"
     bounds = df.agg(
         F.min(date_col).alias("lo"), F.max(date_col).alias("hi")
     )

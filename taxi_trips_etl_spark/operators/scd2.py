@@ -23,14 +23,9 @@ def _attr_hash(attrs: list[str]):
     ]))
 
 
-def scd2_apply(
-    dim: DataFrame,
-    updates: DataFrame,
-    key: str,
-    attrs: list[str],
-) -> DataFrame:
-    """Apply ``updates`` (key, attrs…, effective_ts) to an SCD2 ``dim``
-    (key, attrs…, valid_from, valid_to).
+def scd2_apply(dim: DataFrame, updates: DataFrame, attrs: list[str]) -> DataFrame:
+    """Apply ``updates`` (c_custkey, attrs…, effective_ts) to an SCD2
+    ``dim`` (c_custkey, attrs…, valid_from, valid_to).
 
     - unchanged keys (same attr hash) and closed history: pass through;
     - changed keys: open row closes at the update's effective_ts and a
@@ -40,6 +35,7 @@ def scd2_apply(
     ``updates`` must hold ONE row per key (pre-aggregate a batch to its
     latest update first).
     """
+    key = "c_custkey"
     u = updates.select(
         F.col(key),
         *[F.col(a).alias(f"__u_{a}") for a in attrs],
@@ -79,15 +75,10 @@ def scd2_apply(
     ).unionByName(new_versions)
 
 
-def pit_join(
-    fact: DataFrame,
-    history: DataFrame,
-    fact_key: str,
-    fact_ts: str,
-    dim_key: str | None = None,
-) -> DataFrame:
-    """Point-in-time (temporal) join: each fact row picks the dimension
-    VERSION that was valid at its timestamp — the read-side
+def pit_join(fact: DataFrame, history: DataFrame) -> DataFrame:
+    """Point-in-time (temporal) join: each fact row (``o_custkey``,
+    ``o_ts``) picks the ``c_custkey`` dimension VERSION that was valid
+    at its timestamp — the read-side
     counterpart of scd2_apply, and the operation that makes SCD2
     history worth keeping (training-data reproducibility: joining
     features "as of" the label's time, never the future's).
@@ -98,13 +89,12 @@ def pit_join(
     key (a hash join + residual filter — never a cartesian), and the
     history side is dimension-sized.
     """
-    dk = dim_key or fact_key
     cond = (
-        (fact[fact_key] == history[dk])
-        & (fact[fact_ts] >= history["valid_from"])
+        (fact["o_custkey"] == history["c_custkey"])
+        & (fact["o_ts"] >= history["valid_from"])
         & (
             history["valid_to"].isNull()
-            | (fact[fact_ts] < history["valid_to"])
+            | (fact["o_ts"] < history["valid_to"])
         )
     )
     return fact.join(history, cond)

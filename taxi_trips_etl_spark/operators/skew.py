@@ -5,7 +5,7 @@ but a single pathological key (one H3 cell holding an airport, one
 boilerplate LSH bucket) still serializes on one task pair. Salting is
 the classic fix: spread the hot key across N synthetic sub-keys.
 
-``salted_join`` is semantics-preserving for inner/left equi-joins:
+``salted_join`` is a semantics-preserving inner equi-join:
 every big-side row carries ONE deterministic salt, and the small side
 is replicated across ALL salts, so each big row still meets every
 matching small row exactly once.
@@ -23,10 +23,9 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     on: list[str],
-    how: str = "inner",
     salts: int = 16,
 ) -> DataFrame:
-    """Equi-join with the big side salted across ``salts`` sub-keys.
+    """Inner equi-join with the big side salted across ``salts`` sub-keys.
 
     The salt is derived deterministically from the big side's full row
     hash (xxhash64), so repeated runs produce identical partitioning —
@@ -40,28 +39,26 @@ def salted_join(
     small_s = small.withColumn(
         SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
     ).withColumn(SALT_COL, F.col(SALT_COL).cast("long"))
-    return big_s.join(small_s, [*on, SALT_COL], how).drop(SALT_COL)
+    return big_s.join(small_s, [*on, SALT_COL]).drop(SALT_COL)
 
 
-def key_skew_report(df: DataFrame, key_cols: list[str], top: int = 10) -> DataFrame:
-    """Diagnostic: per-key row counts + share of total for the hottest
-    keys — the thing to run before deciding between broadcast, AQE, or
-    salting for a join."""
+def key_skew_report(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Diagnostic: per-key row counts + share of total for the 10
+    hottest keys — the thing to run before deciding between broadcast,
+    AQE, or salting for a join."""
     total = df.count()
     return (
         df.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .withColumn("share", F.round(F.col("n_rows") / F.lit(total), 6))
         .orderBy(F.col("n_rows").desc(), *key_cols)
-        .limit(top)
+        .limit(10)
     )
 
 
-def two_stage_distinct_count(
-    df: DataFrame, key_cols: list[str], dist_col: str
-) -> DataFrame:
-    """Exact COUNT(DISTINCT) that survives a hot key: stage 1 dedups
-    (key, value) pairs — partitioned by the PAIR, so a key holding
+def two_stage_distinct_count(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Exact COUNT(DISTINCT user_id) that survives a hot key: stage 1
+    dedups (key, user_id) pairs — partitioned by the PAIR, so a key holding
     half the corpus still spreads across every reducer — and stage 2
     counts the surviving pairs per key (input already key-distinct,
     so the second shuffle moves one row per distinct value, not per
@@ -73,7 +70,7 @@ def two_stage_distinct_count(
     (HLL) when exactness can be traded.
 
     → key_cols + (n_distinct,)"""
-    pairs = df.select(*key_cols, dist_col).distinct()
+    pairs = df.select(*key_cols, "user_id").distinct()
     return pairs.groupBy(*key_cols).agg(
         F.count(F.lit(1)).cast("long").alias("n_distinct")
     )

@@ -7,7 +7,6 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize  # noqa: F401
 from taxi_trips_etl_spark.dataprep import dedup, multimodal, similarity, text  # noqa: F401
 from taxi_trips_etl_spark.functions.scalar import daypart, timestamp_diff_minutes  # noqa: F401
 from taxi_trips_etl_spark.operators.normalize import normalize_trips  # noqa: F401
-from taxi_trips_etl_spark.operators.popularity import ranked_counts  # noqa: F401
 from taxi_trips_etl_spark.plans.models import taxi_models  # noqa: F401
 from taxi_trips_etl_spark.sources.taxi_testdata import (  # noqa: F401
     N_ZONES,
@@ -262,9 +261,9 @@ def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = similarity.cosine_topk_bruteforce(
         emb, query_ids_below=10, k=3
     ).select("query_id", "neighbor_id")
-    approx = similarity.cosine_topk_lsh(
-        emb, query_ids_below=10, k=3, planes=6
-    ).select("query_id", F.col("neighbor_id").alias("a_neighbor"))
+    approx = similarity.cosine_topk_lsh(emb, planes=6).select(
+        "query_id", F.col("neighbor_id").alias("a_neighbor")
+    )
     return (
         truth.join(
             approx,
@@ -578,9 +577,9 @@ def q_domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus, content-hash membership — the multi-source mixing op."""
     from taxi_trips_etl_spark.dataprep.sampling import domain_mixture_sample
 
-    return domain_mixture_sample(
-        _t(spark, sf_dir, "documents"), domain_col="source"
-    ).select("doc_id", "source")
+    return domain_mixture_sample(_t(spark, sf_dir, "documents")).select(
+        "doc_id", "source"
+    )
 
 
 @register(
@@ -1001,9 +1000,14 @@ def q_corpus_prepare_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zorder_oracle() -> str:
-    from taxi_trips_etl_spark.functions.scalar import zorder_key_sql
+    from taxi_trips_etl_spark.functions.scalar import (
+        ZORDER_BITS,
+        ZORDER_X,
+        ZORDER_Y,
+        zorder_key_sql,
+    )
 
-    zk = zorder_key_sql("(c_custkey % 256)", "c_nationkey", 8, "duckdb")
+    zk = zorder_key_sql(ZORDER_X, ZORDER_Y, ZORDER_BITS, "duckdb")
     return f"SELECT c_custkey, {zk} AS zkey FROM customer"
 
 
@@ -1016,7 +1020,7 @@ def q_zorder_key_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _t(spark, sf_dir, "customer").select(
         "c_custkey",
-        zorder_key("(c_custkey % 256)", "c_nationkey", 8).alias("zkey"),
+        zorder_key().alias("zkey"),
     )
 
 
@@ -1115,9 +1119,9 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning, or rerun — unlike seed-based df.sample()."""
     from taxi_trips_etl_spark.dataprep.sampling import deterministic_sample
 
-    return deterministic_sample(
-        _t(spark, sf_dir, "documents"), 0.25
-    ).select("doc_id", "lang", "n_chars")
+    return deterministic_sample(_t(spark, sf_dir, "documents")).select(
+        "doc_id", "lang", "n_chars"
+    )
 
 
 @register(
@@ -1331,7 +1335,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stratified_sample(
         _t(spark, sf_dir, "documents"),
         rates={"en": 0.1, "de": 0.5},
-        strata_col="lang",
         default_rate=0.25,
     )
     return out.groupBy("lang").agg(

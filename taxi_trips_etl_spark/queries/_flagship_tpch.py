@@ -7,7 +7,6 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize  # noqa: F401
 from taxi_trips_etl_spark.dataprep import dedup, multimodal, similarity, text  # noqa: F401
 from taxi_trips_etl_spark.functions.scalar import daypart, timestamp_diff_minutes  # noqa: F401
 from taxi_trips_etl_spark.operators.normalize import normalize_trips  # noqa: F401
-from taxi_trips_etl_spark.operators.popularity import ranked_counts  # noqa: F401
 from taxi_trips_etl_spark.plans.models import taxi_models  # noqa: F401
 from taxi_trips_etl_spark.sources.taxi_testdata import (  # noqa: F401
     N_ZONES,
@@ -697,9 +696,7 @@ def q_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hll_oracle() -> str:
     from taxi_trips_etl_spark.dataprep.profile import hll_portable_oracle_sql
 
-    inner = hll_portable_oracle_sql(
-        "SELECT event_type, user_id, CAST(ts AS DATE) AS day FROM events"
-    )
+    inner = hll_portable_oracle_sql()
     return f"""
     SELECT k AS event_type, approx_distinct, registers_set,
            n_partials_merged
@@ -719,7 +716,7 @@ def q_hll_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.profile import hll_portable_rollup
 
     ev = _events(spark, sf_dir).withColumn("day", F.to_date("ts"))
-    return hll_portable_rollup(ev, ["event_type"], "user_id", "day")
+    return hll_portable_rollup(ev, ["event_type"])
 
 
 @register(
@@ -1102,7 +1099,7 @@ def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.sampling import kfold_assign
 
     return (
-        kfold_assign(_t(spark, sf_dir, "documents"), k=5)
+        kfold_assign(_t(spark, sf_dir, "documents"))
         .groupBy("fold")
         .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("min_doc"))
     )

@@ -7,7 +7,6 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize  # noqa: F401
 from taxi_trips_etl_spark.dataprep import dedup, multimodal, similarity, text  # noqa: F401
 from taxi_trips_etl_spark.functions.scalar import daypart, timestamp_diff_minutes  # noqa: F401
 from taxi_trips_etl_spark.operators.normalize import normalize_trips  # noqa: F401
-from taxi_trips_etl_spark.operators.popularity import ranked_counts  # noqa: F401
 from taxi_trips_etl_spark.plans.models import taxi_models  # noqa: F401
 from taxi_trips_etl_spark.sources.taxi_testdata import (  # noqa: F401
     N_ZONES,
@@ -418,7 +417,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_add("HOUR", F.lit(2), F.col("ts")).alias("w_end"),
         )
     )
-    out = range_join_points(clicks, windows, "ts", "w_start", "w_end")
+    out = range_join_points(clicks, windows)
     return out.select(
         "event_id",
         "w_user",
@@ -1073,7 +1072,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _random_projection_oracle() -> str:
     from taxi_trips_etl_spark.dataprep.similarity import random_projection_sql
 
-    exprs = random_projection_sql(64, 16, dialect="duckdb")
+    exprs = random_projection_sql(dialect="duckdb")
     cols = ",\n           ".join(
         f"round({e}, 6) AS rp_{j}" for j, e in enumerate(exprs)
     )
@@ -1087,17 +1086,13 @@ def q_embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame
     the oracle) — the scan-shrinking preprocessor for ANN/dedup."""
     from taxi_trips_etl_spark.dataprep.similarity import random_projection
 
-    return random_projection(
-        _t(spark, sf_dir, "embeddings"), in_dim=64, out_dim=16
-    )
+    return random_projection(_t(spark, sf_dir, "embeddings"))
 
 
 def _pq_oracle() -> str:
     from taxi_trips_etl_spark.dataprep.pq_exact import pq_oracle_sql
 
-    return pq_oracle_sql(
-        dim=64, m=8, ksub=16, k=3, query_ids_below=5, train_iters=3
-    )
+    return pq_oracle_sql()
 
 
 @register("similarity_pq_topk", _pq_oracle())
@@ -1109,9 +1104,7 @@ def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB replays the whole trajectory and the hash pins it."""
     from taxi_trips_etl_spark.dataprep.pq_exact import pq_topk_replayable
 
-    return pq_topk_replayable(
-        _t(spark, sf_dir, "embeddings"), m=8, ksub=16, k=3, query_ids_below=5
-    )
+    return pq_topk_replayable(_t(spark, sf_dir, "embeddings"))
 
 
 # Lloyd's unrolled in DuckDB CTEs: the Spark side's fixed init (k

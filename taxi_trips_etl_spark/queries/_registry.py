@@ -34,7 +34,6 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize
 from taxi_trips_etl_spark.dataprep import dedup, multimodal, similarity, text
 from taxi_trips_etl_spark.functions.scalar import daypart, timestamp_diff_minutes
 from taxi_trips_etl_spark.operators.normalize import normalize_trips
-from taxi_trips_etl_spark.operators.popularity import ranked_counts
 from taxi_trips_etl_spark.plans.models import taxi_models
 from taxi_trips_etl_spark.sources.taxi_testdata import (
     N_ZONES,

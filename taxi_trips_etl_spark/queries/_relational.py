@@ -7,7 +7,7 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize  # noqa: F401
 from taxi_trips_etl_spark.dataprep import dedup, multimodal, similarity, text  # noqa: F401
 from taxi_trips_etl_spark.functions.scalar import daypart, timestamp_diff_minutes  # noqa: F401
 from taxi_trips_etl_spark.operators.normalize import normalize_trips  # noqa: F401
-from taxi_trips_etl_spark.operators.popularity import ranked_counts  # noqa: F401
+from taxi_trips_etl_spark.operators.popularity import rank_top
 from taxi_trips_etl_spark.plans.models import taxi_models  # noqa: F401
 from taxi_trips_etl_spark.sources.taxi_testdata import (  # noqa: F401
     N_ZONES,
@@ -181,9 +181,9 @@ def _populars_flat(cells: DataFrame) -> DataFrame:
     (sum of route counts ≡ direct count — routes partition the trips),
     instead of each branch re-running the whole normalize spine
     (operators/popularity.route_counts; guide §2.4)."""
-    from taxi_trips_etl_spark.operators.popularity import LIMIT, rank_top, route_counts
+    from taxi_trips_etl_spark.operators.popularity import LIMIT, route_counts
 
-    base = route_counts(cells, "pickup_cell", "dropoff_cell", "route_count")
+    base = route_counts(cells, "pickup_cell", "dropoff_cell")
     routes = rank_top(base, "route_count", LIMIT)
     drops = rank_top(
         base.groupBy("dropoff_cell").agg(F.sum("route_count").alias("dropoff_count")),
@@ -488,9 +488,16 @@ def q_topk_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2: global RANK over aggregated counts, ties included."""
-    return ranked_counts(
-        _t(spark, sf_dir, "lineitem"), ["l_suppkey"], "supp_count", 5
-    ).select("l_suppkey", "supp_count", F.col("popularity").cast("long").alias("popularity"))
+    counted = (
+        _t(spark, sf_dir, "lineitem")
+        .groupBy("l_suppkey")
+        .agg(F.count(F.lit(1)).alias("supp_count"))
+    )
+    return rank_top(counted, "supp_count", 5).select(
+        "l_suppkey",
+        "supp_count",
+        F.col("popularity").cast("long").alias("popularity"),
+    )
 
 
 @register(

@@ -7,7 +7,6 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize  # noqa: F401
 from taxi_trips_etl_spark.dataprep import dedup, multimodal, similarity, text  # noqa: F401
 from taxi_trips_etl_spark.functions.scalar import daypart, timestamp_diff_minutes  # noqa: F401
 from taxi_trips_etl_spark.operators.normalize import normalize_trips  # noqa: F401
-from taxi_trips_etl_spark.operators.popularity import ranked_counts  # noqa: F401
 from taxi_trips_etl_spark.plans.models import taxi_models  # noqa: F401
 from taxi_trips_etl_spark.sources.taxi_testdata import (  # noqa: F401
     N_ZONES,
@@ -295,7 +294,6 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 50).select(
             F.col("vec_id").alias("eval_id"), "embedding"
         ),
-        threshold=0.4,
     )
 
 
@@ -388,7 +386,7 @@ def q_scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    hist = scd2_apply(dim, upd, "c_custkey", ["c_mktsegment", "c_nationkey"])
+    hist = scd2_apply(dim, upd, ["c_mktsegment", "c_nationkey"])
     return hist.select(
         "c_custkey",
         "c_mktsegment",
@@ -496,7 +494,7 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("ck"), "c_mktsegment"
     )
-    joined = salted_join(big, small, ["ck"], "inner", salts=8)
+    joined = salted_join(big, small, ["ck"], salts=8)
     return joined.select(
         "o_orderkey",
         F.col("ck").alias("o_custkey"),

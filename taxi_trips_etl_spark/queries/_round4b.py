@@ -7,7 +7,6 @@ from taxi_trips_etl_spark.dataprep.materialize import materialize  # noqa: F401
 from taxi_trips_etl_spark.dataprep import dedup, multimodal, similarity, text  # noqa: F401
 from taxi_trips_etl_spark.functions.scalar import daypart, timestamp_diff_minutes  # noqa: F401
 from taxi_trips_etl_spark.operators.normalize import normalize_trips  # noqa: F401
-from taxi_trips_etl_spark.operators.popularity import ranked_counts  # noqa: F401
 from taxi_trips_etl_spark.plans.models import taxi_models  # noqa: F401
 from taxi_trips_etl_spark.sources.taxi_testdata import (  # noqa: F401
     N_ZONES,
@@ -78,7 +77,7 @@ def q_chunk_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors. Two minimal shuffles: first-wins window on md5(chunk),
     ordered reassembly on doc_id. The oracle replays the exact
     first-occurrence rule in DuckDB."""
-    return dedup.chunk_dedup(_t(spark, sf_dir, "documents"), chunk_tokens=10)
+    return dedup.chunk_dedup(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -110,10 +109,7 @@ def q_weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return weighted_priority_sample(
-        _t(spark, sf_dir, "customer"),
-        "c_custkey",
-        F.round(F.col("c_acctbal") * 100),
-        k=100,
+        _t(spark, sf_dir, "customer"), F.round(F.col("c_acctbal") * 100)
     )
 
 
@@ -163,7 +159,7 @@ def q_feature_hash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer output; one explode + one combined shuffle."""
     from taxi_trips_etl_spark.dataprep.text import feature_hash_counts
 
-    return feature_hash_counts(_t(spark, sf_dir, "documents"), n_buckets=64)
+    return feature_hash_counts(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -202,9 +198,7 @@ def q_bigram_lm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     one IEEE division per probability."""
     from taxi_trips_etl_spark.dataprep.text import bigram_lm_topk
 
-    return bigram_lm_topk(
-        _t(spark, sf_dir, "documents"), heads=20, next_per_head=3
-    )
+    return bigram_lm_topk(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -772,7 +766,7 @@ def q_quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     way (broadcast-free, codegen-friendly)."""
     from taxi_trips_etl_spark.dataprep.text import feature_hash_counts
 
-    feats = feature_hash_counts(_t(spark, sf_dir, "documents"), n_buckets=64)
+    feats = feature_hash_counts(_t(spark, sf_dir, "documents"))
     w_int = (F.col("bucket") * 37 + 11) % 21 - 10
     return (
         feats.groupBy("doc_id")

@@ -353,6 +353,4 @@ def q_ngram_containment_pairs(
     """Doc-inside-doc duplication via n-gram containment — see
     dataprep/dedup.py:ngram_containment_pairs for the asymmetric
     prefix-filter exactness argument."""
-    return dedup.ngram_containment_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.6
-    )
+    return dedup.ngram_containment_pairs(_t(spark, sf_dir, "documents"))

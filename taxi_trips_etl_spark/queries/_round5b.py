@@ -62,7 +62,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adjacent-bigram PMI over the corpus — see
     dataprep/collocations.py for the one-corpus-scan shape (marginals
     are windows over the pair-count table, never a rescan)."""
-    return pmi_collocations(_t(spark, sf_dir, "documents"), min_count=5)
+    return pmi_collocations(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -89,7 +89,7 @@ def q_heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split(F.trim(F.lower(F.col("text"))), r"\s+")
         ).alias("word")
     ).filter(F.col("word") != "")
-    return mg_heavy_hitters(words, k=30)
+    return mg_heavy_hitters(words)
 
 
 @register(
@@ -162,9 +162,7 @@ def q_merge_event_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands union of per-user 5-minute event intervals —
     see operators/intervals.py (running-max end handles contained
     intervals; one user_id shuffle serves both windows + the agg)."""
-    return merge_overlapping_intervals(
-        _events(spark, sf_dir), duration_us=300_000_000
-    )
+    return merge_overlapping_intervals(_events(spark, sf_dir))
 
 
 @register(

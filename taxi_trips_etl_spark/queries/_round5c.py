@@ -121,9 +121,7 @@ def q_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") > 9000)
         .select("s_suppkey")
     )
-    reduced = bloom_prefilter(
-        li, dim, fact_key="l_suppkey", dim_key="s_suppkey"
-    )
+    reduced = bloom_prefilter(li, dim)
     return (
         reduced.join(
             F.broadcast(dim), F.col("l_suppkey") == F.col("s_suppkey")
@@ -435,9 +433,7 @@ def q_scd2_point_in_time_join(
         F.col("o_orderdate").cast("timestamp").alias("o_ts"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
     )
-    joined = pit_join(
-        o, hist, fact_key="o_custkey", fact_ts="o_ts", dim_key="c_custkey"
-    )
+    joined = pit_join(o, hist)
     return joined.select(
         "o_orderkey",
         "o_custkey",
@@ -505,9 +501,7 @@ def q_snapshot_diff_customers(
             )
         )
     )
-    return snapshot_diff(
-        old, new, key="c_custkey", attrs=["c_mktsegment", "c_acctbal"]
-    )
+    return snapshot_diff(old, new, attrs=["c_mktsegment", "c_acctbal"])
 
 
 def _sssp_oracle() -> str:

@@ -28,11 +28,7 @@ __all__ = [
 def _kmv_oracle() -> str:
     from taxi_trips_etl_spark.dataprep.kmv import kmv_oracle_sql
 
-    return kmv_oracle_sql(
-        "SELECT event_type, user_id FROM events",
-        set_col="event_type",
-        value_col="user_id",
-    )
+    return kmv_oracle_sql()
 
 
 @register("kmv_user_overlap", _kmv_oracle())
@@ -47,10 +43,7 @@ def q_kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB replays."""
     from taxi_trips_etl_spark.dataprep.kmv import kmv_pairwise_overlap
 
-    ev = _events(spark, sf_dir)
-    return kmv_pairwise_overlap(
-        ev, set_col="event_type", value_col="user_id"
-    )
+    return kmv_pairwise_overlap(_events(spark, sf_dir))
 
 
 @register(
@@ -204,7 +197,7 @@ def q_interpolate_user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         eager=False,
     )
-    spine = daily_spine(daily, ["user_id"], "day")
+    spine = daily_spine(daily, ["user_id"])
     j = spine.join(daily, ["user_id", "day"], "left").withColumn(
         "t", F.datediff(F.col("day"), F.lit("1970-01-01").cast("date")).cast("long")
     )
@@ -276,7 +269,7 @@ def q_duplicated_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxi_trips_etl_spark.dataprep.substring import duplicated_spans
 
     docs = _t(spark, sf_dir, "documents")
-    return duplicated_spans(docs, min_len=12, max_postings=20)
+    return duplicated_spans(docs)
 
 
 def _hard_negative_oracle() -> str:
@@ -310,7 +303,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     fronts it with the IVF coarse quantizer per the docstring."""
     from taxi_trips_etl_spark.dataprep.similarity import hard_negative_topk
 
-    return hard_negative_topk(_t(spark, sf_dir, "embeddings"), k=2)
+    return hard_negative_topk(_t(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -349,9 +342,7 @@ def q_temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     docs = _t(spark, sf_dir, "documents")
-    return temperature_mixture_weights(
-        docs, alpha=0.7, budget_docs=10000
-    )
+    return temperature_mixture_weights(docs)
 
 
 @register(
@@ -408,7 +399,7 @@ def q_histogram_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame
     from taxi_trips_etl_spark.dataprep.profile import histogram_quantiles
 
     li = _t(spark, sf_dir, "lineitem")
-    return histogram_quantiles(li, "l_extendedprice")
+    return histogram_quantiles(li)
 
 
 def _pca_power_oracle() -> str:

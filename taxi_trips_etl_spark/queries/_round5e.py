@@ -71,15 +71,13 @@ def _tfidf_cos_oracle() -> str:
         tfidf_cosine_oracle_sql,
     )
 
-    return tfidf_cosine_oracle_sql(
-        max_df_frac=0.10, min_cosine=0.30, max_df=500
-    )
+    return tfidf_cosine_oracle_sql()
 
 
 @register("tfidf_cosine_pairs", _tfidf_cos_oracle())
 def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse TF-IDF doc-doc cosine ≥ 0.30 via an inverted-index join
-    with a 10%-df posting prune AND an absolute max_df=500 posting cap
+    with a 10%-df posting prune AND an absolute MAX_DF=500 posting cap
     (dataprep/sparse_sim.py) — the lexical same-topic/near-dup pair
     detector; join volume is Σ df², never n_docs². The absolute cap is
     the 100 TB knob (r12 decade sweep: the relative cap alone un-bounds
@@ -92,12 +90,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine)."""
     from taxi_trips_etl_spark.dataprep.sparse_sim import tfidf_cosine_pairs
 
-    return tfidf_cosine_pairs(
-        _t(spark, sf_dir, "documents"),
-        max_df_frac=0.10,
-        min_cosine=0.30,
-        max_df=500,
-    )
+    return tfidf_cosine_pairs(_t(spark, sf_dir, "documents"))
 
 
 def _skipgram_oracle() -> str:

@@ -62,11 +62,7 @@ def q_boilerplate_chunk_removal(
         boilerplate_chunk_removal,
     )
 
-    return boilerplate_chunk_removal(
-        _t(spark, sf_dir, "documents"),
-        chunk_tokens=2,
-        df_divisor=20,
-    )
+    return boilerplate_chunk_removal(_t(spark, sf_dir, "documents"))
 
 
 def _kn_xent_oracle() -> str:
@@ -118,12 +114,7 @@ def q_range_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic to a deterministic sample."""
     from taxi_trips_etl_spark.dataprep.layout import range_partition_plan
 
-    return range_partition_plan(
-        _t(spark, sf_dir, "lineitem"),
-        key="l_orderkey",
-        n_partitions=16,
-        tiebreak="l_linenumber",
-    )
+    return range_partition_plan(_t(spark, sf_dir, "lineitem"))
 
 
 @register(
@@ -146,12 +137,7 @@ def q_adaptive_salt_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction."""
     from taxi_trips_etl_spark.dataprep.layout import adaptive_salt_plan
 
-    return adaptive_salt_plan(
-        _t(spark, sf_dir, "lineitem"),
-        key="l_suppkey",
-        target_rows_per_task=400,
-        max_salt=32,
-    )
+    return adaptive_salt_plan(_t(spark, sf_dir, "lineitem"))
 
 
 def _fertility_oracle() -> str:
@@ -346,9 +332,7 @@ def q_hard_negative_mining_ivf(
         hard_negative_topk_ivf,
     )
 
-    return hard_negative_topk_ivf(
-        _t(spark, sf_dir, "embeddings"), n_centroids=8, nprobe=2
-    )
+    return hard_negative_topk_ivf(_t(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -494,10 +478,7 @@ def q_dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     true repeated-content clones, which set-Jaccard cannot."""
     from taxi_trips_etl_spark.dataprep.dedup import weighted_minhash_pairs
 
-    return weighted_minhash_pairs(
-        _t(spark, sf_dir, "documents"),
-        min_wjacc_milli=250,
-    )
+    return weighted_minhash_pairs(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -755,12 +736,7 @@ def q_sampled_range_partition_plan(
         sampled_range_partition_plan,
     )
 
-    return sampled_range_partition_plan(
-        _t(spark, sf_dir, "lineitem"),
-        key="l_orderkey",
-        n_partitions=16,
-        tiebreak="l_linenumber",
-    )
+    return sampled_range_partition_plan(_t(spark, sf_dir, "lineitem"))
 
 
 @register(

@@ -77,10 +77,7 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision."""
     from taxi_trips_etl_spark.dataprep.similarity import semdedup_prune
 
-    return semdedup_prune(
-        _t(spark, sf_dir, "embeddings"), k=8, iterations=3,
-        threshold_milli=350,
-    )
+    return semdedup_prune(_t(spark, sf_dir, "embeddings"), threshold_milli=350)
 
 
 @register(
@@ -346,9 +343,7 @@ def q_skewed_distinct_count(
     )
     from taxi_trips_etl_spark.queries._registry import _events
 
-    return two_stage_distinct_count(
-        _events(spark, sf_dir), ["event_type"], "user_id"
-    )
+    return two_stage_distinct_count(_events(spark, sf_dir), ["event_type"])
 
 
 @register(
@@ -439,10 +434,7 @@ def q_compact_small_files_audit(
             f"{work}/frag"
         )
         out = materialize(
-            compact_small_files(
-                spark, f"{work}/frag", f"{work}/compact",
-                rows_per_file=100,
-            ),
+            compact_small_files(spark, f"{work}/frag", f"{work}/compact"),
             eager=True,
         )
     return out

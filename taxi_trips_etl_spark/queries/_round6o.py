@@ -136,9 +136,7 @@ def q_inventory_abc_classification(
         )
         .withColumn("neg_rev", -F.col("rev_cents"))
     )
-    cum = assign_prefix_sums(
-        rev, ["neg_rev", "l_partkey"], "rev_cents", sum_col="cum"
-    )
+    cum = assign_prefix_sums(rev, ["neg_rev", "l_partkey"])
     wall = Window.partitionBy()
     shared = cum.select(
         "l_partkey",

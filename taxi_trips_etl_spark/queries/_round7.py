@@ -122,7 +122,7 @@ def q_hilbert_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_partkey") % side).cast("int").alias("x0"),
         (F.col("l_suppkey") % side).cast("int").alias("y0"),
     )
-    pairs = hilbert_index(li.distinct(), "x0", "y0", bits=_HILBERT_BITS)
+    pairs = hilbert_index(li.distinct(), bits=_HILBERT_BITS)
     j = li.join(F.broadcast(pairs), ["x0", "y0"])
     return (
         j.groupBy(F.expr(f"hd div {span}").alias("bucket"))

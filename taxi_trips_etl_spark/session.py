@@ -78,8 +78,6 @@ from pyspark.sql import SparkSession
 
 from taxi_trips_etl_spark import local_fs
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def spark_cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -88,15 +86,15 @@ def spark_cpus() -> str:
 def get_spark(
     app_name: str = "taxi_trips_etl_spark",
     master: str | None = None,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with scale-oriented defaults."""
+    """Build (or fetch) a SparkSession with scale-oriented defaults;
+    ``extra_conf`` overrides any of them."""
     master = master or f"local[{spark_cpus()}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -24,7 +24,6 @@ import glob as _glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 FILE_PREFIX = "000"  # the reference's blob-name prefix (constants.py:28-29)
 
@@ -155,25 +154,20 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 
 def read_parquet(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """S2: parquet load; the schema comes from the footer."""
+    """S2: parquet load. No schema is given, so Spark 4.1 infers it
+    from a footer, and that inference runs one Spark job per call.
+    ``taxi_testdata.read_lineitem`` is the job-free path: it reads the
+    footer with pyarrow and hands Spark the schema."""
     return spark.read.parquet(*(path if isinstance(path, list) else [path]))
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str | list[str],
-    schema: StructType | None = None,
-) -> DataFrame:
-    """S3: CSV with header-skip + autodetect-or-explicit schema.
+def read_csv(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """S3: CSV with header-skip + autodetected schema.
 
     ``skip_leading_rows=1`` (taxi_trips_etl.py:45) ≡ ``header=True``;
     ``autodetect=True`` (taxi_trips_etl.py:47-51) ≡ ``inferSchema``.
     """
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
+    reader = spark.read.option("header", True).option("inferSchema", True)
     return reader.csv(path if isinstance(path, list) else [path])
 
 

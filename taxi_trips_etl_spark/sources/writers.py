@@ -69,22 +69,22 @@ def write_partitioned_by_run_date(df: DataFrame, path: str, ds: str) -> None:
     )
 
 
+ROWS_PER_FILE = 100  # compact_small_files' target rows per output file
+
+
 def compact_small_files(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    rows_per_file: int,
+    spark: SparkSession, in_path: str, out_path: str
 ) -> DataFrame:
     """Small-file compaction — the table-maintenance pass every
     long-lived ingest needs: streaming sinks and per-day appends leave
     thousands of KB-sized parquet files whose per-file open/footer
     cost dominates scans at 100 TB (and whose task count explodes the
-    scheduler). Rewrites ``in_path`` into ceil(n_rows / rows_per_file)
+    scheduler). Rewrites ``in_path`` into ceil(n_rows / ROWS_PER_FILE)
     files via repartition.
 
     The file target is derived from ROW count, not byte size, so the
-    plan is deterministic and engine-checkable; production would set
-    rows_per_file from target_bytes / avg_row_bytes. Returns a 1-row
+    plan is deterministic and engine-checkable; a byte target would set
+    ROWS_PER_FILE from target_bytes / avg_row_bytes. Returns a 1-row
     audit frame (n_rows, n_files_before, n_files_after_planned) —
     n_files_after_planned is also the exact written file count for a
     non-empty input (repartition(n) emits n non-empty parts when
@@ -95,7 +95,7 @@ def compact_small_files(
     df = spark.read.parquet(in_path)
     n_rows = df.count()
     n_before = df.select(F.input_file_name()).distinct().count()
-    n_after = max(1, math.ceil(n_rows / rows_per_file))
+    n_after = max(1, math.ceil(n_rows / ROWS_PER_FILE))
     df.repartition(n_after).write.mode("overwrite").parquet(out_path)
     from taxi_trips_etl_spark.sources.localrel import local_rows
 

@@ -16,7 +16,7 @@ withhold every session newer than the final watermark, while complete
 emits all of them, making the output equal the batch query bit-for-bit
 — which is exactly what the shared DuckDB oracle asserts. Complete mode
 therefore retains ALL session state and is only for this bounded
-oracle-comparison use; pass ``output_mode="append"`` on a real stream.
+oracle-comparison use; a real stream would write in append mode.
 """
 
 from __future__ import annotations
@@ -27,21 +27,9 @@ from pyspark.sql import functions as F
 from taxi_trips_etl_spark.streaming.state import drain, event_stream
 
 
-def streaming_session_window(
-    spark: SparkSession,
-    events_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming DF: (user_id, session_window, n_events).
-
-    ``max_files_per_trigger`` rate-limits the file source so a static
-    directory becomes a deterministic multi-batch run — the knob the
-    append-mode watermark-eviction test uses to make the watermark
-    advance BETWEEN batches.
-    """
-    stream = event_stream(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    )
+def streaming_session_window(spark: SparkSession, events_dir: str) -> DataFrame:
+    """Streaming DF: (user_id, session_window, n_events)."""
+    stream = event_stream(spark, events_dir)
     return (
         stream.withWatermark("ts", "1 day")
         .groupBy("user_id", F.session_window("ts", "30 minutes"))
@@ -49,35 +37,23 @@ def streaming_session_window(
     )
 
 
-def run_streaming_session_window(
-    spark: SparkSession,
-    events_dir: str,
-    sink_table: str = "session_windows",
-    output_mode: str = "complete",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Run to completion (AvailableNow) → flat table.
+def run_streaming_session_window(spark: SparkSession, events_dir: str) -> DataFrame:
+    """Run to completion (AvailableNow) in complete mode → flat table.
 
-    Default ``output_mode="complete"`` exists for the static-directory
-    oracle comparison (see module docstring — append would withhold
-    sessions newer than the final watermark). On a continuous stream,
-    pass ``"append"`` so the watermark actually closes sessions and
-    bounds the state store (tests/test_stateful_streaming.py drives a
-    two-batch append run and asserts the watermark-finalized session is
-    emitted). Eight state partitions size the session state store — see
-    streaming/state.py for the sizing rule.
+    Complete mode is for the static-directory oracle comparison (see
+    module docstring — append would withhold sessions newer than the
+    final watermark). Eight state partitions size the session state
+    store — see streaming/state.py for the sizing rule.
     """
     drain(
         spark,
-        streaming_session_window(
-            spark, events_dir, max_files_per_trigger=max_files_per_trigger
-        )
+        streaming_session_window(spark, events_dir)
         .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode(output_mode),
+        .queryName("session_windows")
+        .outputMode("complete"),
         partitions=8,
     )
-    return spark.table(sink_table).select(
+    return spark.table("session_windows").select(
         "user_id",
         F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias(
             "session_start"

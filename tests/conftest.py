@@ -9,7 +9,10 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="taxi_trips_etl_spark-tests", shuffle_partitions=8)
+    s = get_spark(
+        app_name="taxi_trips_etl_spark-tests",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     yield s
 
 

@@ -41,9 +41,9 @@ def test_range_join_boundaries_and_multi_overlap(spark):
             ("b", _ts(10, 30), _ts(12)),   # point 2 inside
             ("c", _ts(0), _ts(1)),         # nobody
         ],
-        "iid string, s timestamp, e timestamp",
+        "iid string, w_start timestamp, w_end timestamp",
     )
-    out = range_join_points(points, intervals, "ts", "s", "e", bucket_seconds=1800)
+    out = range_join_points(points, intervals)
     pairs = sorted((r.pid, r.iid) for r in out.collect())
     assert pairs == [(1, "a"), (2, "a"), (2, "b")]  # inclusive both ends
 
@@ -51,9 +51,10 @@ def test_range_join_boundaries_and_multi_overlap(spark):
 def test_range_join_long_interval_spans_buckets(spark):
     points = spark.createDataFrame([(1, _ts(18))], "pid long, ts timestamp")
     intervals = spark.createDataFrame(
-        [("wide", _ts(1), _ts(23))], "iid string, s timestamp, e timestamp"
+        [("wide", _ts(1), _ts(23))],
+        "iid string, w_start timestamp, w_end timestamp",
     )
-    out = range_join_points(points, intervals, "ts", "s", "e", bucket_seconds=3600)
+    out = range_join_points(points, intervals)
     assert [(r.pid, r.iid) for r in out.collect()] == [(1, "wide")]
-    # and no duplicate rows despite the interval exploding into 23 buckets
+    # and no duplicate rows despite the interval exploding into 12 buckets
     assert out.count() == 1

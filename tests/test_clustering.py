@@ -98,13 +98,14 @@ def test_kmeans_budget_exhausted_assignment_matches_final_centroids(spark):
     assert out[0][0] != out[10][0]
 
 
-def test_pq_topk_finds_cluster_neighbors(spark):
+def test_pq_topk_finds_cluster_neighbors(spark, monkeypatch):
     """On clustered data PQ must rank same-cluster vectors on top.
     (The synthetic embeddings table is near-uniform random — there even
     exact search finds neighbors barely closer than random points, so
     recall is tested on data with actual neighborhood structure.)"""
     import numpy as np
 
+    from taxi_trips_etl_spark.dataprep import pq_exact
     from taxi_trips_etl_spark.dataprep.pq_exact import pq_topk_replayable
 
     rng = np.random.RandomState(7)
@@ -114,7 +115,8 @@ def test_pq_topk_finds_cluster_neighbors(spark):
         c = i % 4
         rows.append((i, (centers[c] + rng.randn(64) * 0.1).tolist()))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = pq_topk_replayable(emb, m=8, ksub=16, k=3, query_ids_below=4)
+    monkeypatch.setattr(pq_exact, "PQ_QUERY_IDS_BELOW", 4)
+    out = pq_topk_replayable(emb)
     by_q = {}
     for r in out.collect():
         assert r["query_id"] != r["neighbor_id"]
@@ -125,18 +127,19 @@ def test_pq_topk_finds_cluster_neighbors(spark):
         assert all(n % 4 == q % 4 for n in neighbors), (q, neighbors)
 
 
-def test_pq_adc_tracks_true_distance(spark, sf_dir):
+def test_pq_adc_tracks_true_distance(spark, sf_dir, monkeypatch):
     """On the (unstructured) embeddings table the ADC approximation
     must still correlate with true squared L2 — the guarantee PQ gives
     when cluster structure is absent."""
     import numpy as np
 
+    from taxi_trips_etl_spark.dataprep import pq_exact
     from taxi_trips_etl_spark.dataprep.pq_exact import pq_topk_replayable
 
+    monkeypatch.setattr(pq_exact, "PQ_K", 499)
+    monkeypatch.setattr(pq_exact, "PQ_QUERY_IDS_BELOW", 1)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = pq_topk_replayable(
-        emb, m=8, ksub=16, k=499, query_ids_below=1
-    ).collect()
+    out = pq_topk_replayable(emb).collect()
     data = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
             for r in emb.collect()}
     qv = data[0]
@@ -152,8 +155,8 @@ def test_pq_determinism(spark, sf_dir):
     from taxi_trips_etl_spark.dataprep.pq_exact import pq_topk_replayable
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = sorted(map(tuple, pq_topk_replayable(emb, query_ids_below=3).collect()))
-    b = sorted(map(tuple, pq_topk_replayable(emb, query_ids_below=3).collect()))
+    a = sorted(map(tuple, pq_topk_replayable(emb).collect()))
+    b = sorted(map(tuple, pq_topk_replayable(emb).collect()))
     assert a == b
 
 
@@ -169,7 +172,7 @@ def test_random_projection_preserves_distances(spark, sf_dir):
     orig = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
             for r in emb.collect()}
     proj = {r["vec_id"]: np.array([r[f"rp_{j}"] for j in range(16)])
-            for r in random_projection(emb, in_dim=64, out_dim=16).collect()}
+            for r in random_projection(emb).collect()}
     ids = sorted(orig)
     d0, d1 = [], []
     for i in range(0, len(ids), 3):
@@ -183,7 +186,7 @@ def test_random_projection_preserves_distances(spark, sf_dir):
     assert 0.5 < ratio < 1.5, ratio   # E[||proj||^2] = ||x||^2 (unbiased)
 
 
-def test_pca_project_matches_numpy_and_orders_variance(spark):
+def test_pca_project_matches_numpy_and_orders_variance(spark, monkeypatch):
     """The embedding_pca_project kernel (power_iteration_pca) projects
     onto the numpy eigh components (same sign convention) on data with
     a separated spectrum; component variances are non-increasing.
@@ -191,8 +194,10 @@ def test_pca_project_matches_numpy_and_orders_variance(spark):
     to the projection scale, not rounding precision."""
     import numpy as np
 
+    from taxi_trips_etl_spark.dataprep import pca_power
     from taxi_trips_etl_spark.dataprep.pca_power import power_iteration_pca
 
+    monkeypatch.setattr(pca_power, "ITERATIONS", 30)
     rng = np.random.RandomState(5)
     scales = np.array([8.0, 4.0, 2.0, 1.0] + [0.05] * 12)
     basis, _ = np.linalg.qr(rng.randn(16, 16))
@@ -202,7 +207,7 @@ def test_pca_project_matches_numpy_and_orders_variance(spark):
         "vec_id long, embedding array<float>",
     )
     out = np.zeros((len(X), 4))
-    for r in power_iteration_pca(emb, n_components=4, iterations=30).collect():
+    for r in power_iteration_pca(emb).collect():
         out[r["vec_id"], r["component_idx"]] = r["value"]
 
     X = X.astype(np.float64)
@@ -246,7 +251,7 @@ def test_semdedup_plan_has_no_join(spark, sf_dir):
     from taxi_trips_etl_spark.dataprep.similarity import semdedup_prune
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = semdedup_prune(emb, k=8, iterations=3, threshold_milli=350)
+    out = semdedup_prune(emb, threshold_milli=350)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert "FlatMapGroupsInPandas" in plan

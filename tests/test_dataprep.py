@@ -65,7 +65,7 @@ def test_simhash_hamming_properties(docs):
     ham_near = bin(fps[0] ^ fps[2]).count("1")
     ham_far = bin(fps[0] ^ fps[3]).count("1")
     assert ham_near < ham_far  # near-dup closer than unrelated doc
-    pairs = dedup.simhash_near_duplicates(docs, max_hamming=ham_near).collect()
+    pairs = dedup.simhash_near_duplicates(docs).collect()
     assert any({p.doc_id_a, p.doc_id_b} == {0, 1} for p in pairs)
 
 
@@ -98,12 +98,10 @@ def test_cosine_topk_ordering(vectors):
 
 
 def test_lsh_topk_is_subset_of_bucket(vectors):
-    out = similarity.cosine_topk_lsh(
-        vectors, query_ids_below=1, k=4, planes=4
-    ).collect()
+    out = similarity.cosine_topk_lsh(vectors, planes=4).collect()
     # Bucket of query 0 is sign-pattern '1000' — only vec 1 shares it
     # (vec 4 is '1100', vec 2 '0100', vec 3 '0000').
-    assert {r.neighbor_id for r in out} == {1}
+    assert {r.neighbor_id for r in out if r.query_id == 0} == {1}
 
 
 def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):
@@ -114,11 +112,11 @@ def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):
     }
     single = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk_lsh(emb, k=3, planes=8).collect()
+        for r in similarity.cosine_topk_lsh(emb, planes=8).collect()
     }
     multi = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk_lsh_multiprobe(emb, k=3).collect()
+        for r in similarity.cosine_topk_lsh_multiprobe(emb).collect()
     }
     recall_single = len(single & exact) / len(exact)
     recall_multi = len(multi & exact) / len(exact)
@@ -190,13 +188,16 @@ def test_multimodal_meta_and_decode_stub(spark):
     assert all(64 <= r.width < 128 and r.channels == 3 for r in decoded)
 
 
-def test_bucket_cap_bounds_boilerplate_skew(spark):
+def test_bucket_cap_bounds_boilerplate_skew(spark, monkeypatch):
     """One boilerplate string repeated 1000× must not explode candidate
     generation when the cap is on; genuine near-dup pairs survive."""
     from taxi_trips_etl_spark.dataprep.dedup import (
         minhash_lsh_candidates,
         ngram_jaccard_pairs,
     )
+
+    monkeypatch.setattr(dedup, "MAX_BUCKET_SIZE", 50)
+    monkeypatch.setattr(dedup, "MAX_POSTING_SIZE", 50)
 
     boiler = "all rights reserved this page is intentionally left blank " * 3
     near_a = "the quick brown fox jumps over the lazy dog again and again ok"
@@ -207,20 +208,20 @@ def test_bucket_cap_bounds_boilerplate_skew(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    capped = minhash_lsh_candidates(docs, max_bucket_size=50)
+    capped = minhash_lsh_candidates(docs)
     got = {(r.doc_id_a, r.doc_id_b) for r in capped.collect()}
     # The 1000-doc boilerplate bucket (499 500 pairs uncapped) is gone;
     # the real near-dup pair remains.
     assert (2000, 2001) in got
     assert len(got) < 100
 
-    jac = ngram_jaccard_pairs(docs, threshold=0.5, max_posting_size=50)
+    jac = ngram_jaccard_pairs(docs, threshold=0.5)
     jgot = {(r.doc_id_a, r.doc_id_b) for r in jac.collect()}
     assert (2000, 2001) in jgot
     assert len(jgot) < 100
 
 
-def test_bucket_cap_noop_on_normal_corpus(docs):
+def test_bucket_cap_noop_on_normal_corpus(docs, monkeypatch):
     """On a corpus with no hot bucket the capped output is identical."""
     from taxi_trips_etl_spark.dataprep.dedup import (
         minhash_lsh_candidates,
@@ -231,21 +232,20 @@ def test_bucket_cap_noop_on_normal_corpus(docs):
         (r.doc_id_a, r.doc_id_b)
         for r in minhash_lsh_candidates(docs).collect()
     }
-    capped = {
-        (r.doc_id_a, r.doc_id_b)
-        for r in minhash_lsh_candidates(docs, max_bucket_size=50).collect()
-    }
-    assert base == capped and len(base) > 0
-
     jbase = {
         (r.doc_id_a, r.doc_id_b, r.jaccard)
         for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
     }
+    monkeypatch.setattr(dedup, "MAX_BUCKET_SIZE", 50)
+    monkeypatch.setattr(dedup, "MAX_POSTING_SIZE", 50)
+    capped = {
+        (r.doc_id_a, r.doc_id_b)
+        for r in minhash_lsh_candidates(docs).collect()
+    }
+    assert base == capped and len(base) > 0
     jcapped = {
         (r.doc_id_a, r.doc_id_b, r.jaccard)
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.5, max_posting_size=50
-        ).collect()
+        for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
     }
     assert jbase == jcapped and len(jbase) > 0
 
@@ -366,7 +366,8 @@ def test_repetition_scores_flags_templated_text(spark):
     assert rows[3]["n_bigrams"] == 0 and rows[3]["dup_trigram_frac"] == 0.0
 
 
-def test_pack_sequences_offsets_and_bucket_invariance(spark):
+def test_pack_sequences_offsets_and_bucket_invariance(spark, monkeypatch):
+    from taxi_trips_etl_spark.dataprep import packing
     from taxi_trips_etl_spark.dataprep.packing import pack_sequences
 
     docs = spark.createDataFrame(
@@ -383,8 +384,10 @@ def test_pack_sequences_offsets_and_bucket_invariance(spark):
         assert out[i]["last_seq"] == (acc + 3 + i - 1) // 8
         acc += 3 + i
     # The two-pass plan must be invariant to bucket granularity.
-    tiny = pack_sequences(docs, seq_len=8, bucket_span=2).collect()
-    one = pack_sequences(docs, seq_len=8, bucket_span=10**6).collect()
+    monkeypatch.setattr(packing, "BUCKET_SPAN", 2)
+    tiny = pack_sequences(docs, seq_len=8).collect()
+    monkeypatch.setattr(packing, "BUCKET_SPAN", 10**6)
+    one = pack_sequences(docs, seq_len=8).collect()
     assert sorted(map(tuple, tiny)) == sorted(map(tuple, one))
 
 
@@ -394,11 +397,11 @@ def test_domain_mixture_upweights_tail(spark):
     rows = [(i, "big") for i in range(900)] + [
         (900 + i, "small") for i in range(100)
     ]
-    df = spark.createDataFrame(rows, "doc_id long, domain string")
-    kept = domain_mixture_sample(df, domain_col="domain")
+    df = spark.createDataFrame(rows, "doc_id long, source string")
+    kept = domain_mixture_sample(df)
     by_dom = {
-        r["domain"]: r["n"]
-        for r in kept.groupBy("domain").agg(F.count("*").alias("n")).collect()
+        r["source"]: r["n"]
+        for r in kept.groupBy("source").agg(F.count("*").alias("n")).collect()
     }
     # sqrt weights: sqrt(900):sqrt(100) = 3:1 → rates 500*0.75/900
     # ≈ 0.42 vs 500*0.25/100 = 1.0 (capped): the tail domain keeps a
@@ -406,7 +409,7 @@ def test_domain_mixture_upweights_tail(spark):
     assert by_dom["small"] / 100 > by_dom["big"] / 900
     assert by_dom["small"] == 100  # rate capped at 1.0 → keeps everything
     # Deterministic: rerun gives the identical membership.
-    again = domain_mixture_sample(df, domain_col="domain")
+    again = domain_mixture_sample(df)
     assert sorted(r["doc_id"] for r in kept.collect()) == sorted(
         r["doc_id"] for r in again.collect()
     )
@@ -634,7 +637,6 @@ def test_semantic_decontaminate_matches_numpy_bruteforce(spark, sf_dir):
             emb.filter("vec_id < 50").selectExpr(
                 "vec_id AS eval_id", "embedding"
             ),
-            threshold=0.4,
         ).collect()
     }
 
@@ -665,7 +667,7 @@ def test_semantic_decontaminate_tie_prefers_lower_eval_id(spark):
         [(7, [2.0, 0.0]), (3, [5.0, 0.0])],
         "eval_id long, embedding array<double>",
     )
-    rows = semantic_decontaminate(corpus, eval_set, threshold=0.9).collect()
+    rows = semantic_decontaminate(corpus, eval_set).collect()
     assert len(rows) == 1
     assert rows[0]["matched_eval_id"] == 3  # both cos=1.0 → lower id
     assert rows[0]["max_cosine"] == 1.0
@@ -716,13 +718,13 @@ def test_ngram_miners_equal_bruteforce_on_random_corpus(spark):
     }
     got_c = {
         (r.doc_id_a, r.doc_id_b): r.containment
-        for r in dedup.ngram_containment_pairs(df, threshold=0.6).collect()
+        for r in dedup.ngram_containment_pairs(df).collect()
     }
     assert got_j == want_j and len(want_j) > 0
     assert got_c == want_c and len(want_c) > 0
 
 
-def test_ngram_miners_threshold_one_prefix_edge(spark):
+def test_ngram_miners_threshold_one_prefix_edge(spark, monkeypatch):
     """threshold=1.0 shrinks the PPJoin prefix to exactly ONE gram
     (n − ⌈t·n⌉ + 1 = 1) — the boundary of the round-8 sorted-array
     slice. Identical gram sets must still pair; any proper subset or
@@ -742,14 +744,17 @@ def test_ngram_miners_threshold_one_prefix_edge(spark):
         for r in dedup.ngram_jaccard_pairs(df, threshold=1.0).collect()
     }
     assert jac == {(0, 1): 1.0}
+    monkeypatch.setattr(dedup, "CONTAINMENT_THRESHOLD", 1.0)
     con = {
         (r.doc_id_a, r.doc_id_b): r.containment
-        for r in dedup.ngram_containment_pairs(df, threshold=1.0).collect()
+        for r in dedup.ngram_containment_pairs(df).collect()
     }
     assert con == {(0, 1): 1.0, (0, 2): 1.0, (1, 2): 1.0}
 
 
-def test_ngram_miners_positional_filter_sound_across_thresholds(spark):
+def test_ngram_miners_positional_filter_sound_across_thresholds(
+    spark, monkeypatch
+):
     """The round-8 PPJoin positional filter prunes candidate rows by
     1 + min suffix length ≥ α — an off-by-one in α or pos would
     silently DROP true pairs, so pin exact brute-force equality at
@@ -790,9 +795,10 @@ def test_ngram_miners_positional_filter_sound_across_thresholds(spark):
             (r.doc_id_a, r.doc_id_b): r.jaccard
             for r in dedup.ngram_jaccard_pairs(df, threshold=t).collect()
         }
+        monkeypatch.setattr(dedup, "CONTAINMENT_THRESHOLD", t)
         got_c = {
             (r.doc_id_a, r.doc_id_b): r.containment
-            for r in dedup.ngram_containment_pairs(df, threshold=t).collect()
+            for r in dedup.ngram_containment_pairs(df).collect()
         }
         assert got_j == want_j, f"jaccard mismatch at t={t}"
         assert got_c == want_c, f"containment mismatch at t={t}"
@@ -802,10 +808,8 @@ def test_ngram_miners_positional_filter_sound_across_thresholds(spark):
 def test_dedup_vocab_params_guarded(spark):
     """Round 11 guard sweep (same discipline as resize_image): degenerate
     sketch parameters must fail loudly at call time, not silently
-    corrupt. The dangerous silent cases: word_ngrams(n=0) shingles every
-    doc to [''] (universal collisions); lsh_bands(bands > k) gives every
-    doc the identical empty-concat band key (all-pairs candidates);
-    a non-dividing bands silently drops signature rows."""
+    corrupt. The dangerous silent case: word_ngrams(n=0) shingles every
+    doc to [''] (universal collisions)."""
     import pytest
 
     from pyspark.sql import functions as F
@@ -817,17 +821,6 @@ def test_dedup_vocab_params_guarded(spark):
     )
     with pytest.raises(ValueError, match="n >= 1"):
         dedup.word_ngrams(F.col("toks"), 0)
-    with pytest.raises(ValueError, match="k >= 1"):
-        dedup.minhash_signature(docs, k=0)
-    sig = dedup.minhash_signature(docs, k=4)
-    for bad_k, bad_bands in ((4, 0), (4, 8), (4, 3)):
-        with pytest.raises(ValueError, match="bands"):
-            dedup.lsh_bands(sig, k=bad_k, bands=bad_bands)
-    assert dedup.lsh_bands(sig, k=4, bands=2).count() == 4  # still works
-    with pytest.raises(ValueError, match="bits <= 62"):
-        dedup.simhash(docs, bits=63)
-    with pytest.raises(ValueError, match="bits <= 62"):
-        dedup.simhash(docs, bits=0)
     with pytest.raises(ValueError, match="vocab_size >= 1"):
         text.build_vocab(docs, vocab_size=0)
 
@@ -835,8 +828,8 @@ def test_dedup_vocab_params_guarded(spark):
 def test_similarity_sampling_packing_params_guarded(spark):
     """Round 11 guard sweep, part 2: ANN/sampling/packing parameters
     whose degenerate values silently corrupt (empty sign buckets →
-    all-pairs; pmod/div by 0 → NULL columns; out_dim 0 → zero-width
-    projections; nprobe 0 → empty results)."""
+    all-pairs; out-of-range rates → wrong sample sizes; div by 0 →
+    NULL columns)."""
     import pytest
 
     from pyspark.sql import functions as F
@@ -856,68 +849,40 @@ def test_similarity_sampling_packing_params_guarded(spark):
         similarity.sign_bucket_band(F.col("embedding"), band=-1, planes=4)
     with pytest.raises(ValueError, match="k >= 1"):
         similarity.cosine_topk_bruteforce(emb, k=0)
-    with pytest.raises(ValueError, match="nprobe"):
-        similarity.ivf_topk(emb, nprobe=0)
-    with pytest.raises(ValueError, match="k/planes"):
+    with pytest.raises(ValueError, match="planes >= 1"):
         similarity.cosine_topk_lsh(emb, planes=0)
-    with pytest.raises(ValueError, match="k/planes"):
-        similarity.cosine_topk_lsh_multiprobe(emb, k=0)
-    with pytest.raises(ValueError, match="in_dim/out_dim"):
-        similarity.random_projection(emb, in_dim=4, out_dim=0)
-    with pytest.raises(ValueError, match="k/iterations"):
-        similarity.semdedup_prune(emb, iterations=0)
-    with pytest.raises(ValueError, match=r"rate must be in \[0, 1\]"):
-        sampling.deterministic_sample(docs, rate=1.5)
-    with pytest.raises(ValueError, match=r"test_rate must be in \[0, 1\]"):
-        sampling.train_test_split(docs, test_rate=-0.1)
     with pytest.raises(ValueError, match="stratum rate"):
-        sampling.stratified_sample(
-            docs, rates={"x": 2.0}, strata_col="text"
-        )
+        sampling.stratified_sample(docs, rates={"x": 2.0})
     # r12 ADVICE closure: a stratum literally named '__default__' used to
     # be clobbered by default_rate in a merged validation dict, letting
     # its out-of-range rate escape the guard (while still being applied
     # in the threshold CASE). Both must now raise independently.
     with pytest.raises(ValueError, match="stratum rate"):
-        sampling.stratified_sample(
-            docs, rates={"__default__": 7.0}, strata_col="text"
-        )
+        sampling.stratified_sample(docs, rates={"__default__": 7.0})
     with pytest.raises(ValueError, match=r"default_rate must be in \[0, 1\]"):
         sampling.stratified_sample(
-            docs, rates={"x": 0.5}, strata_col="text",
-            default_rate=-0.2,
+            docs, rates={"x": 0.5}, default_rate=-0.2
         )
-    with pytest.raises(ValueError, match="k >= 1"):
-        sampling.kfold_assign(docs, k=0)
-    with pytest.raises(ValueError, match="seq_len/bucket_span"):
+    with pytest.raises(ValueError, match="seq_len >= 1"):
         packing.pack_sequences(docs, seq_len=0)
     # valid calls still work end-to-end
     assert similarity.cosine_topk_bruteforce(emb, query_ids_below=2, k=2).count() > 0
-    assert sampling.kfold_assign(docs, k=3).count() == 2
+    assert sampling.kfold_assign(docs).count() == 2
 
 
-def test_text_window_params_guarded(spark):
-    """Round 11 guard sweep, part 3: chunk_documents with
-    overlap >= chunk_tokens made stride <= 0 (infinite/negative chunk
-    counts, silently nulled); winnowing k/w < 1 silently emptied."""
-    import pytest
-
+def test_text_windows_hand_check(spark, monkeypatch):
+    """chunk_documents on a hand-sized window: stride = chunk − overlap,
+    the tail chunk shorter; winnowing keeps a fingerprint per window."""
     from taxi_trips_etl_spark.dataprep import text
 
     docs = spark.createDataFrame(
         [(1, "a b c d e f g h")], "doc_id long, text string"
     )
-    with pytest.raises(ValueError, match="overlap < "):
-        text.chunk_documents(docs, chunk_tokens=10, overlap=10)
-    with pytest.raises(ValueError, match="chunk_tokens >= 1"):
-        text.chunk_documents(docs, chunk_tokens=0, overlap=0)
-    with pytest.raises(ValueError, match="k/w >= 1"):
-        text.winnowing_fingerprints(docs, k=0)
-    with pytest.raises(ValueError, match="k/w >= 1"):
-        text.winnowing_fingerprints(docs, w=0)
-    # valid calls unchanged
-    assert text.chunk_documents(docs, chunk_tokens=4, overlap=1).count() >= 2
-    assert text.winnowing_fingerprints(docs, k=3, w=2).count() > 0
+    monkeypatch.setattr(text, "CHUNK_TOKENS", 4)
+    monkeypatch.setattr(text, "CHUNK_OVERLAP", 1)
+    chunks = text.chunk_documents(docs).orderBy("chunk_id").collect()
+    assert [r.chunk_text for r in chunks] == ["a b c d", "d e f g", "g h"]
+    assert text.winnowing_fingerprints(docs).count() > 0
 
 
 def test_banded_levenshtein_identity(spark):

@@ -163,11 +163,15 @@ def test_centroid_cell_spherical_default_stable_on_zone_dim():
     # centroid semantics produced it for synthetic taxi-sized zones.
     from taxi_trips_etl_spark.queries import N_ZONES, _zone_wkt
 
+    def planar_cell(wkt):
+        lon, lat = wkt_centroid(wkt)
+        return latlng_to_cell(lat, lon, 9)
+
     diff = [
         z
         for z in range(N_ZONES)
         if centroid_cell(_zone_wkt(z, detailed=(z % 5 == 0)))
-        != centroid_cell(_zone_wkt(z, detailed=(z % 5 == 0)), spherical=False)
+        != planar_cell(_zone_wkt(z, detailed=(z % 5 == 0)))
     ]
     assert diff == []
 

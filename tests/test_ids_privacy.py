@@ -15,7 +15,7 @@ def test_global_ids_equal_row_number(spark):
     df = spark.range(997).select(
         (F.col("id") * 7919 % 997).alias("k"), F.col("id").alias("uniq")
     )
-    got = assign_global_ids(df, ["k", "uniq"], num_partitions=7)
+    got = assign_global_ids(df, ["k", "uniq"])
     rows = sorted(
         (r["k"], r["uniq"], r["global_id"]) for r in got.collect()
     )
@@ -28,17 +28,19 @@ def test_global_ids_partitioning_invariant(spark):
     df = spark.range(500).select(
         F.col("id").alias("k"), (F.col("id") % 3).alias("payload")
     )
-    a = {
-        r["k"]: r["global_id"]
-        for r in assign_global_ids(df, ["k"], num_partitions=3).collect()
-    }
-    b = {
-        r["k"]: r["global_id"]
-        for r in assign_global_ids(
-            df.repartition(11), ["k"], num_partitions=6
-        ).collect()
-    }
-    assert a == b
+
+    def ids(frame, width):
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        try:
+            return {
+                r["k"]: r["global_id"]
+                for r in assign_global_ids(frame, ["k"]).collect()
+            }
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    assert ids(df, 3) == ids(df.repartition(11), 6)
 
 
 def test_k_anonymity_audit_flags_small_classes(spark):

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from taxi_trips_etl_spark.dataprep import kmv
 from taxi_trips_etl_spark.dataprep.kmv import (
     kmv_pairwise_overlap,
     kmv_sketch,
@@ -17,15 +18,16 @@ def _synth(spark, n_sets=3, n_per=4000, overlap=1500):
         (F.col("id") % n_per).alias("j"),
     )
     return rows.select(
-        F.concat(F.lit("s"), F.col("si")).alias("set_key"),
-        (F.col("si") * step + F.col("j")).alias("v"),
+        F.concat(F.lit("s"), F.col("si")).alias("event_type"),
+        (F.col("si") * step + F.col("j")).alias("user_id"),
     )
 
 
-def test_kmv_sketch_is_k_smallest_and_partitioning_invariant(spark):
+def test_kmv_sketch_is_k_smallest_and_partitioning_invariant(spark, monkeypatch):
+    monkeypatch.setattr(kmv, "KMV_K", 64)
     df = _synth(spark)
-    sk1 = kmv_sketch(df, "set_key", "v", k=64)
-    sk2 = kmv_sketch(df.repartition(13), "set_key", "v", k=64)
+    sk1 = kmv_sketch(df)
+    sk2 = kmv_sketch(df.repartition(13))
     a = sorted(map(tuple, sk1.collect()))
     b = sorted(map(tuple, sk2.collect()))
     assert a == b  # exact top-k survives any physical partitioning
@@ -40,7 +42,7 @@ def test_kmv_overlap_tracks_exact_jaccard(spark):
     df = _synth(spark)
     got = {
         (r["set_a"], r["set_b"]): r
-        for r in kmv_pairwise_overlap(df, "set_key", "v").collect()
+        for r in kmv_pairwise_overlap(df).collect()
     }
     # consecutive sets: |A∩B| = 1500, |A∪B| = 6500, J ≈ 0.2308
     for pair in [("s0", "s1"), ("s1", "s2")]:
@@ -55,5 +57,5 @@ def test_kmv_overlap_tracks_exact_jaccard(spark):
 
 def test_kmv_small_set_estimate_is_exact(spark):
     df = _synth(spark, n_sets=2, n_per=100, overlap=30)
-    ov = kmv_pairwise_overlap(df, "set_key", "v").collect()[0]
+    ov = kmv_pairwise_overlap(df).collect()[0]
     assert ov["union_est"] == 170.0 and ov["inter_est"] == 30.0

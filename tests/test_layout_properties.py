@@ -45,12 +45,11 @@ def test_hilbert_index_rejects_reserved_column_collisions(spark):
 
     from taxi_trips_etl_spark.dataprep.layout import hilbert_index
 
-    df = spark.createDataFrame([(1, 2, 9)], "x int, y int, hd int")
+    df = spark.createDataFrame([(1, 2, 9)], "x0 int, y0 int, hd int")
     with pytest.raises(ValueError, match="collide"):
-        hilbert_index(df, "x", "y", bits=2)
-    # a different out_col clears the output clash
-    out = hilbert_index(df, "x", "y", bits=2, out_col="hkey")
-    assert set(out.columns) == {"x", "y", "hd", "hkey"}
-    df2 = spark.createDataFrame([(1, 2, 9)], "x int, y int, _hx int")
+        hilbert_index(df, bits=2)
+    out = hilbert_index(df.drop("hd"), bits=2)
+    assert set(out.columns) == {"x0", "y0", "hd"}
+    df2 = spark.createDataFrame([(1, 2, 9)], "x0 int, y0 int, _hx int")
     with pytest.raises(ValueError, match="collide"):
-        hilbert_index(df2, "x", "y", bits=2)
+        hilbert_index(df2, bits=2)

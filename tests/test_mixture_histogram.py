@@ -16,9 +16,7 @@ def test_temperature_flattens_head(spark):
     )
     got = {
         r["source"]: r
-        for r in temperature_mixture_weights(
-            df, alpha=0.7, budget_docs=1000
-        ).collect()
+        for r in temperature_mixture_weights(df).collect()
     }
     head, tail = got["head"], got["tail"]
     # alpha<1 up-samples the tail relative to its raw share
@@ -27,24 +25,29 @@ def test_temperature_flattens_head(spark):
     assert abs((head["weight"] + tail["weight"]) - 1.0) < 1e-4
 
 
-def test_alpha_one_recovers_raw_share(spark):
+def test_alpha_one_recovers_raw_share(spark, monkeypatch):
+    from taxi_trips_etl_spark.dataprep import sampling
+
+    monkeypatch.setattr(sampling, "MIXTURE_ALPHA", 1.0)
     df = spark.createDataFrame(
         [(1, "a b c", "x"), (2, "a b c d e f", "y")],
         "doc_id long, text string, source string",
     )
     got = {
         r["source"]: r
-        for r in temperature_mixture_weights(df, alpha=1.0).collect()
+        for r in temperature_mixture_weights(df).collect()
     }
     for r in got.values():
         assert abs(r["weight"] - r["raw_share"]) < 1e-5
 
 
 def test_histogram_quantiles_close_to_exact(spark):
-    df = spark.range(10001).select(F.col("id").cast("double").alias("v"))
+    df = spark.range(10001).select(
+        F.col("id").cast("double").alias("l_extendedprice")
+    )
     got = {
         r["quantile"]: r["estimate"]
-        for r in histogram_quantiles(df, "v").collect()
+        for r in histogram_quantiles(df).collect()
     }
     # uniform 0..10000: estimates within one bin width (10000/128 ~ 78)
     for q, est in got.items():
@@ -55,7 +58,9 @@ def test_histogram_partials_merge(spark):
     # estimate over the union equals estimating each half's bins merged:
     # the operator is one job, but determinism across repartitioning is
     # the mergeability witness at this API level
-    df = spark.range(5000).select((F.col("id") % 997).cast("double").alias("v"))
-    a = sorted(map(tuple, histogram_quantiles(df, "v").collect()))
-    b = sorted(map(tuple, histogram_quantiles(df.repartition(13), "v").collect()))
+    df = spark.range(5000).select(
+        (F.col("id") % 997).cast("double").alias("l_extendedprice")
+    )
+    a = sorted(map(tuple, histogram_quantiles(df).collect()))
+    b = sorted(map(tuple, histogram_quantiles(df.repartition(13)).collect()))
     assert a == b

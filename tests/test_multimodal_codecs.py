@@ -269,14 +269,3 @@ def test_decode_and_resize_plans_never_shuffle_payloads(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" in plan
         assert "Exchange" not in plan, plan
-
-
-def test_feature_and_frame_kernels_reject_nonpositive_params(spark):
-    """Same call-time-guard discipline as resize_image: bins < 1 made a
-    malformed mapInPandas schema."""
-    from taxi_trips_etl_spark.dataprep.multimodal import extract_features
-
-    media = _media_df(spark, {1: b"payload"})
-    for bad in (0, -4):
-        with pytest.raises(ValueError, match="bins >= 1"):
-            extract_features(media, bins=bad)

@@ -17,9 +17,12 @@ def test_round_half_away_matches_engines():
     assert _round_half_away(2.4999) == 2
 
 
-def test_pc1_matches_numpy_on_anisotropic_data(spark):
+def test_pc1_matches_numpy_on_anisotropic_data(spark, monkeypatch):
     import numpy as np
 
+    from taxi_trips_etl_spark.dataprep import pca_power
+
+    monkeypatch.setattr(pca_power, "ITERATIONS", 20)
     rng = np.random.RandomState(7)
     d, n = 8, 400
     # strong top component along a known direction
@@ -35,7 +38,7 @@ def test_pc1_matches_numpy_on_anisotropic_data(spark):
     )
     got = {
         r["vec_id"]: r["pc1"]
-        for r in power_iteration_pc1(df, iterations=20).collect()
+        for r in power_iteration_pc1(df).collect()
     }
     centered = x - x.mean(axis=0)
     cov = centered.T @ centered / n

@@ -47,7 +47,7 @@ def test_daily_spine_dense(spark):
     df = spark.createDataFrame(
         [("x", "2024-01-01"), ("x", "2024-01-04"), ("y", "2024-01-02")],
         "k string, d string",
-    ).select("k", F.col("d").cast("date").alias("d"))
-    got = daily_spine(df, ["k"], "d").collect()
+    ).select("k", F.col("d").cast("date").alias("day"))
+    got = daily_spine(df, ["k"]).collect()
     # 2 keys x 4 days (global range 01-01..01-04)
     assert len(got) == 8

@@ -23,14 +23,14 @@ def test_containment_catches_doc_inside_doc(spark):
     d = _docs(spark, [(0, inner), (1, inner + " " + tail), (2, tail[::-1])])
     out = {
         (r["doc_id_a"], r["doc_id_b"]): r["containment"]
-        for r in ngram_containment_pairs(d, threshold=0.9).collect()
+        for r in ngram_containment_pairs(d).collect()
     }
     assert out == {(0, 1): 1.0}
 
 
 def test_containment_symmetric_pair_emitted_once(spark):
     d = _docs(spark, [(5, "a b c d e f"), (9, "a b c d e f")])
-    rows = ngram_containment_pairs(d, threshold=0.9).collect()
+    rows = ngram_containment_pairs(d).collect()
     assert [(r["doc_id_a"], r["doc_id_b"]) for r in rows] == [(5, 9)]
 
 

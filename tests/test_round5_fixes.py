@@ -98,10 +98,10 @@ def test_streaming_reader_requires_nanos_conf(spark, sf_dir):
 def test_weighted_priority_sample_short_population(spark):
     df = spark.createDataFrame(
         [("a", 10), ("b", 0), ("c", -3), ("d", 5)],
-        "k string, w long",
+        "c_custkey string, w long",
     )
-    out = weighted_priority_sample(df, "k", F.col("w"), k=4).collect()
+    out = weighted_priority_sample(df, F.col("w")).collect()
     # Only the positive-weight rows qualify; no Inf/NaN priority keys.
-    assert sorted(r["k"] for r in out) == ["a", "d"]
+    assert sorted(r["c_custkey"] for r in out) == ["a", "d"]
     assert all(r["priority_key"] == r["priority_key"] for r in out)
     assert all(r["priority_key"] != float("inf") for r in out)

@@ -14,6 +14,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from taxi_trips_etl_spark.dataprep import dedup
+from taxi_trips_etl_spark.dataprep import text as text_mod
 from taxi_trips_etl_spark.dataprep.dedup import chunk_dedup
 from taxi_trips_etl_spark.dataprep.graph import triangle_count
 from taxi_trips_etl_spark.dataprep.sampling import weighted_priority_sample
@@ -33,7 +35,8 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_chunk_dedup_drops_later_duplicates(spark):
+def test_chunk_dedup_drops_later_duplicates(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "CHUNK_TOKENS", 3)
     # doc 0 and doc 1 share an identical first 3-token chunk; doc 1's
     # copy must vanish, its unique tail chunk must survive.
     d = _docs(
@@ -42,7 +45,7 @@ def test_chunk_dedup_drops_later_duplicates(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in chunk_dedup(d, chunk_tokens=3).collect()
+        for r in chunk_dedup(d).collect()
     }
     assert out[0]["text_dedup"] == "a b c x y z"
     assert out[0]["n_chunks_dropped"] == 0
@@ -51,18 +54,20 @@ def test_chunk_dedup_drops_later_duplicates(spark):
     assert out[1]["n_chunks_dropped"] == 1
 
 
-def test_chunk_dedup_first_wins_within_doc(spark):
+def test_chunk_dedup_first_wins_within_doc(spark, monkeypatch):
     # The same chunk repeated INSIDE one document dedups too.
+    monkeypatch.setattr(dedup, "CHUNK_TOKENS", 2)
     d = _docs(spark, [(7, "p q p q p q")])
-    row = chunk_dedup(d, chunk_tokens=2).collect()[0]
+    row = chunk_dedup(d).collect()[0]
     assert row["text_dedup"] == "p q"
     assert row["n_chunks_kept"] == 1
     assert row["n_chunks_dropped"] == 2
 
 
-def test_chunk_dedup_tail_chunk_survives(spark):
+def test_chunk_dedup_tail_chunk_survives(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "CHUNK_TOKENS", 2)
     d = _docs(spark, [(3, "a b c d e")])  # 2-token chunks + tail 'e'
-    row = chunk_dedup(d, chunk_tokens=2).collect()[0]
+    row = chunk_dedup(d).collect()[0]
     assert row["text_dedup"] == "a b c d e"
     assert row["n_chunks_kept"] == 3
 
@@ -75,22 +80,18 @@ def test_chunk_dedup_tail_chunk_survives(spark):
 def test_weighted_priority_sample_deterministic_and_sized(spark, sf_dir):
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     w = F.round(F.col("c_acctbal") * 100)
-    a = weighted_priority_sample(cust, "c_custkey", w, k=50).collect()
-    b = weighted_priority_sample(
-        cust.repartition(13), "c_custkey", w, k=50
-    ).collect()
-    assert len(a) == 50
+    a = weighted_priority_sample(cust, w).collect()
+    b = weighted_priority_sample(cust.repartition(13), w).collect()
+    assert len(a) == 100
     assert [r["c_custkey"] for r in a] == [r["c_custkey"] for r in b]
 
 
 def test_weighted_priority_sample_prefers_heavy(spark):
     # One row weighing 10^6 x the rest is essentially always sampled.
     rows = [(i, 1.0) for i in range(200)] + [(999, 1_000_000.0)]
-    df = spark.createDataFrame(rows, "k long, w double")
-    got = weighted_priority_sample(
-        df, "k", F.round(F.col("w") * 100), k=20
-    ).collect()
-    assert 999 in {r["k"] for r in got}
+    df = spark.createDataFrame(rows, "c_custkey long, w double")
+    got = weighted_priority_sample(df, F.round(F.col("w") * 100)).collect()
+    assert 999 in {r["c_custkey"] for r in got}
     assert all(r["weight_cents"] > 0 for r in got)
 
 
@@ -120,8 +121,8 @@ def test_token_entropy_uniform_and_constant(spark):
 
 def test_feature_hash_counts_sum_and_range(spark):
     d = _docs(spark, [(0, "a b a"), (1, "c")])
-    rows = feature_hash_counts(d, n_buckets=8).collect()
-    assert all(0 <= r["bucket"] < 8 for r in rows)
+    rows = feature_hash_counts(d).collect()
+    assert all(0 <= r["bucket"] < 64 for r in rows)
     per_doc = {}
     for r in rows:
         per_doc[r["doc_id"]] = per_doc.get(r["doc_id"], 0) + r["n"]
@@ -133,16 +134,18 @@ def test_feature_hash_counts_sum_and_range(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_bigram_lm_probabilities(spark):
+def test_bigram_lm_probabilities(spark, monkeypatch):
     # 'a b' x3, 'a c' x1 -> P(b|a)=0.75, P(c|a)=0.25.
     d = _docs(spark, [(0, "a b a b a b a c")])
-    rows = bigram_lm_topk(d, heads=5, next_per_head=5).collect()
+    rows = bigram_lm_topk(d).collect()
     pa = {r["w2"]: r for r in rows if r["w1"] == "a"}
     assert math.isclose(pa["b"]["cond_p"], 0.75)
     assert math.isclose(pa["c"]["cond_p"], 0.25)
     assert pa["b"]["head_n"] == 4
     # per-head ranks order by count desc: b before c survives any cut
-    top1 = bigram_lm_topk(d, heads=1, next_per_head=1).collect()
+    monkeypatch.setattr(text_mod, "BIGRAM_HEADS", 1)
+    monkeypatch.setattr(text_mod, "BIGRAM_NEXT_PER_HEAD", 1)
+    top1 = bigram_lm_topk(d).collect()
     assert [(r["w1"], r["w2"]) for r in top1] == [("a", "b")]
 
 
@@ -307,7 +310,7 @@ def test_classifier_margin_matches_feature_hash(spark, sf_dir):
     from taxi_trips_etl_spark.queries import all_queries
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    feats = feature_hash_counts(docs, n_buckets=64).collect()
+    feats = feature_hash_counts(docs).collect()
     expect: dict = {}
     for r in feats:
         w = (r["bucket"] * 37 + 11) % 21 - 10
@@ -326,8 +329,10 @@ def test_classifier_margin_matches_feature_hash(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_chunk_dedup_uniqueness_property(spark):
+def test_chunk_dedup_uniqueness_property(spark, monkeypatch):
     from hypothesis import given, settings, strategies as st
+
+    monkeypatch.setattr(dedup, "CHUNK_TOKENS", 3)
 
     words = st.sampled_from(["a", "b", "c", "d"])
     doc = st.lists(words, min_size=1, max_size=12).map(" ".join)
@@ -338,7 +343,7 @@ def test_chunk_dedup_uniqueness_property(spark):
         d = spark.createDataFrame(
             list(enumerate(texts)), "doc_id long, text string"
         )
-        rows = chunk_dedup(d, chunk_tokens=3).collect()
+        rows = chunk_dedup(d).collect()
         seen: set = set()
         total_kept = total_dropped = 0
         for r in sorted(rows, key=lambda r: r["doc_id"]):

@@ -8,12 +8,15 @@ recreated)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from taxi_trips_etl_spark.dataprep.graph import kcore
+from taxi_trips_etl_spark.dataprep import heavy_hitters
 from taxi_trips_etl_spark.dataprep.heavy_hitters import mg_heavy_hitters
+from taxi_trips_etl_spark.operators import intervals
 from taxi_trips_etl_spark.operators.intervals import (
     merge_overlapping_intervals,
 )
@@ -49,10 +52,12 @@ def test_interval_merge_matches_sweep_reference(spark, starts, dur):
     ).select(
         "user_id", "event_id", F.timestamp_micros("ts_us").alias("ts")
     )
-    got = sorted(
-        (r["start_us"], r["end_us"], r["n_events"])
-        for r in merge_overlapping_intervals(df, duration_us=dur).collect()
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(intervals, "DURATION_US", dur)
+        got = sorted(
+            (r["start_us"], r["end_us"], r["n_events"])
+            for r in merge_overlapping_intervals(df).collect()
+        )
     assert got == _merge_ref(starts, dur)
 
 
@@ -73,10 +78,12 @@ def test_mg_heavy_hitters_matches_exact_reference(spark, words, k):
     expect = {
         (w, c) for w, c in Counter(words).items() if c * k > len(words)
     }
-    got = {
-        (r["word"], r["cnt"])
-        for r in mg_heavy_hitters(df.repartition(4), k=k).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(heavy_hitters, "MG_K", k)
+        got = {
+            (r["word"], r["cnt"])
+            for r in mg_heavy_hitters(df.repartition(4)).collect()
+        }
     assert got == expect
 
 

@@ -13,10 +13,12 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from taxi_trips_etl_spark.dataprep import collocations
 from taxi_trips_etl_spark.dataprep.collocations import (
     pmi_collocations,
     vocab_top_p,
 )
+from taxi_trips_etl_spark.dataprep import heavy_hitters
 from taxi_trips_etl_spark.dataprep.heavy_hitters import mg_heavy_hitters
 from taxi_trips_etl_spark.operators.intervals import (
     merge_overlapping_intervals,
@@ -24,9 +26,10 @@ from taxi_trips_etl_spark.operators.intervals import (
 
 
 # ---------------------------------------------------------------- MG HH
-def test_mg_heavy_hitters_exact_and_layout_independent(spark):
+def test_mg_heavy_hitters_exact_and_layout_independent(spark, monkeypatch):
     # 1000 'a', 400 'b', rest a long tail of singletons: with k=10 the
     # threshold is N/10; only 'a' and 'b' clear it.
+    monkeypatch.setattr(heavy_hitters, "MG_K", 10)
     vals = ["a"] * 1000 + ["b"] * 400 + [f"t{i}" for i in range(600)]
     df = spark.createDataFrame([(v,) for v in vals], "word string")
     n = len(vals)
@@ -35,9 +38,7 @@ def test_mg_heavy_hitters_exact_and_layout_independent(spark):
     for parts in (1, 7, 32):
         got = {
             (r["word"], r["cnt"])
-            for r in mg_heavy_hitters(
-                df.repartition(parts), k=10
-            ).collect()
+            for r in mg_heavy_hitters(df.repartition(parts)).collect()
         }
         assert got == expect, f"parts={parts}"
 
@@ -62,33 +63,38 @@ def test_mg_heavy_hitters_agrees_with_exact_groupby(spark, sf_dir):
     }
     got = {
         (r["word"], r["cnt"])
-        for r in mg_heavy_hitters(words, k=30).collect()
+        for r in mg_heavy_hitters(words).collect()
     }
     assert got == exact and got  # non-vacuous
 
 
-def test_mg_sketch_trims_below_capacity(spark):
+def test_mg_sketch_trims_below_capacity(spark, monkeypatch):
     # 50 distinct values, capacity 5: the sketch must trim, yet the
     # unique heavy hitter (600 of 1090 items) survives exactly.
+    monkeypatch.setattr(heavy_hitters, "MG_K", 5)
     vals = ["hh"] * 600 + [f"x{i}" for i in range(49) for _ in range(10)]
     df = spark.createDataFrame([(v,) for v in vals], "word string")
-    got = mg_heavy_hitters(df.repartition(3), k=5).collect()
+    got = mg_heavy_hitters(df.repartition(3)).collect()
     assert {(r["word"], r["cnt"]) for r in got} == {("hh", 600)}
 
 
 # ------------------------------------------------------------ intervals
 def _islands(spark, rows):
+    """Islands of 100 µs intervals (DURATION_US patched for the call)."""
+    from taxi_trips_etl_spark.operators import intervals
+
     df = spark.createDataFrame(
         [(u, e, ts) for u, e, ts in rows],
         "user_id long, event_id long, ts_us long",
     ).select(
         "user_id", "event_id", F.timestamp_micros("ts_us").alias("ts")
     )
-    out = merge_overlapping_intervals(df, duration_us=100)
-    return sorted(
-        (r["user_id"], r["start_us"], r["end_us"], r["n_events"])
-        for r in out.collect()
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(intervals, "DURATION_US", 100)
+        return sorted(
+            (r["user_id"], r["start_us"], r["end_us"], r["n_events"])
+            for r in merge_overlapping_intervals(df).collect()
+        )
 
 
 def test_intervals_merge_overlap_touch_and_containment(spark):
@@ -126,7 +132,8 @@ def test_intervals_running_max_handles_contained_interval(spark):
 
 
 # ----------------------------------------------------------------- PMI
-def test_pmi_known_counts(spark):
+def test_pmi_known_counts(spark, monkeypatch):
+    monkeypatch.setattr(collocations, "MIN_COUNT", 1)
     # corpus: "a b" x4, "a c" x1  -> bigrams: (a,b):4 (a,c):1, N=5
     # cl(a)=5; cr(b)=4, cr(c)=1
     # pmi(a,b) = ln(4*5/(5*4)) = 0
@@ -135,30 +142,32 @@ def test_pmi_known_counts(spark):
     )
     got = {
         (r["w1"], r["w2"]): (r["pair_cnt"], r["pmi"])
-        for r in pmi_collocations(docs, min_count=1).collect()
+        for r in pmi_collocations(docs).collect()
     }
     assert got[("a", "b")] == (4, 0.0)
     assert got[("a", "c")][0] == 1
     assert got[("a", "c")][1] == round(math.log(1 * 5 / (5 * 1)), 6) == 0.0
 
 
-def test_pmi_positive_association(spark):
+def test_pmi_positive_association(spark, monkeypatch):
+    monkeypatch.setattr(collocations, "MIN_COUNT", 1)
     # "x y" x5, "p q" x5: (x,y) pmi = ln(5*10/(5*5)) = ln 2 > 0
     docs = spark.createDataFrame(
         [("x y",)] * 5 + [("p q",)] * 5, "text string"
     )
     got = {
         (r["w1"], r["w2"]): r["pmi"]
-        for r in pmi_collocations(docs, min_count=1).collect()
+        for r in pmi_collocations(docs).collect()
     }
     assert got[("x", "y")] == pytest.approx(round(math.log(2), 6))
 
 
-def test_pmi_single_token_docs_excluded(spark):
+def test_pmi_single_token_docs_excluded(spark, monkeypatch):
+    monkeypatch.setattr(collocations, "MIN_COUNT", 1)
     docs = spark.createDataFrame(
         [("solo",), ("a b",), ("  ",)], "text string"
     )
-    rows = pmi_collocations(docs, min_count=1).collect()
+    rows = pmi_collocations(docs).collect()
     assert {(r["w1"], r["w2"]) for r in rows} == {("a", "b")}
 
 

@@ -54,9 +54,7 @@ def test_bloom_prefilter_never_drops_a_match(spark, sf_dir):
         .filter(F.col("s_acctbal") > 9000)
         .select("s_suppkey")
     )
-    reduced = bloom_prefilter(
-        li, dim, fact_key="l_suppkey", dim_key="s_suppkey"
-    )
+    reduced = bloom_prefilter(li, dim)
     plain = li.join(dim, li["l_suppkey"] == dim["s_suppkey"])
     filtered = reduced.join(dim, F.col("l_suppkey") == dim["s_suppkey"])
     assert filtered.count() == plain.count()
@@ -69,12 +67,12 @@ def test_bloom_prefilter_never_drops_a_match(spark, sf_dir):
 
 def test_bloom_prefilter_passes_everything_when_dim_covers_keys(spark):
     fact = spark.createDataFrame(
-        [(i, i * 10) for i in range(100)], "k long, v long"
+        [(i, i * 10) for i in range(100)], "l_suppkey long, v long"
     )
-    dim = spark.createDataFrame([(i,) for i in range(100)], "dk long")
-    out = bloom_prefilter(fact, dim, fact_key="k", dim_key="dk")
+    dim = spark.createDataFrame([(i,) for i in range(100)], "s_suppkey long")
+    out = bloom_prefilter(fact, dim)
     assert out.count() == 100
-    assert out.columns == ["k", "v"]
+    assert out.columns == ["l_suppkey", "v"]
 
 
 def test_bpe_learn_oracle_replays_run_merges():
@@ -236,9 +234,9 @@ def test_pit_join_picks_version_valid_at_fact_time(spark):
             (1, "v2", "2021-01-01", None),
             (2, "only", "2020-01-01", None),
         ],
-        "k long, seg string, valid_from string, valid_to string",
+        "c_custkey long, seg string, valid_from string, valid_to string",
     ).select(
-        "k",
+        "c_custkey",
         "seg",
         F.col("valid_from").cast("timestamp").alias("valid_from"),
         F.col("valid_to").cast("timestamp").alias("valid_to"),
@@ -250,14 +248,9 @@ def test_pit_join_picks_version_valid_at_fact_time(spark):
             (102, 1, "2025-12-31"),  # open version
             (103, 2, "2019-01-01"),  # before any version -> no match
         ],
-        "fid long, fk long, ts string",
-    ).select("fid", "fk", F.col("ts").cast("timestamp").alias("ts"))
-    got = {
-        (r["fid"], r["seg"])
-        for r in pit_join(
-            fact, hist, fact_key="fk", fact_ts="ts", dim_key="k"
-        ).collect()
-    }
+        "fid long, o_custkey long, ts string",
+    ).select("fid", "o_custkey", F.col("ts").cast("timestamp").alias("o_ts"))
+    got = {(r["fid"], r["seg"]) for r in pit_join(fact, hist).collect()}
     assert got == {(100, "v1"), (101, "v2"), (102, "v2")}
 
 
@@ -266,7 +259,7 @@ def test_snapshot_diff_classification_and_null_safety(spark):
 
     old = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", None), (3, "c", 3.0), (4, "d", 4.0)],
-        "k long, s string, v double",
+        "c_custkey long, s string, v double",
     )
     new = spark.createDataFrame(
         [
@@ -275,11 +268,11 @@ def test_snapshot_diff_classification_and_null_safety(spark):
             (3, "CC", 3.0),     # changed
             (5, "e", 5.0),      # added
         ],                       # 4 removed
-        "k long, s string, v double",
+        "c_custkey long, s string, v double",
     )
     got = {
-        (r["k"], r["change_type"])
-        for r in snapshot_diff(old, new, key="k", attrs=["s", "v"]).collect()
+        (r["c_custkey"], r["change_type"])
+        for r in snapshot_diff(old, new, attrs=["s", "v"]).collect()
     }
     assert got == {(2, "changed"), (3, "changed"), (4, "removed"),
                    (5, "added")}

@@ -38,7 +38,7 @@ def test_cms_registers_bounded_and_mass_preserving(spark):
     ).select(
         F.explode(F.split(F.col("text"), " ")).alias("word")
     )
-    regs = cms_registers(docs, "word").collect()
+    regs = cms_registers(docs).collect()
     assert len(regs) <= DEPTH * WIDTH
     assert all(0 <= r.col_idx < WIDTH for r in regs)
     # Every hash row holds the full stream mass (60 tokens x depth).
@@ -55,10 +55,10 @@ def test_cms_partials_merge_cellwise(spark):
     df = spark.createDataFrame(words, "doc_id long, word string")
     whole = {
         (r.row_idx, r.col_idx): r.reg_cnt
-        for r in cms_registers(df, "word").collect()
+        for r in cms_registers(df).collect()
     }
-    lo = cms_registers(df.filter("doc_id < 20"), "word").collect()
-    hi = cms_registers(df.filter("doc_id >= 20"), "word").collect()
+    lo = cms_registers(df.filter("doc_id < 20")).collect()
+    hi = cms_registers(df.filter("doc_id >= 20")).collect()
     merged: dict = {}
     for r in [*lo, *hi]:
         key = (r.row_idx, r.col_idx)
@@ -69,8 +69,12 @@ def test_cms_partials_merge_cellwise(spark):
 # --- Kneser-Ney -----------------------------------------------------------
 
 
-def test_kneser_ney_matches_pure_python(spark):
+def test_kneser_ney_matches_pure_python(spark, monkeypatch):
+    from taxi_trips_etl_spark.dataprep import lm
     from taxi_trips_etl_spark.dataprep.lm import kneser_ney_bigram_topk
+
+    monkeypatch.setattr(lm, "HEADS", 5)
+    monkeypatch.setattr(lm, "NEXT_PER_HEAD", 2)
 
     corpus = [
         (0, "the cat sat on the mat"),
@@ -79,9 +83,7 @@ def test_kneser_ney_matches_pure_python(spark):
     ]
     got = {
         (r.head, r.next_word): (r.pair_n, r.p_kn)
-        for r in kneser_ney_bigram_topk(
-            _docs(spark, corpus), heads=5, next_per_head=2
-        ).collect()
+        for r in kneser_ney_bigram_topk(_docs(spark, corpus)).collect()
     }
 
     # Pure-python reference with the same D = 3/4 integer form.
@@ -117,34 +119,36 @@ def test_kneser_ney_matches_pure_python(spark):
     assert all(0.0 < p <= 1.0 for _, p in got.values())
 
 
-def test_kneser_ney_full_distribution_sums_to_one(spark):
+def test_kneser_ney_full_distribution_sums_to_one(spark, monkeypatch):
     """KN is a proper distribution: when the head's OBSERVED successor
     set covers the whole vocabulary, the emitted (observed-bigram)
     probabilities must sum to exactly 1 — no continuation mass leaks
     to unseen successors because there are none.  Corpus chosen so the
     top head ``x`` is followed by every vocab word {x, y, z}:
     p(y|x) = 14/60, p(z|x) = 14/60, p(x|x) = 32/60."""
+    from taxi_trips_etl_spark.dataprep import lm
     from taxi_trips_etl_spark.dataprep.lm import kneser_ney_bigram_topk
 
-    rows = kneser_ney_bigram_topk(
-        _docs(spark, [(0, "x y x z x x")]), heads=1, next_per_head=100
-    ).collect()
+    monkeypatch.setattr(lm, "HEADS", 1)
+    monkeypatch.setattr(lm, "NEXT_PER_HEAD", 100)
+    rows = kneser_ney_bigram_topk(_docs(spark, [(0, "x y x z x x")])).collect()
     total = sum(r.p_kn for r in rows)
     assert math.isclose(total, 1.0, rel_tol=1e-12)
     assert {r.next_word for r in rows} == {"x", "y", "z"}
 
 
-def test_kneser_ney_observed_mass_excludes_unseen_successors(spark):
+def test_kneser_ney_observed_mass_excludes_unseen_successors(spark, monkeypatch):
     """Corpus "x y x z x y": head ``x`` never precedes itself, so the
     unseen successor ``x`` keeps continuation mass λ(x)·P_cont(x) =
     (D·N1p(x)/c1(x)) · (Npred(x)/B) = (0.75·2/3)·(2/4) = 1/4 that the
     topk table (observed bigrams only) rightly never emits — the
     observed probabilities must sum to exactly 1 − 1/4 = 3/4."""
+    from taxi_trips_etl_spark.dataprep import lm
     from taxi_trips_etl_spark.dataprep.lm import kneser_ney_bigram_topk
 
-    rows = kneser_ney_bigram_topk(
-        _docs(spark, [(0, "x y x z x y")]), heads=1, next_per_head=100
-    ).collect()
+    monkeypatch.setattr(lm, "HEADS", 1)
+    monkeypatch.setattr(lm, "NEXT_PER_HEAD", 100)
+    rows = kneser_ney_bigram_topk(_docs(spark, [(0, "x y x z x y")])).collect()
     total = sum(r.p_kn for r in rows)
     assert math.isclose(total, 0.75, rel_tol=1e-12)
     assert {r.next_word for r in rows} == {"y", "z"}
@@ -165,9 +169,7 @@ def test_tfidf_cosine_identical_docs_score_one(spark):
             *[(i, f"unique{i} filler{i}") for i in range(3, 40)],
         ],
     )
-    rows = tfidf_cosine_pairs(
-        docs, max_df_frac=0.25, min_cosine=0.5
-    ).collect()
+    rows = tfidf_cosine_pairs(docs).collect()
     pairs = {(r.doc_id_a, r.doc_id_b): r.cosine for r in rows}
     assert pytest.approx(pairs[(0, 1)], abs=1e-9) == 1.0
     assert (0, 2) not in pairs and (1, 2) not in pairs
@@ -178,99 +180,72 @@ def test_tfidf_df_prune_drops_stopwords(spark):
     from taxi_trips_etl_spark.dataprep.sparse_sim import tfidf_milli_vectors
 
     docs = _docs(spark, [(i, f"the word{i}") for i in range(20)])
-    vec = tfidf_milli_vectors(docs, max_df_frac=0.10)
+    vec = tfidf_milli_vectors(docs)
     words = {r.word for r in vec.select("word").distinct().collect()}
     assert "the" not in words  # df = 20 > 2 = cap
     assert "word0" in words
 
 
-def test_tfidf_absolute_df_cap_bounds_join_volume(spark):
+def test_tfidf_absolute_df_cap_bounds_join_volume(spark, monkeypatch):
     """r12 decade-sweep closure: the RELATIVE cap grows with the
     corpus (at 10× docs it let previously pruned terms through at
     df≈3900 each — 4.5e9 candidate pairs on the sf1 dir), so the
-    100 TB knob is the ABSOLUTE max_df: a term shared by more than
-    max_df documents is stop-word-like regardless of corpus size.
-    Effective cap = min(relative, absolute); None preserves the
-    original relative-only behavior bit-for-bit."""
-    import pytest
-
+    100 TB knob is the ABSOLUTE MAX_DF: a term shared by more than
+    MAX_DF documents is stop-word-like regardless of corpus size.
+    Effective cap = min(relative, absolute)."""
+    from taxi_trips_etl_spark.dataprep import sparse_sim
     from taxi_trips_etl_spark.dataprep.sparse_sim import (
         tfidf_cosine_pairs,
         tfidf_milli_vectors,
     )
 
     # "shared" has df=10: inside the relative cap (0.5·20=10) but
-    # above an absolute cap of 3 — only max_df prunes it.
+    # above an absolute cap of 3 — only MAX_DF prunes it.
     docs = _docs(
         spark,
         [(i, f"shared word{i}") for i in range(10)]
         + [(i, f"solo{i} word{i}") for i in range(10, 20)],
     )
-    rel_only = tfidf_milli_vectors(docs, max_df_frac=0.5)
-    capped = tfidf_milli_vectors(docs, max_df_frac=0.5, max_df=3)
-    words_rel = {r.word for r in rel_only.select("word").distinct().collect()}
-    words_cap = {r.word for r in capped.select("word").distinct().collect()}
-    assert "shared" in words_rel and "shared" not in words_cap
-    assert "word0" in words_cap  # df=1 terms survive both
-    # max_df=None must be byte-identical to the original behavior
-    base = sorted(map(tuple, rel_only.collect()))
-    none_cap = sorted(
-        map(tuple, tfidf_milli_vectors(docs, max_df_frac=0.5, max_df=None).collect())
-    )
-    assert base == none_cap
+    monkeypatch.setattr(sparse_sim, "MAX_DF_FRAC", 0.5)
+    monkeypatch.setattr(sparse_sim, "MIN_COSINE", 0.01)
+    rel_only = tfidf_milli_vectors(docs).collect()
+    monkeypatch.setattr(sparse_sim, "MAX_DF", 3)
+    capped = tfidf_milli_vectors(docs).collect()
+    assert "shared" in {r.word for r in rel_only}
+    assert "shared" not in {r.word for r in capped}
+    assert "word0" in {r.word for r in capped}  # df=1 terms survive both
     # pair path: with the shared term pruned, the all-vs-all bridge it
     # created disappears
-    pairs = tfidf_cosine_pairs(docs, max_df_frac=0.5, min_cosine=0.01, max_df=3)
-    assert pairs.count() == 0
-    with pytest.raises(ValueError, match="max_df must be >= 1"):
-        tfidf_milli_vectors(docs, max_df=0)
+    assert tfidf_cosine_pairs(docs).count() == 0
 
 
 def test_tfidf_registered_entry_pins_absolute_cap():
     """r12 verdict #2: the canonical `tfidf_cosine_pairs` registry entry
-    must EXERCISE the 100 TB-safe absolute cap (max_df=500), not leave
+    must EXERCISE the 100 TB-safe absolute cap (MAX_DF=500), not leave
     it as a documented-but-unused knob — both on the Spark side (the
-    call site passes max_df=500) and in the oracle SQL (the df prune is
+    builder reads MAX_DF) and in the oracle SQL (the df prune is
     least(relative, 500), keeping the oracle a semantic twin at any
     corpus size, not just where the relative cap dominates)."""
-    import inspect
-
     import taxi_trips_etl_spark.queries as _q  # noqa: F401  (registers)
-    from taxi_trips_etl_spark.queries import _round5e
+    from taxi_trips_etl_spark.dataprep import sparse_sim
     from taxi_trips_etl_spark.queries._registry import _ORACLES
 
-    # @register wraps the function, so getsource the module and scope
-    # to the def block (wrapper source would hide the call site). The
-    # docstring ALSO mentions max_df=500, so strip it — otherwise the
-    # assertion is vacuously satisfied by prose and a dropped call-site
-    # parameter would slip through (plan-inert at test SFs, so no other
-    # gate would catch it either).
-    module_src = inspect.getsource(_round5e)
-    fn_src = module_src.split("def q_tfidf_cosine_pairs", 1)[1]
-    fn_src = fn_src.split("\ndef ", 1)[0]
-    fn_body = fn_src.split('"""')[-1]  # text after the closing docstring
-    assert "max_df=500" in fn_body, (
-        "registration CALL SITE must pass max_df=500 (docstring excluded)"
-    )
-    oracle_src = module_src.split("def _tfidf_cos_oracle", 1)[1]
-    oracle_src = oracle_src.split("\ndef ", 1)[0].split("@register", 1)[0]
-    assert "max_df=500" in oracle_src.split('"""')[-1], (
-        "oracle builder must pass max_df=500"
-    )
+    assert sparse_sim.MAX_DF == 500
     sql = _ORACLES["tfidf_cosine_pairs"]
     assert "least(" in sql and "500" in sql, (
         "registered oracle must mirror the absolute cap"
     )
 
 
-def test_tfidf_oracle_max_df_twin_and_sf_identity():
-    """The oracle's max_df arm mirrors the Spark semantics (prunes the
+def test_tfidf_oracle_max_df_twin_and_sf_identity(monkeypatch):
+    """The oracle's MAX_DF arm mirrors the Spark semantics (prunes the
     df=10 bridge term the relative cap admits), and at the driver test
-    SFs the capped oracle is row-identical to the uncapped one —
-    floor(0.10·n_docs)=50 ≤ 500 at sf0.001/sf0.01 — which is exactly
-    the hash-identical claim the registry change relies on."""
+    SFs the capped oracle is row-identical to an effectively uncapped
+    one — floor(0.10·n_docs)=50 ≤ 500 at sf0.001/sf0.01 — which is
+    exactly the hash-identical claim the registry change relies on."""
     import duckdb
 
+    from taxi_trips_etl_spark.dataprep import sparse_sim
     from taxi_trips_etl_spark.dataprep.sparse_sim import (
         tfidf_cosine_oracle_sql,
     )
@@ -280,19 +255,16 @@ def test_tfidf_oracle_max_df_twin_and_sf_identity():
         "CREATE VIEW documents AS SELECT * FROM "
         "'/root/testdata/sf0.001/documents.parquet'"
     )
-    base = con.sql(
-        tfidf_cosine_oracle_sql(max_df_frac=0.10, min_cosine=0.30)
-        + " ORDER BY doc_id_a, doc_id_b"
-    ).fetchall()
     capped = con.sql(
-        tfidf_cosine_oracle_sql(
-            max_df_frac=0.10, min_cosine=0.30, max_df=500
-        )
-        + " ORDER BY doc_id_a, doc_id_b"
+        tfidf_cosine_oracle_sql() + " ORDER BY doc_id_a, doc_id_b"
+    ).fetchall()
+    monkeypatch.setattr(sparse_sim, "MAX_DF", 10**9)
+    base = con.sql(
+        tfidf_cosine_oracle_sql() + " ORDER BY doc_id_a, doc_id_b"
     ).fetchall()
     assert base == capped and len(base) > 0
     # Toy corpus where the caps DISAGREE: relative cap 0.5·20=10 admits
-    # the df=10 "shared" bridge, absolute max_df=3 prunes it — the
+    # the df=10 "shared" bridge, absolute MAX_DF=3 prunes it — the
     # oracle must drop every pair, matching the Spark-side test above.
     con2 = duckdb.connect()
     con2.execute(
@@ -302,26 +274,12 @@ def test_tfidf_oracle_max_df_twin_and_sf_identity():
         + ", ".join(f"({i}, 'solo{i} word{i}')" for i in range(10, 20))
         + ") AS t(doc_id, text)"
     )
-    rel_pairs = con2.sql(
-        tfidf_cosine_oracle_sql(
-            max_df_frac=0.5,
-            min_cosine=0.01,
-        )
-    ).fetchall()
-    cap_pairs = con2.sql(
-        tfidf_cosine_oracle_sql(
-            max_df_frac=0.5,
-            min_cosine=0.01,
-            max_df=3,
-        )
-    ).fetchall()
+    monkeypatch.setattr(sparse_sim, "MAX_DF_FRAC", 0.5)
+    monkeypatch.setattr(sparse_sim, "MIN_COSINE", 0.01)
+    rel_pairs = con2.sql(tfidf_cosine_oracle_sql()).fetchall()
+    monkeypatch.setattr(sparse_sim, "MAX_DF", 3)
+    cap_pairs = con2.sql(tfidf_cosine_oracle_sql()).fetchall()
     assert len(rel_pairs) > 0 and len(cap_pairs) == 0
-    # domain guard mirrors the Spark twin: max_df=0 must raise, not
-    # emit least(cap, 0) and a plausible-looking empty oracle
-    import pytest
-
-    with pytest.raises(ValueError, match="max_df must be >= 1"):
-        tfidf_cosine_oracle_sql(max_df=0)
 
 
 # --- skip-gram co-occurrence ----------------------------------------------
@@ -362,27 +320,30 @@ def test_skipgram_short_docs_no_pairs(spark):
 # --- truncation recall ----------------------------------------------------
 
 
-def test_truncation_recall_full_width_is_perfect(spark, sf_dir):
+def test_truncation_recall_full_width_is_perfect(spark, sf_dir, monkeypatch):
+    from taxi_trips_etl_spark.dataprep import similarity
     from taxi_trips_etl_spark.dataprep.similarity import truncation_recall
 
+    monkeypatch.setattr(similarity, "TRUNC_DIMS", (64,))
+    monkeypatch.setattr(similarity, "TRUNC_K", 5)
+    monkeypatch.setattr(similarity, "TRUNC_QUERY_IDS_BELOW", 5)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    rows = truncation_recall(
-        emb, dims=(64,), k=5, query_ids_below=5
-    ).collect()
+    rows = truncation_recall(emb).collect()
     assert len(rows) == 5
     assert all(r.hits == 5 and r.recall_at_k == 1.0 for r in rows)
 
 
-def test_truncation_recall_monotone_dims(spark, sf_dir):
+def test_truncation_recall_monotone_dims(spark, sf_dir, monkeypatch):
     """Wider prefixes should not do worse on average — the Matryoshka
     premise, checked as a mean over probes (individual queries may
     flip)."""
+    from taxi_trips_etl_spark.dataprep import similarity
     from taxi_trips_etl_spark.dataprep.similarity import truncation_recall
 
+    monkeypatch.setattr(similarity, "TRUNC_DIMS", (8, 32))
+    monkeypatch.setattr(similarity, "TRUNC_QUERY_IDS_BELOW", 10)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    rows = truncation_recall(
-        emb, dims=(8, 32), k=10, query_ids_below=10
-    ).collect()
+    rows = truncation_recall(emb).collect()
     mean = {}
     for d in (8, 32):
         rs = [r.recall_at_k for r in rows if r.dim == d]

@@ -36,50 +36,45 @@ def _emb_df(spark, vecs, labels=None):
 # --- pq_exact ---------------------------------------------------------------
 
 
-def test_pq_replayable_deterministic(spark):
+def _pq_shape(monkeypatch, **consts):
+    """Shrink the PQ shape to a hand-sized one (PQ_* constants)."""
+    from taxi_trips_etl_spark.dataprep import pq_exact
+
+    for name, value in consts.items():
+        monkeypatch.setattr(pq_exact, f"PQ_{name.upper()}", value)
+
+
+def test_pq_replayable_deterministic(spark, monkeypatch):
     from taxi_trips_etl_spark.dataprep.pq_exact import pq_topk_replayable
 
+    _pq_shape(monkeypatch, m=4, ksub=4, k=2, query_ids_below=3, train_iters=2)
     rng = np.random.RandomState(7)
     vecs = rng.randn(60, 16).astype(np.float32)
     df = _emb_df(spark, vecs)
-    a = sorted(
-        map(
-            tuple,
-            pq_topk_replayable(
-                df, m=4, ksub=4, k=2, query_ids_below=3, train_iters=2
-            ).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            pq_topk_replayable(
-                df, m=4, ksub=4, k=2, query_ids_below=3, train_iters=2
-            ).collect(),
-        )
-    )
+    a = sorted(map(tuple, pq_topk_replayable(df).collect()))
+    b = sorted(map(tuple, pq_topk_replayable(df).collect()))
     assert a == b and len(a) == 6  # 3 queries x k=2
 
 
-def test_pq_replayable_finds_near_cluster(spark):
+def test_pq_replayable_finds_near_cluster(spark, monkeypatch):
     """Two tight, far-apart clusters: every query's PQ top-k must come
     from its own cluster — the coarse property ADC cannot miss."""
     from taxi_trips_etl_spark.dataprep.pq_exact import pq_topk_replayable
+
+    _pq_shape(monkeypatch, m=4, ksub=8, query_ids_below=2)
 
     rng = np.random.RandomState(11)
     a = rng.randn(30, 16) * 0.05
     b = rng.randn(30, 16) * 0.05 + 10.0
     vecs = np.vstack([a, b]).astype(np.float32)
     df = _emb_df(spark, vecs)
-    rows = pq_topk_replayable(
-        df, m=4, ksub=8, k=3, query_ids_below=2, train_iters=3
-    ).collect()
+    rows = pq_topk_replayable(df).collect()
     assert rows, "no output"
     for r in rows:
         assert r.neighbor_id < 30, f"query {r.query_id} left its cluster"
 
 
-def test_pq_oracle_sql_matches_spark_plan(spark, tmp_path):
+def test_pq_oracle_sql_matches_spark_plan(spark, tmp_path, monkeypatch):
     """End-to-end DuckDB replay on a private parquet (independent of
     the driver harness): byte-identical row sets."""
     import duckdb
@@ -89,26 +84,20 @@ def test_pq_oracle_sql_matches_spark_plan(spark, tmp_path):
         pq_topk_replayable,
     )
 
+    _pq_shape(
+        monkeypatch, dim=16, m=4, ksub=8, k=2, query_ids_below=4, train_iters=2
+    )
     rng = np.random.RandomState(3)
     vecs = rng.randn(80, 16).astype(np.float32)
     df = _emb_df(spark, vecs)
     p = str(tmp_path / "emb.parquet")
     df.select("vec_id", "embedding", "label").coalesce(1).write.parquet(p)
-    got = sorted(
-        map(
-            tuple,
-            pq_topk_replayable(
-                df, m=4, ksub=8, k=2, query_ids_below=4, train_iters=2
-            ).collect(),
-        )
-    )
+    got = sorted(map(tuple, pq_topk_replayable(df).collect()))
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM parquet_scan('{p}/*.parquet')"
     )
-    sql = pq_oracle_sql(
-        dim=16, m=4, ksub=8, k=2, query_ids_below=4, train_iters=2
-    )
+    sql = pq_oracle_sql()
     want = sorted(map(tuple, con.execute(sql).fetchall()))
     assert got == want
 
@@ -171,12 +160,16 @@ def test_power_iteration_pca_components_orthogonal(spark):
             assert dot < 0.1, f"components {i},{j} not orthogonal: {dot:.3f}"
 
 
-def test_power_iteration_pca_output_shape(spark):
+def test_power_iteration_pca_output_shape(spark, monkeypatch):
+    from taxi_trips_etl_spark.dataprep import pca_power
     from taxi_trips_etl_spark.dataprep.pca_power import power_iteration_pca
+
+    monkeypatch.setattr(pca_power, "N_COMPONENTS", 3)
+    monkeypatch.setattr(pca_power, "ITERATIONS", 8)
 
     rng = np.random.RandomState(1)
     df = _emb_df(spark, rng.randn(50, 16).astype(np.float32))
-    out = power_iteration_pca(df, n_components=3, iterations=8)
+    out = power_iteration_pca(df)
     rows = out.collect()
     assert len(rows) == 150
     assert {r.component_idx for r in rows} == {0, 1, 2}
@@ -195,7 +188,7 @@ def test_hard_negative_matches_bruteforce(spark):
     df = _emb_df(spark, vecs, labels)
     got = {
         (r.query_id, r.hn_rank): (r.neighbor_id, r.cosine)
-        for r in hard_negative_topk(df, k=2).collect()
+        for r in hard_negative_topk(df).collect()
     }
     V = vecs.astype(np.float64)
     V = V / np.linalg.norm(V, axis=1, keepdims=True)
@@ -214,16 +207,19 @@ def test_hard_negative_matches_bruteforce(spark):
             assert math.isclose(cos, round(-negs, 6), abs_tol=2e-6)
 
 
-def test_hard_negative_fewer_than_k_foreign(spark):
+def test_hard_negative_fewer_than_k_foreign(spark, monkeypatch):
     """k larger than the foreign-label pool: emit what exists, ranked,
     never a row for a same-label neighbor."""
+    from taxi_trips_etl_spark.dataprep import similarity
     from taxi_trips_etl_spark.dataprep.similarity import hard_negative_topk
+
+    monkeypatch.setattr(similarity, "HARD_NEGATIVE_K", 10)
 
     rng = np.random.RandomState(4)
     vecs = rng.randn(5, 8).astype(np.float32)
     labels = [0, 0, 0, 0, 1]  # queries with label 1 see only 4 foreign
     df = _emb_df(spark, vecs, labels)
-    rows = hard_negative_topk(df, k=10).collect()
+    rows = hard_negative_topk(df).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append(r)
@@ -252,9 +248,7 @@ def test_boilerplate_removal_drops_all_occurrences(spark):
     rows = [(i, f"share this uniq{i} word{i}") for i in range(10)]
     out = {
         r.doc_id: r
-        for r in boilerplate_chunk_removal(
-            _docs6(spark, rows), chunk_tokens=2, df_divisor=2
-        ).collect()
+        for r in boilerplate_chunk_removal(_docs6(spark, rows)).collect()
     }
     # "share this" appears in all 10 docs -> boilerplate everywhere;
     # "uniqN wordN" is unique per doc -> kept.
@@ -270,9 +264,7 @@ def test_boilerplate_removal_keeps_rare_chunks(spark):
     )
 
     rows = [(0, "alpha beta gamma delta"), (1, "alpha beta gamma delta")]
-    out = boilerplate_chunk_removal(
-        _docs6(spark, rows), chunk_tokens=2, df_divisor=2
-    ).collect()
+    out = boilerplate_chunk_removal(_docs6(spark, rows)).collect()
     # df = 2 < floor 3: nothing dropped even though both docs repeat.
     assert all(r.n_chunks_dropped == 0 for r in out)
 
@@ -294,36 +286,38 @@ def test_kn_doc_xent_orders_quality(spark):
     assert out[0] == out[1] < out[2]
 
 
-def test_range_partition_plan_equidepth(spark):
+def test_range_partition_plan_equidepth(spark, monkeypatch):
+    from taxi_trips_etl_spark.dataprep import layout
     from taxi_trips_etl_spark.dataprep.layout import range_partition_plan
 
+    monkeypatch.setattr(layout, "RANGE_PARTITIONS", 8)
     df = spark.range(1000).select(
-        (F.col("id") % 100).alias("key"), F.col("id").alias("uid")
+        (F.col("id") % 100).alias("l_orderkey"),
+        F.col("id").alias("l_linenumber"),
     )
-    plan = range_partition_plan(
-        df, key="key", n_partitions=8, tiebreak="uid"
-    ).collect()
+    plan = range_partition_plan(df).collect()
     assert [r.bucket for r in plan] == list(range(8))
     assert all(r.n_rows == 125 for r in plan)  # 1000/8 exact
     for a, b in zip(plan, plan[1:]):
         assert a.hi <= b.lo  # boundaries are monotone
 
 
-def test_adaptive_salt_plan_heavy_tail_only(spark):
+def test_adaptive_salt_plan_heavy_tail_only(spark, monkeypatch):
+    from taxi_trips_etl_spark.dataprep import layout
     from taxi_trips_etl_spark.dataprep.layout import adaptive_salt_plan
 
+    monkeypatch.setattr(layout, "SALT_TARGET_ROWS", 1000)
+    monkeypatch.setattr(layout, "MAX_SALT", 4)
     rows = [(1,)] * 5000 + [(2,)] * 100 + [(3,)] * 2001
-    df = spark.createDataFrame(rows, "k long")
+    df = spark.createDataFrame(rows, "l_suppkey long")
     plan = {
-        r.k: r.salt_factor
-        for r in adaptive_salt_plan(
-            df, key="k", target_rows_per_task=1000, max_salt=4
-        ).collect()
+        r.l_suppkey: r.salt_factor
+        for r in adaptive_salt_plan(df).collect()
     }
     assert plan == {1: 4, 3: 3}  # ceil(5000/1000)=5 capped at 4; 2 absent
 
 
-def test_hard_negative_ivf_subset_of_exact_candidates(spark):
+def test_hard_negative_ivf_subset_of_exact_candidates(spark, monkeypatch):
     """IVF hard negatives must (a) never pair same labels, (b) rank by
     cosine within the probed candidates, and (c) on well-separated
     clusters where probing covers the relevant cells, agree with the
@@ -337,16 +331,18 @@ def test_hard_negative_ivf_subset_of_exact_candidates(spark):
     vecs = rng.randn(60, 16).astype(np.float32)
     labels = [i % 3 for i in range(60)]
     df = _emb_df(spark, vecs, labels)
-    ivf = hard_negative_topk_ivf(
-        df, n_centroids=6, nprobe=3
-    ).collect()
+    from taxi_trips_etl_spark.dataprep import similarity
+
+    monkeypatch.setattr(similarity, "HARD_NEGATIVE_CENTROIDS", 6)
+    monkeypatch.setattr(similarity, "HARD_NEGATIVE_NPROBE", 3)
+    ivf = hard_negative_topk_ivf(df).collect()
     lab = dict(enumerate(labels))
     assert ivf, "no output"
     for r in ivf:
         assert lab[r.query_id] != lab[r.neighbor_id]
     exact = {
         (r.query_id, r.hn_rank): r.neighbor_id
-        for r in hard_negative_topk(df, k=2).collect()
+        for r in hard_negative_topk(df).collect()
     }
     agree = sum(
         1
@@ -418,9 +414,7 @@ def test_weighted_jaccard_separates_tf_profiles(spark):
     ]
     out = {
         (r.doc_id_a, r.doc_id_b): r.wjacc_milli
-        for r in weighted_minhash_pairs(
-            _docs6(spark, rows), min_wjacc_milli=0,
-        ).collect()
+        for r in weighted_minhash_pairs(_docs6(spark, rows)).collect()
     }
     assert out[(0, 1)] == 1000
     if (0, 2) in out:  # only if LSH banded them together
@@ -439,9 +433,7 @@ def test_rouge_l_scores_edited_copy(spark):
         (1, edited),
         *[(i, f"z{i} y{i} x{i} w{i} v{i} u{i}") for i in range(2, 20)],
     ]
-    out = rouge_l_pairs(
-        _docs6(spark, rows), jaccard_threshold=0.2, limit_pairs=5
-    ).collect()
+    out = rouge_l_pairs(_docs6(spark, rows), jaccard_threshold=0.2).collect()
     got = {(r.doc_id_a, r.doc_id_b): r for r in out}
     assert (0, 1) in got
     r = got[(0, 1)]
@@ -458,17 +450,18 @@ def test_rouge_l_scores_edited_copy(spark):
     assert r.rouge_l_f_milli > 850
 
 
-def test_sampled_range_partition_plan_balance(spark):
+def test_sampled_range_partition_plan_balance(spark, monkeypatch):
+    from taxi_trips_etl_spark.dataprep import layout
     from taxi_trips_etl_spark.dataprep.layout import (
         sampled_range_partition_plan,
     )
 
+    monkeypatch.setattr(layout, "RANGE_PARTITIONS", 8)
     df = spark.range(20000).select(
-        F.col("id").alias("key"), (F.col("id") * 7 % 20000).alias("uid")
+        F.col("id").alias("l_orderkey"),
+        (F.col("id") * 7 % 20000).alias("l_linenumber"),
     )
-    plan = sampled_range_partition_plan(
-        df, key="key", n_partitions=8, tiebreak="uid"
-    ).collect()
+    plan = sampled_range_partition_plan(df).collect()
     assert [r.bucket for r in plan] == list(range(8))
     assert sum(r.n_rows for r in plan) == 20000
     for r in plan:  # hash sample of a uniform key: near-balanced
@@ -506,15 +499,15 @@ def test_negative_sample_table_prefers_frequent(spark):
 
     rows = [(i, "common " * 50 + f"rare{i}") for i in range(10)]
     out = negative_sample_table(
-        _docs6(spark, rows), n_samples=300
+        _docs6(spark, rows)
     ).collect()
-    assert len(out) == 300
+    assert len(out) == 500
     toks = [r.token for r in out]
-    common_frac = toks.count("common") / 300
+    common_frac = toks.count("common") / 500
     # 'common' holds ~(500^0.75)/(500^0.75 + 10·1) ≈ 0.91 of the mass
     assert common_frac > 0.75
     # determinism
-    again = negative_sample_table(_docs6(spark, rows), n_samples=300).collect()
+    again = negative_sample_table(_docs6(spark, rows)).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 

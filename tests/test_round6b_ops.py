@@ -13,11 +13,15 @@ def _emb(spark, vecs):
     )
 
 
-def test_semdedup_prunes_to_lowest_id_keeper(spark):
+def test_semdedup_prunes_to_lowest_id_keeper(spark, monkeypatch):
     """Exact duplicate and near-duplicate vectors are pruned with the
     SMALLEST over-threshold lower-id cluster-mate as keeper; vectors
     with no over-threshold mate survive."""
+    from taxi_trips_etl_spark.dataprep import similarity
     from taxi_trips_etl_spark.dataprep.similarity import semdedup_prune
+
+    monkeypatch.setattr(similarity, "SEMDEDUP_K", 2)
+    monkeypatch.setattr(similarity, "SEMDEDUP_ITERATIONS", 2)
 
     out = {
         r.vec_id: r
@@ -33,8 +37,6 @@ def test_semdedup_prunes_to_lowest_id_keeper(spark):
                     [0.998, 0.02],  # 5: near-dup of 0 (and of 2)
                 ],
             ),
-            k=2,
-            iterations=2,
             threshold_milli=950,
         ).collect()
     }
@@ -45,14 +47,14 @@ def test_semdedup_prunes_to_lowest_id_keeper(spark):
     assert out[5].keeper_id == 0
 
 
-def test_semdedup_singleton_clusters_emit_nothing(spark):
+def test_semdedup_singleton_clusters_emit_nothing(spark, monkeypatch):
+    from taxi_trips_etl_spark.dataprep import similarity
     from taxi_trips_etl_spark.dataprep.similarity import semdedup_prune
 
+    monkeypatch.setattr(similarity, "SEMDEDUP_K", 2)
+    monkeypatch.setattr(similarity, "SEMDEDUP_ITERATIONS", 1)
     rows = semdedup_prune(
-        _emb(spark, [[1.0, 0.0], [0.0, 1.0]]),
-        k=2,
-        iterations=1,
-        threshold_milli=950,
+        _emb(spark, [[1.0, 0.0], [0.0, 1.0]]), threshold_milli=950
     ).collect()
     assert rows == []
 
@@ -184,7 +186,7 @@ def test_bucketed_registry_join_writes_outside_the_working_dir(
 # --- batch 6: Viterbi segmentation, pruning, compaction ---------------------
 
 
-def test_viterbi_prefers_frequent_multichar_pieces(spark):
+def test_viterbi_prefers_frequent_multichar_pieces(spark, monkeypatch):
     """A substring frequent enough to enter the vocab beats its
     spelled-out characters: with "abcd" dominating the corpus, the
     whole word segments as one piece; a word containing a rare
@@ -192,15 +194,15 @@ def test_viterbi_prefers_frequent_multichar_pieces(spark):
     from taxi_trips_etl_spark.dataprep.unigram_tok import (
         unigram_viterbi_segment,
     )
+    from taxi_trips_etl_spark.dataprep import unigram_tok
 
+    monkeypatch.setattr(unigram_tok, "TOP_MULTI", 5)
     docs = _docs(
         spark,
         [(i, "abcd abcd abcd xq", "en", "s", 17) for i in range(5)],
     )
     out = {
-        r.word: r for r in unigram_viterbi_segment(
-            docs, top_multi=5
-        ).collect()
+        r.word: r for r in unigram_viterbi_segment(docs).collect()
     }
     assert out["abcd"].n_pieces == 1
     assert out["abcd"].segmentation == "abcd"
@@ -249,15 +251,14 @@ def test_compact_small_files_writes_planned_count(spark, sf_dir, tmp_path):
         str(tmp_path / "frag")
     )
     audit = compact_small_files(
-        spark, str(tmp_path / "frag"), str(tmp_path / "compact"),
-        rows_per_file=20,
+        spark, str(tmp_path / "frag"), str(tmp_path / "compact")
     ).collect()[0]
     import glob
     import math
 
     files = glob.glob(str(tmp_path / "compact" / "part-*"))
     assert audit.n_files_before == 7
-    assert audit.n_files_after == math.ceil(audit.n_rows / 20)
+    assert audit.n_files_after == math.ceil(audit.n_rows / 100)
     assert len(files) == audit.n_files_after
     assert (
         spark.read.parquet(str(tmp_path / "compact")).count()
@@ -274,9 +275,7 @@ def test_two_stage_distinct_count_matches_naive(spark, sf_dir):
     ev = _events(spark, sf_dir)
     got = {
         r.event_type: r.n_distinct
-        for r in two_stage_distinct_count(
-            ev, ["event_type"], "user_id"
-        ).collect()
+        for r in two_stage_distinct_count(ev, ["event_type"]).collect()
     }
     exp = {
         r.event_type: r.n

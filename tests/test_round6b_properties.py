@@ -70,6 +70,9 @@ def _viterbi_ref(words: list[str], top_multi: int, max_piece: int):
     )
 )
 def test_viterbi_matches_pure_python_dp(spark, words):
+    import pytest
+
+    from taxi_trips_etl_spark.dataprep import unigram_tok
     from taxi_trips_etl_spark.dataprep.unigram_tok import (
         unigram_viterbi_segment,
     )
@@ -81,12 +84,12 @@ def test_viterbi_matches_pure_python_dp(spark, words):
         "doc_id long, text string, lang string, source string,"
         " n_chars long",
     )
-    got = {
-        r.word: (r.word_n, r.n_pieces, r.segmentation, r.score_micro)
-        for r in unigram_viterbi_segment(
-            docs, top_multi=5
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(unigram_tok, "TOP_MULTI", 5)
+        got = {
+            r.word: (r.word_n, r.n_pieces, r.segmentation, r.score_micro)
+            for r in unigram_viterbi_segment(docs).collect()
+        }
     assert got == _viterbi_ref(words, top_multi=5, max_piece=4)
 
 
@@ -103,9 +106,12 @@ def test_viterbi_matches_pure_python_dp(spark, words):
     )
 )
 def test_semdedup_single_cluster_matches_bruteforce(spark, coords):
-    """With k=1 every vector is a cluster-mate: pruning must match the
-    brute-force first-over-threshold-lower-id rule. A constant third
-    coordinate keeps every norm positive."""
+    """With one cluster every vector is a cluster-mate: pruning must
+    match the brute-force first-over-threshold-lower-id rule. A
+    constant third coordinate keeps every norm positive."""
+    import pytest
+
+    from taxi_trips_etl_spark.dataprep import similarity
     from taxi_trips_etl_spark.dataprep.similarity import semdedup_prune
     from taxi_trips_etl_spark.sources.localrel import local_rows
 
@@ -126,12 +132,13 @@ def test_semdedup_single_cluster_matches_bruteforce(spark, coords):
         [(i, v, 0) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>, label int",
     )
-    got = {
-        r.vec_id: (r.keeper_id, r.cos_milli)
-        for r in semdedup_prune(
-            df, k=1, iterations=1, threshold_milli=thr
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(similarity, "SEMDEDUP_K", 1)
+        mp.setattr(similarity, "SEMDEDUP_ITERATIONS", 1)
+        got = {
+            r.vec_id: (r.keeper_id, r.cos_milli)
+            for r in semdedup_prune(df, threshold_milli=thr).collect()
+        }
     assert got == exp
 
 
@@ -154,11 +161,11 @@ def test_two_stage_distinct_matches_sets(spark, pairs):
     from taxi_trips_etl_spark.sources.localrel import local_rows
 
     df = local_rows(
-        spark, [(k, v) for k, v in pairs], "k long, v long"
+        spark, [(k, v) for k, v in pairs], "k long, user_id long"
     )
     got = {
         r.k: r.n_distinct
-        for r in two_stage_distinct_count(df, ["k"], "v").collect()
+        for r in two_stage_distinct_count(df, ["k"]).collect()
     }
     exp: dict[int, set[int]] = {}
     for k, v in pairs:

@@ -1,11 +1,11 @@
 """Round-9 guards and contract pins.
 
-1. ``max_pairs`` loud-fail output guard on the exact pair miners
+1. ``MAX_PAIRS`` loud-fail output guard on the exact pair miners
    (ngram_jaccard_pairs / ngram_containment_pairs / fastss_pairs):
    the raise must trigger past the cap, and a generous cap must leave
    the output bit-identical to the unguarded run (VERDICT r8 #2).
 2. The capped-prefix recall CONTRACT after the ADVICE-r8 fix (the
-   positional conjunct is skipped under ``max_posting_size``): the
+   positional conjunct is skipped under ``MAX_POSTING_SIZE``): the
    capped miner must return EXACTLY the qualifying pairs that share at
    least one surviving (non-hot) prefix gram — no additional
    positional-filter loss. The expected set is recomputed in plain
@@ -55,78 +55,66 @@ def _grams(text: str, n: int = 3) -> set[str]:
 # ---------------------------------------------------------------------------
 
 
-def test_max_pairs_raises_on_quadratic_corpus(spark):
+def test_max_pairs_raises_on_quadratic_corpus(spark, monkeypatch):
     """200 identical docs → ~19 900 candidate pairs; a small cap must
     fail loudly (Spark wraps raise_error — match on the message)."""
+    monkeypatch.setattr(dedup, "MAX_PAIRS", 50)
     docs = spark.createDataFrame(
         [(i, "aa bb cc dd ee ff gg") for i in range(200)],
         "doc_id long, text string",
     )
-    with pytest.raises(Exception, match="ngram_jaccard_pairs.*max_pairs=50"):
-        dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_pairs=50).collect()
+    with pytest.raises(Exception, match="ngram_jaccard_pairs.*MAX_PAIRS=50"):
+        dedup.ngram_jaccard_pairs(docs, threshold=0.8).collect()
     with pytest.raises(
-        Exception, match="ngram_containment_pairs.*max_pairs=50"
+        Exception, match="ngram_containment_pairs.*MAX_PAIRS=50"
     ):
-        dedup.ngram_containment_pairs(
-            docs, threshold=0.8, max_pairs=50
-        ).collect()
+        dedup.ngram_containment_pairs(docs).collect()
 
 
-def test_max_pairs_raises_fastss(spark):
+def test_max_pairs_raises_fastss(spark, monkeypatch):
     """100 near-twin names (shared 1-deletion bucket) blow a tiny cap."""
+    monkeypatch.setattr(dedup, "MAX_PAIRS", 10)
     df = spark.createDataFrame(
         [(i, f"Customer#{i:03d}x") for i in range(100)]
         + [(1000 + i, f"Customer#{i:03d}") for i in range(100)],
         "c_custkey long, c_name string",
     )
-    with pytest.raises(Exception, match="fastss_pairs.*max_pairs=10"):
-        dedup.fastss_pairs(df, max_dist=1, max_pairs=10).collect()
+    with pytest.raises(Exception, match="fastss_pairs.*MAX_PAIRS=10"):
+        dedup.fastss_pairs(df, max_dist=1).collect()
 
 
-def test_max_pairs_noop_under_cap(spark):
+def test_max_pairs_noop_under_cap(spark, monkeypatch):
     """A generous cap must leave all three miners' output identical to
-    the unguarded (max_pairs=None) run — the guard is pure plumbing."""
+    the unguarded (MAX_PAIRS=None) run — the guard is pure plumbing."""
     docs = spark.createDataFrame(
         _random_docs(31), "doc_id long, text string"
     )
-    base_j = {
-        (r.doc_id_a, r.doc_id_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    got_j = {
-        (r.doc_id_a, r.doc_id_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(
-            docs, threshold=0.5, max_pairs=1_000_000
-        ).collect()
-    }
-    assert got_j == base_j and base_j
-
-    base_c = {
-        (r.doc_id_a, r.doc_id_b, r.containment)
-        for r in dedup.ngram_containment_pairs(docs, threshold=0.6).collect()
-    }
-    got_c = {
-        (r.doc_id_a, r.doc_id_b, r.containment)
-        for r in dedup.ngram_containment_pairs(
-            docs, threshold=0.6, max_pairs=1_000_000
-        ).collect()
-    }
-    assert got_c == base_c and base_c
-
     names = spark.createDataFrame(
         [(1, "abc"), (2, "abd"), (3, "xbd"), (4, "zzz")],
         "c_custkey long, c_name string",
     )
-    base_f = {
-        (r.id_a, r.id_b, r.edit_dist)
-        for r in dedup.fastss_pairs(names, max_dist=1).collect()
-    }
-    got_f = {
-        (r.id_a, r.id_b, r.edit_dist)
-        for r in dedup.fastss_pairs(
-            names, max_dist=1, max_pairs=1_000_000
-        ).collect()
-    }
+
+    def run():
+        return (
+            {
+                (r.doc_id_a, r.doc_id_b, r.jaccard)
+                for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
+            },
+            {
+                (r.doc_id_a, r.doc_id_b, r.containment)
+                for r in dedup.ngram_containment_pairs(docs).collect()
+            },
+            {
+                (r.id_a, r.id_b, r.edit_dist)
+                for r in dedup.fastss_pairs(names, max_dist=1).collect()
+            },
+        )
+
+    base_j, base_c, base_f = run()
+    monkeypatch.setattr(dedup, "MAX_PAIRS", 1_000_000)
+    got_j, got_c, got_f = run()
+    assert got_j == base_j and base_j
+    assert got_c == base_c and base_c
     assert got_f == base_f == {(1, 2, 1), (2, 3, 1)}
 
 
@@ -190,8 +178,8 @@ def _capped_expected(rows, gh, threshold, cap, kind):
     return want
 
 
-def test_capped_jaccard_matches_documented_contract(spark):
-    """max_posting_size loses EXACTLY the pairs whose every shared
+def test_capped_jaccard_matches_documented_contract(spark, monkeypatch):
+    """MAX_POSTING_SIZE loses EXACTLY the pairs whose every shared
     prefix gram is hot — nothing more (the positional conjunct is off
     under the cap). Python-recomputed contract, engine-only hashes."""
     rows = _random_docs(17, n_docs=45, vocab_n=4)
@@ -210,17 +198,16 @@ def test_capped_jaccard_matches_documented_contract(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for t, cap in ((0.5, 3), (0.7, 5)):
         want = _capped_expected(rows, gh, t, cap, "jaccard")
+        monkeypatch.setattr(dedup, "MAX_POSTING_SIZE", cap)
         got = {
             (r.doc_id_a, r.doc_id_b): r.jaccard
-            for r in dedup.ngram_jaccard_pairs(
-                df, threshold=t, max_posting_size=cap
-            ).collect()
+            for r in dedup.ngram_jaccard_pairs(df, threshold=t).collect()
         }
         assert got == want, f"capped jaccard contract broken at t={t}"
         assert want, f"vacuous at t={t}"
 
 
-def test_capped_containment_matches_documented_contract(spark):
+def test_capped_containment_matches_documented_contract(spark, monkeypatch):
     rows = _random_docs(23, n_docs=45, vocab_n=4)
     rows += [(500 + k, "w0 w1 w2 w3 w0 w1 w2") for k in range(12)]
     # rare-token doc-inside-doc pair (containment 1.0, cold grams)
@@ -235,11 +222,11 @@ def test_capped_containment_matches_documented_contract(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for t, cap in ((0.6, 3), (0.8, 5)):
         want = _capped_expected(rows, gh, t, cap, "containment")
+        monkeypatch.setattr(dedup, "CONTAINMENT_THRESHOLD", t)
+        monkeypatch.setattr(dedup, "MAX_POSTING_SIZE", cap)
         got = {
             (r.doc_id_a, r.doc_id_b): r.containment
-            for r in dedup.ngram_containment_pairs(
-                df, threshold=t, max_posting_size=cap
-            ).collect()
+            for r in dedup.ngram_containment_pairs(df).collect()
         }
         assert got == want, f"capped containment contract broken at t={t}"
         assert want, f"vacuous at t={t}"

@@ -11,7 +11,8 @@ T1 = dt.datetime(2026, 2, 1)
 T2 = dt.datetime(2026, 3, 1)
 
 DIM_SCHEMA = (
-    "k long, city string, tier string, valid_from timestamp, valid_to timestamp"
+    "c_custkey long, city string, tier string, valid_from timestamp, "
+    "valid_to timestamp"
 )
 
 
@@ -31,10 +32,10 @@ def test_scd2_close_insert_passthrough(spark):
             (2, "sf", "silver", T1),     # no-op
             (9, "chi", "gold", T1),      # brand-new key
         ],
-        "k long, city string, tier string, effective_ts timestamp",
+        "c_custkey long, city string, tier string, effective_ts timestamp",
     )
-    out = scd2_apply(dim, updates, "k", ["city", "tier"]).collect()
-    rows = {(r.k, r.tier, r.valid_from, r.valid_to) for r in out}
+    out = scd2_apply(dim, updates, ["city", "tier"]).collect()
+    rows = {(r.c_custkey, r.tier, r.valid_from, r.valid_to) for r in out}
     assert (1, "gold", T0, T1) in rows            # old version closed at T1
     assert (1, "platinum", T1, None) in rows      # new open version
     assert (2, "silver", T0, None) in rows        # unchanged stays open
@@ -48,10 +49,10 @@ def test_scd2_is_idempotent_for_same_update(spark):
     dim = spark.createDataFrame([(1, "nyc", "gold", T0, None)], DIM_SCHEMA)
     updates = spark.createDataFrame(
         [(1, "nyc", "platinum", T1)],
-        "k long, city string, tier string, effective_ts timestamp",
+        "c_custkey long, city string, tier string, effective_ts timestamp",
     )
-    once = scd2_apply(dim, updates, "k", ["city", "tier"])
-    twice = scd2_apply(once, updates, "k", ["city", "tier"])
+    once = scd2_apply(dim, updates, ["city", "tier"])
+    twice = scd2_apply(once, updates, ["city", "tier"])
     # Re-applying the same update must not spawn another version.
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
 

@@ -318,7 +318,7 @@ def test_streaming_session_window_equals_batch(spark, sf_dir):
     got = {
         tuple(r)
         for r in run_streaming_session_window(
-            spark, f"{sf_dir}/events.parquet", sink_table="sw_test"
+            spark, f"{sf_dir}/events.parquet"
         ).collect()
     }
     ev = _events(spark, sf_dir)
@@ -339,62 +339,3 @@ def test_streaming_session_window_equals_batch(spark, sf_dir):
         .collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_session_window_append_mode_watermark_finalizes(spark, tmp_path):
-    """Production posture, previously documented but untested: in
-    APPEND mode a two-batch AvailableNow run must EMIT the first
-    session once the second batch advances the watermark past its end,
-    and must withhold the still-open session the watermark has not
-    passed. This is the watermark-eviction contract that bounds state
-    on a continuous stream."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from taxi_trips_etl_spark.streaming.session_window import (
-        run_streaming_session_window,
-    )
-
-    src = tmp_path / "ev_src"
-    src.mkdir()
-
-    def write_file(rows, name, mtime):
-        df = spark.createDataFrame(
-            rows, "event_id long, user_id long, ts_s string"
-        ).select(
-            "event_id", "user_id", F.to_timestamp("ts_s").alias("ts")
-        )
-        scratch = tmp_path / f"scratch_{name}"
-        df.coalesce(1).write.parquet(str(scratch))
-        part = next(
-            p for p in os.listdir(scratch) if p.endswith(".parquet")
-        )
-        dst = src / f"{name}.parquet"
-        shutil.copy(scratch / part, dst)
-        os.utime(dst, (mtime, mtime))
-
-    # Batch 1: one 2-event session for user 10 (ends 00:05 + 30m gap).
-    write_file(
-        [(1, 10, "2024-01-01 00:00:00"), (2, 10, "2024-01-01 00:05:00")],
-        "pass0", mtime=1_700_000_000,
-    )
-    # Batch 2: a much later event — advances the watermark (1 day) to
-    # 2024-01-03, far past session 1's end, and opens a new session
-    # that stays below the final watermark (withheld in append).
-    write_file([(3, 10, "2024-01-04 00:00:00")], "pass1",
-               mtime=1_700_000_060)
-
-    out = run_streaming_session_window(
-        spark,
-        str(src),
-        sink_table="sw_append_wm",
-        output_mode="append",
-        max_files_per_trigger=1,
-    ).collect()
-
-    assert [
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in out
-    ] == [(10, "2024-01-01 00:00:00", "2024-01-01 00:35:00", 2)]
